@@ -4,6 +4,13 @@ Every public call the benchmark makes runs under its own Spark job group
 (``<op>:<n>``), so a job maps back to the call that submitted it.  Inside a
 KGJob call, jobs are attributed to a stage by that stage's manifest time
 window (``ts - wall_s`` .. ``ts``).
+
+SQL metrics come from the plans in the SQL execution events (the first
+plan and every adaptive re-plan) and the per-task accumulator updates.
+``cached_distinct_rows`` gives, per job group, the rows a scan of a cached
+two-column ``distinct()`` returned: ``dedup_against_index`` persists its
+distinct (batch, index) LSH candidate pairs that way, so this is the
+program's own candidate count.
 """
 
 from __future__ import annotations
@@ -33,12 +40,39 @@ class Job:
     spill_bytes: int = 0
     tasks: int = 0
     scheduler_delay_s: float = 0.0
+    peak_exec_bytes: int = 0  # largest task's sort/aggregate/join memory
 
 
 @dataclass
 class EventLog:
     jobs: list[Job]
     python_eval_nodes: list[tuple[float, int]]  # (exec start, node count)
+    # job group -> per SQL execution, the largest row count a scan of a
+    # cached two-column distinct() returned in it
+    cached_distinct_rows: dict[str, list[int]]
+
+
+_SCAN_COLS = re.compile(r"^InMemoryTableScan \[([^\]]*)\]")
+
+
+def _cached_distinct_scans(node: dict, out: set[int]) -> None:
+    """Accumulator ids of 'number of output rows' of every scan of a
+    cached relation whose plan is a distinct() over two columns and which
+    returns both columns."""
+    if node["nodeName"] == "InMemoryTableScan":
+        cols = _SCAN_COLS.match(node["simpleString"])
+        inner = node["children"][0] if node["children"] else None
+        while inner is not None and inner["nodeName"] == "AdaptiveSparkPlan":
+            inner = inner["children"][0] if inner["children"] else None
+        if (cols and len(cols.group(1).split(", ")) == 2
+                and inner is not None
+                and inner["nodeName"] == "HashAggregate"
+                and inner["simpleString"].endswith("functions=[])")
+                and inner["simpleString"].count("#") == 2):
+            out.update(m["accumulatorId"] for m in node["metrics"]
+                       if m["name"] == "number of output rows")
+    for c in node["children"]:
+        _cached_distinct_scans(c, out)
 
 
 def read_event_log(log_dir: str) -> EventLog:
@@ -52,6 +86,9 @@ def read_event_log(log_dir: str) -> EventLog:
     jobs: dict[int, Job] = {}
     stage_job: dict[int, Job] = {}
     py_nodes: list[tuple[float, int]] = []
+    exec_group: dict[int, str] = {}
+    exec_accs: dict[int, set[int]] = {}
+    acc_total: dict[int, int] = {}
     for path in files:
         with open(path) as f:
             lines = f.readlines()
@@ -74,6 +111,12 @@ def read_event_log(log_dir: str) -> EventLog:
                 if job is None or not tm:
                     continue
                 info = ev["Task Info"]
+                for a in info.get("Accumulables", []):
+                    try:
+                        acc_total[a["ID"]] = (acc_total.get(a["ID"], 0)
+                                              + int(a["Update"]))
+                    except (KeyError, TypeError, ValueError):
+                        continue  # not a numeric update
                 run_ms = tm["Executor Run Time"]
                 job.tasks += 1
                 job.task_s += run_ms / 1000.0
@@ -82,6 +125,8 @@ def read_event_log(log_dir: str) -> EventLog:
                     tm["Shuffle Write Metrics"]["Shuffle Bytes Written"])
                 job.spill_bytes += (tm["Memory Bytes Spilled"]
                                     + tm["Disk Bytes Spilled"])
+                job.peak_exec_bytes = max(job.peak_exec_bytes,
+                                          tm["Peak Execution Memory"])
                 # the Spark UI's scheduler delay: task wall minus the
                 # parts the executor accounts for
                 wall_ms = info["Finish Time"] - info["Launch Time"]
@@ -92,7 +137,19 @@ def read_event_log(log_dir: str) -> EventLog:
                 plan = ev.get("physicalPlanDescription", "")
                 py_nodes.append((ev["time"] / 1000.0,
                                  len(_PY_EVAL.findall(plan))))
-    return EventLog(sorted(jobs.values(), key=lambda j: j.start), py_nodes)
+                exec_group[ev["executionId"]] = ev.get("jobGroupId") or ""
+                _cached_distinct_scans(ev["sparkPlanInfo"], exec_accs
+                                       .setdefault(ev["executionId"], set()))
+            elif kind.endswith("SparkListenerSQLAdaptiveExecutionUpdate"):
+                _cached_distinct_scans(ev["sparkPlanInfo"], exec_accs
+                                       .setdefault(ev["executionId"], set()))
+    cached: dict[str, list[int]] = {}
+    for eid, accs in exec_accs.items():
+        if accs:
+            cached.setdefault(exec_group.get(eid, ""), []).append(
+                max(acc_total.get(a, 0) for a in accs))
+    return EventLog(sorted(jobs.values(), key=lambda j: j.start), py_nodes,
+                    cached)
 
 
 def covered_s(jobs: list[Job], t0: float, t1: float) -> float:

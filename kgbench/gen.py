@@ -15,7 +15,10 @@ are not near-duplicates of each other.
 
 Dedup documents are filler-only texts of 40-80 words.  Each batch plants a
 known share of near-duplicates of indexed documents (one word replaced, so
-word-3-shingle Jaccard is at least 0.85).
+word-3-shingle Jaccard is at least 0.85) and a share of decoys: rewrites of
+indexed documents with a word-3-shingle Jaccard of 0.45-0.7, which often
+share an LSH band with their source (so the index match has candidates to
+reject) but stay below the 0.8 match threshold.
 
 Usage: python3 gen.py --workload kg_ingest --seed 1 --out DIR
 """
@@ -37,12 +40,14 @@ TOOLS = np.array(["search", "calculator", "browser", "interpreter"],
 HOT = "spark"
 N_FILES = 8
 
-# Sizes per workload.
+# Sizes per workload, chosen so a run fits about a minute on a 4-core host;
+# they are not taken from an observed production load.
 # kg_ingest: a base 10x the batch size plus a pool of batches to append.
 # dedup_ingest: an indexed corpus plus a pool of batches to ingest.
+# A measured round ingests the whole pool in order.
 SIZES = {
-    "kg_ingest": {"base_convs": 1_000, "batch_convs": 100, "batches": 4},
-    "dedup_ingest": {"index_docs": 3_000, "batch_docs": 200, "batches": 4},
+    "kg_ingest": {"base_convs": 500, "batch_convs": 50, "batches": 2},
+    "dedup_ingest": {"index_docs": 2_000, "batch_docs": 100, "batches": 3},
 }
 TURNS_PER_CONV = (10, 40)
 WORDS_PER_TURN = (8, 32)
@@ -50,6 +55,8 @@ MENTION_DENSITY = 0.05
 HOT_SHARE = 0.2
 DOC_WORDS = (40, 80)
 PLANTED_SHARE = 0.1
+DECOY_SHARE = 0.1
+DECOY_JACCARD = (0.45, 0.7)
 VOCAB_SIZE = 20_000
 
 
@@ -89,7 +96,10 @@ def transcripts(rng, lexicon: dict[str, str], vocab: np.ndarray,
     hot_surface = int(np.where(surfaces == HOT)[0][0])
     cold = np.array([i for i in range(len(surfaces)) if i != hot_surface])
 
-    n_turns = rng.integers(*TURNS_PER_CONV, n_convs)
+    # every value of TURNS_PER_CONV equally often, in random order: each
+    # table of n_convs conversations has the same number of turns, so
+    # per-turn figures do not move with the seed's turn count
+    n_turns = rng.permutation(np.resize(np.arange(*TURNS_PER_CONV), n_convs))
     conv_ix = np.repeat(np.arange(n_convs), n_turns)
     turn_idx = np.concatenate([np.arange(k) for k in n_turns])
     n = len(conv_ix)
@@ -166,6 +176,28 @@ def _near_dup(rng, words: list[str], vocab: np.ndarray) -> str:
     return " ".join(out)
 
 
+def shingle_jaccard(a: list[str], b: list[str], k: int = 3) -> float:
+    """Jaccard of the distinct word-k-shingle sets (the index's measure
+    on single-space-separated lowercase text)."""
+    sa = {tuple(a[i:i + k]) for i in range(len(a) - k + 1)}
+    sb = {tuple(b[i:i + k]) for i in range(len(b) - k + 1)}
+    return len(sa & sb) / len(sa | sb)
+
+
+def _decoy(rng, words: list[str], vocab: np.ndarray) -> str:
+    """Replace random words of an indexed document until its shingle
+    Jaccard with the source falls inside DECOY_JACCARD."""
+    out = list(words)
+    while True:
+        pos = int(rng.integers(0, len(out)))
+        out[pos] = vocab[int(rng.integers(0, len(vocab)))]
+        j = shingle_jaccard(words, out)
+        if j < DECOY_JACCARD[0]:
+            out = list(words)  # overshot: start again
+        elif j <= DECOY_JACCARD[1]:
+            return " ".join(out)
+
+
 def dedup_docs(rng, vocab: np.ndarray, out: str, index_docs: int,
                batch_docs: int, batches: int) -> dict:
     def doc():
@@ -181,19 +213,25 @@ def dedup_docs(rng, vocab: np.ndarray, out: str, index_docs: int,
     for b in range(batches):
         ids = np.arange(next_id, next_id + batch_docs)
         next_id += batch_docs
-        planted = rng.random(batch_docs) < PLANTED_SHARE
+        kind = rng.random(batch_docs)
+        planted = kind < PLANTED_SHARE
+        decoy = (kind >= PLANTED_SHARE) & (kind < PLANTED_SHARE + DECOY_SHARE)
         texts = []
-        for is_dup in planted:
+        for is_dup, is_decoy in zip(planted, decoy):
             if is_dup:
                 src = int(rng.integers(0, index_docs))
                 texts.append(_near_dup(rng, index_words[src], vocab))
+            elif is_decoy:
+                src = int(rng.integers(0, index_docs))
+                texts.append(_decoy(rng, index_words[src], vocab))
             else:
                 texts.append(" ".join(doc()))
         _write_parts(_docs_table(ids, texts),
                      os.path.join(out, "batches", f"b{b:02d}"))
         truth["batches"].append({
             "id": f"b{b:02d}", "docs": batch_docs, "first_id": int(ids[0]),
-            "planted": ids[planted].tolist()})
+            "planted": ids[planted].tolist(),
+            "decoys": int(decoy.sum())})
     return truth
 
 
