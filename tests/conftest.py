@@ -13,6 +13,15 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 
 from pyspark.sql import SparkSession
 
+# Test resources of the reference Versa checkout (uogbuji/versa), kept
+# next to this repository.  Tests that read them carry ``needs_fixtures``
+# and skip, with the reason shown under ``pytest -rs``, when it is absent.
+REF_RES = os.path.join(os.path.dirname(_REPO_ROOT), "reference", "test",
+                       "resource")
+needs_fixtures = pytest.mark.skipif(
+    not os.path.isdir(REF_RES),
+    reason=f"reference fixtures unavailable: no {REF_RES}")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -9,8 +9,7 @@ test_pipeline_spark.py.
 
 import os
 
-import pytest
-
+from conftest import REF_RES, needs_fixtures
 from versa_spark import I, VTYPE_REL
 from versa_spark.local import LocalModel, all_origins
 from versa_spark.pipeline import (
@@ -24,8 +23,6 @@ BF = I("http://bibfra.me/")
 WT = BF("Work")
 IT = BF("Instance")
 
-REFPATH = "/root/reference/test/resource"
-
 LABELIZE_RULES = {
     BF("Work"): follow(BF("name")),
     BF("Instance"): follow(BF("name")),
@@ -34,13 +31,9 @@ LABELIZE_RULES = {
 
 
 def load_fixture(relpath) -> LocalModel:
-    with open(os.path.join(REFPATH, relpath)) as f:
+    with open(os.path.join(REF_RES, relpath)) as f:
         quads, _ = parse_to_quads(f.read())
     return LocalModel(quads)
-
-
-needs_fixtures = pytest.mark.skipif(
-    not os.path.isdir(REFPATH), reason="reference fixtures unavailable")
 
 
 def catcher_fingerprint_rules():

@@ -4,8 +4,9 @@ Each optimization that changed an operator's *internals* (never its
 results) gets a direct old-vs-new equivalence check here:
 
 * JVM-expression mention extraction (extract.mention_surfaces_col)
-  vs the pandas kernel it replaced — including Unicode word-boundary
-  edges, where java.util.regex needs (?U) to agree with Python's re.
+  vs the Python reference pattern — including Unicode word-boundary
+  edges, where java.util.regex and Python's re disagree on what a word
+  character is.
 * LSH candidate discovery via bucket groupBy + in-row pair generation
   vs the old banded self-join.
 * conversation_links' project-late shape vs the explicit link tuples.
@@ -30,6 +31,12 @@ TRICKY_TEXTS = [
     "日本語 spark 日本語",
     "prefixjoin joinsuffix join",                     # \b discipline
     "x" * 5000 + " spark",                            # long text
+    "spark\u0301 join",               # combining mark: word char in Java
+    "join\u064d spark",               # Arabic mark: word char in Java
+    "spark\u00b2 join",               # superscript two: word char in Python
+    "x\u200dspark join",              # zero-width joiner: word char in Java
+    "\U0001d431spark join",           # supplementary-plane letter
+    "\U0001f600spark join",           # supplementary-plane symbol
 ]
 
 
@@ -38,22 +45,21 @@ def _texts_df(spark):
         [(i, t) for i, t in enumerate(TRICKY_TEXTS)], "rid long, text string")
 
 
-def test_jvm_mention_extraction_matches_pandas_kernel(spark):
+def test_jvm_mention_extraction_matches_python_reference(spark):
+    """The JVM scan equals the reference rules' Python pattern
+    (first-occurrence distinct matches) on every tricky text."""
     from versa_spark.kg import extract
-    df = _texts_df(spark)
-    jvm = df.select("rid", extract.mention_surfaces_col(
-        F.col("text")).alias("m"))
-    udf = df.select("rid", extract.extract_mentions_udf()(
-        F.col("text")).alias("m"))
-    got = {r.rid: list(r.m) for r in jvm.collect()}
-    want = {r.rid: list(r.m) for r in udf.collect()}
-    # the kernel returns [] for null text; the JVM path coalesces to ''
+    from versa_spark.kg.reference_rules import _PAT
+    got = {r.rid: list(r.m) for r in _texts_df(spark).select(
+        "rid", extract.mention_surfaces_col("text").alias("m")).collect()}
+    want = {rid: list(dict.fromkeys(_PAT.findall(text or "")))
+            for rid, text in enumerate(TRICKY_TEXTS)}
     assert got == want
 
 
 def test_jvm_turn_entity_ids_matches_kernel_indices(spark):
-    """eids (canonical tinyint indices) must match mapping the kernel's
-    surface output through LEXICON."""
+    """eids (canonical tinyint indices) must match mapping the Python
+    reference pattern's surface output through LEXICON."""
     from versa_spark.kg import extract
     df = _texts_df(spark).select(
         F.col("rid").alias("conv_id"), F.lit(0).alias("turn_idx"), "text")

@@ -6,6 +6,7 @@ import io
 
 import pytest
 
+from conftest import REF_RES, needs_fixtures
 from versa_spark import I, VLABEL_REL, VTYPE_REL, VERSA_BASEIRI
 from versa_spark.serial import csv as vcsv
 from versa_spark.serial import jsonld, mermaid, ntriples, rdfs, simpleobj
@@ -261,7 +262,6 @@ def test_jsonld_bind_df(spark):
 # tested by test/py/test_parsemd.py:44-83)
 # ---------------------------------------------------------------------------
 
-REF_RES = "/root/reference/test/resource"
 H5 = "http://www.w3.org/TR/html5/"
 
 
@@ -278,6 +278,7 @@ def _parsemd_config():
     }
 
 
+@needs_fixtures
 @pytest.mark.parametrize("fixture", ["doc1.md", "doc1.abbr.md"])
 def test_parsemd_doc1_parity(fixture):
     """Reproduces the reference's test_versa_syntax1 exact assertions: both

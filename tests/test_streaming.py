@@ -93,11 +93,16 @@ def test_streaming_windowed_mention_counts(spark, input_dir):
     q.awaitTermination(300)
     rows = spark.sql("SELECT * FROM mention_counts").collect()
     assert rows
+    # the micro-batch plan runs no Python: extraction is the JVM scan
+    plan = (q._jsq.streamingQuery().lastExecution().executedPlan()
+            .toString())
+    assert "StateStoreSave" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # equals the batch groupBy on the same derivation
     from versa_spark.kg import extract, linking
-    ex = extract.extract_mentions_udf()
     batch = (spark.read.parquet(input_dir)
-             .withColumn("surface", F.explode(ex(F.col("text"))))
+             .withColumn("surface",
+                         F.explode(extract.mention_surfaces_col("text")))
              .join(F.broadcast(linking.canonical_dictionary(spark)),
                    "surface")
              .groupBy(F.window("ts", "10 minutes"), F.col("entity_iri"))
@@ -110,9 +115,16 @@ def test_streaming_windowed_mention_counts(spark, input_dir):
 
 def test_stateful_conversation_sessions(spark, tmp_path):
     """applyInPandasWithState accumulates per-conversation state across
-    micro-batches; the final emitted totals equal the batch groupBy."""
+    micro-batches; the final emitted totals equal the batch groupBy.
+    One turn has non-ASCII word-boundary neighbours (a combining mark, a
+    superscript digit, a zero-width joiner), counted by Python's rule."""
     d = str(tmp_path / "in2")
     tx = synthetic_transcripts(spark, n_convs=20, turns_per_conv=8)
+    first = tx.orderBy("conv_id", "turn_idx").first()
+    tx = tx.withColumn("text", F.when(
+        (F.col("conv_id") == first.conv_id) & (F.col("turn_idx") == 0),
+        F.lit("spark\u0301 join spark\u00b2 table\u200djoin"))
+        .otherwise(F.col("text")))
     # two file chunks → at least two micro-batches (maxFilesPerTrigger=1)
     tx.filter(F.col("turn_idx") < 4).coalesce(1).write.mode(
         "overwrite").parquet(d)

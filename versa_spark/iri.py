@@ -36,10 +36,6 @@ def matches_uri_ref_syntax(ref: str) -> bool:
     return _URI_REF_ILLEGAL.search(ref) is None
 
 
-def matches_uri_syntax(ref: str) -> bool:
-    return matches_uri_ref_syntax(ref) and is_absolute(ref)
-
-
 def absolutize(ref: str, base: str | None) -> str:
     """Resolve *ref* against *base* per RFC 3986.
 

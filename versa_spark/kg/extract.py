@@ -1,10 +1,9 @@
 """Mention detection & triple extraction over turn text.
 
 The Spark restatement of the reference's parse→fingerprint→transform flow
-(SURVEY.md §3.1) for transcripts: a vectorized pandas UDF scans Arrow
-batches of turn text for lexicon mentions (pandas ``str.extractall`` — C
-regex over whole batches, no per-row Python), and triple construction is
-pure column expressions + explode.
+(SURVEY.md §3.1) for transcripts: mention detection is one JVM
+``regexp_extract_all`` over the lexicon alternation (no Python in the
+plan), and triple construction is pure column expressions + explode.
 
 Vocabulary: the KG rels live under http://bibfra.me/purl/versa/ alongside
 the reference's own (type/label), plus transcript-domain rels.
@@ -12,10 +11,7 @@ the reference's own (type/label), plus transcript-domain rels.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 from versa_spark import VTYPE_REL
 
@@ -42,15 +38,26 @@ LEXICON = {
     "windows": "window", "queries": "query", "tables": "table",
 }
 
-_MENTION_PAT = r"\b(" + "|".join(sorted(LEXICON, key=len, reverse=True)) + r")\b"
+_MENTION_ALT = "|".join(sorted(LEXICON, key=len, reverse=True))
 
-# JVM twin of _MENTION_PAT: java.util.regex defaults \b/\w to ASCII while
-# Python's re is Unicode-aware — (?U) (UNICODE_CHARACTER_CLASS) aligns the
-# word-boundary semantics so the column-expression scan and the pandas
-# kernel agree on texts with non-ASCII neighbors ("sparké" is NOT a
-# mention under either engine).
-_MENTION_PAT_JVM = "(?U)" + _MENTION_PAT
+# Python form of the mention scan: the oracle that kg.reference_rules and
+# the tests compile with ``re``.
+_MENTION_PAT = r"\b(" + _MENTION_ALT + r")\b"
 
+# The one JVM form, compiled by mention_surfaces_sql and turn_relations.
+# Python's str \w is letters, numbers and '_'; Java's (?U)\w also counts
+# combining marks and the zero-width joiner and drops numbers such as
+# '²', so the word boundaries are spelled out as lookarounds over
+# Python's word class.  The surrogate-pair branch never matches a valid
+# string: it widens the lookbehind to two UTF-16 units, so a
+# supplementary-plane letter before a mention ("\U0001d431spark") is
+# read as one code point instead of a lone low surrogate.  Letters newer
+# than the JVM's Unicode tables (Unicode 14 on Java 17) still read as
+# non-word on the JVM side.
+_WORD = r"[\p{L}\p{N}_]"
+_MENTION_PAT_JVM = (
+    rf"(?<!{_WORD}|[\x{{D800}}-\x{{DBFF}}][\x{{DC00}}-\x{{DFFF}}])"
+    rf"({_MENTION_ALT})(?!{_WORD})")
 
 # _MENTION_PAT_JVM as a SQL single-quoted-literal body (backslashes
 # doubled; the pattern itself contains no quotes)
@@ -65,83 +72,20 @@ def mention_surfaces_sql(text_col: str) -> str:
             f" '{_MENTION_PAT_SQL}', 1))")
 
 
-def mention_surfaces_col(text_col):
-    """Column expression: text → array of distinct lexicon surface forms
-    in first-occurrence order — the pure-JVM form of the extraction
-    kernel (guide §4: built-ins beat any Python boundary for a scan this
-    simple).  ``regexp_extract_all`` with the length-sorted alternation
-    yields every match in occurrence order; ``array_distinct`` keeps the
-    first occurrence of each surface, exactly the kernel's per-row dedup.
-    Output-identical to ``extract_mentions_udf()(text)`` (parity-tested),
-    with zero Arrow traffic and no Python workers in the plan.
-
-    Accepts a column NAME (fast path: one F.expr round trip) or a Column
-    (builder form, identical expression tree)."""
-    if isinstance(text_col, str):
-        return F.expr(mention_surfaces_sql(text_col))
-    return F.array_distinct(F.regexp_extract_all(
-        F.coalesce(text_col, F.lit("")), F.lit(_MENTION_PAT_JVM), 1))
+def mention_surfaces_col(text_col: str):
+    """Column expression: text column name → array of distinct lexicon
+    surface forms in first-occurrence order (guide §4: built-ins beat
+    any Python boundary for a scan this simple).  ``regexp_extract_all``
+    with the length-sorted alternation yields every match in occurrence
+    order; ``array_distinct`` keeps the first occurrence of each
+    surface.  Equal to first-occurrence-distinct ``_MENTION_PAT``
+    matches under Python's ``re`` (tested), with no Python workers in
+    the plan.  Null text yields an empty array."""
+    return F.expr(mention_surfaces_sql(text_col))
 
 
-def _batch_extract_kernel(pat, mapper=None):
-    """The shared vectorized extraction kernel both mention UDFs wrap:
-    one C-level ``finditer`` over the NUL-joined Arrow batch blob, match
-    offsets mapped back to rows via ``np.searchsorted`` over cumulative
-    row offsets, per-row first-occurrence dedup.  ``mapper`` (a dict)
-    turns a matched surface into its emitted value — the surface index
-    for the compact UDF; ``None`` emits the surface string itself."""
-    def _extract(texts):
-        import numpy as np
-        import pandas as pd
-
-        vals = texts.fillna("").tolist()
-        n = len(vals)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        blob = "\x00".join(vals)
-        # row i spans [starts[i], starts[i]+len) in blob
-        lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=n)
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1] + 1, out=starts[1:])
-        matches = []
-        positions = []
-        for m in pat.finditer(blob):
-            g = m.group()
-            matches.append(g if mapper is None else mapper[g])
-            positions.append(m.start())
-        rows = np.searchsorted(
-            starts, np.asarray(positions, dtype=np.int64),
-            side="right") - 1
-        out = [[] for _ in range(n)]
-        seen = [None] * n
-        for row, w in zip(rows.tolist(), matches):
-            s = seen[row]
-            if s is None:
-                s = seen[row] = set()
-            if w not in s:
-                s.add(w)
-                out[row].append(w)
-        return pd.Series(out)
-    return _extract
-
-
-def extract_mentions_udf():
-    """pandas UDF: text → array of distinct lexicon surface forms, in
-    first-occurrence order (deterministic).
-
-    Vectorization: the whole Arrow batch is joined into one buffer with a
-    NUL separator (a non-word char, so \\b semantics are preserved at row
-    edges) and scanned with ONE C-level ``finditer``; match offsets map
-    back to rows via ``np.searchsorted`` over cumulative row offsets.
-    ~40× the per-row findall loop on 100-word texts."""
-    pat = re.compile(_MENTION_PAT)
-    return F.pandas_udf(_batch_extract_kernel(pat),
-                        ArrayType(StringType()))
-
-
-# deterministic index space for the compact mention encoding
+# deterministic index space for the lexicon surfaces
 _SURFACES = sorted(LEXICON)
-_SURFACE_IX = {s: i for i, s in enumerate(_SURFACES)}
 
 # canonical-entity index space: the lexicon's value set.  Because the
 # mention regex only ever matches lexicon surfaces, surface→canonical is
@@ -154,29 +98,12 @@ _CANON_IX = {c: i for i, c in enumerate(_CANONICALS)}
 _SURFACE_CANON_IX = [_CANON_IX[LEXICON[s]] for s in _SURFACES]
 
 
-def extract_mention_ids_udf():
-    """Compact variant of extract_mentions_udf: returns arrays of
-    lexicon-surface INDICES (tinyint) instead of the surface strings —
-    the Arrow return column shrinks from ~6 bytes/mention of string data
-    to 1 byte/mention, which matters because the extraction stage is
-    memory-traffic-bound once several workers share one bus.  The
-    strings are reconstituted JVM-side by element_at over a 17-element
-    literal array (turn_mentions)."""
-    pat = re.compile(_MENTION_PAT)
-    from pyspark.sql.types import ByteType
-    return F.pandas_udf(_batch_extract_kernel(pat, dict(_SURFACE_IX)),
-                        ArrayType(ByteType()))
-
-
 def turn_mentions(turns: DataFrame) -> DataFrame:
     """ordered turns → (conv_id, turn_idx, turn_iri, surface) mention rows.
 
-    Round 7: the scan is a pure JVM column expression
-    (mention_surfaces_col) — the small-lexicon alternation compiles into
-    the codegen stage, so the extraction pays no JVM↔Python boundary at
-    all (previously an ArrowEvalPython node shipping every text batch to
-    pandas and the index array back).  Output-identical to the kernel
-    path (parity-tested in tests/test_r07_optimizations.py)."""
+    The scan is a pure JVM column expression (mention_surfaces_col) —
+    the small-lexicon alternation compiles into the codegen stage, so
+    the extraction pays no JVM↔Python boundary at all."""
     return (turns
             .withColumn("mids", mention_surfaces_col("text"))
             .select("conv_id", "turn_idx", "turn_iri",
@@ -187,7 +114,7 @@ def turn_entity_ids(turns: DataFrame) -> DataFrame:
     """turns → the same rows minus ``text``, plus ``eids``: the per-turn
     DISTINCT canonical-entity indices (tinyint array).
 
-    This is the zero-exchange mention/linking path: the UDF already
+    This is the zero-exchange mention/linking path: the scan already
     returns distinct surfaces per turn, surface→canonical collapses via
     a literal index map (F.transform + element_at) and aliases dedup via
     array_distinct — all BEFORE the explode, inside the row.  Since
@@ -420,8 +347,8 @@ def turn_relations(turns: DataFrame,
         (entity/spark, v/rel/reads, entity/table),
         (entity/table, v/rel/feeds, entity/stream).
 
-    Spark-first shape: TWO fused-regex passes over the text — the same
-    length-sorted alternation the mention scan compiles —
+    Spark-first shape: TWO fused-regex passes over the text with the
+    mention scan's own pattern (``_MENTION_PAT_JVM``) —
     ``regexp_extract_all`` yields every mention in occurrence order and
     ``split`` on the identical pattern yields the between-texts, so
     segment i+1 is exactly the window between mention i and mention
@@ -435,9 +362,9 @@ def turn_relations(turns: DataFrame,
     Returns (conv_id, turn_idx, turn_iri, subj_iri, verb, rel_iri,
     obj_iri)."""
     low = F.lower(F.col("text"))
-    split_pat = _MENTION_PAT.replace("(", "(?:", 1)
-    ments = F.regexp_extract_all(low, F.lit(_MENTION_PAT), 1)
-    segs = F.split(low, split_pat)
+    ments = F.regexp_extract_all(low, F.lit(_MENTION_PAT_JVM), 1)
+    # Java's split drops capture groups, so the same pattern splits
+    segs = F.split(low, _MENTION_PAT_JVM)
     canon_map = F.create_map(*[F.lit(x) for s in _SURFACES
                                for x in (s, LEXICON[s])])
     # verbs are caller-supplied (CLI --relations): escape each so a

@@ -14,11 +14,11 @@ Two linking paths, same output (parity-asserted in tests):
   the narrow-key dedup exchange (canonicalize.mention_links).
 
 The union of link families consumes the extracted frame three times;
-without materialization Spark re-executes the pandas-UDF extraction once
+without materialization Spark re-executes the regex mention scan once
 per branch, so ``build_graph`` persists ONE slim frame (turn metadata +
 1-byte entity indices, MEMORY_AND_DISK) for the duration of the action —
 the in-session equivalent of the KGJob's per-stage Parquet checkpoints.
-The fat ``text`` column is consumed exactly once (by the mention UDF)
+The fat ``text`` column is consumed exactly once (by the mention scan)
 and NEVER persisted or shuffled — at 10^12 turns the text column IS the
 table; caching it would evict everything else.
 """

@@ -588,8 +588,3 @@ class KGJob:
                     .agg(F.sum("n_mentions").alias("n_mentions"),
                          F.sum("n_convs").alias("n_convs")))
         return df
-
-
-def run_kg_job(spark: SparkSession, transcripts_df: DataFrame,
-               workdir: str, **kw) -> dict[str, DataFrame]:
-    return KGJob(spark, workdir, **kw).run(transcripts_df)

@@ -59,18 +59,6 @@ def fingerprint_plaintext_col(etype, name_rel, name_col):
         F.lit("]"))
 
 
-def resource_id_udf():
-    """pandas UDF: fingerprint plaintext → 11-char Versa ID (vectorized
-    mmh3, kg.ids_vec)."""
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def _rid(plaintexts):
-        from versa_spark.kg.ids_vec import resource_id_series
-        return resource_id_series(plaintexts)
-    return _rid
-
-
 # printable ASCII only — anything else needs json.dumps' \uXXXX escaping,
 # which the JVM column expression does not reproduce
 _ASCII_SAFE = r"^[\x20-\x7e]*$"

@@ -55,7 +55,8 @@ def transcript_input_model(rows) -> LocalModel:
 
 def _mention_entities(text: str) -> list[tuple[str, str]]:
     """Distinct (entity_iri, canonical) per lexicon mention, first-occurrence
-    order — mirror of extract.extract_mentions_udf + linking.link_entities."""
+    order — the oracle for extract.mention_surfaces_col +
+    linking.link_entities."""
     seen, out = set(), []
     for surface in _PAT.findall(text or ""):
         if surface in seen:

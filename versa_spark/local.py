@@ -182,10 +182,6 @@ def simple_lookup(model: LocalModel, origin, rel):
     return None
 
 
-def lookup_all(model: LocalModel, origin, rel):
-    return [t for (_o, _r, t, _a) in model.match(origin, rel)]
-
-
 def model_to_rows(model: LocalModel) -> list[tuple]:
     """LocalModel → rows for versa_spark.model.LINK_SCHEMA."""
     from versa_spark.model import quads_to_rows

@@ -97,10 +97,6 @@ def from_quads(spark: SparkSession, quads: Iterable) -> DataFrame:
     return spark.createDataFrame(quads_to_rows(quads), LINK_SCHEMA)
 
 
-def empty_model(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], LINK_SCHEMA)
-
-
 def dedup_links(df: DataFrame) -> DataFrame:
     """Duplicate refusal: the reference's ``add`` silently refuses exact
     duplicate quads (memory.py:179-181). Keeps the lowest link_ix."""
@@ -118,23 +114,6 @@ def union_models(*dfs: DataFrame) -> DataFrame:
     for d in dfs[1:]:
         out = out.unionByName(d, allowMissingColumns=True)
     return dedup_links(out)
-
-
-def with_link_ix(df: DataFrame) -> DataFrame:
-    """(Re)assign deterministic statement order by sorting on the canonical
-    quad representation. Used where the reference relies on list order but
-    no explicit order exists.
-
-    SCALE CAVEAT: the unpartitioned Window funnels the whole model
-    through one task — a global total order is inherently serial.  Fine
-    for reference-semantics fixtures and serializer output (the only
-    callers); for bulk tables needing a stable per-row key at scale,
-    key on content (xxhash64 of the canonical quad) or order within an
-    origin bucket instead — a 10^12-row frame must never pass through
-    this function."""
-    w = Window.orderBy("origin", "rel", "target", "t_iri",
-                       F.to_json(F.col("attrs")))
-    return df.withColumn("link_ix", F.row_number().over(w).cast("long") - 1)
 
 
 def attrs_map(col="attrs"):

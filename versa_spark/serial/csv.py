@@ -1,8 +1,7 @@
 """CSV → Versa model via Literate string templates.
 
 Mirrors /root/reference/tools/py/serial/csv.py:129-145 (template fill per
-row → Literate parse), header-key slugification (csv.py:32-33,139-143), and
-``omap`` (csv.py:177-185).
+row → Literate parse) and header-key slugification (csv.py:32-33,139-143).
 
 Spark surface: ``parse_df`` runs the template+parse per Arrow batch inside
 ``mapInPandas`` — the archetype of the row→links extraction stage (each
@@ -75,13 +74,3 @@ def parse_df(df, vliterate_template: str):
                          "link_ix"])
 
     return df.mapInPandas(_batches, LINK_SCHEMA)
-
-
-def omap(quads, rel=None):
-    """origin → {rel: [targets]} map (reference csv.py:177-185)."""
-    out = {}
-    for (o, r, t, _a) in quads:
-        if rel is not None and r != rel:
-            continue
-        out.setdefault(o, {}).setdefault(r, []).append(t)
-    return out

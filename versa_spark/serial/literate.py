@@ -324,13 +324,6 @@ def parse(vlit: str, spark=None, config: dict | None = None):
 # Writer (reference serial/literate.py:28-132)
 # ---------------------------------------------------------------------------
 
-def md_escape(s: str) -> str:
-    stripped = s.strip()
-    if stripped and stripped[0] == "<" and stripped[-1] == ">":
-        s = '"' + s.replace('"', '\\"') + '"'
-    return s
-
-
 def _relativize(rel: str, base: str) -> str | None:
     if rel.startswith(base):
         suffix = rel[len(base):]

@@ -210,12 +210,11 @@ def streaming_conversation_state(spark: SparkSession, input_dir: str,
     closest is the coroutine sink, serial/util.py:23-49).
 
     Emits the running per-conversation totals each time a batch touches
-    the conversation.  State is (n_turns, n_mentions, last_turn_idx)."""
-    import re as _re
+    the conversation.  State is (n_turns, n_mentions, last_turn_idx).
+    Each turn's mention count is a JVM column computed before the
+    grouping, so the Python side only sums; the text never reaches it."""
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from versa_spark.kg.extract import _MENTION_PAT
-
-    pat = _re.compile(_MENTION_PAT)
+    from versa_spark.kg.extract import _MENTION_PAT_JVM
 
     def _update(key, pdfs, state):
         import pandas as pd
@@ -224,8 +223,7 @@ def streaming_conversation_state(spark: SparkSession, input_dir: str,
             state.get if state.exists else (0, 0, -1))
         for pdf in pdfs:
             n_turns += len(pdf)
-            n_mentions += int(sum(len(pat.findall(t or ""))
-                                  for t in pdf["text"]))
+            n_mentions += int(pdf["n_turn_mentions"].sum())
             if len(pdf):
                 last_ix = max(last_ix, int(pdf["turn_idx"].max()))
         state.update((n_turns, n_mentions, last_ix))
@@ -236,7 +234,12 @@ def streaming_conversation_state(spark: SparkSession, input_dir: str,
 
     stream = read_transcript_stream(spark, input_dir,
                                     max_files_per_trigger)
-    return (stream.groupBy("conv_id")
+    n_turn_mentions = F.size(F.regexp_extract_all(
+        F.coalesce("text", F.lit("")), F.lit(_MENTION_PAT_JVM), 1))
+    return (stream
+            .select("conv_id", "turn_idx",
+                    n_turn_mentions.alias("n_turn_mentions"))
+            .groupBy("conv_id")
             .applyInPandasWithState(
                 _update, CONV_OUT_SCHEMA, CONV_STATE_SCHEMA,
                 "update", GroupStateTimeout.NoTimeout))
@@ -263,10 +266,10 @@ def streaming_mention_counts(spark: SparkSession, input_dir: str,
     a sink (memory sink in tests)."""
     from versa_spark.kg import extract, linking
     stream = read_transcript_stream(spark, input_dir)
-    ex = extract.extract_mentions_udf()
     mentions = (stream
                 .withWatermark("ts", watermark)
-                .withColumn("surface", F.explode(ex(F.col("text"))))
+                .withColumn("surface",
+                            F.explode(extract.mention_surfaces_col("text")))
                 .join(F.broadcast(linking.canonical_dictionary(spark)),
                       "surface"))
     return (mentions
