@@ -386,14 +386,13 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     check.  The xxhash64 fast path is exercised by bench.py and the
     family-equivalence test in tests/test_dataops.py.
 
-    materialize=True (round-4 A/B, quiet host, paired laps): the lazy
-    variant re-executes the signature→banding DAG twice per action (the
-    candidate set feeds the verify stage's pair join AND its doc-id
-    semi-join), measuring 11.7/12.5 s vs 6.7/7.0 s for the
-    persist+checkpoint path at sf0.1 — the round-3 hypothesis that the
-    eager checkpoint caused the regression was wrong; the checkpoint
-    costs ~0.4 s (persist-only measured 6.3/6.6 s) and buys leak-free
-    repeated calls, so the default stays."""
+    The verify stage is checkpointed (round-4 A/B, quiet host, paired
+    laps): unmaterialized, the signature→banding DAG re-executes twice
+    per action (the candidate set feeds the verify stage's pair join AND
+    its doc-id semi-join), measuring 11.7/12.5 s vs 6.7/7.0 s for the
+    persist+checkpoint path at sf0.1; the checkpoint costs ~0.4 s
+    (persist-only measured 6.3/6.6 s) and buys leak-free repeated
+    calls."""
     from versa_spark import dedup
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .orderBy("doc_id").limit(200))
@@ -408,8 +407,7 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # natural single partition stays.
     both = docs.select("doc_id", "text").unionByName(planted)
     return dedup.minhash_lsh_candidates(
-        both, verify_threshold=0.8, hash_family="md5",
-        materialize=True).select(
+        both, verify_threshold=0.8, hash_family="md5").select(
         "a", "b", F.round("jaccard", 4).alias("jaccard"))
 
 

@@ -180,27 +180,24 @@ def test_lsh_verify_is_candidate_scoped(spark, monkeypatch):
             "completely other words elsewhere entirely different content"),
             (4, base)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    calls = []
-    orig = dedup.ngram_jaccard_pairs
+    scoped_docs = []
+    orig = dedup._verify_candidates
 
-    def spy(*args, **kwargs):
-        calls.append(kwargs.get("candidates"))
-        return orig(*args, **kwargs)
+    def spy(cands, a_sh, b_sh, threshold):
+        # collected here: the shingle checkpoint is released on return
+        scoped_docs.append({r.doc_id for r in a_sh.union(b_sh).collect()})
+        return orig(cands, a_sh, b_sh, threshold)
 
-    # the lazy variant is the plan-auditable path: it must route through
-    # the scoped ngram_jaccard_pairs kernel (candidates != None)
-    monkeypatch.setattr(dedup, "ngram_jaccard_pairs", spy)
-    lazy = {(r.a, r.b) for r in dedup.minhash_lsh_candidates(
-        df, verify_threshold=0.5, materialize=False).collect()}
-    assert calls and all(c is not None for c in calls), \
-        "verify stage ran the unscoped full-corpus Jaccard"
-    # the default materialized path verifies by joining the checkpointed
-    # candidate table (candidate-scoped by construction, r07 2nd pass);
-    # it must emit the identical pair set
+    # verify must run the shared candidate kernel over the candidate
+    # docs only (doc 3 shares no LSH bucket)
+    monkeypatch.setattr(dedup, "_verify_candidates", spy)
     got = {(r.a, r.b) for r in dedup.minhash_lsh_candidates(
         df, verify_threshold=0.5).collect()}
-    exact = {(r.a, r.b) for r in orig(df, threshold=0.5).collect()}
-    assert got == lazy == exact
+    assert scoped_docs == [{1, 2, 4}], \
+        "verify stage ran the unscoped full-corpus Jaccard"
+    exact = {(r.a, r.b) for r in dedup.ngram_jaccard_pairs(
+        df, threshold=0.5).collect()}
+    assert got == exact
 
 
 def test_md5_hash_family_matches_xxhash_semantics(spark):
@@ -237,10 +234,15 @@ def test_connected_components_chain_converges_logarithmically(spark):
     n = 1000
     pairs = spark.range(n - 1).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
+    before = _n_cached_rdds(spark)
     labels, rounds = dedup.connected_components(pairs, with_rounds=True)
     comps = {r.doc_id: r.component for r in labels.collect()}
     assert len(comps) == n and set(comps.values()) == {0}
     assert rounds <= 14, f"chain of {n} took {rounds} rounds (not O(log n))"
+    # each round frees the previous round's label checkpoint and the
+    # edge cache is released: only the returned labels stay pinned
+    assert rounds >= 4
+    assert _n_cached_rdds(spark) - before <= 1
     # non-convergence raises instead of silently splitting components
     with pytest.raises(RuntimeError):
         dedup.connected_components(pairs, max_iters=2)
@@ -712,25 +714,6 @@ def test_dedup_embeddings_removes_planted_dups(spark, emb):
     assert len(kept) == 120  # every planted dup collapsed to its original
 
 
-def test_connected_components_checkpoint_every_2(spark):
-    """The deferred-release path (checkpoint_every > 1): a persisted
-    round's lineage may reference the previous checkpoint, so releases
-    wait for the next checkpointed round — output must equal the
-    default every-round-checkpoint run."""
-    docs = [(i,) for i in range(60)]
-    df = spark.createDataFrame(docs, ["doc_id"])
-    pairs = (df.select(F.col("doc_id").alias("a"),
-                       (F.col("doc_id") + 1000).alias("b"))
-             .unionByName(df.filter(F.col("doc_id") % 5 == 0)
-                          .select(F.col("doc_id").alias("a"),
-                                  (F.col("doc_id") + 1).alias("b"))))
-    a = {(r.doc_id, r.component) for r in
-         dedup.connected_components(pairs).collect()}
-    b = {(r.doc_id, r.component) for r in
-         dedup.connected_components(pairs, checkpoint_every=2).collect()}
-    assert a == b and len(a) > 100
-
-
 def test_dedup_embeddings_empty_input(spark):
     from pyspark.sql.types import (ArrayType, FloatType, LongType,
                                    StructField, StructType)
@@ -776,6 +759,38 @@ def test_decontaminate(spark):
     assert flags == {1: True, 2: False, 3: True, 4: True, 5: False}
     with pytest.raises(ValueError):
         dedup.decontaminate(corpus, bench, mode="nope")
+
+
+def test_bad_mode_raises_before_any_spark_job(spark, tmp_path):
+    """decontaminate, decontaminate_fuzzy and dedup_against_index check
+    ``mode`` before their first Spark job: a bad value runs no job and
+    pins no block."""
+    base = " ".join(f"w{i}" for i in range(30))
+    corpus = spark.createDataFrame([(1, base), (2, base + " x")],
+                                   ["doc_id", "text"])
+    bench = spark.createDataFrame([(100, base)], ["doc_id", "text"])
+    path = str(tmp_path / "ix")
+    dedup.write_dedup_index(corpus, path)
+    sc = spark.sparkContext
+    calls = {
+        "decontaminate": lambda: dedup.decontaminate(
+            corpus, bench, mode="nope"),
+        "decontaminate_fuzzy": lambda: dedup.decontaminate_fuzzy(
+            corpus, bench, mode="nope"),
+        "dedup_against_index": lambda: dedup.dedup_against_index(
+            corpus, path, mode="bogus")}
+    for name, call in calls.items():
+        group = f"bad-mode-{name}"
+        cached = _n_cached_rdds(spark)
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="unknown mode"):
+                call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        assert _n_cached_rdds(spark) == cached, name
 
 
 def test_decontaminate_broadcast_guard(spark):

@@ -246,11 +246,9 @@ def test_sql_string_minhash_matches_builder_form(spark):
         assert got_b == exp_b, fam
 
 
-def test_verify_candidates_distinct_fast_path(spark):
-    """candidates_distinct=True must emit the same verified pairs as the
-    re-distinct default, including when the caller's frame has duplicate
-    candidate rows (then only the default dedups them — assert both
-    contracts)."""
+def test_verify_candidates_duplicate_pairs_scored_once(spark):
+    """Scoped verify emits each candidate pair once, also when the
+    caller's candidate frame repeats rows."""
     from versa_spark import dedup
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon"),
@@ -261,11 +259,7 @@ def test_verify_candidates_distinct_fast_path(spark):
     cands = spark.createDataFrame([(1, 2), (1, 4)], "a long, b long")
     base = sorted(map(tuple, dedup.ngram_jaccard_pairs(
         docs, threshold=0.5, candidates=cands).collect()))
-    fast = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        docs, threshold=0.5, candidates=cands,
-        candidates_distinct=True).collect()))
-    assert base == fast and len(base) == 2
-    # duplicated candidate rows: default dedups, fast path double-scores
+    assert len(base) == 2
     dup = cands.unionByName(cands)
     assert sorted(map(tuple, dedup.ngram_jaccard_pairs(
         docs, threshold=0.5, candidates=dup).collect())) == base

@@ -22,11 +22,23 @@ window sort is absent from the triple-build plan. Regenerate with
 
 """)
 
-    def section(title, df, note):
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    def write_section(title, plan, note):
         lines = plan.splitlines()[:42]
         out.write(f"## {title}\n\n{note}\n\n```\n"
                   + "\n".join(lines) + "\n```\n\n")
+
+    def section(title, df, note):
+        write_section(title,
+                      df._jdf.queryExecution().executedPlan().toString(),
+                      note)
+
+    def last_job_plan():
+        """Physical plan of the latest SQL execution — the job that
+        materialized an eagerly checkpointed result — read from the
+        status store, which Spark keeps with the UI off."""
+        execs = spark._jsparkSession.sharedState().statusStore() \
+            .executionsList()
+        return execs.apply(execs.size() - 1).physicalPlanDescription()
 
     import __spark_entry__ as e
 
@@ -117,8 +129,11 @@ window sort is absent from the triple-build plan. Regenerate with
     both = cap.unionByName(cap.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat("text", F.lit(" appended")).alias("text")))
-    ver = dedup.minhash_lsh_candidates(both, verify_threshold=0.8,
-                                       materialize=False)
+    # the library checkpoints the candidates before verifying; composing
+    # discovery with the same verify kernel keeps the whole DAG in view
+    ver = dedup.ngram_jaccard_pairs(
+        both, threshold=0.8,
+        candidates=dedup.minhash_lsh_candidates(both, verify_threshold=None))
     ver.count()
     section("MinHash-LSH verify (candidate-scoped)", ver,
             "Jaccard is computed ONLY for candidate pairs: the shingle "
@@ -201,21 +216,18 @@ window sort is absent from the triple-build plan. Regenerate with
 
     from versa_spark.kg import analytics
     lk = linked.select("conv_id", "turn_idx", "entity_iri")
-    # materialize=False: the audit wants the assembly plan, not the
-    # post-checkpoint LogicalRDD scan the default returns
-    pmi = analytics.cooccurrence_pmi(lk, materialize=False)
-    pmi.count()
-    section("entity co-occurrence + PMI", pmi,
+    # the result is a checkpoint: audit the plan of the job that built it
+    pmi = analytics.cooccurrence_pmi(lk)
+    write_section("entity co-occurrence + PMI", last_job_plan(),
             "Pairs generate INSIDE per-turn arrays (nested transform/"
             "slice — no corpus self-join anywhere in the plan); the two "
             "aggregations are partial/final pairs; marginals and the "
             "turn-count scalar enter as BroadcastHashJoin / "
             "BroadcastNestedLoopJoin of 1-row/dictionary-sized sides.")
 
-    pmi_s = analytics.cooccurrence_pmi_from_sets(
-        e._kg_entity_sets(spark, sf), materialize=False)
-    pmi_s.count()
-    section("co-occurrence from zero-exchange entity sets", pmi_s,
+    analytics.cooccurrence_pmi_from_sets(e._kg_entity_sets(spark, sf))
+    write_section("co-occurrence from zero-exchange entity sets",
+                  last_job_plan(),
             "The sets producer (turn_entity_iri_sets, audited here "
             "through the driver's own _kg_entity_sets derivation) is "
             "pure map-side — the mention scan (JVM regexp since r7), "

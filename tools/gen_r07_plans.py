@@ -47,8 +47,9 @@ def main() -> None:
                     f".explain('formatted')\n" + txt)
         print("wrote", path)
 
-    # minhash assembly plan: materialize=False keeps the whole
-    # signature→banding→discovery→verify DAG inspectable
+    # minhash assembly plan: the library checkpoints the candidates
+    # before verifying, so compose discovery with the same verify kernel
+    # to keep the whole signature→banding→discovery→verify DAG in view
     from versa_spark import dedup
     docs = (spark.read.parquet(f"{SF}/documents.parquet")
             .orderBy("doc_id").limit(200))
@@ -56,24 +57,29 @@ def main() -> None:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" appended")).alias("text"))
     both = docs.select("doc_id", "text").unionByName(planted)
-    lazy = dedup.minhash_lsh_candidates(
-        both, verify_threshold=0.8, hash_family="md5", materialize=False)
+    lazy = dedup.ngram_jaccard_pairs(
+        both, threshold=0.8, candidates=dedup.minhash_lsh_candidates(
+            both, verify_threshold=None, hash_family="md5"))
     with open("plans/r07/minhash_lsh_lazy_after.txt", "w") as f:
-        f.write("# minhash_lsh assembly plan (materialize=False so the "
-                "full signature->banding->discovery->verify DAG is "
+        f.write("# minhash_lsh assembly plan (discovery composed with "
+                "ngram_jaccard_pairs(candidates=...) so the full "
+                "signature->banding->discovery->verify DAG is "
                 "visible) — after\n" + fmt(lazy))
     print("wrote plans/r07/minhash_lsh_lazy_after.txt")
 
-    # the synthetic e2e build plan (persist=False exposes the full DAG)
+    # the synthetic e2e build plan: the persisted slim frame's plan shows
+    # under its InMemoryRelation
     from versa_spark.kg.graph import build_graph
     from versa_spark.kg.transcripts import (ordered_turns,
                                             synthetic_transcripts)
     turns = ordered_turns(synthetic_transcripts(spark, n_convs=1000,
                                                 turns_per_conv=25))
-    g = build_graph(spark, turns, persist=False)["graph"]
+    parts = build_graph(spark, turns)
     with open("plans/r07/kg_synthetic_e2e_after.txt", "w") as f:
-        f.write("# kg_synthetic_e2e graph (persist=False so the full "
-                "build plan is visible) — after\n" + fmt(g))
+        f.write("# kg_synthetic_e2e graph (the persisted slim frame's "
+                "build plan shows under its InMemoryRelation) — after\n"
+                + fmt(parts["graph"]))
+    parts["turns"].unpersist()
     print("wrote plans/r07/kg_synthetic_e2e_after.txt")
     spark.stop()
 

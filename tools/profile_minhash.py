@@ -51,12 +51,10 @@ def main() -> None:
     # warmup
     for _ in range(2):
         dedup.minhash_lsh_candidates(source(), verify_threshold=0.8,
-                                     hash_family="md5",
-                                     materialize=True).count()
+                                     hash_family="md5").count()
 
-    t("full query (materialize=True)", lambda: dedup.minhash_lsh_candidates(
-        source(), verify_threshold=0.8, hash_family="md5",
-        materialize=True).count())
+    t("full query", lambda: dedup.minhash_lsh_candidates(
+        source(), verify_threshold=0.8, hash_family="md5").count())
     t("source only", lambda: source().count())
     t("signatures", lambda: dedup.minhash_signatures(
         source(), hash_family="md5").count())
@@ -79,8 +77,7 @@ def main() -> None:
 
     # xxhash64 family for comparison (bench uses md5)
     t("full query (xxhash64)", lambda: dedup.minhash_lsh_candidates(
-        source(), verify_threshold=0.8, hash_family="xxhash64",
-        materialize=True).count())
+        source(), verify_threshold=0.8, hash_family="xxhash64").count())
     spark.stop()
 
 

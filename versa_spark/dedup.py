@@ -95,72 +95,66 @@ def _jaccard_finish(inter: DataFrame, sizes: DataFrame,
             .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
 
 
+def _candidate_shingles(df: DataFrame, ids: DataFrame, id_col: str,
+                        text_col: str, k: int) -> DataFrame:
+    """(doc_id, sh) distinct-shingle arrays of the docs whose id is in
+    ``ids`` (a ``doc_id`` frame).  The DOC rows are semi-joined before
+    shingling, so verify costs O(candidate docs), not O(corpus)."""
+    return (df.select(F.col(id_col).alias("doc_id"),
+                      F.col(text_col).alias("_text"))
+            .join(ids, "doc_id", "left_semi")
+            .select("doc_id", shingle_array("_text", k).alias("sh")))
+
+
+def _verify_candidates(cands: DataFrame, a_sh: DataFrame, b_sh: DataFrame,
+                       threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs: the one place candidate-pair
+    Jaccard is computed from shingle arrays.  ``cands`` holds distinct
+    (a, b) pairs; ``a_sh`` / ``b_sh`` are the (doc_id, sh) shingle-array
+    frames of the a and b sides.  Returns (a, b, jaccard) with
+    jaccard ≥ threshold, rounded to 6 places.
+
+    Shingles stay IN-ROW arrays and the per-pair intersection is one
+    in-row array intersection, so verify is two plain joins of the pairs
+    against the per-doc arrays — not explode → per-pair shingle
+    equi-join → count → two size joins (four exchanges + a Generate).
+    Pairs sharing no shingle are dropped (n_inter > 0), as that
+    intersection join dropped them."""
+    a = a_sh.selectExpr("doc_id AS a", "sh AS _sh_a")
+    b = b_sh.selectExpr("doc_id AS b", "sh AS _sh_b")
+    return (cands.join(a, "a").join(b, "b")
+            .selectExpr("a", "b", "size(_sh_a) AS n_a",
+                        "size(_sh_b) AS n_b",
+                        "size(array_intersect(_sh_a, _sh_b)) AS n_inter")
+            .filter("n_inter > 0")
+            .selectExpr("a", "b",
+                        "n_inter / (n_a + n_b - n_inter) AS jaccard")
+            .filter(F.col("jaccard") >= float(threshold))
+            .selectExpr("a", "b", "round(jaccard, 6) AS jaccard"))
+
+
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = 3,
                         threshold: float = 0.8,
-                        candidates: DataFrame | None = None,
-                        candidates_distinct: bool = False) -> DataFrame:
+                        candidates: DataFrame | None = None) -> DataFrame:
     """Exact Jaccard over word k-shingles.  (a, b, jaccard) with a < b and
     jaccard ≥ threshold.
 
     With ``candidates`` (an (a, b) pair DataFrame, a < b) the computation
-    is *scoped*: only docs appearing in a candidate pair get shingled into
-    the join, and intersections are counted per candidate pair (candidates
-    ⋈ shingles-of-a ⋈ shingles-of-b) — cost is O(candidate pairs ×
-    shingles/doc), never all-pairs.  Without it, all co-shingling pairs
-    are scored — quadratic in shingle-sharing docs; the verification
-    kernel, not the discovery path (use minhash_lsh_candidates for
-    discovery at scale)."""
+    is *scoped*: only docs appearing in a candidate pair get shingled, and
+    intersections are counted per candidate pair (_verify_candidates) —
+    cost is O(candidate pairs × shingles/doc), never all-pairs.  Without
+    it, all co-shingling pairs are scored — quadratic in shingle-sharing
+    docs; the verification kernel, not the discovery path (use
+    minhash_lsh_candidates for discovery at scale)."""
     if candidates is not None:
         # candidate pairs must be distinct or a pair would be scored (and
         # emitted) twice; the distinct is O(candidates) — trivial next to
-        # the joins it scopes.  ``candidates_distinct=True`` lets a caller
-        # that already distinct-ed (minhash_lsh_candidates ends in
-        # .distinct() and persists) skip the re-aggregation: the r07
-        # 2nd-pass job trace showed the redundant Aggregate executing
-        # once per plan reference (pair join + cand_ids), each with its
-        # own exchange stage — pure scheduling latency on a tiny table.
-        cands = candidates.select("a", "b")
-        if not candidates_distinct:
-            cands = cands.distinct()
-        # one explode + one distinct instead of a two-branch union of the
-        # candidate frame (which re-executed the frame per branch): one
-        # exchange for the doc-id set, not three
-        cand_ids = (cands.select(F.explode(F.array("a", "b"))
-                    .alias("doc_id")).distinct())
-        # semi-join the DOC rows, then shingle: a semi-join on an
-        # exploded shingle table can't push below the Generate, so it
-        # would re-explode every doc's shingles just to discard them —
-        # filtering first makes verify cost O(candidate docs), not
-        # O(corpus).
-        #
-        # Round 7 shape: shingles stay IN-ROW arrays and the per-pair
-        # intersection is one array_intersect — the former
-        # explode → per-pair shingle equi-join → count → two size joins
-        # (four exchanges + a Generate) collapse into two plain joins of
-        # the candidate pairs against the per-doc shingle arrays.  Same
-        # numbers: |A∩B| over distinct shingle sets, sizes = array
-        # lengths; pairs sharing no shingle are dropped exactly as the
-        # old inner intersection join dropped them (n_inter > 0).
-        sh = (df.select(F.col(id_col).alias("doc_id"),
-                        shingle_array(text_col, k).alias("sh"))
-              .join(cand_ids, "doc_id", "left_semi"))
-        a_sh = sh.select(F.col("doc_id").alias("a"),
-                         F.col("sh").alias("_sh_a"),
-                         F.size("sh").alias("n_a"))
-        b_sh = sh.select(F.col("doc_id").alias("b"),
-                         F.col("sh").alias("_sh_b"),
-                         F.size("sh").alias("n_b"))
-        return (cands.join(a_sh, "a").join(b_sh, "b")
-                .withColumn("n_inter",
-                            F.size(F.array_intersect("_sh_a", "_sh_b")))
-                .filter(F.col("n_inter") > 0)
-                .withColumn("jaccard",
-                            F.col("n_inter")
-                            / (F.col("n_a") + F.col("n_b")
-                               - F.col("n_inter")))
-                .filter(F.col("jaccard") >= threshold)
-                .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
+        # the joins it scopes
+        cands = candidates.select("a", "b").distinct()
+        ids = cands.selectExpr("explode(array(a, b)) AS doc_id").distinct()
+        sh = _candidate_shingles(df, ids, id_col, text_col, k)
+        return _verify_candidates(cands, sh, sh, threshold)
     sh = shingles(df, id_col, text_col, k)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("a"), "shingle")
@@ -267,18 +261,18 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text", k: int = 3,
                            num_hashes: int = 64, bands: int = 16,
                            verify_threshold: float | None = 0.8,
-                           hash_family: str = "xxhash64",
-                           materialize: bool = True) -> DataFrame:
+                           hash_family: str = "xxhash64") -> DataFrame:
     """Banded-LSH candidate pairs, optionally verified with exact Jaccard.
 
     bands × rows-per-band = num_hashes; docs agreeing on any full band
     bucket together; the pair join happens only within buckets (bucket id
     = hash of the band slice) — never all-pairs.  Verification is scoped
-    to the candidate pairs (``ngram_jaccard_pairs(candidates=…)``): the
-    shingle table is semi-joined down to candidate docs and intersections
-    are counted per candidate pair, so the verify stage costs
-    O(candidates), never the full-corpus all-pairs join it exists to
-    avoid.
+    to the candidate pairs by the kernel behind
+    ``ngram_jaccard_pairs(candidates=…)``: the shingle table is
+    semi-joined down to candidate docs and intersections are counted per
+    candidate pair, so the verify stage costs O(candidates), never the
+    full-corpus all-pairs join it exists to avoid.  The verified pairs
+    come back eagerly checkpointed.
 
     Round 7 discovery shape: one groupBy(band, bucket) + in-row pair
     generation replaces the banded self-join.  The join form referenced
@@ -300,60 +294,27 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
              .select("p.a", "p.b").distinct())
     if verify_threshold is None:
         return cands
-    if not materialize:
-        # lazy variant: the full signature→banding→verify plan stays
-        # inspectable (.explain) — for plan audits ONLY.  The candidate
-        # set feeds the verify stage twice (pair join + doc-id
-        # semi-join), so without the persist below the whole
-        # signature→banding DAG executes TWICE in a single action:
-        # round-4 A/B measured 11.7/12.5 s lazy vs 6.7/7.0 s
-        # materialized on the same paired laps.  Do not route timed or
-        # production paths through this branch.
-        return ngram_jaccard_pairs(df, id_col, text_col, k,
-                                   threshold=verify_threshold,
-                                   candidates=cands,
-                                   candidates_distinct=True)
-    # Materialized verify (round-7 2nd-pass shape, ABBA'd at sf0.1:
-    # 2.10/1.40 s → 1.32/1.24 s, identical pairs): checkpoint the
-    # candidate set AND the semi-joined per-doc shingle table, then run
-    # the two pair joins against the materialized rows.  The lazy form
-    # re-executed the corpus-scan→shingle subtree once per join side
-    # (BHJ subtrees aren't reused the way exchanges are) and chained 8
-    # sequential broadcast jobs; both checkpoints are candidate-bounded
-    # (near-dup pairs / their docs — the whole point of LSH), so this
-    # stays O(candidates) at any corpus size.  All three checkpoints'
-    # blocks except the returned result are released before returning
-    # (cacheutil), preserving the no-leak contract of the old
-    # persist/unpersist pair.  The inline verify mirrors
-    # ngram_jaccard_pairs(candidates=…) — equality is pinned by
-    # test_dataops.test_ngram_jaccard_and_minhash_agree and the
-    # minhash_lsh value oracle.
+    # Verify (round-7 2nd-pass shape, ABBA'd at sf0.1: 2.10/1.40 s →
+    # 1.32/1.24 s, identical pairs): checkpoint the candidate set AND the
+    # semi-joined per-doc shingle table, then run the two pair joins
+    # against the materialized rows.  Unmaterialized, the candidate set
+    # feeds verify twice (pair join + doc-id semi-join), so the whole
+    # signature→banding DAG executed twice per action (round-4 A/B:
+    # 11.7/12.5 s vs 6.7/7.0 s), the corpus-scan→shingle subtree ran once
+    # per join side and 8 broadcast jobs chained.  Both checkpoints are
+    # candidate-bounded (near-dup pairs / their docs — the whole point of
+    # LSH), so this stays O(candidates) at any corpus size, and every
+    # checkpoint except the returned result is released before returning
+    # (cacheutil).
     from versa_spark.cacheutil import release_checkpoint
     cands = cands.localCheckpoint(eager=True)
     try:
-        cand_ids = cands.selectExpr("explode(array(a, b)) AS doc_id") \
-                        .distinct()
-        sh = (df.select(F.col(id_col).alias("doc_id"),
-                        shingle_array(text_col, k).alias("sh"))
-              .join(cand_ids, "doc_id", "left_semi")
-              .localCheckpoint(eager=True))
+        ids = cands.selectExpr("explode(array(a, b)) AS doc_id").distinct()
+        sh = _candidate_shingles(df, ids, id_col, text_col,
+                                 k).localCheckpoint(eager=True)
         try:
-            a_sh = sh.selectExpr("doc_id AS a", "sh AS _sh_a",
-                                 "size(sh) AS n_a")
-            b_sh = sh.selectExpr("doc_id AS b", "sh AS _sh_b",
-                                 "size(sh) AS n_b")
-            verified = (cands.join(a_sh, "a").join(b_sh, "b")
-                        .selectExpr(
-                            "a", "b", "n_a", "n_b",
-                            "size(array_intersect(_sh_a, _sh_b)) AS n_inter")
-                        .filter("n_inter > 0")
-                        .selectExpr(
-                            "a", "b",
-                            "n_inter / (n_a + n_b - n_inter) AS jaccard")
-                        .filter(f"jaccard >= {float(verify_threshold)}")
-                        .selectExpr("a", "b",
-                                    "round(jaccard, 6) AS jaccard")
-                        .localCheckpoint(eager=True))
+            verified = _verify_candidates(
+                cands, sh, sh, verify_threshold).localCheckpoint(eager=True)
         finally:
             release_checkpoint(sh)
     finally:
@@ -490,7 +451,6 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
 def connected_components(pairs: DataFrame, a_col: str = "a",
                          b_col: str = "b",
                          max_iters: int = 25,
-                         checkpoint_every: int = 1,
                          with_rounds: bool = False):
     """Duplicate-pair graph → (doc_id, component): alternating
     neighbor-min hooking + pointer-doubling shortcut (the Shiloach-Vishkin
@@ -505,9 +465,10 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
     (hook twice, shortcut twice), so without truncation the logical plan
     grows 4^rounds and OOMs the *driver* during analysis — the label
     table is therefore localCheckpoint-ed (eagerly, truncating lineage to
-    a LogicalRDD) every ``checkpoint_every`` rounds, default every round,
-    exactly GraphFrames' checkpoint-interval strategy (a production
-    cluster build would use a reliable checkpoint dir, same call shape).
+    a LogicalRDD) every round, GraphFrames' checkpoint-interval strategy
+    at interval 1 (a production cluster build would use a reliable
+    checkpoint dir, same call shape), and the previous round's table is
+    released, so a run holds one label-table copy, not one per round.
     Raises RuntimeError if ``max_iters`` rounds don't converge — never
     exits silently with split components.
 
@@ -527,14 +488,6 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
     from versa_spark.cacheutil import release_checkpoint
     rounds = 0
     converged = False
-    prev_is_ckpt = False
-    # frames whose release must WAIT until the next checkpointed round:
-    # with checkpoint_every > 1, a persist()-ed round's lineage still
-    # references the previous checkpoint, so freeing that checkpoint
-    # would make recomputation after eviction impossible — releases are
-    # deferred until a round with truncated lineage (a checkpoint)
-    # materializes and nothing can reference the old blocks
-    pending: list = []
     for i in range(max_iters):
         rounds += 1
         lab = labels.select("node", "component")
@@ -565,31 +518,17 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
                            # one fewer join job every round)
                            (F.coalesce("_pc", "component")
                             != F.col("_old")).alias("_chg")))
-        new_is_ckpt = (i + 1) % checkpoint_every == 0
-        if new_is_ckpt:
-            new_labels = doubled.localCheckpoint(eager=True)
-        else:
-            new_labels = doubled.persist()
+        new_labels = doubled.localCheckpoint(eager=True)
         changed = new_labels.filter(F.col("_chg")).limit(1).count()
-        # the previous round's table is dead once `changed` materialized,
-        # BUT its blocks may only be freed once a lineage-truncating
-        # checkpoint exists downstream (see `pending` above); a k-round
-        # run must not hold k label-table copies (a checkpoint's blocks
-        # outlive unpersist(), see cacheutil)
-        pending.append((labels, prev_is_ckpt))
-        if new_is_ckpt:
-            for frame, was_ckpt in pending:
-                if was_ckpt:
-                    release_checkpoint(frame)
-                else:
-                    frame.unpersist()
-            pending = []
-        labels, prev_is_ckpt = new_labels, new_is_ckpt
+        # the checkpoint truncated lineage, so the previous round's table
+        # is dead: free it (a checkpoint's blocks outlive unpersist(), see
+        # cacheutil).  Round 0's input is the caller's lineage, not ours.
+        if i:
+            release_checkpoint(labels)
+        labels = new_labels
         if changed == 0:
             converged = True
             break
-    # frames still pending are referenced by the returned labels' lineage
-    # (trailing persist-only rounds) — they stay until the JVM GCs them
     edges.unpersist()
     if not converged:
         raise RuntimeError(
@@ -783,18 +722,38 @@ def dedup_corpus(df: DataFrame, id_col: str = "doc_id",
     pairs = minhash_lsh_candidates(df, id_col, text_col, k, num_hashes,
                                    bands, verify_threshold=threshold,
                                    hash_family=hash_family)
-    # checkpoint_every=1 is REQUIRED here, not just the default: freeing
-    # the verified-pairs checkpoint below is only safe because every
-    # round's label table — including the returned one — is itself an
-    # eager localCheckpoint (lineage truncated), so nothing downstream
-    # can recompute through the freed pairs blocks.  A checkpoint_every>1
-    # run may return a persist()-only label table whose lineage still
-    # references `pairs`.
-    cc = connected_components(pairs.select("a", "b"), checkpoint_every=1)
+    # the returned label table is an eager checkpoint, so nothing reads
+    # the verified pairs after this call: free them
+    cc = connected_components(pairs.select("a", "b"))
     release_checkpoint(pairs)
     drop = (cc.filter(F.col("doc_id") != F.col("component"))
             .select(F.col("doc_id").alias(id_col)))
     return df.join(drop, id_col, "left_anti")
+
+
+def _mode_tail(mode: str, flag_col: str,
+               modes: tuple[str, ...] = ("remove", "flag", "pairs")):
+    """Check ``mode`` against ``modes`` and return the output step
+    ``tail(df, id_col, matched, match_col)`` that applies it: ``'pairs'``
+    returns ``matched``; ``'remove'`` anti-joins the ids in its
+    ``match_col`` out of ``df``; ``'flag'`` adds boolean ``flag_col``.
+    Callers run it before their first Spark job, so a bad mode raises
+    without running a job or pinning a block."""
+    if mode not in modes:
+        raise ValueError(f"unknown mode {mode!r} (use "
+                         f"{', '.join(map(repr, modes))})")
+
+    def tail(df: DataFrame, id_col: str, matched: DataFrame,
+             match_col: str) -> DataFrame:
+        if mode == "pairs":
+            return matched
+        hits = matched.select(F.col(match_col).alias(id_col)).distinct()
+        if mode == "remove":
+            return df.join(hits, id_col, "left_anti")
+        marked = hits.withColumn(flag_col, F.lit(True))
+        return (df.join(marked, id_col, "left")
+                .withColumn(flag_col, F.coalesce(flag_col, F.lit(False))))
+    return tail
 
 
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,
@@ -825,6 +784,7 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     fallback), so a short benchmark item only matches a short corpus doc
     with identical normalized text — exact-match semantics below the
     n-gram floor, the conservative reading of the recipe."""
+    tail = _mode_tail(mode, "contaminated", ("remove", "flag"))
     c_sh = shingles(corpus, id_col, text_col, n).select(
         "doc_id", F.xxhash64("shingle").alias("_h"))
     b_sh = (shingles(benchmark.select(F.lit(0).alias("_bid"),
@@ -849,16 +809,8 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
         broadcast = b_sh.count() <= broadcast_max_rows
     if broadcast:
         b_sh = F.broadcast(b_sh)
-    contaminated = (c_sh.join(b_sh, "_h", "left_semi")
-                    .select(F.col("doc_id").alias(id_col)).distinct())
-    if mode == "remove":
-        return corpus.join(contaminated, id_col, "left_anti")
-    if mode == "flag":
-        marked = contaminated.withColumn("contaminated", F.lit(True))
-        return (corpus.join(marked, id_col, "left")
-                .withColumn("contaminated",
-                            F.coalesce("contaminated", F.lit(False))))
-    raise ValueError(f"unknown mode {mode!r} (use 'remove' or 'flag')")
+    return tail(corpus, id_col, c_sh.join(b_sh, "_h", "left_semi"),
+                "doc_id")
 
 
 def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
@@ -913,6 +865,7 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
     BOTH (exact 13-gram for long verbatim spans inside otherwise-distinct
     docs, fuzzy for whole-doc paraphrase leakage).
     """
+    tail = _mode_tail(mode, "contaminated")
     c = corpus.select(F.col(id_col).alias("doc_id"),
                       F.col(text_col).alias("text"))
     b = benchmark.select(F.col(bench_id_col).alias("doc_id"),
@@ -942,53 +895,24 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
     # semi-joins + the pair join); persist so discovery runs once
     cands = cands.persist()
     try:
-        # semi-join the DOC rows before shingling (a semi-join on an
-        # exploded table can't push below the Generate): verify touches
-        # only candidate docs — at a 2% contamination rate that is 50×
-        # less shingle work than scoping after the fact.  r07: same
-        # in-row rewrite as ngram_jaccard_pairs(candidates=…) — shingles
-        # stay per-doc arrays and the per-pair intersection is one
-        # array_intersect, collapsing the exploded per-pair shingle
-        # equi-join + count + two size joins into two pair joins.
-        c_sh = (c.join(cands.select(F.col("a").alias("doc_id")).distinct(),
-                       "doc_id", "left_semi")
-                .select(F.col("doc_id").alias("a"),
-                        shingle_array("text", k).alias("_sh_a")))
-        b_sh = (b.join(cands.select(F.col("b").alias("doc_id")).distinct(),
-                       "doc_id", "left_semi")
-                .select(F.col("doc_id").alias("b"),
-                        shingle_array("text", k).alias("_sh_b")))
-        matched = (cands.join(c_sh, "a").join(b_sh, "b")
-                   .withColumn("n_inter",
-                               F.size(F.array_intersect("_sh_a", "_sh_b")))
-                   .filter(F.col("n_inter") > 0)
-                   .withColumn("jaccard",
-                               F.col("n_inter")
-                               / (F.size("_sh_a") + F.size("_sh_b")
-                                  - F.col("n_inter")))
-                   .filter(F.col("jaccard") >= threshold)
+        # verify touches only candidate docs — at a 2% contamination
+        # rate that is 50× less shingle work than scoping after the fact
+        c_sh = _candidate_shingles(
+            c, cands.select(F.col("a").alias("doc_id")).distinct(),
+            "doc_id", "text", k)
+        b_sh = _candidate_shingles(
+            b, cands.select(F.col("b").alias("doc_id")).distinct(),
+            "doc_id", "text", k)
+        matched = (_verify_candidates(cands, c_sh, b_sh, threshold)
                    .select(F.col("a").alias("corpus_id"),
-                           F.col("b").alias("bench_id"),
-                           F.round("jaccard", 6).alias("jaccard"))
+                           F.col("b").alias("bench_id"), "jaccard")
                    .localCheckpoint(eager=True))
     finally:
         cands.unpersist()
         if auto_ckpt is not None:
             from versa_spark.cacheutil import release_checkpoint
             release_checkpoint(auto_ckpt)
-    if mode == "pairs":
-        return matched
-    contaminated = (matched.select(F.col("corpus_id").alias(id_col))
-                    .distinct())
-    if mode == "remove":
-        return corpus.join(contaminated, id_col, "left_anti")
-    if mode == "flag":
-        marked = contaminated.withColumn("contaminated", F.lit(True))
-        return (corpus.join(marked, id_col, "left")
-                .withColumn("contaminated",
-                            F.coalesce("contaminated", F.lit(False))))
-    raise ValueError(
-        f"unknown mode {mode!r} (use 'remove', 'flag', or 'pairs')")
+    return tail(corpus, id_col, matched, "corpus_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1186,6 +1110,7 @@ def dedup_against_index(batch: DataFrame, path: str,
     Note exact self-duplicates WITHIN the batch are not this function's
     job — run :func:`dedup_corpus` on the batch first (or after), then
     append the survivors to the index with ``mode='append'``."""
+    tail = _mode_tail(mode, "is_dup")
     spark = batch.sparkSession
     meta = read_dedup_index_meta(spark, path)
     if meta is None:
@@ -1252,14 +1177,4 @@ def dedup_against_index(batch: DataFrame, path: str,
         if auto_ckpt is not None:
             from versa_spark.cacheutil import release_checkpoint
             release_checkpoint(auto_ckpt)
-    if mode == "pairs":
-        return matched
-    dup = matched.select(F.col("batch_id").alias(id_col)).distinct()
-    if mode == "remove":
-        return batch.join(dup, id_col, "left_anti")
-    if mode == "flag":
-        marked = dup.withColumn("is_dup", F.lit(True))
-        return (batch.join(marked, id_col, "left")
-                .withColumn("is_dup", F.coalesce("is_dup", F.lit(False))))
-    raise ValueError(
-        f"unknown mode {mode!r} (use 'remove', 'flag', or 'pairs')")
+    return tail(batch, id_col, matched, "batch_id")

@@ -65,8 +65,7 @@ def _pairs_from_sets(sets: DataFrame) -> DataFrame:
             .select("conv_id", "turn_idx", "p.a", "p.b"))
 
 
-def cooccurrence_pmi(linked: DataFrame, min_pairs: int = 1,
-                     materialize: bool = True) -> DataFrame:
+def cooccurrence_pmi(linked: DataFrame, min_pairs: int = 1) -> DataFrame:
     """Entity co-occurrence with pointwise mutual information.
 
     Event space: turns with >= 1 linked mention (N).  For entities a, b:
@@ -82,12 +81,11 @@ def cooccurrence_pmi(linked: DataFrame, min_pairs: int = 1,
     the corpus; this shape never does.
 
     The ``sets`` frame has THREE consumers (pair counts, marginals, N),
-    so by default it is persisted for the duration and the pair table —
+    so it is persisted for the duration and the pair table —
     entity-pair-sized, tiny next to the corpus — is EAGERLY
     checkpointed so the cache releases before returning (the
     minhash_lsh_candidates lifecycle: without this, one action executes
-    the upstream extraction three times).  materialize=False keeps the
-    fully lazy plan for .explain audits only.
+    the upstream extraction three times).
 
     When the producer ALREADY has per-turn entity arrays — the KG
     job's zero-exchange extraction emits exactly that (`eids`,
@@ -96,12 +94,11 @@ def cooccurrence_pmi(linked: DataFrame, min_pairs: int = 1,
     (measured 37.5 s → 5.1 s best-lap at 4M turns, local[32]), leaving
     only the narrow pair/marginal aggregations."""
     sets = turn_entity_sets(linked)
-    return cooccurrence_pmi_from_sets(sets, min_pairs=min_pairs,
-                                      materialize=materialize)
+    return cooccurrence_pmi_from_sets(sets, min_pairs=min_pairs)
 
 
-def cooccurrence_pmi_from_sets(sets: DataFrame, min_pairs: int = 1,
-                               materialize: bool = True) -> DataFrame:
+def cooccurrence_pmi_from_sets(sets: DataFrame,
+                               min_pairs: int = 1) -> DataFrame:
     """cooccurrence_pmi for producers that already hold one row per
     turn with a DISTINCT entity array ``ents`` — no corpus shuffle at
     all: pairs and marginals explode in-plan (map side) and only the
@@ -119,9 +116,9 @@ def cooccurrence_pmi_from_sets(sets: DataFrame, min_pairs: int = 1,
     mention-free turns as empty arrays; map its tinyint indices to
     labels first if label pairs are wanted)."""
     sets = (sets.filter(F.size("ents") > 0)
-            .withColumn("ents", F.sort_array(F.array_distinct("ents"))))
-
-    def _assemble(sets):
+            .withColumn("ents", F.sort_array(F.array_distinct("ents")))
+            .persist())
+    try:
         pair_counts = (_pairs_from_sets(sets)
                        .groupBy("a", "b")
                        .agg(F.count("*").alias("n_ab"))
@@ -142,13 +139,8 @@ def cooccurrence_pmi_from_sets(sets: DataFrame, min_pairs: int = 1,
                                       * F.col("n_turns")
                                       / (F.col("n_a").cast("double")
                                          * F.col("n_b"))), 4)
-                        .alias("pmi")))
-
-    if not materialize:
-        return _assemble(sets)
-    sets = sets.persist()
-    try:
-        return _assemble(sets).localCheckpoint(eager=True)
+                        .alias("pmi"))
+                .localCheckpoint(eager=True))
     finally:
         sets.unpersist()
 

@@ -31,7 +31,6 @@ from versa_spark.kg import canonicalize, extract, linking
 
 
 def build_graph(spark: SparkSession, turns: DataFrame,
-                persist: bool = True,
                 dictionary: DataFrame | None = None,
                 detect: str = "lexicon",
                 detect_opts: dict | None = None,
@@ -72,17 +71,14 @@ def build_graph(spark: SparkSession, turns: DataFrame,
       fallback entities; surfaces outside the dictionary are simply not
       mentions).  Requires ``dictionary`` with (surface, canonical,
       entity_iri)."""
-    if detect == "dictionary":
-        if dictionary is None:
-            raise ValueError("detect='dictionary' requires a dictionary")
-        parts = _build_graph_bigdict(spark, turns, persist, dictionary,
-                                     detect_opts or {})
-        return _with_relations(parts, turns, relations)
-    if detect != "lexicon":
+    if detect not in ("lexicon", "dictionary"):
         raise ValueError(f"unknown detect {detect!r} "
                          "(use 'lexicon' or 'dictionary')")
+    if detect == "dictionary" and dictionary is None:
+        raise ValueError("detect='dictionary' requires a dictionary")
     if dictionary is not None:
-        parts = _build_graph_generic(spark, turns, persist, dictionary)
+        parts = _build_graph_dictionary(turns, dictionary, detect,
+                                        detect_opts or {})
         return _with_relations(parts, turns, relations)
     # r07: the persisted slim frame also drops ``turn_iri`` (a ~50-byte
     # string that is a pure function of (conv_id, turn_idx) —
@@ -93,9 +89,8 @@ def build_graph(spark: SparkSession, turns: DataFrame,
     # entirely).  Cache bytes per row drop by more than half, which both
     # speeds the persist and shrinks the per-lap memory churn the bench
     # host punishes (OPTIMIZATION_r07.md §6).
-    te = extract.turn_entity_ids(turns.drop("turn_rank", "turn_iri", "ts"))
-    if persist:
-        te = te.persist()
+    te = extract.turn_entity_ids(
+        turns.drop("turn_rank", "turn_iri", "ts")).persist()
     graph = (extract.conversation_links(te.drop("eids"))
              .unionByName(canonicalize.mention_links_from_eids(te))
              .unionByName(canonicalize.entity_links_from_eids(te)))
@@ -134,43 +129,30 @@ def _with_relations(parts: dict[str, DataFrame], turns: DataFrame,
             "edges": canonicalize.adjacency_edges(graph)}
 
 
-def _build_graph_bigdict(spark: SparkSession, turns: DataFrame,
-                         persist: bool, dictionary: DataFrame,
-                         detect_opts: dict) -> dict[str, DataFrame]:
-    """Gazetteer-driven assembly: ONE fused detection+linking join
-    (turn_mentions_bigdict) replaces regex-detect + link_entities; the
-    rest of the build is byte-identical to the generic path.
-    ``detect_opts`` forwards to turn_mentions_bigdict (max_ngram,
-    broadcast, broadcast_max_rows)."""
-    m = extract.turn_mentions_bigdict(turns.drop("turn_rank", "turn_iri"),
-                                      dictionary, **detect_opts)
-    linked = m.select("conv_id", "turn_idx", "canonical", "entity_iri")
-    turns_slim = turns.drop("text", "turn_rank", "turn_iri", "ts")
-    if persist:
-        linked = linked.persist()
-        turns_slim = turns_slim.persist()
-    graph = (extract.conversation_links(turns_slim)
-             .unionByName(canonicalize.mention_links(linked))
-             .unionByName(canonicalize.entity_links(linked)))
-    return {"turns": turns_slim, "linked": linked, "graph": graph,
-            "edges": canonicalize.adjacency_edges(graph)}
-
-
-def _build_graph_generic(spark: SparkSession, turns: DataFrame,
-                         persist: bool,
-                         dictionary: DataFrame) -> dict[str, DataFrame]:
-    # turn_mentions can only emit lexicon surfaces whatever the linking
-    # dictionary is, so the miss fallback precomputes driver-side and the
-    # plan carries no Python node (linking.link_entities surface_universe)
-    linked = linking.link_entities(extract.turn_mentions(turns), dictionary,
-                                   surface_universe=extract.LEXICON)
+def _build_graph_dictionary(turns: DataFrame, dictionary: DataFrame,
+                            detect: str,
+                            detect_opts: dict) -> dict[str, DataFrame]:
+    """Assembly with an explicit ``dictionary``.  ``linked`` comes from
+    ONE fused detection+linking join (turn_mentions_bigdict, with
+    ``detect_opts`` forwarded: max_ngram, broadcast, broadcast_max_rows)
+    for ``detect='dictionary'``, else from the lexicon regex scan plus
+    link_entities; the rest of the build is shared."""
+    if detect == "dictionary":
+        linked = extract.turn_mentions_bigdict(
+            turns.drop("turn_rank", "turn_iri"), dictionary, **detect_opts)
+    else:
+        # turn_mentions can only emit lexicon surfaces whatever the
+        # linking dictionary is, so the miss fallback precomputes
+        # driver-side and the plan carries no Python node
+        # (linking.link_entities surface_universe)
+        linked = linking.link_entities(extract.turn_mentions(turns),
+                                       dictionary,
+                                       surface_universe=extract.LEXICON)
     # the graph link families consume only these four columns — keeping
     # the cached rows narrow is what lets the persist fit at bench scale
-    linked = linked.select("conv_id", "turn_idx", "canonical", "entity_iri")
-    turns_slim = turns.drop("text", "turn_rank", "turn_iri", "ts")
-    if persist:
-        linked = linked.persist()
-        turns_slim = turns_slim.persist()
+    linked = linked.select("conv_id", "turn_idx", "canonical",
+                           "entity_iri").persist()
+    turns_slim = turns.drop("text", "turn_rank", "turn_iri", "ts").persist()
     graph = (extract.conversation_links(turns_slim)
              .unionByName(canonicalize.mention_links(linked))
              .unionByName(canonicalize.entity_links(linked)))

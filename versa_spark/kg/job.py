@@ -45,25 +45,11 @@ MANIFEST = "_manifest.jsonl"
 
 
 class KGJob:
-    """``write_distribution``:
-
-    * ``'auto'`` (default) — stages WITHOUT the fat ``text`` column
-      repartition by ``pt`` before the partitioned write (the
-      Iceberg ``write.distribution-mode=hash`` equivalent): without it
-      every mapper writes into every bucket directory and a stage emits
-      M×B files — at 10^12 turns that is 10^9+ tiny files, a metadata
-      catastrophe.  The ``text``-carrying turns stage is exempt so the
-      fat column still never rides an exchange: with the north rule's
-      input (an Iceberg table bucketed by conv_id) each input split
-      already holds exactly one bucket, so its mapper-aligned write
-      produces one file per bucket naturally — alignment, not shuffle,
-      is the production answer for the fat stage.
-    * ``'none'`` — mapper-aligned writes everywhere (the pre-round-3
-      behavior; fine at fixture scale)."""
+    """The checkpointed, resumable, appendable transcript → KG job under
+    ``workdir`` (see the module docstring)."""
 
     def __init__(self, spark: SparkSession, workdir: str,
                  n_buckets: int = 32, salt: int = 16,
-                 write_distribution: str = "auto",
                  dictionary: DataFrame | None = None,
                  detect: str = "lexicon",
                  detect_opts: dict | None = None,
@@ -77,7 +63,6 @@ class KGJob:
         self.workdir = workdir
         self.n_buckets = n_buckets
         self.salt = salt
-        self.write_distribution = write_distribution
         # detect='dictionary' routes the mentions stage through the
         # token-n-gram gazetteer join (extract.turn_mentions_bigdict) —
         # detection+linking fuse into one map-side join and the linked
@@ -187,10 +172,17 @@ class KGJob:
         if "conv_id" in df.columns:
             df = df.withColumn(
                 "pt", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)))
-            if (self.write_distribution == "auto"
-                    and "text" not in df.columns):
-                # hash write distribution: one exchange of the slim rows
-                # buys B output files instead of M×B (see class docstring)
+            if "text" not in df.columns:
+                # hash write distribution (Iceberg's
+                # write.distribution-mode=hash): one exchange of the slim
+                # rows buys B output files instead of M×B — without it
+                # every mapper writes into every bucket directory, 10^9+
+                # tiny files at 10^12 turns.  The text-carrying turns
+                # stage is exempt so the fat column never rides an
+                # exchange: with the north rule's input (an Iceberg table
+                # bucketed by conv_id) each input split already holds one
+                # bucket, so its mapper-aligned write yields one file per
+                # bucket — alignment, not shuffle, for the fat stage.
                 df = df.repartition(self.n_buckets, "pt")
             (df.write.mode("overwrite").partitionBy("pt").parquet(path))
         else:
@@ -528,7 +520,6 @@ class KGJob:
         self._check_batches_complete(manifest)
         target = KGJob(self.spark, new_workdir, n_buckets=self.n_buckets,
                        salt=self.salt,
-                       write_distribution=self.write_distribution,
                        dictionary=self.dictionary, detect=self.detect,
                        detect_opts=self.detect_opts,
                        relations=self.relations)

@@ -452,8 +452,7 @@ def read_ann_index_meta(spark, path: str) -> dict | None:
 def ann_query_index(queries: DataFrame, path: str, k: int = 10,
                     nprobe: int = 2, q_id_col: str = "q_id",
                     q_vec_col: str = "q_vec", route: str = "auto",
-                    full_scan_fraction: float = 0.8,
-                    materialize: bool = True) -> DataFrame:
+                    full_scan_fraction: float = 0.8) -> DataFrame:
     """Top-k over a stored :func:`write_ann_index`: rank the stored
     centroids per query, take each query's ``nprobe`` nearest cells, and
     exact-cosine re-rank inside them — reading ONLY the probed cells'
@@ -498,24 +497,16 @@ def ann_query_index(queries: DataFrame, path: str, k: int = 10,
     q = queries.select(F.col(q_id_col).alias("q_id"),
                        F.col(q_vec_col).alias("q"),
                        _norm(F.col(q_vec_col)).alias("nq"))
-    probes = (probe_cells(q, cents, nprobe, "q")
-              .select("q_id", F.explode("cells").alias("cell")))
-    # r07 (advice): ``materialize=False`` opts out of BOTH eager
-    # localCheckpoints — the returned plan stays lazy and nothing is
-    # pinned, at the cost of the probe DAG executing twice (the
-    # cells-collect below plus the result's own probes join; the
-    # minhash materialize=False discipline).  A long-lived serving
-    # session that keeps many results alive should either pass False or
-    # release each result via cacheutil.release_checkpoint when done —
-    # the default's eager checkpoint pins its (tiny, ≤ |queries| × k
-    # rows) blocks for the JVM's lifetime.
-    if materialize:
-        probes = probes.localCheckpoint(eager=True)
-    # the probes checkpoint pins blocks for the JVM's lifetime; eagerly
+    # the probes feed both the cells-collect below and the result's
+    # probes join, so they are checkpointed (the probe DAG runs once).
+    # That checkpoint pins blocks for the JVM's lifetime: eagerly
     # checkpoint the (small, <= |queries| x k rows) RESULT and release
-    # the probes in finally — the decontaminate_fuzzy discipline —
-    # so repeated queries in a long-lived serving session don't
-    # accumulate pinned probe tables
+    # the probes in finally — the decontaminate_fuzzy discipline — so
+    # repeated queries in a long-lived serving session don't accumulate
+    # pinned probe tables
+    probes = (probe_cells(q, cents, nprobe, "q")
+              .select("q_id", F.explode("cells").alias("cell"))
+              .localCheckpoint(eager=True))
     try:
         cells = sorted({r.cell for r in probes.select("cell")
                         .distinct().collect()})
@@ -537,11 +528,8 @@ def ann_query_index(queries: DataFrame, path: str, k: int = 10,
                .filter(F.col("rank") <= k)
                .select("q_id", "vec_id",
                        F.round("cosine", 6).alias("cosine"), "rank"))
-        return out.localCheckpoint(eager=True) if materialize else out
+        return out.localCheckpoint(eager=True)
     finally:
-        if materialize:
-            # only safe because the result checkpoint above truncated
-            # lineage; the lazy path must keep probes un-released (they
-            # were never checkpointed there)
-            from versa_spark.cacheutil import release_checkpoint
-            release_checkpoint(probes)
+        # only safe because the result checkpoint above truncated lineage
+        from versa_spark.cacheutil import release_checkpoint
+        release_checkpoint(probes)
