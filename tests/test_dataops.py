@@ -761,16 +761,22 @@ def test_decontaminate(spark):
         dedup.decontaminate(corpus, bench, mode="nope")
 
 
-def test_bad_mode_raises_before_any_spark_job(spark, tmp_path):
-    """decontaminate, decontaminate_fuzzy and dedup_against_index check
-    ``mode`` before their first Spark job: a bad value runs no job and
-    pins no block."""
+def test_bad_mode_raises_before_any_spark_job(spark, tmp_path, emb):
+    """decontaminate, decontaminate_fuzzy, dedup_against_index and the
+    two index writers check ``mode`` before their first Spark job: a bad
+    value runs no job, pins no block and leaves an existing index's
+    sidecar as it was."""
     base = " ".join(f"w{i}" for i in range(30))
     corpus = spark.createDataFrame([(1, base), (2, base + " x")],
                                    ["doc_id", "text"])
     bench = spark.createDataFrame([(100, base)], ["doc_id", "text"])
     path = str(tmp_path / "ix")
     dedup.write_dedup_index(corpus, path)
+    ann_path = str(tmp_path / "ann_ix")
+    vecs = emb.limit(40)
+    simsearch.write_ann_index(vecs, ann_path, n_cells=4, refine_iters=0)
+    metas = {"dedup": dedup.read_dedup_index_meta(spark, path),
+             "ann": simsearch.read_ann_index_meta(spark, ann_path)}
     sc = spark.sparkContext
     calls = {
         "decontaminate": lambda: dedup.decontaminate(
@@ -778,7 +784,11 @@ def test_bad_mode_raises_before_any_spark_job(spark, tmp_path):
         "decontaminate_fuzzy": lambda: dedup.decontaminate_fuzzy(
             corpus, bench, mode="nope"),
         "dedup_against_index": lambda: dedup.dedup_against_index(
-            corpus, path, mode="bogus")}
+            corpus, path, mode="bogus"),
+        "write_dedup_index": lambda: dedup.write_dedup_index(
+            corpus, path, bands=8, mode="ignore"),
+        "write_ann_index": lambda: simsearch.write_ann_index(
+            vecs, ann_path, n_cells=2, refine_iters=0, mode="ignore")}
     for name, call in calls.items():
         group = f"bad-mode-{name}"
         cached = _n_cached_rdds(spark)
@@ -791,6 +801,8 @@ def test_bad_mode_raises_before_any_spark_job(spark, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         assert sc.statusTracker().getJobIdsForGroup(group) == [], name
         assert _n_cached_rdds(spark) == cached, name
+    assert metas == {"dedup": dedup.read_dedup_index_meta(spark, path),
+                     "ann": simsearch.read_ann_index_meta(spark, ann_path)}
 
 
 def test_decontaminate_broadcast_guard(spark):
@@ -1249,7 +1261,8 @@ def test_dedup_index_roundtrip(tmp_path, spark):
     path = str(tmp_path / "lsh_index")
     dedup.write_dedup_index(corpus, path)
     assert dedup.read_dedup_index_meta(spark, path) == {
-        "k": 3, "num_hashes": 64, "bands": 16, "hash_family": "xxhash64"}
+        "k": 3, "num_hashes": 64, "bands": 16, "hash_family": "xxhash64",
+        "format": 2}
 
     batch = spark.createDataFrame(
         [(10, base + " extra"),              # near-dup of indexed 1
@@ -1346,6 +1359,142 @@ def test_dedup_index_empty_corpus_build(tmp_path, spark):
         spark.createDataFrame([(10, base + " x")], ["doc_id", "text"]),
         path, mode="pairs").collect()}
     assert got == {(10, 1)}
+
+
+def test_index_interrupted_overwrite_is_refused(tmp_path, spark, emb,
+                                                monkeypatch):
+    """An overwrite of an existing index that dies between table writes
+    leaves no sidecar: readers refuse the mixed tables instead of
+    answering from them under the old sidecar."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    base = " ".join(f"w{i}" for i in range(30))
+    corpus = spark.createDataFrame([(1, base)], ["doc_id", "text"])
+    batch = spark.createDataFrame([(10, base + " x")], ["doc_id", "text"])
+    path = str(tmp_path / "ix")
+    dedup.write_dedup_index(corpus, path)
+    ann_path = str(tmp_path / "ann_ix")
+    vecs = emb.limit(40)
+    simsearch.write_ann_index(vecs, ann_path, n_cells=4, refine_iters=0)
+    queries = vecs.limit(2).select(F.col("vec_id").alias("q_id"),
+                                   F.col("embedding").alias("q_vec"))
+
+    real = DataFrameWriter.parquet
+    writes = []
+
+    def dying_parquet(self, out, *args, **kwargs):
+        writes.append(out)
+        if out.endswith(("/shingles", "/vectors")):
+            raise RuntimeError("killed mid-write")
+        return real(self, out, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dying_parquet)
+    with pytest.raises(RuntimeError, match="killed"):
+        dedup.write_dedup_index(corpus, path)
+    with pytest.raises(RuntimeError, match="killed"):
+        simsearch.write_ann_index(vecs, ann_path, n_cells=4,
+                                  refine_iters=0)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    # the dedup overwrite died on its second table write, the ANN one
+    # on its vectors write
+    assert writes == [f"{path}/banded", f"{path}/shingles",
+                      f"{ann_path}/vectors"]
+    with pytest.raises(ValueError, match="no LSH index sidecar"):
+        dedup.dedup_against_index(batch, path)
+    with pytest.raises(ValueError, match="interrupted write"):
+        dedup.write_dedup_index(batch, path, mode="append")
+    with pytest.raises(ValueError, match="no ANN index"):
+        simsearch.ann_query_index(queries, ann_path)
+
+
+def _index_pairs(batch, path, threshold=0.5):
+    return sorted(tuple(r) for r in dedup.dedup_against_index(
+        batch, path, threshold=threshold, mode="pairs").collect())
+
+
+def test_dedup_index_v1_migration(tmp_path, spark):
+    """A format-1 index (one (doc_id, sh_h) row per shingle hash, sidecar
+    without ``format``) is refused by match and append before any Spark
+    job, with an error naming compact_dedup_index; compaction migrates
+    it, and the migrated index gives the pairs of a fresh format-2 build
+    for both hash families."""
+    from versa_spark.storage import write_json_sidecar
+    texts = [(i, " ".join(f"t{i}_{j}" for j in range(40)))
+             for i in range(6)]
+    corpus = spark.createDataFrame(texts, ["doc_id", "text"])
+    w3 = texts[3][1].split()
+    batch = spark.createDataFrame(
+        [(100, texts[1][1] + " extra"),                  # J = 38/39
+         (101, " ".join(w3[:37] + ["r1", "r2", "r3"])),  # J = 35/41
+         (102, " ".join(f"q{j}" for j in range(40)))],   # fresh
+        ["doc_id", "text"])
+    sc = spark.sparkContext
+    for hf in ("xxhash64", "md5"):
+        v2, v1, mig = (str(tmp_path / f"{n}_{hf}")
+                       for n in ("v2", "v1", "mig"))
+        dedup.write_dedup_index(corpus, v2, hash_family=hf)
+        (spark.read.parquet(f"{v2}/shingles")
+         .selectExpr("doc_id", "explode(sh) AS sh_h")
+         .write.parquet(f"{v1}/shingles"))
+        for t in ("banded", "sizes"):
+            spark.read.parquet(f"{v2}/{t}").write.parquet(f"{v1}/{t}")
+        meta = dedup.read_dedup_index_meta(spark, v2)
+        write_json_sidecar(spark, f"{v1}/_versa_lsh_index.json",
+                           {k: v for k, v in meta.items() if k != "format"})
+
+        group = f"v1-refused-{hf}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="compact_dedup_index"):
+                dedup.dedup_against_index(batch, v1)
+            with pytest.raises(ValueError, match="compact_dedup_index"):
+                dedup.write_dedup_index(batch, v1, hash_family=hf,
+                                        mode="append")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], hf
+
+        dedup.compact_dedup_index(spark, v1, mig)
+        assert dedup.read_dedup_index_meta(spark, mig) == meta
+        want = _index_pairs(batch, v2)
+        assert [p[:2] for p in want] == [(100, 1), (101, 3)], hf
+        assert want[1][2] == round(35 / 41, 6)
+        assert _index_pairs(batch, mig) == want, hf
+        # the migrated index takes format-2 appends
+        dedup.write_dedup_index(batch.filter("doc_id = 102"), mig,
+                                hash_family=hf, mode="append")
+        again = spark.createDataFrame(
+            [(200, " ".join(f"q{j}" for j in range(40)) + " tail")],
+            ["doc_id", "text"])
+        assert [p[:2] for p in _index_pairs(again, mig)] == [(200, 102)]
+
+
+def test_dedup_index_verify_plan(tmp_path, spark):
+    """The verify execution of dedup_against_index is the shared
+    candidate kernel: an in-row array_intersect over the stored
+    per-doc arrays — no explode, no join keyed on a shingle hash, no
+    scan of sizes/."""
+    import re
+    base = " ".join(f"w{i}" for i in range(30))
+    corpus = spark.createDataFrame([(1, base), (2, base[::-1])],
+                                   ["doc_id", "text"])
+    path = str(tmp_path / "ix")
+    dedup.write_dedup_index(corpus, path)
+    batch = spark.createDataFrame([(10, base + " x")], ["doc_id", "text"])
+    got = dedup.dedup_against_index(batch, path, mode="pairs")
+    # the eager checkpoint of the verified pairs is the call's last
+    # SQL execution; the status store keeps its plan with the UI off
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    plan = execs.apply(execs.size() - 1).physicalPlanDescription()
+    assert [tuple(r)[:2] for r in got.collect()] == [(10, 1)]
+    assert "array_intersect" in plan, plan
+    assert f"{path}/shingles" in plan and "/sizes" not in plan, plan
+    assert "Generate" not in plan, plan
+    keyed = [ln for ln in plan.splitlines()
+             if "Join" in ln or "keys" in ln]
+    assert keyed, plan
+    assert not any(re.search(r"\bsh(_h)?#", ln) for ln in keyed), plan
 
 
 def test_ann_index_roundtrip(tmp_path, spark, emb, no_ckpt):

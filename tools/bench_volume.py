@@ -212,8 +212,9 @@ def lap_index(spark: SparkSession) -> dict:
     # survivors join the index (ids disjoint by construction), then a
     # second batch that near-dups APPENDED docs must find them — the
     # continuous-ingestion loop.  The append cost must be O(batch):
-    # sizes/ appends the batch's own counts instead of re-reading the
-    # whole shingles table.
+    # shingles/ appends one hashed-shingle array per batch doc and
+    # sizes/ appends size() of those arrays from the batch lineage,
+    # never re-reading the whole shingles table.
     survivors = dedup.dedup_against_index(batch, path)
     t0 = time.time()
     dedup.write_dedup_index(survivors, path, mode="append")

@@ -919,18 +919,32 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
 # Persistent LSH index: incremental dedup for continuously-ingesting corpora.
 
 _INDEX_META = "_versa_lsh_index.json"
+_INDEX_FORMAT = 2
 
 
-def _index_shingle_hash(hash_family: str):
-    """The stored shingle-hash expression — 'xxhash64' for the fast JVM
-    family, the 48-bit md5 integer for the SQL-reproducible family (the
-    same value the minhash signature arithmetic starts from)."""
+def _index_hash_sql(arr: str, hash_family: str) -> str:
+    """SQL text hashing every shingle of the array expression ``arr``
+    in-row: 64-bit xxhash64 for the fast JVM family, the 48-bit md5
+    integer for the SQL-reproducible family (the same value the minhash
+    signature arithmetic starts from).  The index writer and the batch
+    side of :func:`dedup_against_index` both hash through it."""
     if hash_family == "xxhash64":
-        return F.xxhash64("shingle")
-    if hash_family == "md5":
-        return F.conv(F.substring(F.md5(F.col("shingle")), 1, 12),
-                      16, 10).cast("long")
-    raise ValueError(f"unknown hash_family {hash_family!r}")
+        h = "xxhash64(_s)"
+    elif hash_family == "md5":
+        h = "cast(conv(substring(md5(_s), 1, 12), 16, 10) AS bigint)"
+    else:
+        raise ValueError(f"unknown hash_family {hash_family!r}")
+    return f"transform({arr}, _s -> {h})"
+
+
+def _require_index_v2(meta: dict, path: str) -> None:
+    """Refuse a format-1 index: only :func:`compact_dedup_index` reads
+    it."""
+    if meta.get("format") != _INDEX_FORMAT:
+        raise ValueError(
+            f"dedup index at {path} is format {meta.get('format', 1)}, "
+            f"this version reads format {_INDEX_FORMAT}; migrate it with "
+            "compact_dedup_index(spark, src, dst)")
 
 
 def write_dedup_index(df: DataFrame, path: str, id_col: str = "doc_id",
@@ -944,90 +958,79 @@ def write_dedup_index(df: DataFrame, path: str, id_col: str = "doc_id",
     per arriving batch is O(corpus · batches); an index makes each
     batch O(batch + candidates).
 
-    Stored under ``path`` (any Hadoop filesystem):
+    Stored under ``path`` (any Hadoop filesystem), format 2:
     * ``banded/``   — (doc_id, band, bucket) LSH discovery rows;
-    * ``shingles/`` — (doc_id, sh_h) hashed shingle sets (64-bit
-      xxhash64 or the 48-bit md5 family value) — Jaccard verification
-      counts intersections on the hashes, so the text itself never
-      needs to be stored or re-read (collision probability per doc
-      pair ~ |A|·|B|/2^64: negligible);
-    * ``sizes/``    — (doc_id, n_sh) distinct-shingle counts;
-    * a JSON sidecar pinning (k, num_hashes, bands, hash_family) so a
-      reader can never band a batch with mismatched parameters (the
-      storage.py layout-sidecar discipline).
+    * ``shingles/`` — (doc_id, sh array<bigint>), one row per doc: the
+      doc's distinct shingles, each hashed in-row (64-bit xxhash64 or
+      the 48-bit md5 family value).  Verify intersects these arrays, so
+      the text itself never needs to be stored or re-read (collision
+      probability per doc pair ~ |A|·|B|/2^64: negligible);
+    * ``sizes/``    — (doc_id, n_sh = size(sh)), the indexed ids;
+    * a JSON sidecar pinning (k, num_hashes, bands, hash_family, format)
+      so a reader can never band a batch with mismatched parameters
+      (the storage.py layout-sidecar discipline).
 
-    ``mode='append'`` adds new documents to an existing index (ids must
-    be disjoint from those already indexed — the caller's ingestion key
-    discipline); the sidecar is validated against the existing one.
+    ``mode`` is ``'overwrite'`` or ``'append'``.  ``'append'`` adds new
+    documents to an existing index (ids must be disjoint from those
+    already indexed — the caller's ingestion key discipline); the
+    sidecar is validated against the existing one.
 
-    Crash consistency: the three tables write sequentially and the
-    sidecar last, so a FRESH index interrupted mid-write has no sidecar
-    and readers refuse it; an APPEND deletes the sidecar first and
-    re-writes it after all three tables land, so an interrupted append
-    is likewise refusable rather than silently wrong.  An interrupted
-    OVERWRITE of an existing index can still leave mixed tables under
-    the old sidecar — rebuild into a staging path and rename (the
-    usual table-swap discipline) when the index must stay queryable
-    during rebuilds."""
+    Crash consistency: every write deletes the sidecar before its first
+    table write and re-writes it after all three tables land, so an
+    interrupted build, append or overwrite leaves a sidecar-less index
+    that readers refuse rather than mixed tables under a valid-looking
+    sidecar."""
     from versa_spark.storage import delete_sidecar, write_json_sidecar
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unknown mode {mode!r} (use 'overwrite', "
+                         "'append')")
     spark = df.sparkSession
     meta = {"k": k, "num_hashes": num_hashes, "bands": bands,
-            "hash_family": hash_family}
+            "hash_family": hash_family, "format": _INDEX_FORMAT}
     if mode == "append":
         existing = read_dedup_index_meta(spark, path)
         if existing is None:
-            # A missing sidecar WITH index tables present is exactly the
-            # state an interrupted append leaves behind (it deletes the
-            # sidecar first).  Re-running the crashed append — the natural
-            # operator recovery — would stack the retry's rows on top of
-            # the partial attempt's in banded/ and shingles/, inflating
-            # n_sh/n_inter and producing wrong Jaccard values under a
-            # freshly re-legitimized sidecar.  Mirror write_ann_index:
-            # refuse; sidecar-less append is allowed only onto an empty
-            # path (where it degrades to a fresh build).
+            # tables without a sidecar are what an interrupted write
+            # leaves; appending would stack this batch's rows on the
+            # partial attempt's under a re-legitimized sidecar.  A
+            # sidecar-less append is allowed only onto an empty path
+            # (where it degrades to a fresh build).
             from versa_spark.storage import hadoop_path_exists
             if hadoop_path_exists(spark, f"{path}/banded"):
                 raise ValueError(
                     f"index tables exist at {path} but the sidecar is "
-                    "missing — likely an interrupted append; rebuild with "
+                    "missing — likely an interrupted write; rebuild with "
                     "mode='overwrite' (appending onto the partial attempt "
                     "would double-count its rows)")
-        elif existing != meta:
-            raise ValueError(
-                f"index at {path} was written with {existing}; appending "
-                f"with {meta} would corrupt it")
-        # an append touches three tables non-atomically: drop the
-        # sidecar FIRST so an interrupted append leaves a refusable
-        # index (no sidecar -> readers raise) instead of a valid-looking
-        # one with mixed tables; it is re-written after all three lands
-        delete_sidecar(spark, f"{path}/{_INDEX_META}")
+        else:
+            _require_index_v2(existing, path)
+            if existing != meta:
+                raise ValueError(
+                    f"index at {path} was written with {existing}; "
+                    f"appending with {meta} would corrupt it")
+    delete_sidecar(spark, f"{path}/{_INDEX_META}")
     banded = _banded_signatures(df, id_col, text_col, k, num_hashes,
                                 bands, hash_family)
     banded.write.mode(mode).parquet(f"{path}/banded")
-    sh = shingles(df, id_col, text_col, k).select(
-        "doc_id", _index_shingle_hash(hash_family).alias("sh_h"))
+    sh = df.select(F.col(id_col).alias("doc_id"),
+                   F.expr(_index_hash_sql(_shingle_sql(text_col, k),
+                                          hash_family)).alias("sh"))
     sh.write.mode(mode).parquet(f"{path}/shingles")
-    if mode == "append":
-        # ids are disjoint from the indexed corpus (the append
-        # contract), so the batch's sizes simply append — re-deriving
-        # them from the batch lineage is O(batch); the alternative
-        # (re-read the whole shingles/ table and overwrite sizes/)
-        # costs O(corpus) per append, which defeats the index's
-        # incremental-ingestion purpose at 10^9 docs
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        sizes.write.mode("append").parquet(f"{path}/sizes")
-    else:
+    if mode == "overwrite":
         # sizes from the parquet JUST WRITTEN, not the lineage:
-        # re-running the read->normalize->explode->hash DAG would
+        # re-running the read->normalize->shingle->hash DAG would
         # double the most expensive stage of the build for identical
         # output.  Schema is pinned from the writer's frame: a fresh
         # build over an EMPTY corpus writes no part files, and schema
         # inference over those would throw UNABLE_TO_INFER_SCHEMA (the
         # kg/job.py _run_stage discipline).
-        sizes = (spark.read.schema(sh.schema)
-                 .parquet(f"{path}/shingles")
-                 .groupBy("doc_id").agg(F.count("*").alias("n_sh")))
-        sizes.write.mode("overwrite").parquet(f"{path}/sizes")
+        sh = spark.read.schema(sh.schema).parquet(f"{path}/shingles")
+    # on append, sizes come from the batch lineage: ids are disjoint
+    # from the indexed corpus (the append contract), so the batch's
+    # rows simply append — O(batch), where re-reading the whole
+    # shingles/ table would cost O(corpus) per append
+    (sh.selectExpr("doc_id", "CAST(size(sh) AS BIGINT) AS n_sh")
+     .write.mode(mode).parquet(f"{path}/sizes"))
     write_json_sidecar(spark, f"{path}/{_INDEX_META}", meta)
 
 
@@ -1043,18 +1046,27 @@ def read_dedup_index_meta(spark: SparkSession | None,
 
 def compact_dedup_index(spark: SparkSession, src: str, dst: str,
                         n_files: int | None = None) -> None:
-    """Rewrite an append-grown LSH index into a fresh path with bounded
-    file counts — every :func:`write_dedup_index` append adds its own
-    part files to banded/shingles/sizes, and after thousands of
-    ingestion batches the per-query scan cost is dominated by file-open
-    overhead (the same small-file pathology the KG job's hash write
-    distribution prevents).
+    """Rewrite an LSH index into a fresh path with bounded file counts,
+    migrating it to format 2 on the way.
+
+    Compaction: every :func:`write_dedup_index` append adds its own part
+    files to banded/shingles/sizes, and after thousands of ingestion
+    batches the per-query scan cost is dominated by file-open overhead
+    (the same small-file pathology the KG job's hash write distribution
+    prevents).
+
+    Migration: a format-1 index (sidecar without ``format``) stored one
+    ``(doc_id, sh_h)`` row per shingle hash.  Those rows are regrouped
+    into format 2's per-doc ``(doc_id, sh)`` arrays; ``banded/`` and
+    ``sizes/`` copy as they are.  No corpus text is needed — an index
+    may outlive the text it was built from.  This is the only reader of
+    format 1.
 
     Crash-safe by construction (the compact_to discipline): ``src`` is
     never touched, ``dst`` must not already hold an index, and the
     sidecar is written LAST — an interrupted compaction leaves a
     sidecar-less ``dst`` that every reader refuses; delete it and
-    re-run.  Query results are byte-identical before/after: compaction
+    re-run.  Query results are identical before/after: compaction
     changes layout, not content."""
     meta = read_dedup_index_meta(spark, src)
     if meta is None:
@@ -1076,9 +1088,12 @@ def compact_dedup_index(spark: SparkSession, src: str, dst: str,
             # schema-less as the source, and the first append
             # populates it identically
             continue
+        if table == "shingles" and meta.get("format") != _INDEX_FORMAT:
+            t = t.groupBy("doc_id").agg(F.collect_list("sh_h").alias("sh"))
         (t.repartition(n)
          .write.mode("overwrite").parquet(f"{dst}/{table}"))
-    write_json_sidecar(spark, f"{dst}/{_INDEX_META}", meta)
+    write_json_sidecar(spark, f"{dst}/{_INDEX_META}",
+                       {**meta, "format": _INDEX_FORMAT})
 
 
 def dedup_against_index(batch: DataFrame, path: str,
@@ -1092,16 +1107,20 @@ def dedup_against_index(batch: DataFrame, path: str,
     both sides every call).
 
     Banding parameters come from the index sidecar, never from the
-    caller — a mismatched banding finds nothing, silently.
+    caller — a mismatched banding finds nothing, silently.  A format-1
+    index is refused; :func:`compact_dedup_index` migrates it.
 
     Plan shape: the BATCH is the small side here, so its banded rows
     broadcast (counted 'auto' guard, shuffle degrade above the cap) into
-    a map-side scan of the stored ``banded/`` table; candidate
-    (batch, index) pairs then scope everything downstream — the batch
-    re-shingles only its candidate docs (semi-join before the explode),
-    and the stored ``shingles/``/``sizes/`` tables are read once,
-    semi-joined to candidate index ids.  Per-batch cost is
-    O(batch + index-scan + candidates); the corpus text is never read.
+    a map-side scan of the stored ``banded/`` table, giving the distinct
+    candidate (batch, index) pairs.  Verify is the shared candidate
+    kernel (:func:`_verify_candidates`): the batch re-shingles only its
+    candidate docs (semi-join before shingling) and hashes them in-row,
+    the stored ``shingles/`` arrays are read once, semi-joined to
+    candidate index ids, and each pair's Jaccard is one in-row array
+    intersection — no explode, no per-hash join, no ``sizes/`` read.
+    Per-batch cost is O(batch + index-scan + candidates); the corpus
+    text is never read.
 
     Modes: ``'remove'`` drops batch docs that match an indexed doc,
     ``'flag'`` adds boolean ``is_dup``, ``'pairs'`` returns
@@ -1115,6 +1134,7 @@ def dedup_against_index(batch: DataFrame, path: str,
     meta = read_dedup_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"no LSH index sidecar at {path}")
+    _require_index_v2(meta, path)
     k, num_hashes = meta["k"], meta["num_hashes"]
     bands, hash_family = meta["bands"], meta["hash_family"]
     b = batch.select(F.col(id_col).alias("doc_id"),
@@ -1136,41 +1156,17 @@ def dedup_against_index(batch: DataFrame, path: str,
              .select("bt", "ix").distinct())
     cands = cands.persist()
     try:
-        b_sh = shingles(
-            b.join(cands.select(F.col("bt").alias("doc_id")).distinct(),
-                   "doc_id", "left_semi"), "doc_id", "text", k).select(
-            "doc_id", _index_shingle_hash(hash_family).alias("sh_h"))
+        b_sh = _candidate_shingles(
+            b, cands.select(F.col("bt").alias("doc_id")).distinct(),
+            "doc_id", "text", k).selectExpr(
+            "doc_id", f"{_index_hash_sql('sh', hash_family)} AS sh")
         ix_sh = (spark.read.parquet(f"{path}/shingles")
                  .join(cands.select(F.col("ix").alias("doc_id"))
                        .distinct(), "doc_id", "left_semi"))
-        sizes_b = b_sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        # semi-join the stored sizes to candidate index ids (the
-        # documented plan shape): without it, the join against the tiny
-        # inter frame relies on AQE's runtime estimate to avoid
-        # shuffling a corpus-sized table per ingested batch
-        sizes_ix = (spark.read.parquet(f"{path}/sizes")
-                    .join(cands.select(F.col("ix").alias("doc_id"))
-                          .distinct(), "doc_id", "left_semi"))
-        inter = (cands
-                 .join(b_sh.select(F.col("doc_id").alias("bt"), "sh_h"),
-                       "bt")
-                 .join(ix_sh.select(F.col("doc_id").alias("ix"), "sh_h"),
-                       ["ix", "sh_h"])
-                 .groupBy("bt", "ix").agg(F.count("*").alias("n_inter")))
-        matched = (inter
-                   .join(sizes_b.select(F.col("doc_id").alias("bt"),
-                                        F.col("n_sh").alias("n_b")), "bt")
-                   .join(sizes_ix.select(F.col("doc_id").alias("ix"),
-                                         F.col("n_sh").alias("n_i")),
-                         "ix")
-                   .withColumn("jaccard",
-                               F.col("n_inter")
-                               / (F.col("n_b") + F.col("n_i")
-                                  - F.col("n_inter")))
-                   .filter(F.col("jaccard") >= threshold)
-                   .select(F.col("bt").alias("batch_id"),
-                           F.col("ix").alias("index_id"),
-                           F.round("jaccard", 6).alias("jaccard"))
+        matched = (_verify_candidates(
+                       cands.selectExpr("bt AS a", "ix AS b"),
+                       b_sh, ix_sh, threshold)
+                   .selectExpr("a AS batch_id", "b AS index_id", "jaccard")
                    .localCheckpoint(eager=True))
     finally:
         cands.unpersist()

@@ -391,32 +391,28 @@ def write_ann_index(emb: DataFrame, path: str, n_cells: int = 16,
     on-disk analogue of IVF's candidate bound (corpus × nprobe /
     n_cells).
 
-    ``mode='append'`` adds vectors to an existing index using the
-    STORED centroids (classic IVF ingestion: the quantizer is frozen
-    between rebuilds; heavy drift in the appended distribution degrades
-    cell balance, not correctness — rebuild with 'overwrite' on the
-    usual refresh cadence).  ``refine_iters`` Lloyd rounds balance the
-    initial cells; only the n_cells × dim centroid matrix ever reaches
-    the driver.
+    ``mode`` is ``'overwrite'`` or ``'append'``.  ``'append'`` adds
+    vectors to an existing index using the STORED centroids (classic
+    IVF ingestion: the quantizer is frozen between rebuilds; heavy drift
+    in the appended distribution degrades cell balance, not correctness
+    — rebuild with 'overwrite' on the usual refresh cadence).
+    ``refine_iters`` Lloyd rounds balance the initial cells; only the
+    n_cells × dim centroid matrix ever reaches the driver.
 
-    Crash consistency: vectors write before the sidecar, so an
-    interrupted fresh build has no sidecar and readers refuse it, and
-    an APPEND deletes the sidecar first and re-writes it after the
-    vectors land (interrupted append ⇒ refusable); an interrupted
-    OVERWRITE can still leave new vectors under the old quantizer —
-    rebuild into a staging path and swap when the index must stay
-    queryable."""
+    Crash consistency: every write deletes the sidecar before the
+    vectors write and re-writes it after they land, so an interrupted
+    build, append or overwrite leaves a sidecar-less index that readers
+    refuse rather than vectors under the wrong quantizer."""
     from versa_spark.storage import delete_sidecar, write_json_sidecar
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unknown mode {mode!r} (use 'overwrite', "
+                         "'append')")
     spark = emb.sparkSession
     if mode == "append":
         meta = read_ann_index_meta(spark, path)
         if meta is None:
             raise ValueError(f"no ANN index sidecar at {path}")
         cents = meta["centroids"]
-        # drop the sidecar across the non-atomic append so an
-        # interrupted append leaves a refusable index, not a
-        # valid-looking one missing vectors; re-written below
-        delete_sidecar(spark, f"{path}/{_ANN_META}")
     else:
         if refine_iters > 0:
             cents = kmeans_centroids(emb, n_cells, refine_iters,
@@ -429,6 +425,7 @@ def write_ann_index(emb: DataFrame, path: str, n_cells: int = 16,
         emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).alias("v"),
                    _norm(F.col(vec_col)).alias("nv")), cents, "v")
+    delete_sidecar(spark, f"{path}/{_ANN_META}")
     # hash-repartition by cell BEFORE partitionBy: each cell's rows land
     # in exactly one task, so the layout is one file per cell instead of
     # (cells × shuffle-partitions) small files — a 1M-vector lap
