@@ -189,9 +189,10 @@ def _q_kg_graph_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental KG growth (kg.job.KGJob.append_batch): a base run over
     ~3/4 of the conversations, then an O(batch) append of the rest into
-    <workdir>/batches/<id>/ — no base stage re-read or rewritten; the
-    combined table() view must equal a full rebuild, so the oracle is
-    EXACTLY kg_graph_triples' SQL over the whole corpus.  Every stage is
+    the next epoch, <workdir>/<stage>/ep=1/ — no base stage re-read or
+    rewritten; the combined table() view (one relation over both epochs)
+    must equal a full rebuild, so the oracle is EXACTLY kg_graph_triples'
+    SQL over the whole corpus.  Every stage is
     conversation-local and entity type/label links are anti-joined
     against the already-committed entity set, which is what makes the
     O(batch) delta exact."""

@@ -537,8 +537,8 @@ def test_write_distribution_bounds_file_count(spark, tmp_path):
     wd = str(tmp_path / "kgd")
     job = KGJob(spark, wd, n_buckets=8)
     out = job.run(tx, input_fingerprint="v1")
-    n_mention_files = len(glob.glob(f"{wd}/mentions/pt=*/*.parquet"))
-    n_order_files = len(glob.glob(f"{wd}/turn_order/pt=*/*.parquet"))
+    n_mention_files = len(glob.glob(f"{wd}/mentions/ep=0/pt=*/*.parquet"))
+    n_order_files = len(glob.glob(f"{wd}/turn_order/ep=0/pt=*/*.parquet"))
     assert 0 < n_mention_files <= 8, n_mention_files
     assert 0 < n_order_files <= 8, n_order_files
     assert out["graph"].count() > 1000
@@ -951,6 +951,219 @@ def test_append_and_compact_refuse_config_mismatch(spark, tmp_path):
         f.writelines(kept)
     with pytest.raises(ValueError, match="incomplete"):
         KGJob(spark, wd, n_buckets=2).compact_to(str(tmp_path / "cfg3"))
+
+
+# -- layout v2: one epoch-partitioned relation per stage ------------------
+
+def _copy(job, dst):
+    """A KGJob over a copytree copy of ``job``'s workdir (reads must not
+    depend on where a job was written)."""
+    import shutil
+    shutil.copytree(job.workdir, dst)
+    return KGJob(job.spark, dst, n_buckets=job.n_buckets,
+                 dictionary=job.dictionary, detect=job.detect,
+                 relations=job.relations)
+
+
+def _tables(job):
+    """Every required stage's combined view, as a multiset of rows."""
+    from collections import Counter
+    return {s: Counter(tuple(sorted(r.asDict().items()))
+                       for r in job.table(s).collect())
+            for s in job._required_stages()}
+
+
+def _no_spark_job(spark, group, call, match):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=match):
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == [], group
+
+
+def test_stage_rows_come_from_the_write(spark, tmp_path, monkeypatch):
+    """Manifest ``rows`` are observed on the stage write: run and
+    append_batch complete with DataFrame.count raising, and each stage's
+    rows equal a count of its committed epoch — an empty batch too."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.classic.dataframe import DataFrame as CDataFrame
+    tx = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
+    job = KGJob(spark, str(tmp_path / "obs"), n_buckets=2)
+
+    def no_count(self):
+        raise AssertionError("stage rows must not re-scan the output")
+
+    with monkeypatch.context() as m:
+        for cls in (DataFrame, CDataFrame):
+            m.setattr(cls, "count", no_count)
+        job.run(tx.filter(h != 0), input_fingerprint="base")
+        job.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
+        # every conversation is already in: an empty batch
+        job.append_batch(tx.filter(h == 0), "b2", input_fingerprint="b2",
+                         on_existing="skip")
+    cj = _copy(job, str(tmp_path / "copy"))
+    for s in cj._required_stages():
+        rows = [job.metrics[k]["rows"] for k in (s, f"{s}@b1", f"{s}@b2")]
+        assert rows == [cj._read_committed(k, until="").count()
+                        for k in (s, f"{s}@b1", f"{s}@b2")], s
+        assert rows[0] > 0 and rows[1] > 0 and rows[2] == 0, (s, rows)
+        if s != "entity_stats":
+            assert sum(rows) == cj.table(s).count(), s
+
+
+def test_dictionary_digest_once_per_call(spark, tmp_path, monkeypatch):
+    """append_batch and compact_to scan the dictionary once per call: the
+    digest feeds both the config check and the stage fingerprint."""
+    tx = synthetic_transcripts(spark, n_convs=12, turns_per_conv=3)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(2))
+    job = KGJob(spark, str(tmp_path / "dg"), n_buckets=2,
+                dictionary=linking.canonical_dictionary(spark),
+                detect="dictionary")
+    calls = []
+    digest = KGJob._dictionary_digest
+    monkeypatch.setattr(KGJob, "_dictionary_digest",
+                        lambda self: calls.append(1) or digest(self))
+    job.run(tx.filter(h == 0), input_fingerprint="base")
+    assert len(calls) == 1
+    job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
+    assert len(calls) == 2
+    job.compact_to(str(tmp_path / "dg2"))
+    assert len(calls) == 3
+
+
+def test_torn_manifest_row_reruns_its_stage(spark, tmp_path):
+    """A manifest row cut mid-JSON (a short write) is an uncommitted
+    row: the job still opens, a retry of the append reruns that stage,
+    and the next row is written on its own line."""
+    import json as _json
+    import os as _os
+    tx = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
+    wd = str(tmp_path / "torn")
+    job = KGJob(spark, wd, n_buckets=2)
+    job.run(tx.filter(h != 0), input_fingerprint="base")
+    job.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
+    want = _tables(_copy(job, str(tmp_path / "want")))
+
+    mpath = _os.path.join(wd, "_manifest.jsonl")
+    with open(mpath) as f:
+        lines = f.readlines()
+    last = _json.loads(lines[-1])["stage"]
+    assert last == "entity_stats@b1"
+    with open(mpath, "w") as f:
+        f.writelines(lines[:-1] + [lines[-1][:len(lines[-1]) // 2]])
+
+    job2 = KGJob(spark, wd, n_buckets=2)
+    assert last not in job2._read_manifest()
+    job2.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
+    assert job2.metrics["graph@b1"].get("resumed")
+    assert not job2.metrics[last].get("resumed")
+    cj = _copy(job2, str(tmp_path / "got"))
+    assert cj._read_manifest()[last]["ep"] == 1
+    assert _tables(cj) == want
+
+
+def test_interrupted_append_never_reads_its_partial_epoch(spark, tmp_path,
+                                                          monkeypatch):
+    """An append that dies after its graph files are written but before
+    they are committed leaves an epoch on disk that no reader lists; the
+    retry reuses that epoch and ends with the tables of an
+    uninterrupted job."""
+    from pyspark.sql import DataFrameWriter
+    tx = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
+    ref = KGJob(spark, str(tmp_path / "ref"), n_buckets=2)
+    ref.run(tx.filter(h != 0), input_fingerprint="base")
+    ref.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
+
+    job = KGJob(spark, str(tmp_path / "crash"), n_buckets=2)
+    job.run(tx.filter(h != 0), input_fingerprint="base")
+    before = _tables(_copy(job, str(tmp_path / "before")))["graph"]
+    parquet = DataFrameWriter.parquet
+
+    def crash_after_graph_write(self, path, *a, **kw):
+        parquet(self, path, *a, **kw)
+        if path.endswith("/graph/ep=1"):
+            raise RuntimeError("killed between write and commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash_after_graph_write)
+        with pytest.raises(RuntimeError, match="killed"):
+            job.append_batch(tx.filter(h == 0), "b1",
+                             input_fingerprint="b1")
+    mid = _copy(job, str(tmp_path / "mid"))
+    assert mid._read_manifest()["turns@b1"]["ep"] == 1
+    assert "graph@b1" not in mid._read_manifest()
+    assert _tables(mid)["graph"] == before
+
+    job.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
+    assert job.metrics["turns@b1"].get("resumed")
+    got = _copy(job, str(tmp_path / "got"))
+    assert {r["ep"] for k, r in got._read_manifest().items()
+            if k.endswith("@b1")} == {1}
+    assert _tables(got) == _tables(ref)
+
+
+def test_old_layout_is_refused_and_compact_to_migrates(spark, tmp_path):
+    """A job in the old per-batch directory layout (base ``<stage>/``,
+    ``batches/<id>/<stage>``, manifest rows without ``ep``) is refused by
+    run, append_batch and table before any Spark job; compact_to is its
+    one reader and writes an epoch-0 job with the same tables, which
+    takes appends."""
+    import json as _json
+    import os as _os
+    import shutil
+    tx = synthetic_transcripts(spark, n_convs=36, turns_per_conv=4)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(4))
+    job = KGJob(spark, str(tmp_path / "v2"), n_buckets=2)
+    job.run(tx.filter(h <= 1), input_fingerprint="base")
+    job.append_batch(tx.filter(h == 2), "b1", input_fingerprint="b1")
+    job.append_batch(tx.filter(h == 3), "b2", input_fingerprint="b2")
+    want = _tables(job)
+
+    old = str(tmp_path / "old")
+    shutil.copytree(job.workdir, old)
+    mpath = _os.path.join(old, "_manifest.jsonl")
+    with open(mpath) as f:
+        rows = [_json.loads(ln) for ln in f]
+    bid_of = {r["ep"]: r["stage"].partition("@")[2] for r in rows}
+    for stage in job._required_stages():
+        root = _os.path.join(old, stage)
+        for ep, bid in bid_of.items():
+            if ep:
+                shutil.move(_os.path.join(root, f"ep={ep}"),
+                            _os.path.join(old, "batches", bid, stage))
+        for name in _os.listdir(_os.path.join(root, "ep=0")):
+            shutil.move(_os.path.join(root, "ep=0", name), root)
+        _os.rmdir(_os.path.join(root, "ep=0"))
+    with open(mpath, "w") as f:
+        f.writelines(_json.dumps({k: v for k, v in r.items() if k != "ep"})
+                     + "\n" for r in rows)
+
+    oj = KGJob(spark, old, n_buckets=2)
+    for name, call in (
+            ("run", lambda: oj.run(tx.filter(h <= 1),
+                                   input_fingerprint="base")),
+            ("append", lambda: oj.append_batch(tx.filter(h == 3), "b3")),
+            ("table", lambda: oj.table("graph"))):
+        _no_spark_job(spark, f"old-layout-{name}", call, "compact_to")
+
+    cj = oj.compact_to(str(tmp_path / "mig"))
+    assert cj.batch_ids() == []
+    assert _tables(_copy(cj, str(tmp_path / "mig_copy"))) == want
+    n_graph = cj.table("graph").count()
+    more = synthetic_transcripts(spark, n_convs=40, turns_per_conv=4).filter(
+        F.substring_index("conv_id", "-", -1).cast("int") >= 36)
+    cj.append_batch(more, "b3", input_fingerprint="b3")
+    got = _copy(cj, str(tmp_path / "mig_b3"))
+    assert got._read_manifest()["graph@b3"]["ep"] == 1
+    n_b3 = cj.metrics["graph@b3"]["rows"]
+    assert n_b3 > 0 and got.table("graph").count() == n_graph + n_b3
 
 
 def test_turn_relations_duckdb_value_oracle(spark, tx, tmp_path):

@@ -163,7 +163,7 @@ def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
             base_fp = (job._read_manifest()["turns"]
                        .get("input_fingerprint", ""))
             if base_fp.split("/", 1)[0] == fp:
-                base_convs = (job._read_committed("turn_order")
+                base_convs = (job.table("turn_order", until="")
                               .select("conv_id").distinct())
                 novel = (batch_df.select("conv_id").distinct()
                          .join(base_convs, "conv_id", "left_anti")
