@@ -74,3 +74,16 @@ def no_ckpt(monkeypatch):
                         lambda self, eager=True: self)
     monkeypatch.setattr(CDataFrame, "localCheckpoint",
                         lambda self, eager=True: self)
+
+
+@pytest.fixture()
+def no_auto_broadcast(spark):
+    """Size-based auto-broadcast off (static and AQE), so a join plan
+    shows BroadcastHashJoin only where an operator hinted it: the tiny
+    local relations of a test would otherwise broadcast on stats alone
+    and mask a missing hint."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, prev)

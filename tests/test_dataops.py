@@ -248,7 +248,15 @@ def test_connected_components_chain_converges_logarithmically(spark):
         dedup.connected_components(pairs, max_iters=2)
 
 
-def test_merge_duplicates_broadcast_branches_agree(spark):
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_merge_duplicates_broadcast_branches_agree(spark, monkeypatch,
+                                                   no_auto_broadcast):
+    """The id mapping is broadcast at the default cap (both rewrite
+    joins); with the cap patched to 0 both joins shuffle, with the
+    same rows."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
                                   "a long, b long")
     links = spark.createDataFrame(
@@ -256,17 +264,17 @@ def test_merge_duplicates_broadcast_branches_agree(spark):
         "origin string, rel string, target string")
     expected = {("1", "cites", "10"), ("1", "cites", "5"),
                 ("7", "cites", "1")}
-    for mode in (True, False, "auto"):
-        got = {(r.origin, r.rel, r.target)
-               for r in dedup.merge_duplicates(
-                   links, pairs, broadcast=mode).collect()}
-        assert got == expected, f"broadcast={mode}"
-    # the auto guard degrades to a plain join above the row threshold
-    got = {(r.origin, r.rel, r.target)
-           for r in dedup.merge_duplicates(
-               links, pairs, broadcast="auto",
-               broadcast_max_rows=1).collect()}
-    assert got == expected
+    joins = []
+    for cap in (dedup._MERGE_BROADCAST_ROWS, 0):
+        monkeypatch.setattr(dedup, "_MERGE_BROADCAST_ROWS", cap)
+        out = dedup.merge_duplicates(links, pairs)
+        assert {(r.origin, r.rel, r.target)
+                for r in out.collect()} == expected
+        joins.append([ln for ln in _plan(out).splitlines()
+                      if "LeftOuter" in ln])
+    assert joins[0] and all("BroadcastHashJoin" in ln for ln in joins[0])
+    assert joins[1] and not any("BroadcastHashJoin" in ln
+                                for ln in joins[1])
 
 
 def test_connected_components_and_merge(spark):
@@ -762,10 +770,10 @@ def test_decontaminate(spark):
 
 
 def test_bad_mode_raises_before_any_spark_job(spark, tmp_path, emb):
-    """decontaminate, decontaminate_fuzzy, dedup_against_index and the
-    two index writers check ``mode`` before their first Spark job: a bad
-    value runs no job, pins no block and leaves an existing index's
-    sidecar as it was."""
+    """decontaminate, decontaminate_fuzzy, dedup_against_index,
+    remove_repeated_spans and the two index writers check ``mode``
+    before their first Spark job: a bad value runs no job, pins no block
+    and leaves an existing index's sidecar as it was."""
     base = " ".join(f"w{i}" for i in range(30))
     corpus = spark.createDataFrame([(1, base), (2, base + " x")],
                                    ["doc_id", "text"])
@@ -785,6 +793,8 @@ def test_bad_mode_raises_before_any_spark_job(spark, tmp_path, emb):
             corpus, bench, mode="nope"),
         "dedup_against_index": lambda: dedup.dedup_against_index(
             corpus, path, mode="bogus"),
+        "remove_repeated_spans": lambda: textops.remove_repeated_spans(
+            corpus, mode="bogus"),
         "write_dedup_index": lambda: dedup.write_dedup_index(
             corpus, path, bands=8, mode="ignore"),
         "write_ann_index": lambda: simsearch.write_ann_index(
@@ -794,7 +804,9 @@ def test_bad_mode_raises_before_any_spark_job(spark, tmp_path, emb):
         cached = _n_cached_rdds(spark)
         sc.setJobGroup(group, group)
         try:
-            with pytest.raises(ValueError, match="unknown mode"):
+            with pytest.raises(ValueError, match=(
+                    "trim/drop/flag" if name == "remove_repeated_spans"
+                    else "unknown mode")):
                 call()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -805,36 +817,28 @@ def test_bad_mode_raises_before_any_spark_job(spark, tmp_path, emb):
                      "ann": simsearch.read_ann_index_meta(spark, ann_path)}
 
 
-def test_decontaminate_broadcast_guard(spark):
-    """Default path hints an EXPLICIT broadcast of the benchmark gram-hash
-    set (plan shows BroadcastHashJoin LeftSemi — never a sort-merge join
-    shuffling the corpus shingles); broadcast=False degrades to the
-    shuffled semi-join and still returns identical rows."""
+def test_decontaminate_broadcast_guard(spark, monkeypatch,
+                                      no_auto_broadcast):
+    """At the default cap the benchmark gram-hash set is EXPLICITLY
+    broadcast (plan shows BroadcastHashJoin LeftSemi — never a sort-merge
+    join shuffling the corpus shingles); with the cap patched to 0 the
+    semi-join shuffles and returns identical rows."""
     long_a = " ".join(f"w{i}" for i in range(30))
     rows = [(1, long_a),
             (2, " ".join(f"x{i}" for i in range(30)))]
     corpus = spark.createDataFrame(rows, ["doc_id", "text"])
     bench = spark.createDataFrame([(long_a,)], ["text"])
-    # disable size-based auto-broadcast so the assertion isolates the
-    # EXPLICIT hint (tiny local relations would otherwise broadcast on
-    # stats alone and mask a missing hint)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        flagged = dedup.decontaminate(corpus, bench, n=13, mode="flag")
-        plan = flagged._jdf.queryExecution().executedPlan().toString()
-        semi = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
-        assert semi and all("BroadcastHashJoin" in ln for ln in semi), plan
-        shuffled = dedup.decontaminate(corpus, bench, n=13, mode="flag",
-                                       broadcast=False)
-        s_plan = shuffled._jdf.queryExecution().executedPlan().toString()
-        s_semi = [ln for ln in s_plan.splitlines() if "LeftSemi" in ln]
-        assert s_semi and not any("BroadcastHashJoin" in ln
-                                  for ln in s_semi), s_plan
-        assert sorted(map(tuple, flagged.collect())) == \
-            sorted(map(tuple, shuffled.collect()))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    flagged = dedup.decontaminate(corpus, bench, n=13, mode="flag")
+    semi = [ln for ln in _plan(flagged).splitlines() if "LeftSemi" in ln]
+    assert semi and all("BroadcastHashJoin" in ln for ln in semi), \
+        _plan(flagged)
+    monkeypatch.setattr(dedup, "_DECONTAM_BROADCAST_ROWS", 0)
+    shuffled = dedup.decontaminate(corpus, bench, n=13, mode="flag")
+    s_semi = [ln for ln in _plan(shuffled).splitlines() if "LeftSemi" in ln]
+    assert s_semi and not any("BroadcastHashJoin" in ln
+                              for ln in s_semi), _plan(shuffled)
+    assert sorted(map(tuple, flagged.collect())) == \
+        sorted(map(tuple, shuffled.collect()))
 
 
 def test_stratified_sample_deterministic(spark, docs):
@@ -1027,21 +1031,26 @@ def test_remove_repeated_spans_drop_flag_and_modes(spark):
         remove_repeated_spans(docs, mode="bogus")
 
 
-def test_remove_repeated_spans_precomputed_hot_and_shuffle_path(spark):
+def test_remove_repeated_spans_precomputed_hot_and_shuffle_path(
+        spark, monkeypatch, no_auto_broadcast):
     """A precomputed hot_grams frame (cross-batch boilerplate table)
-    skips discovery, and broadcast=False exercises the shuffle-join
-    degrade with identical results."""
-    from versa_spark.textops import remove_repeated_spans
+    skips discovery; the hot-gram join is broadcast at the default cap
+    and shuffles with the cap patched to 0, with identical results."""
     docs = spark.createDataFrame(
         [(1, "keep me aaa bbb ccc ddd eee done"),
          (2, "totally unrelated text in this row")],
         ["doc_id", "text"])
     hot = spark.createDataFrame([("aaa bbb ccc ddd eee",)], ["gram"])
-    for bc in (True, False):
-        out = {r.doc_id: r.text for r in remove_repeated_spans(
-            docs, n=5, hot_grams=hot, broadcast=bc).collect()}
-        assert out[1] == "keep me done"
-        assert out[2] == "totally unrelated text in this row"
+    plans = []
+    for cap in (textops._HOT_GRAM_BROADCAST_ROWS, 0):
+        monkeypatch.setattr(textops, "_HOT_GRAM_BROADCAST_ROWS", cap)
+        out = textops.remove_repeated_spans(docs, n=5, hot_grams=hot)
+        got = {r.doc_id: r.text for r in out.collect()}
+        assert got == {1: "keep me done",
+                       2: "totally unrelated text in this row"}
+        plans.append(_plan(out))
+    assert "BroadcastHashJoin" in plans[0], plans[0]
+    assert "BroadcastHashJoin" not in plans[1], plans[1]
 
 
 # ---------------------------------------------------------------------------
@@ -1172,36 +1181,81 @@ def test_decontaminate_fuzzy(spark):
         dedup.decontaminate_fuzzy(corpus, bench, bands=7)
 
 
-def test_decontaminate_fuzzy_broadcast_guard(spark):
-    """The 'auto' path hints an EXPLICIT broadcast of the benchmark
-    banded table into the discovery join (never a sort-merge join
-    shuffling the corpus banding stream); broadcast=False degrades to
-    the shuffled join and returns identical rows."""
+def _banded_join_ops(spark, call):
+    """Run ``call()`` (an eager operator: its discovery join runs inside
+    the call) and return its result plus the operator name of every
+    executed join keyed on (band, bucket), read from the SQL status
+    store (initial and final AQE plans both listed)."""
+    import re
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()   # ascending execution id
+    last = execs.last().executionId() if execs.size() else -1
+    out = call()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    ops = []
+    i = execs.size() - 1
+    while i >= 0 and execs.apply(i).executionId() > last:
+        for sec in execs.apply(i).physicalPlanDescription().split("\n\n"):
+            head = re.match(r"\(\d+\) (\w+)", sec.strip())
+            if head and re.search(
+                    r"Left keys \[2\]: \[band#\d+L?, bucket#", sec):
+                ops.append(head.group(1))
+        i -= 1
+    return out, ops
+
+
+def test_decontaminate_fuzzy_broadcast_guard(spark, monkeypatch,
+                                            no_auto_broadcast):
+    """At the default cap the benchmark banded table is EXPLICITLY
+    broadcast into the discovery join (never a sort-merge join shuffling
+    the corpus banding stream); with the cap patched to 0 the discovery
+    join shuffles and returns identical rows."""
+    base = " ".join(f"w{i}" for i in range(30))
+    other = " ".join(f"x{i}" for i in range(30))
+    corpus = spark.createDataFrame([(1, base), (2, other)],
+                                   ["doc_id", "text"])
+    bench = spark.createDataFrame([(100, base)], ["doc_id", "text"])
+    rows, ops = [], []
+    for cap in (dedup._BANDED_BROADCAST_ROWS, 0):
+        monkeypatch.setattr(dedup, "_BANDED_BROADCAST_ROWS", cap)
+        out, o = _banded_join_ops(spark, lambda: dedup.decontaminate_fuzzy(
+            corpus, bench, mode="flag"))
+        rows.append(sorted(map(tuple, out.collect())))
+        ops.append(set(o))
+    assert rows[0] == rows[1] == [(1, base, True), (2, other, False)]
+    assert ops == [{"BroadcastHashJoin"}, {"SortMergeJoin"}], ops
+
+
+def test_dedup_against_index_broadcast_guard(spark, tmp_path, monkeypatch,
+                                             no_auto_broadcast):
+    """At the default cap the batch's banded rows are broadcast into the
+    scan of the stored banded/ table; with the cap patched to 0 that
+    join shuffles.  Both give the same pairs, and each call leaves at
+    most its eager pair checkpoint pinned."""
     base = " ".join(f"w{i}" for i in range(30))
     corpus = spark.createDataFrame(
         [(1, base), (2, " ".join(f"x{i}" for i in range(30)))],
         ["doc_id", "text"])
-    bench = spark.createDataFrame([(100, base)], ["doc_id", "text"])
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        flagged = dedup.decontaminate_fuzzy(corpus, bench, mode="flag")
-        # discovery happened while building `flagged` (the verified pair
-        # set is eagerly checkpointed); assert the broadcast on a fresh
-        # lazy candidate plan with the same inputs instead
-        c_b = dedup._banded_signatures(
-            corpus, "doc_id", "text", 3, 64, 16, "xxhash64")
-        b_b = F.broadcast(dedup._banded_signatures(
-            bench, "doc_id", "text", 3, 64, 16, "xxhash64"))
-        cands = c_b.join(b_b, ["band", "bucket"])
-        plan = cands._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan
-        shuffled = dedup.decontaminate_fuzzy(corpus, bench, mode="flag",
-                                             broadcast=False)
-        assert sorted(map(tuple, flagged.collect())) == \
-            sorted(map(tuple, shuffled.collect()))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    path = str(tmp_path / "ix")
+    dedup.write_dedup_index(corpus, path)
+    batch = spark.createDataFrame(
+        [(10, base + " extra"), (11, " ".join(f"q{i}" for i in range(30)))],
+        ["doc_id", "text"])
+    rows, ops = [], []
+    for cap in (dedup._BANDED_BROADCAST_ROWS, 0):
+        monkeypatch.setattr(dedup, "_BANDED_BROADCAST_ROWS", cap)
+        cached = _n_cached_rdds(spark)
+        out, o = _banded_join_ops(spark, lambda: dedup.dedup_against_index(
+            batch, path, mode="pairs"))
+        rows.append(sorted(map(tuple, out.collect())))
+        ops.append(set(o))
+        # only the eager pair checkpoint stays pinned
+        assert _n_cached_rdds(spark) - cached <= 1
+    assert rows[0] == rows[1] == [(10, 1, round(28 / 29, 6))]
+    assert ops == [{"BroadcastHashJoin"}, {"SortMergeJoin"}], ops
 
 
 def test_sample_to_token_budget(spark):

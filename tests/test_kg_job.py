@@ -42,45 +42,26 @@ def test_turn_ordering_invariant(spark, tx):
     assert turns.count() == tx.count()
 
 
-def test_bigdict_parity_with_regex_path(spark, tx):
+def test_bigdict_parity_with_regex_path(spark, tx, monkeypatch,
+                                       no_auto_broadcast):
     """turn_mentions_bigdict over the LEXICON-only dictionary emits the
     exact row set of the fused-regex path (all-word-char surfaces ⇒ the
     token-n-gram semantics coincide with \\b regex semantics), on both
-    the broadcast and the shuffle-degrade join plans."""
+    the broadcast join (dictionary under the cap) and the shuffle join
+    (cap patched to 0)."""
     turns = ordered_turns(tx)
     small = {(r.conv_id, r.turn_idx, r.surface)
              for r in extract.turn_mentions(turns).collect()}
     lexdict = linking.canonical_dictionary(spark).select("surface")
-    for bc in (True, False, "auto"):
-        big = {(r.conv_id, r.turn_idx, r.surface)
-               for r in extract.turn_mentions_bigdict(
-                   turns, lexdict, broadcast=bc).collect()}
-        assert big == small, f"broadcast={bc}"
-
-
-def test_bigdict_salted_shuffle_parity(spark, tx):
-    """The skew-salted shuffle join (salt=S: per-row candidate salt,
-    dictionary exploded ×S, join on (surface, salt)) emits the exact
-    row set of the broadcast plan, and the plan joins on both keys —
-    the AQE-less mitigation for hot-surface skew above the broadcast
-    cap.  Under broadcast the salt is ignored (no shuffle to skew)."""
-    turns = ordered_turns(tx)
-    lexdict = linking.canonical_dictionary(spark).select("surface")
-    ref = {(r.conv_id, r.turn_idx, r.surface)
-           for r in extract.turn_mentions_bigdict(
-               turns, lexdict, broadcast=True).collect()}
-    salted = extract.turn_mentions_bigdict(turns, lexdict,
-                                           broadcast=False, salt=4)
-    got = {(r.conv_id, r.turn_idx, r.surface)
-           for r in salted.collect()}
-    assert got == ref
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "_csalt" in plan and "_dsalt" in plan
-    # broadcast regime: salt ignored, same rows
-    got_bc = {(r.conv_id, r.turn_idx, r.surface)
-              for r in extract.turn_mentions_bigdict(
-                  turns, lexdict, broadcast=True, salt=4).collect()}
-    assert got_bc == ref
+    plans = []
+    for cap in (extract._BIGDICT_BROADCAST_ROWS, 0):
+        monkeypatch.setattr(extract, "_BIGDICT_BROADCAST_ROWS", cap)
+        out = extract.turn_mentions_bigdict(turns, lexdict)
+        big = {(r.conv_id, r.turn_idx, r.surface) for r in out.collect()}
+        assert big == small, f"cap={cap}"
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+    assert "BroadcastHashJoin" in plans[0], plans[0]
+    assert "BroadcastHashJoin" not in plans[1], plans[1]
 
 
 def test_bigdict_multiword_and_padding(spark):

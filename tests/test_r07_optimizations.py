@@ -16,6 +16,7 @@ results) gets a direct old-vs-new equivalence check here:
 
 from __future__ import annotations
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 TRICKY_TEXTS = [
@@ -363,3 +364,44 @@ def test_sql_string_builders_escape_caller_strings(spark):
     start = spark.createDataFrame([("n1",)], "node string")
     hops = ops.follow_hops(links, start, ["rel'with\\odd"])
     assert [(r.node, r.target) for r in hops.collect()] == [("n1", "n2")]
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text())
+def test_sql_quoting_parses_back(spark, s):
+    """Any caller string survives both quoted forms: the session's own
+    SQL parser (no Spark job) reads a quoted identifier as the single
+    name part ``s`` and a quoted literal as the value ``s``."""
+    from versa_spark.sqlquote import quote_ident, quote_literal
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    parts = parser.parseExpression(quote_ident(s)).nameParts()
+    assert [parts.apply(i) for i in range(parts.size())] == [s]
+    assert parser.parseExpression(quote_literal(s)).value().toString() == s
+
+
+def test_sql_constructors_take_any_column_name(spark):
+    """Every SQL-string constructor runs end to end on a column named
+    with a backtick, a quote, a space and a trailing backslash."""
+    from versa_spark import dedup, ops
+    from versa_spark.events import value_percentiles
+    from versa_spark.kg import extract
+    name = "we`ird 'col\\"
+    df = spark.createDataFrame([(1, "alpha spark beta join")],
+                               ["doc_id", name])
+    assert df.select(dedup.shingle_array(name, k=3)).first()[0] == [
+        "alpha spark beta", "spark beta join"]
+    assert df.select(extract.mention_surfaces_col(name)).first()[0] == [
+        "spark", "join"]
+
+    links = spark.createDataFrame(
+        [("n1", name, "n2", True, [], 0), ("n1", "plain", "n3", True, [], 1)],
+        "origin string, rel string, target string, t_iri boolean, "
+        "attrs array<struct<k:string,v:string>>, link_ix long")
+    start = spark.createDataFrame([("n1",)], [name])
+    hops = ops.follow_hops(links, start, [name], start_col=name)
+    assert [(r.node, r.target) for r in hops.collect()] == [("n1", "n2")]
+
+    ev = spark.createDataFrame([("a", 1.0), ("a", 3.0)],
+                               ["event_type", name])
+    assert value_percentiles(ev, ps=(0.5,), value_col=name).first().p50 \
+        == 2.0

@@ -19,6 +19,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from versa_spark.cacheutil import release_checkpoint
+from versa_spark.sqlquote import quote_ident, quote_literal
+
+# Broadcast caps (rows): each operator counts its small side and hints
+# F.broadcast at or below its cap; above it AQE plans the join.
+_MERGE_BROADCAST_ROWS = 2_000_000        # merge_duplicates' id mapping
+_DECONTAM_BROADCAST_ROWS = 10_000_000    # 8-byte benchmark gram hashes
+_BANDED_BROADCAST_ROWS = 50_000_000      # (doc_id, band, bucket) rows
+
 
 def normalized_text(text_col="text"):
     return F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
@@ -40,16 +49,10 @@ def _shingle_sql(text_col: str, k: int) -> str:
     """SQL text of the shingle expression below — built as ONE string so
     F.expr crosses py4j once instead of ~30 builder round trips (the
     round-7 profile showed expression *construction* dominating the
-    small-corpus minhash laps; see minhash_signatures).
-
-    String literals here assume the default parser escaping
-    (spark.sql.parser.escapedStringLiterals=false, the Spark default
-    since 2.0); a session opting into the legacy flag would read the
-    '\\\\s+' literal differently.  The oracle gate and tests pin the
-    default-config behavior."""
-    tc = text_col.replace("`", "``")
-    w = (f"split(regexp_replace(lower(trim(`{tc}`)), '\\\\s+', ' '),"
-         f" ' ')")
+    small-corpus minhash laps; see minhash_signatures)."""
+    ws = quote_literal(r"\s+")
+    w = (f"split(regexp_replace(lower(trim({quote_ident(text_col)})), "
+         f"{ws}, ' '), ' ')")
     return (
         f"array_distinct(CASE WHEN size({w}) >= {k} THEN "
         f"transform(sequence(0, greatest(size({w}) - {k}, 0)), "
@@ -306,7 +309,6 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     # LSH), so this stays O(candidates) at any corpus size, and every
     # checkpoint except the returned result is released before returning
     # (cacheutil).
-    from versa_spark.cacheutil import release_checkpoint
     cands = cands.localCheckpoint(eager=True)
     try:
         ids = cands.selectExpr("explode(array(a, b)) AS doc_id").distinct()
@@ -485,7 +487,6 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
     labels = (edges.select(F.col("x").alias("node"))
               .distinct()
               .withColumn("component", F.col("node")))
-    from versa_spark.cacheutil import release_checkpoint
     rounds = 0
     converged = False
     for i in range(max_iters):
@@ -552,32 +553,28 @@ def _pair_expand(ids_col: str):
 
 
 def merge_duplicates(links: DataFrame, pairs: DataFrame,
-                     a_col: str = "a", b_col: str = "b",
-                     broadcast: bool | str = "auto",
-                     broadcast_max_rows: int = 2_000_000) -> DataFrame:
+                     a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Resource merge: rewrite origins/targets of *links* so every member
     of a duplicate cluster collapses to the cluster representative (the
     minimum id) — the bulk form of the reference's
     ``replace_entity_resource`` (util.py:175-191) fed by near-dup pairs.
 
     The mapping is O(#duplicates): on a 100-TB corpus at a 20-50% dup
-    rate it is billions of rows, so broadcast is size-guarded.
-    ``broadcast='auto'`` counts the mapping (the label table is already
-    materialized by connected_components, so the count is cheap) and
-    broadcasts only below ``broadcast_max_rows``; above it the rewrite
-    degrades to plain shuffled left joins, which AQE plans normally —
-    same degrade convention as kg.linking.link_entities(broadcast=)."""
+    rate it is billions of rows, so broadcast is size-guarded: the
+    mapping is counted (the label table is already materialized by
+    connected_components, so the count is cheap) and broadcast at or
+    below ``_MERGE_BROADCAST_ROWS``; above it the rewrite is two plain
+    left joins, which AQE plans normally."""
     cc = connected_components(pairs, a_col, b_col)
     mapping = (cc.filter(F.col("doc_id") != F.col("component"))
                .select(F.col("doc_id").cast("string").alias("_from"),
                        F.col("component").cast("string").alias("_to")))
-    if broadcast == "auto":
-        broadcast = mapping.count() <= broadcast_max_rows
-    hint = F.broadcast if broadcast else (lambda d: d)
-    m_o = hint(mapping.select(F.col("_from").alias("_from_o"),
-                              F.col("_to").alias("_to_o")))
-    m_t = hint(mapping.select(F.col("_from").alias("_from_t"),
-                              F.col("_to").alias("_to_t")))
+    if mapping.count() <= _MERGE_BROADCAST_ROWS:
+        mapping = F.broadcast(mapping)
+    m_o = mapping.select(F.col("_from").alias("_from_o"),
+                         F.col("_to").alias("_to_o"))
+    m_t = mapping.select(F.col("_from").alias("_from_t"),
+                         F.col("_to").alias("_to_t"))
     out = (links
            .join(m_o, links["origin"] == m_o["_from_o"], "left")
            .join(m_t, links["target"] == m_t["_from_t"], "left"))
@@ -718,7 +715,6 @@ def dedup_corpus(df: DataFrame, id_col: str = "doc_id",
     returned DataFrame is dropped — repeated corpus-dedup calls in one
     session do not accumulate cached partitions
     (tests/test_dataops.py::test_dedup_corpus_releases_caches)."""
-    from versa_spark.cacheutil import release_checkpoint
     pairs = minhash_lsh_candidates(df, id_col, text_col, k, num_hashes,
                                    bands, verify_threshold=threshold,
                                    hash_family=hash_family)
@@ -759,9 +755,7 @@ def _mode_tail(mode: str, flag_col: str,
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text",
                   n: int = 13, bench_text_col: str = "text",
-                  mode: str = "remove",
-                  broadcast: bool | str = "auto",
-                  broadcast_max_rows: int = 10_000_000) -> DataFrame:
+                  mode: str = "remove") -> DataFrame:
     """Benchmark decontamination — the GPT-3/PaLM recipe (public
     appendices): a corpus document is contaminated if it shares ANY word
     ``n``-gram with the held-out benchmark set.
@@ -770,15 +764,20 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     the corpus side joins on ``xxhash64(shingle)`` — 8-byte keys through
     the exchange, never the gram strings.  The benchmark gram-hash set
     (typically millions of rows, not billions) is **explicitly**
-    broadcast, size-guarded like merge_duplicates: ``broadcast='auto'``
-    counts the distinct benchmark hashes (tiny — one narrow scan of the
-    benchmark table) and hints ``F.broadcast`` only below
-    ``broadcast_max_rows`` (8 bytes/row → ≤ 80 MB in the hash-set build);
-    above it the semi-join degrades to an AQE-planned shuffle — relying
+    broadcast, size-guarded like merge_duplicates: the distinct
+    benchmark hashes are checkpointed and counted (one narrow scan of
+    the benchmark table) and hinted ``F.broadcast`` at or below
+    ``_DECONTAM_BROADCAST_ROWS`` (8 bytes/row → ≤ 80 MB in the hash-set
+    build); above it the semi-join is an AQE-planned shuffle — relying
     on AQE's size *estimate* alone would risk a sort-merge join that
     shuffles the trillion-row corpus shingle table.  A left-semi join +
     distinct yields contaminated ids; ``remove`` anti-joins them out,
     ``flag`` adds a boolean ``contaminated``.
+
+    The call runs the checkpoint and count jobs; the result is lazy and
+    reads the checkpoint of the benchmark hash set, which the
+    ContextCleaner frees once the returned DataFrame is dropped, as in
+    :func:`dedup_corpus`.
 
     Docs shorter than ``n`` words shingle to their whole text (shingles'
     fallback), so a short benchmark item only matches a short corpus doc
@@ -791,23 +790,13 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                                       F.col(bench_text_col).alias("text")),
                      "_bid", "text", n)
             .select(F.xxhash64("shingle").alias("_h")).distinct())
-    if broadcast == "auto":
-        # materialize the (small) benchmark hash set ONCE: the size
-        # count and the semi-join below both read the checkpoint
-        # instead of re-shingling the benchmark (the multiply-consumed-
-        # frame lifecycle).  NOTE 'auto' therefore runs a job at call
-        # time, and the checkpoint's blocks (≤ 8 B/row of the benchmark
-        # hash set) STAY PINNED for the returned plan's lifetime — the
-        # result is lazy, so an in-function release_checkpoint would
-        # free blocks the caller's plan still reads.  Callers that want
-        # no retained blocks (or a fully lazy plan for .explain audits)
-        # pass broadcast=True/False explicitly, which skips the
-        # checkpoint entirely; otherwise cacheutil.release_checkpoint
-        # on any frame derived from the result after its last job frees
-        # the set.
-        b_sh = b_sh.localCheckpoint(eager=True)
-        broadcast = b_sh.count() <= broadcast_max_rows
-    if broadcast:
+    # materialize the (small) benchmark hash set ONCE: the size count
+    # and the semi-join below both read the checkpoint instead of
+    # re-shingling the benchmark.  The result is lazy, so an
+    # in-function release_checkpoint would free blocks its plan still
+    # reads.
+    b_sh = b_sh.localCheckpoint(eager=True)
+    if b_sh.count() <= _DECONTAM_BROADCAST_ROWS:
         b_sh = F.broadcast(b_sh)
     return tail(corpus, id_col, c_sh.join(b_sh, "_h", "left_semi"),
                 "doc_id")
@@ -820,9 +809,7 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
                         k: int = 3, threshold: float = 0.8,
                         num_hashes: int = 64, bands: int = 16,
                         hash_family: str = "xxhash64",
-                        mode: str = "remove",
-                        broadcast: bool | str = "auto",
-                        broadcast_max_rows: int = 50_000_000) -> DataFrame:
+                        mode: str = "remove") -> DataFrame:
     """Fuzzy (near-duplicate) benchmark decontamination — the cross-corpus
     complement of :func:`decontaminate`.  Exact n-gram decontamination
     misses paraphrased or lightly-edited benchmark leakage; this flags a
@@ -837,23 +824,23 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
     * both sides band their MinHash signatures with the SHARED kernel
       (``_banded_signatures`` — identical bucket ids by construction);
     * the benchmark banded table (|bench| × bands rows) is tiny next to
-      the corpus; ``broadcast='auto'`` eagerly materializes it ONCE
-      (localCheckpoint — it feeds the count AND the join), counts it,
-      and hints ``F.broadcast`` below ``broadcast_max_rows`` — the
+      the corpus; it is eagerly materialized ONCE (localCheckpoint — it
+      feeds the count AND the join), counted, and hinted
+      ``F.broadcast`` at or below ``_BANDED_BROADCAST_ROWS`` — the
       corpus banded stream then never shuffles for discovery (map-side
-      broadcast-hash join).  Above the cap it degrades to an AQE-planned
-      shuffle on (band, bucket), disclosed not silent;
+      broadcast-hash join).  Above the cap the join is an AQE-planned
+      shuffle on (band, bucket);
     * candidate (corpus, bench) pairs are distinct-ed, persisted (tiny:
       near-dup pairs only), and verified with exact cross-table Jaccard
       scoped to candidates: each side's shingle table is semi-joined down
       to its candidate ids before the intersection count, so verify costs
       O(candidate pairs × shingles/doc), never |corpus| × |bench|;
     * the verified pair set is eagerly localCheckpoint-ed so BOTH the
-      candidate cache and the 'auto' benchmark checkpoint are released
-      before returning (the minhash_lsh_candidates lifecycle; unlike
-      :func:`decontaminate`, whose lazy result forces its 'auto'
-      checkpoint to stay pinned) — repeated calls in a long-lived
-      session do not accumulate blocks.
+      candidate cache and the benchmark checkpoint are released before
+      returning (the minhash_lsh_candidates lifecycle; unlike
+      :func:`decontaminate`, whose lazy result keeps its checkpoint
+      pinned) — repeated calls in a long-lived session do not
+      accumulate blocks.
 
     Modes: ``'remove'`` anti-joins contaminated corpus docs out;
     ``'flag'`` adds boolean ``contaminated``; ``'pairs'`` returns the
@@ -874,18 +861,14 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
                                   bands, hash_family)
     b_banded = _banded_signatures(b, "doc_id", "text", k, num_hashes,
                                   bands, hash_family)
-    auto_ckpt = None
-    if broadcast == "auto":
-        # materialize the (small) benchmark banded table ONCE: the size
-        # count and the discovery join both read the checkpoint instead
-        # of re-running the benchmark signature DAG.  Unlike
-        # decontaminate's lazy result, the verified pair set below is
-        # EAGER, so nothing downstream reads this checkpoint after the
-        # verify job — it is released before returning.
-        b_banded = auto_ckpt = b_banded.localCheckpoint(eager=True)
-        broadcast = b_banded.count() <= broadcast_max_rows
-    if broadcast:
-        b_banded = F.broadcast(b_banded)
+    # materialize the (small) benchmark banded table ONCE: the size
+    # count and the discovery join both read the checkpoint instead of
+    # re-running the benchmark signature DAG.  The verified pair set
+    # below is EAGER, so nothing reads this checkpoint after the verify
+    # job — it is released before returning.
+    b_ckpt = b_banded = b_banded.localCheckpoint(eager=True)
+    if b_ckpt.count() <= _BANDED_BROADCAST_ROWS:
+        b_banded = F.broadcast(b_ckpt)
     cands = (c_banded.select(F.col("doc_id").alias("a"), "band", "bucket")
              .join(b_banded.select(F.col("doc_id").alias("b"),
                                    "band", "bucket"),
@@ -909,9 +892,7 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
                    .localCheckpoint(eager=True))
     finally:
         cands.unpersist()
-        if auto_ckpt is not None:
-            from versa_spark.cacheutil import release_checkpoint
-            release_checkpoint(auto_ckpt)
+        release_checkpoint(b_ckpt)
     return tail(corpus, id_col, matched, "corpus_id")
 
 
@@ -1098,9 +1079,8 @@ def compact_dedup_index(spark: SparkSession, src: str, dst: str,
 
 def dedup_against_index(batch: DataFrame, path: str,
                         id_col: str = "doc_id", text_col: str = "text",
-                        threshold: float = 0.8, mode: str = "remove",
-                        broadcast: bool | str = "auto",
-                        broadcast_max_rows: int = 50_000_000) -> DataFrame:
+                        threshold: float = 0.8,
+                        mode: str = "remove") -> DataFrame:
     """Near-dup-match a new batch against a stored :func:`write_dedup_index`
     — the incremental complement of :func:`dedup_corpus` (which dedups
     within one frame) and :func:`decontaminate_fuzzy` (which re-shingles
@@ -1110,10 +1090,11 @@ def dedup_against_index(batch: DataFrame, path: str,
     caller — a mismatched banding finds nothing, silently.  A format-1
     index is refused; :func:`compact_dedup_index` migrates it.
 
-    Plan shape: the BATCH is the small side here, so its banded rows
-    broadcast (counted 'auto' guard, shuffle degrade above the cap) into
-    a map-side scan of the stored ``banded/`` table, giving the distinct
-    candidate (batch, index) pairs.  Verify is the shared candidate
+    Plan shape: the BATCH is the small side here, so its banded rows are
+    checkpointed, counted and broadcast (an AQE shuffle join above
+    ``_BANDED_BROADCAST_ROWS``) into a map-side scan of the stored
+    ``banded/`` table, giving the distinct candidate (batch, index)
+    pairs.  Verify is the shared candidate
     kernel (:func:`_verify_candidates`): the batch re-shingles only its
     candidate docs (semi-join before shingling) and hashes them in-row,
     the stored ``shingles/`` arrays are read once, semi-joined to
@@ -1141,12 +1122,9 @@ def dedup_against_index(batch: DataFrame, path: str,
                      F.col(text_col).alias("text"))
     b_banded = _banded_signatures(b, "doc_id", "text", k, num_hashes,
                                   bands, hash_family)
-    auto_ckpt = None
-    if broadcast == "auto":
-        b_banded = auto_ckpt = b_banded.localCheckpoint(eager=True)
-        broadcast = b_banded.count() <= broadcast_max_rows
-    if broadcast:
-        b_banded = F.broadcast(b_banded)
+    b_ckpt = b_banded = b_banded.localCheckpoint(eager=True)
+    if b_ckpt.count() <= _BANDED_BROADCAST_ROWS:
+        b_banded = F.broadcast(b_ckpt)
     ix_banded = spark.read.parquet(f"{path}/banded")
     cands = (ix_banded.select(F.col("doc_id").alias("ix"),
                               "band", "bucket")
@@ -1170,7 +1148,5 @@ def dedup_against_index(batch: DataFrame, path: str,
                    .localCheckpoint(eager=True))
     finally:
         cands.unpersist()
-        if auto_ckpt is not None:
-            from versa_spark.cacheutil import release_checkpoint
-            release_checkpoint(auto_ckpt)
+        release_checkpoint(b_ckpt)
     return tail(batch, id_col, matched, "batch_id")

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from versa_spark.sqlquote import quote_ident
+
 
 def sessionize(events: DataFrame, user_col: str = "user_id",
                ts_col: str = "ts", gap_minutes: int = 30) -> DataFrame:
@@ -216,13 +218,10 @@ def value_percentiles(events: DataFrame, ps: tuple[float, ...] =
     ``approx_percentile`` (t-digest, mergeable map-side) and accept the
     documented error bound.  This operator is the exact-verification
     twin the approximate path is validated against."""
-    if not value_col.isidentifier():
-        raise ValueError(f"value_col {value_col!r} must be a plain "
-                         "identifier (it is interpolated into a SQL "
-                         "expression)")
     # column names in PERCENT: p50 is the median, p99_5 for p=0.995 —
     # str(p).replace('0.','') would have named the median 'p5'
-    aggs = [F.round(F.expr(f"percentile({value_col}, {p!r})"), 6)
+    vc = quote_ident(value_col)
+    aggs = [F.round(F.expr(f"percentile({vc}, {p!r})"), 6)
             .alias("p" + f"{p * 100:g}".replace(".", "_")) for p in ps]
     return (events.groupBy(F.col(type_col).alias("event_type"))
             .agg(*aggs))

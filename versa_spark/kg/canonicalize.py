@@ -123,17 +123,15 @@ def mention_links_from_eids(turn_eids: DataFrame) -> DataFrame:
     build eliminated outright.  Output-identical to
     ``mention_links(link_entities(turn_mentions(...)))`` for the default
     dictionary (asserted in tests + the reference-parity suite)."""
-    from versa_spark.kg.extract import ENT, REL_MENTIONS, _CANONICALS
+    from versa_spark.kg.extract import REL_MENTIONS, canonical_iri_sql
     from versa_spark.kg.transcripts import TURN_IRI_PREFIX
-    iri_arr_sql = "array(" + ",".join(
-        f"'{ENT + c}'" for c in _CANONICALS) + ")"
     return (turn_eids
             .selectExpr("conv_id", "turn_idx", "explode(eids) AS _e")
             .selectExpr(
                 f"concat('{TURN_IRI_PREFIX}', conv_id, '/',"
                 f" cast(turn_idx as string)) AS origin",
                 f"'{REL_MENTIONS}' AS rel",
-                f"element_at({iri_arr_sql}, cast(_e as int) + 1) AS target",
+                f"{canonical_iri_sql('_e')} AS target",
                 "true AS t_iri"))
 
 
@@ -142,17 +140,10 @@ def entity_links_from_eids(turn_eids: DataFrame) -> DataFrame:
     distinct runs over ONE-BYTE keys (≤ |lexicon| rows out), and the IRI/
     label strings are reconstructed from literal arrays after the
     exchange."""
-    from versa_spark.kg.extract import ENT, _CANONICALS
-    iri_arr_sql = "array(" + ",".join(
-        f"'{ENT + c}'" for c in _CANONICALS) + ")"
-    name_arr_sql = "array(" + ",".join(
-        f"'{c}'" for c in _CANONICALS) + ")"
+    from versa_spark.kg.extract import canonical_iri_sql, canonical_name_sql
     ents = (turn_eids.selectExpr("explode(eids) AS _e").distinct()
-            .selectExpr(
-                f"element_at({iri_arr_sql}, cast(_e as int) + 1)"
-                f" AS entity_iri",
-                f"element_at({name_arr_sql}, cast(_e as int) + 1)"
-                f" AS canonical"))
+            .selectExpr(f"{canonical_iri_sql('_e')} AS entity_iri",
+                        f"{canonical_name_sql('_e')} AS canonical"))
     return _entity_type_label_links(ents)
 
 

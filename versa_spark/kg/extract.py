@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from versa_spark import VTYPE_REL
+from versa_spark.sqlquote import quote_ident, quote_literal
 
 BASE = "http://example.org/"
 ENT = BASE + "entity/"
@@ -59,17 +60,14 @@ _MENTION_PAT_JVM = (
     rf"(?<!{_WORD}|[\x{{D800}}-\x{{DBFF}}][\x{{DC00}}-\x{{DFFF}}])"
     rf"({_MENTION_ALT})(?!{_WORD})")
 
-# _MENTION_PAT_JVM as a SQL single-quoted-literal body (backslashes
-# doubled; the pattern itself contains no quotes)
-_MENTION_PAT_SQL = _MENTION_PAT_JVM.replace("\\", "\\\\")
+_MENTION_PAT_SQL = quote_literal(_MENTION_PAT_JVM)
 
 
 def mention_surfaces_sql(text_col: str) -> str:
     """SQL text of the extraction expression — single-string construction
     (one py4j round trip; guide §4 chatter note, see dedup._shingle_sql)."""
-    tc = text_col.replace("`", "``")
-    return (f"array_distinct(regexp_extract_all(coalesce(`{tc}`, ''),"
-            f" '{_MENTION_PAT_SQL}', 1))")
+    return (f"array_distinct(regexp_extract_all("
+            f"coalesce({quote_ident(text_col)}, ''), {_MENTION_PAT_SQL}, 1))")
 
 
 def mention_surfaces_col(text_col: str):
@@ -96,6 +94,24 @@ _SURFACES = sorted(LEXICON)
 _CANONICALS = sorted(set(LEXICON.values()))
 _CANON_IX = {c: i for i, c in enumerate(_CANONICALS)}
 _SURFACE_CANON_IX = [_CANON_IX[LEXICON[s]] for s in _SURFACES]
+
+
+def canonical_iri_sql(ix: str) -> str:
+    """SQL text: canonical index expression ``ix`` (0-based, any
+    integer type) → its entity IRI, one ``element_at`` over a literal
+    array, so the mapping stays in-row."""
+    return _element_at_sql([ENT + c for c in _CANONICALS], ix)
+
+
+def canonical_name_sql(ix: str) -> str:
+    """SQL text: canonical index expression ``ix`` → its canonical
+    name (the ``canonical_iri_sql`` twin)."""
+    return _element_at_sql(_CANONICALS, ix)
+
+
+def _element_at_sql(values, ix: str) -> str:
+    arr = ",".join(quote_literal(v) for v in values)
+    return f"element_at(array({arr}), cast({ix} as int) + 1)"
 
 
 def turn_mentions(turns: DataFrame) -> DataFrame:
@@ -162,13 +178,9 @@ def turn_entity_iri_sets(turns: DataFrame) -> DataFrame:
     exploded mention rows (measured 37.5 s → 5.1 s best-lap at 4M
     turns, local[32]).  Same PRECONDITION as ``turn_entity_ids``:
     (conv_id, turn_idx) unique."""
-    iri_arr_sql = "array(" + ",".join(
-        f"'{ENT + c}'" for c in _CANONICALS) + ")"
     keep = [c for c in turns.columns if c != "text"]
     return turn_entity_ids(turns).selectExpr(
-        *keep,
-        f"transform(eids, e -> element_at({iri_arr_sql},"
-        f" cast(e as int) + 1)) AS ents")
+        *keep, f"transform(eids, e -> {canonical_iri_sql('e')}) AS ents")
 
 
 # Multi-word surfaces for the big-dictionary fixtures: phrases that occur
@@ -196,11 +208,13 @@ def synthetic_big_dictionary(spark, n_pad: int = 20_000) -> DataFrame:
     return base.unionByName(pad)
 
 
+# turn_mentions_bigdict broadcasts a dictionary of at most this many rows
+# (full string rows: a few hundred MB, the broadcast-relation budget)
+_BIGDICT_BROADCAST_ROWS = 2_000_000
+
+
 def turn_mentions_bigdict(turns: DataFrame, dictionary: DataFrame,
-                          max_ngram: int | None = None,
-                          broadcast: bool | str = "auto",
-                          broadcast_max_rows: int = 2_000_000,
-                          salt: int | None = None) -> DataFrame:
+                          max_ngram: int | None = None) -> DataFrame:
     """Large-dictionary mention detection: token n-grams hash-joined
     against a dictionary TABLE — the reference's own ``lookup()`` join
     discipline (other_actions.py:366-404) applied to *detection*, for
@@ -226,63 +240,43 @@ def turn_mentions_bigdict(turns: DataFrame, dictionary: DataFrame,
 
     ``max_ngram=None`` (default) sizes the candidate grammar from the
     dictionary itself — the max token count over surfaces, harvested by
-    the same tiny aggregation the ``broadcast='auto'`` pass runs — so
+    the same tiny aggregation that counts the dictionary — so
     multi-word surfaces can never be silently undetectable; pass an
     explicit ``max_ngram`` to cap the candidate stream (surfaces with
-    more tokens are then deliberately out of scope) or to keep the plan
-    fully lazy when ``broadcast`` is also explicit.
+    more tokens are then deliberately out of scope).
 
     Plan shape at 100 TB: tokens and candidate n-grams build inside
     per-row array expressions (array_distinct BEFORE the explode, so
     output rows are unique per (turn, dictionary row) with no post-join
-    dedup shuffle), then one hash join on the normalized key.
-    ``broadcast='auto'`` counts the dictionary (one narrow scan, same
-    counted-degrade idiom as dedup.decontaminate) and hints
-    ``F.broadcast`` below ``broadcast_max_rows`` (default 2M rows ≈ a
-    few hundred MB of strings — the broadcast-relation budget, NOT the
-    decontaminate 10M-hash budget: these are full string rows, not 8-byte
-    hashes) — the join is then map-side with ZERO exchange of the turn
-    stream; above it the join degrades to an AQE-planned shuffle, and
-    the auto pass also harvests min/max normalized-surface length so
-    obviously-unmatchable candidates are pruned JVM-side before they
-    reach the exchange.  Hot surfaces are harmless in the broadcast
-    regime (no shuffle by surface ever happens).
-
-    Skew in the SHUFFLE regime: the shuffle keys on the normalized
-    surface, so a dictionary surface that is also a stopword-frequency
-    token lands its entire candidate stream on one reducer.  AQE's
-    skew-join split (on by default) re-chunks such partitions at
-    runtime — the preferred mitigation, zero overhead when there is no
-    skew.  For AQE-less engines (or key-level skew beyond the splitter)
-    pass ``salt=S``: candidates take a per-row hash salt in [0, S),
-    the dictionary explodes ×S (the canonicalize salting discipline —
-    S copies of the SMALL side, never the turn stream), and the join
-    keys on (surface, salt), spreading each hot surface over S
-    reducers.  Results are salt-invariant (test-asserted); ``salt`` is
-    ignored in the broadcast regime where no shuffle exists to skew."""
+    dedup shuffle), then one hash join on the normalized key.  One
+    aggregation over the dictionary (a narrow scan) counts it and
+    harvests min/max normalized-surface length, so obviously-unmatchable
+    candidates are pruned JVM-side.  At or below
+    ``_BIGDICT_BROADCAST_ROWS`` the dictionary is hinted
+    ``F.broadcast`` — the join is then map-side with ZERO exchange of
+    the turn stream, and hot surfaces are harmless (no shuffle by
+    surface ever happens).  Above it AQE plans a shuffle join on the
+    normalized surface, where a dictionary surface that is also a
+    stopword-frequency token lands its whole candidate stream on one
+    reducer; AQE's skew-join split (on by default) re-chunks such
+    partitions at runtime."""
     def _norm(col):
         return F.array_join(
             F.filter(F.split(col, r"[^A-Za-z0-9_]+"), lambda t: t != ""),
             " ")
 
-    length_bounds = None
-    if broadcast == "auto" or max_ngram is None:
-        norm = _norm(F.col("surface"))
-        stats = dictionary.agg(
-            F.count("*").alias("n"),
-            F.min(F.length(norm)).alias("lo"),
-            F.max(F.length(norm)).alias("hi"),
-            F.max(F.size(F.filter(
-                F.split(F.col("surface"), r"[^A-Za-z0-9_]+"),
-                lambda t: t != ""))).alias("toks")).first()
-        if broadcast == "auto":
-            broadcast = (stats["n"] or 0) <= broadcast_max_rows
-        if max_ngram is None:
-            max_ngram = max(1, int(stats["toks"] or 1))
-        if stats["lo"] is not None:
-            length_bounds = (int(stats["lo"]), int(stats["hi"]))
-    d = dictionary.withColumn("_k", _norm(F.col("surface")))
-    if broadcast:
+    norm = _norm(F.col("surface"))
+    stats = dictionary.agg(
+        F.count("*").alias("n"),
+        F.min(F.length(norm)).alias("lo"),
+        F.max(F.length(norm)).alias("hi"),
+        F.max(F.size(F.filter(
+            F.split(F.col("surface"), r"[^A-Za-z0-9_]+"),
+            lambda t: t != ""))).alias("toks")).first()
+    if max_ngram is None:
+        max_ngram = max(1, int(stats["toks"] or 1))
+    d = dictionary.withColumn("_k", norm)
+    if stats["n"] <= _BIGDICT_BROADCAST_ROWS:
         d = F.broadcast(d)
 
     toks = F.filter(F.split(F.col("text"), r"[^A-Za-z0-9_]+"),
@@ -307,20 +301,9 @@ def turn_mentions_bigdict(turns: DataFrame, dictionary: DataFrame,
             if c in turns.columns]
     out = (turns.withColumn("_toks", toks)
            .select(*keep, F.explode(cand).alias("_cand")))
-    if length_bounds is not None:
-        out = out.filter(F.length("_cand").between(*length_bounds))
+    if stats["lo"] is not None:
+        out = out.filter(F.length("_cand").between(stats["lo"], stats["hi"]))
     payload = [c for c in dictionary.columns if c != "surface"]
-    if salt and not broadcast:
-        s = int(salt)
-        d = d.withColumn(
-            "_dsalt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
-        out = out.withColumn(
-            "_csalt",
-            F.pmod(F.xxhash64(*[F.col(c) for c in keep],
-                              F.col("_cand")), F.lit(s)).cast("int"))
-        return (out.join(d, (out["_cand"] == d["_k"])
-                         & (out["_csalt"] == d["_dsalt"]), "inner")
-                .select(*keep, "surface", *payload))
     return (out.join(d, out["_cand"] == d["_k"], "inner")
             .select(*keep, "surface", *payload))
 

@@ -25,7 +25,7 @@ table; caching it would evict everything else.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from versa_spark.kg import canonicalize, extract, linking
 
@@ -33,7 +33,6 @@ from versa_spark.kg import canonicalize, extract, linking
 def build_graph(spark: SparkSession, turns: DataFrame,
                 dictionary: DataFrame | None = None,
                 detect: str = "lexicon",
-                detect_opts: dict | None = None,
                 relations: tuple[str, ...] | None = None,
                 ) -> dict[str, DataFrame]:
     """ordered turns → {turns, linked, graph, edges} DataFrames.
@@ -77,8 +76,7 @@ def build_graph(spark: SparkSession, turns: DataFrame,
     if detect == "dictionary" and dictionary is None:
         raise ValueError("detect='dictionary' requires a dictionary")
     if dictionary is not None:
-        parts = _build_graph_dictionary(turns, dictionary, detect,
-                                        detect_opts or {})
+        parts = _build_graph_dictionary(turns, dictionary, detect)
         return _with_relations(parts, turns, relations)
     # r07: the persisted slim frame also drops ``turn_iri`` (a ~50-byte
     # string that is a pure function of (conv_id, turn_idx) —
@@ -96,16 +94,10 @@ def build_graph(spark: SparkSession, turns: DataFrame,
              .unionByName(canonicalize.entity_links_from_eids(te)))
     # compatibility view of the linked-mention rows (same 4-col shape the
     # generic path caches); derives lazily from the persisted slim frame
-    from versa_spark.kg.extract import ENT, _CANONICALS
-    iri_arr = F.array(*[F.lit(ENT + c) for c in _CANONICALS])
-    name_arr = F.array(*[F.lit(c) for c in _CANONICALS])
-    linked = (te.select("conv_id", "turn_idx",
-                        F.explode("eids").alias("_e"))
-              .select("conv_id", "turn_idx",
-                      F.element_at(name_arr, F.col("_e").cast("int") + 1)
-                      .alias("canonical"),
-                      F.element_at(iri_arr, F.col("_e").cast("int") + 1)
-                      .alias("entity_iri")))
+    linked = (te.selectExpr("conv_id", "turn_idx", "explode(eids) AS _e")
+              .selectExpr("conv_id", "turn_idx",
+                          extract.canonical_name_sql("_e") + " AS canonical",
+                          extract.canonical_iri_sql("_e") + " AS entity_iri"))
     parts = {"turns": te, "linked": linked, "graph": graph,
              "edges": canonicalize.adjacency_edges(graph)}
     return _with_relations(parts, turns, relations)
@@ -130,16 +122,14 @@ def _with_relations(parts: dict[str, DataFrame], turns: DataFrame,
 
 
 def _build_graph_dictionary(turns: DataFrame, dictionary: DataFrame,
-                            detect: str,
-                            detect_opts: dict) -> dict[str, DataFrame]:
+                            detect: str) -> dict[str, DataFrame]:
     """Assembly with an explicit ``dictionary``.  ``linked`` comes from
-    ONE fused detection+linking join (turn_mentions_bigdict, with
-    ``detect_opts`` forwarded: max_ngram, broadcast, broadcast_max_rows)
-    for ``detect='dictionary'``, else from the lexicon regex scan plus
+    ONE fused detection+linking join (turn_mentions_bigdict) for
+    ``detect='dictionary'``, else from the lexicon regex scan plus
     link_entities; the rest of the build is shared."""
     if detect == "dictionary":
         linked = extract.turn_mentions_bigdict(
-            turns.drop("turn_rank", "turn_iri"), dictionary, **detect_opts)
+            turns.drop("turn_rank", "turn_iri"), dictionary)
     else:
         # turn_mentions can only emit lexicon surfaces whatever the
         # linking dictionary is, so the miss fallback precomputes

@@ -62,7 +62,6 @@ class KGJob:
                  n_buckets: int = 32, salt: int = 16,
                  dictionary: DataFrame | None = None,
                  detect: str = "lexicon",
-                 detect_opts: dict | None = None,
                  relations: tuple[str, ...] | None = None):
         if detect not in ("lexicon", "dictionary"):
             raise ValueError(f"unknown detect {detect!r} "
@@ -81,7 +80,6 @@ class KGJob:
         # fingerprint, so a resume after a dictionary change recomputes.
         self.dictionary = dictionary
         self.detect = detect
-        self.detect_opts = dict(detect_opts or {})
         # opt-in verb-linked relation triples (extract.relation_links):
         # their own slim stage, holding only triples NOT already committed
         # (so combined views never duplicate one), unioned into the graph;
@@ -263,7 +261,7 @@ class KGJob:
             # mentions checkpoint, not a second copy on disk
             mentions = stage(
                 "mentions", lambda: extract.turn_mentions_bigdict(
-                    turns, self.dictionary, **self.detect_opts))
+                    turns, self.dictionary))
             linked = mentions.select(
                 "conv_id", "turn_idx", "turn_iri", "surface",
                 F.lit(True).alias("linked"), "canonical", "entity_iri")
@@ -517,7 +515,6 @@ class KGJob:
         target = KGJob(self.spark, new_workdir, n_buckets=self.n_buckets,
                        salt=self.salt,
                        dictionary=self.dictionary, detect=self.detect,
-                       detect_opts=self.detect_opts,
                        relations=self.relations)
         # fold dict/relations into the target's fingerprints (exactly as
         # run() would) so post-compaction appends pass the config check

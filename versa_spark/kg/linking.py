@@ -7,12 +7,12 @@ entity), misses fall back to a deterministic fingerprint ID computed by
 the vectorized mmh3 kernel (kg.ids_vec), exactly the Versa resource-ID
 convention (pipeline/main.py:93-132).
 
-Join strategy: the dictionary is small (thousands–millions of aliases) →
-``F.broadcast``; when a dictionary outgrows the broadcast threshold the
-same code degrades to a sort-merge join simply by dropping the hint
-(broadcast=False), which AQE may still convert back.  Skew note: hot
-surfaces ("spark") are *fine* in a broadcast map-side join — no shuffle of
-the mention table by surface ever happens.
+Join strategy: the dictionary is small (thousands–millions of aliases),
+so it is always hinted ``F.broadcast``; a gazetteer too large to
+broadcast goes through extract.turn_mentions_bigdict, which counts its
+dictionary and leaves a large one to AQE.  Skew note: hot surfaces
+("spark") are *fine* in a broadcast map-side join — no shuffle of the
+mention table by surface ever happens.
 """
 
 from __future__ import annotations
@@ -129,7 +129,6 @@ def _unlinked_fallback_cols(ent_col: str, canon_col: str):
 
 
 def link_entities_scored(mentions: DataFrame, dictionary: DataFrame,
-                         broadcast: bool = True,
                          min_score: float = 0.5) -> DataFrame:
     """Candidate-scoring entity linking (the north star's 'scores
     candidates against a broadcast canonical-ID dictionary').
@@ -176,12 +175,10 @@ def link_entities_scored(mentions: DataFrame, dictionary: DataFrame,
     d_norm = F.regexp_replace(F.lower(F.trim(F.col("surface"))),
                               r"\s+", " ")
     d_stem = F.regexp_replace(d_norm, r"(es|s)$", "")
-    dict_keys = d.select(
+    dict_keys = F.broadcast(d.select(
         F.col("surface").alias("_k_exact"),
         d_norm.alias("_k_norm"), d_stem.alias("_k_stem"),
-        "canonical", "entity_iri")
-    if broadcast:
-        dict_keys = F.broadcast(dict_keys)
+        "canonical", "entity_iri"))
 
     def _cand(key_col, dict_key, score):
         return (m.join(dict_keys, F.col(key_col) == F.col(dict_key))
@@ -329,7 +326,6 @@ def fallback_iri_map(surfaces) -> dict[str, str]:
 
 
 def link_entities(mentions: DataFrame, dictionary: DataFrame,
-                  broadcast: bool = True,
                   surface_universe=None) -> DataFrame:
     """mentions (…, surface) ⋈ dictionary → adds ``entity_iri``,
     ``canonical``, ``linked`` (False = dictionary miss → deterministic
@@ -348,8 +344,7 @@ def link_entities(mentions: DataFrame, dictionary: DataFrame,
     surfaces outside both the universe and the dictionary yield NULL
     entity_iri instead of a fingerprint ID — only pass a universe that
     is actually exhaustive.  Bounded by _UNIVERSE_BUDGET literals."""
-    dict_df = F.broadcast(dictionary) if broadcast else dictionary
-    out = mentions.join(dict_df, "surface", "left")
+    out = mentions.join(F.broadcast(dictionary), "surface", "left")
     if surface_universe is not None:
         fmap = fallback_iri_map(sorted(set(surface_universe)))
         if len(fmap) > _UNIVERSE_BUDGET:

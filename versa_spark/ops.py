@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, functions as F
 from versa_spark import VLABEL_REL, VTYPE_REL
 from versa_spark.iri import URI_REF_ILLEGAL_JAVA
 from versa_spark.model import QUAD_COLS, dedup_links, union_models
+from versa_spark.sqlquote import quote_ident, quote_literal
 
 
 def _attr_cond(attrs: Mapping):
@@ -175,14 +176,10 @@ def follow_hops(df: DataFrame, start: DataFrame, rels: Iterable[str],
         raise ValueError("follow_hops needs at least one rel (an empty "
                          "chain would reference hop columns that were "
                          "never produced)")
-    sc = start_col.replace("`", "``")
-    frontier = start.selectExpr(f"`{sc}` AS node", f"`{sc}` AS _cur")
-    for i, rel in enumerate(rels):
-        # escape backslashes then quotes so ANY rel string round-trips
-        # the SQL literal exactly (IRIs never contain either, but the
-        # API accepts arbitrary strings)
-        r = str(rel).replace("\\", "\\\\").replace("'", "\\'")
-        hop = df.where(f"rel = '{r}'").selectExpr(
+    sc = quote_ident(start_col)
+    frontier = start.selectExpr(f"{sc} AS node", f"{sc} AS _cur")
+    for rel in rels:
+        hop = df.where(f"rel = {quote_literal(str(rel))}").selectExpr(
             "origin AS _cur", "target AS _nxt", "t_iri AS _ti",
             "attrs AS _at", "link_ix AS _ix")
         if broadcast_hops:

@@ -48,18 +48,17 @@ def stream_graph_query(spark: SparkSession, input_dir: str,
                        output_dir: str, checkpoint_dir: str,
                        available_now: bool = True,
                        dictionary: DataFrame | None = None,
-                       detect: str = "lexicon",
-                       detect_opts: dict | None = None):
+                       detect: str = "lexicon"):
     """Start the stream: per micro-batch, run the batch KG construction
     and append triples to ``output_dir``.  Returns the StreamingQuery.
 
-    ``dictionary`` / ``detect`` / ``detect_opts`` pass through to
-    ``build_graph`` unchanged, so streaming ingest supports the same
-    large-gazetteer path as batch: ``detect='dictionary'`` routes each
-    micro-batch's mention detection through the token-n-gram join
-    against ``dictionary`` (a stream-static join — the static side is
-    built once on the driver and broadcast per batch under the same
-    size guard as batch)."""
+    ``dictionary`` / ``detect`` pass through to ``build_graph``
+    unchanged, so streaming ingest supports the same large-gazetteer
+    path as batch: ``detect='dictionary'`` routes each micro-batch's
+    mention detection through the token-n-gram join against
+    ``dictionary`` (a stream-static join — the static side is built
+    once on the driver and broadcast per batch under the same size
+    guard as batch)."""
     from versa_spark.kg.graph import build_graph
     from versa_spark.kg.transcripts import ordered_turns
 
@@ -77,7 +76,7 @@ def stream_graph_query(spark: SparkSession, input_dir: str,
         turns = ordered_turns(batch_df)
         spark_b = batch_df.sparkSession
         parts = build_graph(spark_b, turns, dictionary=dictionary,
-                            detect=detect, detect_opts=detect_opts)
+                            detect=detect)
         # IDEMPOTENT sink: foreachBatch gives at-least-once epochs — a
         # crash between the parquet commit and the streaming checkpoint
         # re-runs the SAME epoch_id on restart.  Writing each epoch as
@@ -110,7 +109,7 @@ def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
                   checkpoint_dir: str, available_now: bool = True,
                   on_existing: str = "error", n_buckets: int = 32,
                   dictionary: DataFrame | None = None,
-                  detect: str = "lexicon", detect_opts: dict | None = None,
+                  detect: str = "lexicon",
                   relations: tuple[str, ...] | None = None,
                   max_files_per_trigger: int = 16):
     """Streaming incremental KG construction: each micro-batch of
@@ -145,7 +144,7 @@ def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
         batch_df = batch_df.dropDuplicates(["conv_id", "turn_idx"])
         job = KGJob(batch_df.sparkSession, workdir, n_buckets=n_buckets,
                     dictionary=dictionary, detect=detect,
-                    detect_opts=detect_opts, relations=relations)
+                    relations=relations)
         fp = f"epoch-{epoch_id}"
         if job.base_complete():
             # replay hole: a crash AFTER the bootstrap run() committed

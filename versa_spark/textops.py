@@ -571,12 +571,15 @@ def bpe_token_counts(df: DataFrame, merges: list[tuple[str, str]],
     return df.withColumn(out_col, _count(F.col(text_col)))
 
 
+# remove_repeated_spans broadcasts its hot-gram table at or below this
+# many rows (counted); above it AQE plans the join
+_HOT_GRAM_BROADCAST_ROWS = 2_000_000
+
+
 def remove_repeated_spans(df: DataFrame, n: int = 5, min_docs: int = 2,
                           mode: str = "trim", id_col: str = "doc_id",
                           text_col: str = "text",
-                          hot_grams: DataFrame | None = None,
-                          broadcast: bool | str = "auto",
-                          broadcast_max_rows: int = 2_000_000) -> DataFrame:
+                          hot_grams: DataFrame | None = None) -> DataFrame:
     """Exact-substring dedup, REMOVAL half (Lee et al. 2022,
     arXiv:2107.06499 §4 "ExactSubstr"): every word-``n``-gram window
     occurring in >= ``min_docs`` distinct documents is boilerplate;
@@ -606,9 +609,10 @@ def remove_repeated_spans(df: DataFrame, n: int = 5, min_docs: int = 2,
        ``hot_grams`` frame to skip this (e.g. a boilerplate table
        shared across ingestion batches).
     2. **Removal** — re-derive grams WITH positions (posexplode), join
-       to the hot-gram table (counted ``broadcast_max_rows`` guard —
-       boilerplate vocabularies are small by construction; above the
-       cap it degrades to an AQE shuffle join on gram), collect covered
+       to the hot-gram table (broadcast when its count is at or below
+       ``_HOT_GRAM_BROADCAST_ROWS`` — boilerplate vocabularies are small
+       by construction; above the cap AQE plans a shuffle join on
+       gram), collect covered
        start positions per document (only documents containing
        boilerplate appear — the starts side is corpus-fraction-sized),
        LEFT-join back and rebuild the text with pure JVM array
@@ -632,9 +636,7 @@ def remove_repeated_spans(df: DataFrame, n: int = 5, min_docs: int = 2,
     # run it from scratch (the hot-gram table itself is small — that is
     # what makes it broadcastable)
     hot = hot_grams.select("gram").localCheckpoint(eager=True)
-    if broadcast == "auto":
-        broadcast = hot.count() <= broadcast_max_rows
-    if broadcast:
+    if hot.count() <= _HOT_GRAM_BROADCAST_ROWS:
         hot = F.broadcast(hot)
 
     norm = normalized_text(text_col)
