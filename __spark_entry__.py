@@ -202,7 +202,7 @@ def _q_kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from versa_spark.kg.transcripts import transcripts_from_documents
     tx = transcripts_from_documents(spark, sf_dir)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(4))
-    job = KGJob(spark, tempfile.mkdtemp(prefix="vskg_incr_"), n_buckets=8)
+    job = KGJob(spark, tempfile.mkdtemp(prefix="vskg_incr_"))
     job.run(tx.filter(h != 0), input_fingerprint="base")
     job.append_batch(tx.filter(h == 0), "b001", input_fingerprint="b001")
     # Round 7: .distinct() removed (same argument as kg_graph_triples,

@@ -392,7 +392,7 @@ def test_unsupervised_kg_pipeline_composition(tmp_path, spark):
     dict_out = str(tmp_path / "induced_dict")
     assert cli.main(["aliases", src, dict_out, "--cpus", "4"]) == 0
 
-    job = KGJob(spark, str(tmp_path / "wd"), n_buckets=2,
+    job = KGJob(spark, str(tmp_path / "wd"),
                 dictionary=spark.read.parquet(dict_out)
                 .select("surface", "canonical", "entity_iri"),
                 detect="dictionary")

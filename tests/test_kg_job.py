@@ -509,20 +509,62 @@ def test_salted_canonicalization_plan_shape(spark):
     assert salted_keys and final_keys, key_lines
 
 
-def test_write_distribution_bounds_file_count(spark, tmp_path):
-    """Iceberg-style hash write distribution: slim stages emit at most
-    one parquet file per bucket (vs mappers x buckets without it); the
-    text-carrying turns stage stays mapper-aligned (no text exchange)."""
-    import glob
-    tx = synthetic_transcripts(spark, n_convs=40, turns_per_conv=10)
+def test_stage_epochs_hold_one_file_per_write_task(spark, tmp_path,
+                                                    monkeypatch):
+    """Layout v3: a stage epoch is plain part files, no ``pt=`` bucket
+    directories, and each stage epoch of a 45-conversation append holds
+    at most one part file per task of its write (the last job in the
+    write's job group, read from the status tracker).  So the append
+    writes at most stages × max(cores, shuffle partitions) files; the
+    bucketed layout wrote up to tasks × buckets per stage."""
+    import os as _os
+    from pyspark.sql import DataFrameWriter
+    tx = synthetic_transcripts(spark, n_convs=90, turns_per_conv=10)
+    conv_no = F.substring_index("conv_id", "-", -1).cast("int")
     wd = str(tmp_path / "kgd")
-    job = KGJob(spark, wd, n_buckets=8)
-    out = job.run(tx, input_fingerprint="v1")
-    n_mention_files = len(glob.glob(f"{wd}/mentions/ep=0/pt=*/*.parquet"))
-    n_order_files = len(glob.glob(f"{wd}/turn_order/ep=0/pt=*/*.parquet"))
-    assert 0 < n_mention_files <= 8, n_mention_files
-    assert 0 < n_order_files <= 8, n_order_files
-    assert out["graph"].count() > 1000
+    job = KGJob(spark, wd)
+    job.run(tx.filter(conv_no < 45), input_fingerprint="base")
+
+    sc = spark.sparkContext
+    parquet = DataFrameWriter.parquet
+    groups = {}
+
+    def grouped(self, path, *a, **kw):
+        groups[path] = f"v3-write-{len(groups)}"
+        sc.setJobGroup(groups[path], groups[path])
+        try:
+            parquet(self, path, *a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", grouped)
+        job.append_batch(tx.filter(conv_no >= 45), "b1",
+                         input_fingerprint="b1")
+
+    tracker = sc.statusTracker()
+    stages = job._required_stages()
+    assert sorted(_os.path.dirname(p) for p in groups) == sorted(
+        _os.path.join(wd, st) for st in stages)
+    total = 0
+    for path, group in groups.items():
+        assert _os.path.basename(path) == "ep=1", path
+        names = _os.listdir(path)
+        assert not [n for n in names
+                    if _os.path.isdir(_os.path.join(path, n))], (path, names)
+        n_files = sum(n.endswith(".parquet") for n in names)
+        write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+        n_tasks = tracker.getStageInfo(max(write_job.stageIds)).numTasks
+        assert n_files <= n_tasks, (path, n_files, n_tasks)
+        total += n_files
+    for st in stages:
+        assert not [d for d, _, _ in _os.walk(_os.path.join(wd, st))
+                    if _os.path.basename(d).startswith("pt=")], st
+    cap = max(sc.defaultParallelism,
+              int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert 0 < total <= len(stages) * cap, (total, cap)
+    assert job.metrics["graph@b1"]["rows"] > 1000
 
 
 def test_link_entities_scored_partitioning_invariant(spark):
@@ -576,12 +618,12 @@ def test_append_batch_equals_full_build(spark, tmp_path):
     anti-joins against the committed entity set)."""
     tx = synthetic_transcripts(spark, n_convs=60, turns_per_conv=6)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(4))
-    job = KGJob(spark, str(tmp_path / "incr"), n_buckets=4)
+    job = KGJob(spark, str(tmp_path / "incr"))
     job.run(tx.filter(h >= 2), input_fingerprint="base")
     job.append_batch(tx.filter(h == 0), "b001", input_fingerprint="b1")
     job.append_batch(tx.filter(h == 1), "b002", input_fingerprint="b2")
 
-    full = KGJob(spark, str(tmp_path / "full"), n_buckets=4).run(
+    full = KGJob(spark, str(tmp_path / "full")).run(
         tx, input_fingerprint="full")
 
     # graph: set equality AND no duplicate rows from re-emitted
@@ -611,7 +653,7 @@ def test_append_batch_retry_is_idempotent(spark, tmp_path):
     tx = synthetic_transcripts(spark, n_convs=30, turns_per_conv=5)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
     wd = str(tmp_path / "retry")
-    job = KGJob(spark, wd, n_buckets=2)
+    job = KGJob(spark, wd)
     job.run(tx.filter(h != 0), input_fingerprint="base")
     out = job.append_batch(tx.filter(h == 0), "b1", input_fingerprint="v1")
     n_graph = out["graph"].count()
@@ -624,7 +666,7 @@ def test_append_batch_retry_is_idempotent(spark, tmp_path):
     with open(mpath, "w") as f:
         f.writelines(kept)
 
-    job2 = KGJob(spark, wd, n_buckets=2)
+    job2 = KGJob(spark, wd)
     out2 = job2.append_batch(tx.filter(h == 0), "b1",
                              input_fingerprint="v1")
     assert job2.metrics["turns@b1"].get("resumed")       # early stages skip
@@ -639,7 +681,7 @@ def test_append_batch_overlap_modes(spark, tmp_path):
     zero rows); a retry of the SAME batch_id never self-collides."""
     tx = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
-    job = KGJob(spark, str(tmp_path / "ov"), n_buckets=2)
+    job = KGJob(spark, str(tmp_path / "ov"))
     job.run(tx.filter(h != 0), input_fingerprint="base")
     batch = tx.filter(h == 0)
     job.append_batch(batch, "b1", input_fingerprint="v1")
@@ -663,7 +705,7 @@ def test_append_batch_guards(spark, tmp_path):
     tx = synthetic_transcripts(spark, n_convs=12, turns_per_conv=4)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
     wd = str(tmp_path / "guards")
-    job = KGJob(spark, wd, n_buckets=2)
+    job = KGJob(spark, wd)
     with pytest.raises(ValueError, match="completed base"):
         job.append_batch(tx, "b1")
     job.run(tx.filter(h != 0), input_fingerprint="base")
@@ -676,7 +718,7 @@ def test_append_batch_guards(spark, tmp_path):
             if _json.loads(ln)["stage"] != "entity_stats@b1"]
     with open(mpath, "w") as f:
         f.writelines(kept)
-    job2 = KGJob(spark, wd, n_buckets=2)
+    job2 = KGJob(spark, wd)
     with pytest.raises(ValueError, match="incomplete"):
         job2.append_batch(tx.filter(h == 1), "b2", input_fingerprint="v1",
                           on_existing="trust")
@@ -688,7 +730,7 @@ def test_compact_to_preserves_tables_and_supports_appends(spark, tmp_path):
     keep working on the compacted job and stay exact."""
     tx = synthetic_transcripts(spark, n_convs=45, turns_per_conv=5)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
-    job = KGJob(spark, str(tmp_path / "src"), n_buckets=4)
+    job = KGJob(spark, str(tmp_path / "src"))
     job.run(tx.filter(h == 0), input_fingerprint="base")
     job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
 
@@ -710,7 +752,7 @@ def test_compact_to_preserves_tables_and_supports_appends(spark, tmp_path):
     # appending the remaining third onto the COMPACTED job must equal
     # a full rebuild over everything
     cj.append_batch(tx.filter(h == 2), "b2", input_fingerprint="b2")
-    full = KGJob(spark, str(tmp_path / "full"), n_buckets=4).run(
+    full = KGJob(spark, str(tmp_path / "full")).run(
         tx, input_fingerprint="full")
     assert _triples(cj.table("graph")) == _triples(full["graph"])
     assert cj.table("graph").count() == full["graph"].count()
@@ -827,11 +869,11 @@ def test_relations_in_graph_and_job_append(spark, tmp_path):
     assert g["edges"].filter(F.col("rel").contains("v/rel/")).count() == 2
 
     h = F.pmod(F.xxhash64("conv_id"), F.lit(2))
-    job = KGJob(spark, str(tmp_path / "incr"), n_buckets=2,
+    job = KGJob(spark, str(tmp_path / "incr"),
                 relations=("reads", "uses"))
     job.run(tx.filter(h == 0), input_fingerprint="base")
     job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
-    full = KGJob(spark, str(tmp_path / "full"), n_buckets=2,
+    full = KGJob(spark, str(tmp_path / "full"),
                  relations=("reads", "uses")).run(tx, input_fingerprint="f")
     assert _triples(job.table("graph")) == _triples(full["graph"])
     assert job.table("graph").count() == full["graph"].count()
@@ -840,7 +882,7 @@ def test_relations_in_graph_and_job_append(spark, tmp_path):
     assert job._read_committed("relations@b1").count() == 0
     # changing the connector set changes the effective fingerprint →
     # a "resume" recomputes instead of serving stale stages
-    job2 = KGJob(spark, str(tmp_path / "incr"), n_buckets=2,
+    job2 = KGJob(spark, str(tmp_path / "incr"),
                  relations=("reads",))
     job2.run(tx.filter(h == 0), input_fingerprint="base")
     assert not any(m.get("resumed") for m in job2.metrics.values())
@@ -853,14 +895,14 @@ def test_table_until_snapshot_reads(spark, tmp_path):
     same conversations."""
     tx = synthetic_transcripts(spark, n_convs=30, turns_per_conv=5)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
-    job = KGJob(spark, str(tmp_path / "tt"), n_buckets=2)
+    job = KGJob(spark, str(tmp_path / "tt"))
     job.run(tx.filter(h == 0), input_fingerprint="base")
     job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
     job.append_batch(tx.filter(h == 2), "b2", input_fingerprint="b2")
 
-    base_only = KGJob(spark, str(tmp_path / "w0"), n_buckets=2).run(
+    base_only = KGJob(spark, str(tmp_path / "w0")).run(
         tx.filter(h == 0), input_fingerprint="x")["graph"]
-    upto_b1 = KGJob(spark, str(tmp_path / "w1"), n_buckets=2).run(
+    upto_b1 = KGJob(spark, str(tmp_path / "w1")).run(
         tx.filter(h != 2), input_fingerprint="x")["graph"]
     assert _triples(job.table("graph", until="")) == _triples(base_only)
     assert _triples(job.table("graph", until="b1")) == _triples(upto_b1)
@@ -884,7 +926,7 @@ def test_compact_with_relations_then_append(spark, tmp_path):
         rows, "conv_id string, turn_idx int, role string, text string,"
               " tool string, ts timestamp")
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
-    job = KGJob(spark, str(tmp_path / "src"), n_buckets=2,
+    job = KGJob(spark, str(tmp_path / "src"),
                 relations=("reads", "uses"))
     job.run(tx.filter(h == 0), input_fingerprint="base")
     job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
@@ -893,7 +935,7 @@ def test_compact_with_relations_then_append(spark, tmp_path):
     cj.append_batch(tx.filter(h == 2), "b2", input_fingerprint="b2")
     # the appended batch re-asserts both relations → empty delta stage
     assert cj._read_committed("relations@b2").count() == 0
-    full = KGJob(spark, str(tmp_path / "full"), n_buckets=2,
+    full = KGJob(spark, str(tmp_path / "full"),
                  relations=("reads", "uses")).run(tx, input_fingerprint="f")
     assert _triples(cj.table("graph")) == _triples(full["graph"])
     assert cj.table("graph").count() == full["graph"].count()
@@ -910,19 +952,19 @@ def test_append_and_compact_refuse_config_mismatch(spark, tmp_path):
     tx = synthetic_transcripts(spark, n_convs=12, turns_per_conv=3)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(2))
     wd = str(tmp_path / "cfg")
-    KGJob(spark, wd, n_buckets=2).run(tx.filter(h == 0),
+    KGJob(spark, wd).run(tx.filter(h == 0),
                                       input_fingerprint="base")
-    job_r = KGJob(spark, wd, n_buckets=2, relations=("reads",))
+    job_r = KGJob(spark, wd, relations=("reads",))
     with pytest.raises(ValueError, match="rels"):
         job_r.append_batch(tx.filter(h == 1), "b1", input_fingerprint="x")
     with pytest.raises(ValueError, match="rels"):
         job_r.compact_to(str(tmp_path / "cfg2"))
-    job_d = KGJob(spark, wd, n_buckets=2,
+    job_d = KGJob(spark, wd,
                   dictionary=linking.canonical_dictionary(spark))
     with pytest.raises(ValueError, match="dict"):
         job_d.append_batch(tx.filter(h == 1), "b1", input_fingerprint="x")
 
-    job = KGJob(spark, wd, n_buckets=2)
+    job = KGJob(spark, wd)
     job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
     # amputate one stage of b1 → compact must refuse (incomplete batch)
     mpath = _os.path.join(wd, "_manifest.jsonl")
@@ -931,7 +973,7 @@ def test_append_and_compact_refuse_config_mismatch(spark, tmp_path):
     with open(mpath, "w") as f:
         f.writelines(kept)
     with pytest.raises(ValueError, match="incomplete"):
-        KGJob(spark, wd, n_buckets=2).compact_to(str(tmp_path / "cfg3"))
+        KGJob(spark, wd).compact_to(str(tmp_path / "cfg3"))
 
 
 # -- layout v2: one epoch-partitioned relation per stage ------------------
@@ -941,8 +983,7 @@ def _copy(job, dst):
     depend on where a job was written)."""
     import shutil
     shutil.copytree(job.workdir, dst)
-    return KGJob(job.spark, dst, n_buckets=job.n_buckets,
-                 dictionary=job.dictionary, detect=job.detect,
+    return KGJob(job.spark, dst, dictionary=job.dictionary, detect=job.detect,
                  relations=job.relations)
 
 
@@ -974,7 +1015,7 @@ def test_stage_rows_come_from_the_write(spark, tmp_path, monkeypatch):
     from pyspark.sql.classic.dataframe import DataFrame as CDataFrame
     tx = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
-    job = KGJob(spark, str(tmp_path / "obs"), n_buckets=2)
+    job = KGJob(spark, str(tmp_path / "obs"))
 
     def no_count(self):
         raise AssertionError("stage rows must not re-scan the output")
@@ -1002,7 +1043,7 @@ def test_dictionary_digest_once_per_call(spark, tmp_path, monkeypatch):
     digest feeds both the config check and the stage fingerprint."""
     tx = synthetic_transcripts(spark, n_convs=12, turns_per_conv=3)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(2))
-    job = KGJob(spark, str(tmp_path / "dg"), n_buckets=2,
+    job = KGJob(spark, str(tmp_path / "dg"),
                 dictionary=linking.canonical_dictionary(spark),
                 detect="dictionary")
     calls = []
@@ -1026,7 +1067,7 @@ def test_torn_manifest_row_reruns_its_stage(spark, tmp_path):
     tx = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
     wd = str(tmp_path / "torn")
-    job = KGJob(spark, wd, n_buckets=2)
+    job = KGJob(spark, wd)
     job.run(tx.filter(h != 0), input_fingerprint="base")
     job.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
     want = _tables(_copy(job, str(tmp_path / "want")))
@@ -1039,7 +1080,7 @@ def test_torn_manifest_row_reruns_its_stage(spark, tmp_path):
     with open(mpath, "w") as f:
         f.writelines(lines[:-1] + [lines[-1][:len(lines[-1]) // 2]])
 
-    job2 = KGJob(spark, wd, n_buckets=2)
+    job2 = KGJob(spark, wd)
     assert last not in job2._read_manifest()
     job2.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
     assert job2.metrics["graph@b1"].get("resumed")
@@ -1058,11 +1099,11 @@ def test_interrupted_append_never_reads_its_partial_epoch(spark, tmp_path,
     from pyspark.sql import DataFrameWriter
     tx = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
-    ref = KGJob(spark, str(tmp_path / "ref"), n_buckets=2)
+    ref = KGJob(spark, str(tmp_path / "ref"))
     ref.run(tx.filter(h != 0), input_fingerprint="base")
     ref.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
 
-    job = KGJob(spark, str(tmp_path / "crash"), n_buckets=2)
+    job = KGJob(spark, str(tmp_path / "crash"))
     job.run(tx.filter(h != 0), input_fingerprint="base")
     before = _tables(_copy(job, str(tmp_path / "before")))["graph"]
     parquet = DataFrameWriter.parquet
@@ -1090,61 +1131,102 @@ def test_interrupted_append_never_reads_its_partial_epoch(spark, tmp_path,
     assert _tables(got) == _tables(ref)
 
 
-def test_old_layout_is_refused_and_compact_to_migrates(spark, tmp_path):
-    """A job in the old per-batch directory layout (base ``<stage>/``,
-    ``batches/<id>/<stage>``, manifest rows without ``ep``) is refused by
-    run, append_batch and table before any Spark job; compact_to is its
-    one reader and writes an epoch-0 job with the same tables, which
-    takes appends."""
+def _as_layout_v1(job, dst):
+    """A copy of ``job`` in layout v1: base ``<stage>/``,
+    ``batches/<id>/<stage>``, manifest rows without ``ep``."""
     import json as _json
     import os as _os
     import shutil
-    tx = synthetic_transcripts(spark, n_convs=36, turns_per_conv=4)
-    h = F.pmod(F.xxhash64("conv_id"), F.lit(4))
-    job = KGJob(spark, str(tmp_path / "v2"), n_buckets=2)
-    job.run(tx.filter(h <= 1), input_fingerprint="base")
-    job.append_batch(tx.filter(h == 2), "b1", input_fingerprint="b1")
-    job.append_batch(tx.filter(h == 3), "b2", input_fingerprint="b2")
-    want = _tables(job)
-
-    old = str(tmp_path / "old")
-    shutil.copytree(job.workdir, old)
-    mpath = _os.path.join(old, "_manifest.jsonl")
+    shutil.copytree(job.workdir, dst)
+    mpath = _os.path.join(dst, "_manifest.jsonl")
     with open(mpath) as f:
         rows = [_json.loads(ln) for ln in f]
     bid_of = {r["ep"]: r["stage"].partition("@")[2] for r in rows}
     for stage in job._required_stages():
-        root = _os.path.join(old, stage)
+        root = _os.path.join(dst, stage)
         for ep, bid in bid_of.items():
             if ep:
                 shutil.move(_os.path.join(root, f"ep={ep}"),
-                            _os.path.join(old, "batches", bid, stage))
+                            _os.path.join(dst, "batches", bid, stage))
         for name in _os.listdir(_os.path.join(root, "ep=0")):
             shutil.move(_os.path.join(root, "ep=0", name), root)
         _os.rmdir(_os.path.join(root, "ep=0"))
     with open(mpath, "w") as f:
         f.writelines(_json.dumps({k: v for k, v in r.items() if k != "ep"})
                      + "\n" for r in rows)
+    return dst
 
-    oj = KGJob(spark, old, n_buckets=2)
-    for name, call in (
-            ("run", lambda: oj.run(tx.filter(h <= 1),
-                                   input_fingerprint="base")),
-            ("append", lambda: oj.append_batch(tx.filter(h == 3), "b3")),
-            ("table", lambda: oj.table("graph"))):
-        _no_spark_job(spark, f"old-layout-{name}", call, "compact_to")
 
-    cj = oj.compact_to(str(tmp_path / "mig"))
-    assert cj.batch_ids() == []
-    assert _tables(_copy(cj, str(tmp_path / "mig_copy"))) == want
-    n_graph = cj.table("graph").count()
+def _as_layout_v2(job, dst):
+    """A copy of ``job`` in layout v2: every stage epoch whose rows carry
+    ``conv_id`` rewritten with ``partitionBy("pt")``, ``pt =
+    pmod(xxhash64(conv_id), 2)``, and its manifest rows pinning the
+    schema with ``pt`` appended, as the bucketed writer left them."""
+    import json as _json
+    import os as _os
+    import shutil
+    from pyspark.sql.types import StructType
+    shutil.copytree(job.workdir, dst)
+    mpath = _os.path.join(dst, "_manifest.jsonl")
+    with open(mpath) as f:
+        rows = [_json.loads(ln) for ln in f]
+    for r in rows:
+        schema = StructType.fromJson(_json.loads(r["schema"]))
+        if "conv_id" not in schema.fieldNames():
+            continue
+        ep_dir = _os.path.join(dst, r["stage"].partition("@")[0],
+                               f"ep={r['ep']}")
+        (job.spark.read.schema(schema).parquet(ep_dir)
+         .withColumn("pt", F.pmod(F.xxhash64("conv_id"), F.lit(2)))
+         .write.partitionBy("pt").parquet(ep_dir + ".v2"))
+        shutil.rmtree(ep_dir)
+        _os.rename(ep_dir + ".v2", ep_dir)
+        r["schema"] = schema.add("pt", "long").json()
+    with open(mpath, "w") as f:
+        f.writelines(_json.dumps(r) + "\n" for r in rows)
+    return dst
+
+
+def test_old_layout_is_refused_and_compact_to_migrates(spark, tmp_path):
+    """A job in either old layout — v1 per-batch directories, or v2
+    epochs split into ``pt=`` bucket directories with ``pt`` in the
+    pinned schema — is refused by run, append_batch and table before any
+    Spark job; compact_to is its one reader and writes a v3 epoch-0 job
+    with the same tables and no ``pt=`` directory, which takes appends."""
+    import glob
+    tx = synthetic_transcripts(spark, n_convs=36, turns_per_conv=4)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(4))
+    job = KGJob(spark, str(tmp_path / "v3"))
+    job.run(tx.filter(h <= 1), input_fingerprint="base")
+    job.append_batch(tx.filter(h == 2), "b1", input_fingerprint="b1")
+    job.append_batch(tx.filter(h == 3), "b2", input_fingerprint="b2")
+    want = _tables(job)
     more = synthetic_transcripts(spark, n_convs=40, turns_per_conv=4).filter(
         F.substring_index("conv_id", "-", -1).cast("int") >= 36)
-    cj.append_batch(more, "b3", input_fingerprint="b3")
-    got = _copy(cj, str(tmp_path / "mig_b3"))
-    assert got._read_manifest()["graph@b3"]["ep"] == 1
-    n_b3 = cj.metrics["graph@b3"]["rows"]
-    assert n_b3 > 0 and got.table("graph").count() == n_graph + n_b3
+
+    for layout, make in (("v1", _as_layout_v1), ("v2", _as_layout_v2)):
+        old = make(job, str(tmp_path / layout))
+        assert (layout == "v1") != bool(glob.glob(f"{old}/turns/ep=*/pt=*"))
+        oj = KGJob(spark, old)
+        for name, call in (
+                ("run", lambda: oj.run(tx.filter(h <= 1),
+                                       input_fingerprint="base")),
+                ("append", lambda: oj.append_batch(tx.filter(h == 3),
+                                                   "b3")),
+                ("table", lambda: oj.table("graph"))):
+            _no_spark_job(spark, f"{layout}-layout-{name}", call,
+                          "compact_to")
+
+        cj = oj.compact_to(str(tmp_path / f"{layout}_mig"))
+        assert cj.batch_ids() == []
+        assert not glob.glob(f"{cj.workdir}/*/**/pt=*", recursive=True)
+        assert _tables(_copy(cj, str(tmp_path / f"{layout}_copy"))) == want
+        n_graph = cj.table("graph").count()
+        cj.append_batch(more, "b3", input_fingerprint="b3")
+        got = _copy(cj, str(tmp_path / f"{layout}_b3"))
+        assert got._read_manifest()["graph@b3"]["ep"] == 1
+        n_b3 = cj.metrics["graph@b3"]["rows"]
+        assert n_b3 > 0 and got.table("graph").count() == n_graph + n_b3
 
 
 def test_turn_relations_duckdb_value_oracle(spark, tx, tmp_path):

@@ -132,17 +132,17 @@ def test_config_guard_rejects_rels_prefix(spark, tmp_path):
     from versa_spark.kg.job import KGJob
     from versa_spark.kg.transcripts import transcripts_from_documents
     tx = transcripts_from_documents(spark, "/root/testdata/sf0.001")
-    base = KGJob(spark, str(tmp_path / "kg"), n_buckets=2,
+    base = KGJob(spark, str(tmp_path / "kg"),
                  relations=("is", "has"))
     base.run(tx.filter(F.col("conv_id") != "conv-0"),
              input_fingerprint="base")
-    narrower = KGJob(spark, str(tmp_path / "kg"), n_buckets=2,
+    narrower = KGJob(spark, str(tmp_path / "kg"),
                      relations=("is",))
     with pytest.raises(ValueError, match="does not match"):
         narrower.append_batch(tx.filter(F.col("conv_id") == "conv-0"),
                               "b1", input_fingerprint="b1")
     # same config still appends fine
-    again = KGJob(spark, str(tmp_path / "kg"), n_buckets=2,
+    again = KGJob(spark, str(tmp_path / "kg"),
                   relations=("is", "has"))
     again.append_batch(tx.filter(F.col("conv_id") == "conv-0"),
                        "b1", input_fingerprint="b1")

@@ -65,11 +65,17 @@ def main() -> None:
 
     import duckdb
     from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[32]")
+    # one task slot and one shuffle partition per usable core (as the
+    # tests size theirs), and half the host's memory for the heap
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+    heap_gb = max(1, os.sysconf("SC_PAGE_SIZE")
+                  * os.sysconf("SC_PHYS_PAGES") // 2**31)
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
              .appName("check-oracles")
-             .config("spark.sql.shuffle.partitions", "32")
+             .config("spark.sql.shuffle.partitions", str(cpus))
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "32g")
+             .config("spark.driver.memory", f"{heap_gb}g")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

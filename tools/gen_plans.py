@@ -281,7 +281,7 @@ window sort is absent from the triple-build plan. Regenerate with
     from versa_spark.kg.transcripts import transcripts_from_documents
     tx = transcripts_from_documents(spark, sf)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(4))
-    kj = KGJob(spark, tempfile.mkdtemp(prefix="plans_kg_"), n_buckets=4)
+    kj = KGJob(spark, tempfile.mkdtemp(prefix="plans_kg_"))
     kj.run(tx.filter(h != 0), input_fingerprint="base")
     kj.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
     rel = __import__("versa_spark.kg.extract", fromlist=["x"]) \
@@ -299,17 +299,17 @@ window sort is absent from the triple-build plan. Regenerate with
 
     section("incremental append — combined graph view (table())",
             kj.table("graph"),
-            "Reading the grown graph is a plain UNION of parquet scans "
-            "(base + one directory per committed batch) — zero "
-            "recompute, and `pt` partition pruning survives the union. "
+            "Reading the grown graph is one parquet scan over the "
+            "committed epochs (base + one `ep=<n>` directory per "
+            "committed batch) — zero recompute. "
             "The append itself scanned ONLY the batch inputs: the one "
             "non-conversation-local family (entity type/label links) "
             "anti-joins the batch's distinct entities against the "
             "committed entity_stats AGGREGATE (dictionary-bounded, "
             "broadcastable at any corpus size), so per-batch cost is "
             "O(batch), never O(corpus).  After many appends, "
-            "compact_to bounds this union's fan-in by rewriting into "
-            "a fresh workdir.")
+            "compact_to bounds the scan's file count by rewriting "
+            "into a fresh workdir.")
     out.close()
     print("PLANS.md written")
     spark.stop()

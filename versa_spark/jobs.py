@@ -5,7 +5,7 @@ Production shape (north rule):
     spark-submit --py-files versa_spark.zip -m versa_spark.jobs kg \\
         --input  /path/to/transcripts_parquet_or_iceberg \\
         --workdir /path/to/checkpointed_workdir \\
-        [--synthetic-turns N]  [--buckets 256]  [--salt 32]
+        [--synthetic-turns N]  [--salt 32]
 
 Reads the transcript table (or synthesizes one deterministically for
 capacity tests), runs the checkpointed KG job (versa_spark.kg.job), and
@@ -30,7 +30,6 @@ def kg_main(argv) -> int:
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--fingerprint", default="v1",
                     help="input lineage fingerprint; unchanged = resume")
-    ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--salt", type=int, default=16)
     ap.add_argument("--dictionary", default=None,
                     help="parquet gazetteer (surface, canonical, "
@@ -68,9 +67,9 @@ def kg_main(argv) -> int:
     if args.compact_to:
         dictionary = (spark.read.parquet(args.dictionary)
                       if args.dictionary else None)
-        job = KGJob(spark, args.workdir, n_buckets=args.buckets,
-                    salt=args.salt, dictionary=dictionary,
-                    detect=args.detect, relations=rels)
+        job = KGJob(spark, args.workdir, salt=args.salt,
+                    dictionary=dictionary, detect=args.detect,
+                    relations=rels)
         cj = job.compact_to(args.compact_to,
                             input_fingerprint=args.fingerprint)
         print(json.dumps({"metrics": cj.metrics,
@@ -91,7 +90,7 @@ def kg_main(argv) -> int:
 
     dictionary = (spark.read.parquet(args.dictionary)
                   if args.dictionary else None)
-    job = KGJob(spark, args.workdir, n_buckets=args.buckets, salt=args.salt,
+    job = KGJob(spark, args.workdir, salt=args.salt,
                 dictionary=dictionary, detect=args.detect, relations=rels)
     if args.append_batch:
         out = job.append_batch(tx, args.append_batch,

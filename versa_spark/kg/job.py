@@ -22,16 +22,18 @@ over a NEW batch of conversations into the next epoch (manifest keys
 the committed epochs.  See append_batch's docstring for the disjointness
 contract and the idempotent commit protocol.
 
-Partitioning: stage outputs are written partitioned by ``pt = pmod(
-xxhash64(conv_id), n_buckets)`` so (a) downstream stages get partition
-pruning for per-conversation access, (b) resume granularity is per
-partition (a stage's write is atomic per partition via Parquet committer).
-At 10^12-turn scale the same layout maps to Iceberg partition transforms
-(bucket(conv_id)); this sandbox has no Iceberg runtime, so the lineage
-manifest stands in for Iceberg snapshot metadata: like an Iceberg scan
-over its manifest list, every read is one relation over the epochs the
-manifest commits (rows hold the epoch number, never a path, so a copied
-workdir reads as itself).
+Layout (v3): each stage epoch is plain ``part-*.parquet`` files under
+``<stage>/ep=<n>/``, as many as the write has tasks (input splits, or
+the shuffle partitions AQE coalesced), with no bucket directories: every
+read scans whole committed epochs, so buckets would prune nothing and
+multiply the files by tasks × buckets.  :meth:`KGJob.compact_to`
+bounds the files that many appends accumulate, and it is the one reader
+of the two older layouts (v1 per-batch directories, v2
+``ep=<n>/pt=<k>/`` buckets), which every other entry point refuses.  The
+lineage manifest stands in for Iceberg snapshot metadata: like an
+Iceberg scan over its manifest list, every read is one relation over the
+epochs the manifest commits (rows hold the epoch number, never a path,
+so a copied workdir reads as itself).
 """
 
 from __future__ import annotations
@@ -58,8 +60,7 @@ class KGJob:
     """The checkpointed, resumable, appendable transcript → KG job under
     ``workdir`` (see the module docstring)."""
 
-    def __init__(self, spark: SparkSession, workdir: str,
-                 n_buckets: int = 32, salt: int = 16,
+    def __init__(self, spark: SparkSession, workdir: str, salt: int = 16,
                  dictionary: DataFrame | None = None,
                  detect: str = "lexicon",
                  relations: tuple[str, ...] | None = None):
@@ -70,7 +71,6 @@ class KGJob:
             raise ValueError("detect='dictionary' requires a dictionary")
         self.spark = spark
         self.workdir = workdir
-        self.n_buckets = n_buckets
         self.salt = salt
         # detect='dictionary' fuses detection+linking into one gazetteer
         # join (extract.turn_mentions_bigdict); the linked view is then a
@@ -134,12 +134,27 @@ class KGJob:
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
 
+    @staticmethod
+    def _layout(manifest: dict) -> int:
+        """The workdir layout the base run was written in: 1 (per-batch
+        directories; base rows without ``ep``), 2 (``ep=<n>/pt=<k>/``
+        buckets; the pinned schema carries ``pt``) or 3 (plain epochs).
+        An empty workdir is 3."""
+        base = manifest.get("turns")
+        if base is None:
+            return 3
+        if "ep" not in base:
+            return 1
+        return 2 if "pt" in StructType.fromJson(
+            json.loads(base["schema"])).fieldNames() else 3
+
     def _check_layout(self, manifest: dict) -> None:
-        """Refuse the old per-batch directory layout (base rows without
-        ``ep``) before any Spark job runs."""
-        if "ep" not in manifest.get("turns", {"ep": 0}):
-            raise ValueError(f"{self.workdir!r} is in the old per-batch "
-                             "layout; migrate it with compact_to() first")
+        """Refuse the older layouts before any Spark job runs."""
+        layout = self._layout(manifest)
+        if layout != 3:
+            raise ValueError(f"{self.workdir!r} is in the old layout "
+                             f"v{layout}; migrate it with compact_to() "
+                             "first")
 
     def _committed(self, key: str, until: str | None = None,
                    exclude: str | None = None) -> list[dict]:
@@ -149,7 +164,6 @@ class KGJob:
         batch ``until`` (``''``: the base alone) and without batch
         ``exclude`` (both ignored for ``stage@batch_id``)."""
         manifest = self._read_manifest()
-        self._check_layout(manifest)
         keys = [key]
         if "@" not in key:
             bids = _batch_ids(manifest, key)
@@ -169,7 +183,8 @@ class KGJob:
         """One parquet relation over the epochs of :meth:`_committed`,
         with the manifest-pinned schema so an EMPTY epoch (no part files)
         reads as 0 rows.  ``ep`` appears only when some listed epoch holds
-        files, so it is dropped unconditionally."""
+        files, so it is dropped unconditionally; so is a v2 job's ``pt``
+        (read only by :meth:`compact_to`)."""
         recs = self._committed(key, until, exclude)
         root = self._stage_dir(key.split("@", 1)[0])
         return (self.spark.read
@@ -177,7 +192,7 @@ class KGJob:
                 .option("basePath", root)
                 .parquet(*[os.path.join(root, f"ep={r['ep']}")
                            for r in recs])
-                .drop("ep"))
+                .drop("ep", "pt"))
 
     def _run_stage(self, stage: str, input_fingerprint: str,
                    build, key: str | None = None) -> DataFrame:
@@ -202,23 +217,10 @@ class KGJob:
             return self._read_committed(key, until="")
         t0 = time.time()
         df = build()
-        if "conv_id" in df.columns:
-            df = df.withColumn(
-                "pt", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)))
-            if "text" not in df.columns:
-                # hash write distribution (Iceberg's write.distribution-
-                # mode=hash): one exchange of the slim rows buys B output
-                # files instead of M×B.  The text-carrying turns stage is
-                # exempt so the fat column never rides an exchange; input
-                # bucketed by conv_id already writes one file per bucket.
-                df = df.repartition(self.n_buckets, "pt")
         # rows are observed on the write itself, not re-scanned after it
         obs = Observation()
-        writer = (df.observe(obs, F.count(F.lit(1)).alias("rows"))
-                  .write.mode("overwrite"))
-        if "pt" in df.columns:
-            writer = writer.partitionBy("pt")
-        writer.parquet(path)
+        (df.observe(obs, F.count(F.lit(1)).alias("rows"))
+         .write.mode("overwrite").parquet(path))
         rec = {"stage": key, "status": "ok", "rows": obs.get["rows"],
                "ep": ep, "input_fingerprint": input_fingerprint,
                # pins every read: an empty stage writes no part files
@@ -483,8 +485,9 @@ class KGJob:
         """Rewrite base + all committed batches into a FRESH workdir as
         its base run — the Iceberg rewrite-data-files analogue that
         bounds the small-file count after many appends (each append adds
-        an epoch of small files per stage).  It is also the migration of
-        (and the only reader of) the old per-batch directory layout.
+        an epoch of files per stage).  It is also the migration of (and
+        the only reader of) the older layouts: v1 per-batch directories
+        and v2 ``pt=`` buckets both compact to a v3 job.
 
         Crash-safe by construction: the source workdir is never touched,
         so a crashed compaction is recovered by deleting the partial
@@ -511,31 +514,28 @@ class KGJob:
         # INCONSISTENT base (its turns present, its graph absent) with
         # the retry path gone — refuse until it completes
         self._check_batches_complete(manifest)
-        old_layout = "ep" not in manifest["turns"]
-        target = KGJob(self.spark, new_workdir, n_buckets=self.n_buckets,
-                       salt=self.salt,
+        target = KGJob(self.spark, new_workdir, salt=self.salt,
                        dictionary=self.dictionary, detect=self.detect,
                        relations=self.relations)
         # fold dict/relations into the target's fingerprints (exactly as
         # run() would) so post-compaction appends pass the config check
         fp = target._effective_fp(input_fingerprint, digest)
+        per_batch_dirs = self._layout(manifest) == 1
         for stage_name in self._required_stages():
-            if old_layout:
+            if per_batch_dirs:
                 # base <stage>/ plus batches/<id>/<stage>: Spark refuses
                 # several roots that each hold pt= dirs, hence a union
                 reader = self.spark.read.schema(StructType.fromJson(
                     json.loads(manifest[stage_name]["schema"])))
                 dirs = [stage_name] + [f"batches/{b}/{stage_name}" for b
                                        in _batch_ids(manifest, stage_name)]
-                df = self._rollup(stage_name, reduce(DataFrame.unionByName, [
-                    reader.parquet(os.path.join(self.workdir, d))
-                    for d in dirs]))
+                df = reduce(DataFrame.unionByName, [
+                    reader.parquet(os.path.join(self.workdir, d)).drop("pt")
+                    for d in dirs])
             else:
-                df = self.table(stage_name)
-            # partition columns (pt) are re-derived by _run_stage
-            cols = [c for c in df.columns if c != "pt"]
+                df = self._read_committed(stage_name)
             target._run_stage(stage_name, fp,
-                              lambda d=df.select(*cols): d)
+                              lambda d=self._rollup(stage_name, df): d)
         return target
 
     def batch_ids(self, stage: str = "graph") -> list[str]:
@@ -545,10 +545,9 @@ class KGJob:
     def table(self, name: str, until: str | None = None) -> DataFrame:
         """The combined view of stage ``name``: base run plus every
         committed batch, read as ONE parquet relation over the committed
-        epochs, so consumers keep partition pruning on ``pt``.
-        ``entity_stats`` re-aggregates the per-run aggregates (exact under
-        the disjoint-conversation contract — counts AND distinct-conv
-        counts are additive across disjoint batches).
+        epochs.  ``entity_stats`` re-aggregates the per-run aggregates
+        (exact under the disjoint-conversation contract — counts AND
+        distinct-conv counts are additive across disjoint batches).
 
         ``until``: snapshot read — include batches only up to and
         including this batch_id in append (manifest) order, the
@@ -560,6 +559,7 @@ class KGJob:
         if name == "linked" and self.detect == "dictionary":
             raise ValueError("linked is a view of mentions under "
                              "detect='dictionary'; read table('mentions')")
+        self._check_layout(self._read_manifest())
         return self._rollup(name, self._read_committed(name, until=until))
 
     @staticmethod

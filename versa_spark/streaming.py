@@ -107,7 +107,7 @@ def stream_graph_query(spark: SparkSession, input_dir: str,
 
 def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
                   checkpoint_dir: str, available_now: bool = True,
-                  on_existing: str = "error", n_buckets: int = 32,
+                  on_existing: str = "error",
                   dictionary: DataFrame | None = None,
                   detect: str = "lexicon",
                   relations: tuple[str, ...] | None = None,
@@ -123,8 +123,9 @@ def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
     SAME epoch_id and (file-source + checkpoint) the same rows;
     ``append_batch`` with an unchanged batch_id + fingerprint resumes
     committed stages and overwrites partial ones in the batch's own
-    directory, so a replay never duplicates rows.  The first epoch on
-    an empty workdir bootstraps via ``run()`` (same resume semantics).
+    epoch (the ``ep`` its committed rows record), so a replay never
+    duplicates rows.  The first epoch on an empty workdir bootstraps via
+    ``run()`` (same resume semantics).
 
     Delivery contract: a conversation's turns must arrive WITHIN one
     micro-batch (conversation-atomic bundles — the shape a
@@ -142,9 +143,8 @@ def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
         if batch_df.isEmpty():
             return
         batch_df = batch_df.dropDuplicates(["conv_id", "turn_idx"])
-        job = KGJob(batch_df.sparkSession, workdir, n_buckets=n_buckets,
-                    dictionary=dictionary, detect=detect,
-                    relations=relations)
+        job = KGJob(batch_df.sparkSession, workdir, dictionary=dictionary,
+                    detect=detect, relations=relations)
         fp = f"epoch-{epoch_id}"
         if job.base_complete():
             # replay hole: a crash AFTER the bootstrap run() committed
