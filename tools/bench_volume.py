@@ -74,7 +74,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# one task slot per usable core and half the host's memory for the heap
+# (the sizing tools/check_oracles.py uses)
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+           or len(os.sched_getaffinity(0)))
+HEAP_GB = max(1, os.sysconf("SC_PAGE_SIZE")
+              * os.sysconf("SC_PHYS_PAGES") // 2**31)
 N_DOCS = int(os.environ.get("SPARK_GRAFT_VOLUME_DOCS", "1000000"))
 N_TURNS = int(os.environ.get("SPARK_GRAFT_VOLUME_TURNS", "4000000"))
 
@@ -83,9 +88,9 @@ def build_spark() -> SparkSession:
     return (SparkSession.builder
             .master(f"local[{CPUS}]")
             .appName("versa_spark-bench-volume")
-            .config("spark.sql.shuffle.partitions", str(int(CPUS) * 2))
+            .config("spark.sql.shuffle.partitions", str(CPUS * 2))
             .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", f"{HEAP_GB}g")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.ui.enabled", "false")
             .getOrCreate())
@@ -678,7 +683,8 @@ def lap_kgfanin(spark: SparkSession) -> dict:
 def lap_kgenrich(spark: SparkSession) -> dict:
     """Round-6 enrichment ops at volume.
 
-    * turn_relations over 4M synthetic turns — the claim is 'one more
+    * turn_relations over N_TURNS synthetic turns (4M by default,
+      rounded down to whole 25-turn conversations) — the claim is 'one more
       columnar scan': connector words fitting the synthetic text
       ('and' joins the two vocabulary mentions, 'with' joins the hot
       entity to the filler vocabulary) so the pass produces real
@@ -690,7 +696,8 @@ def lap_kgenrich(spark: SparkSession) -> dict:
     from versa_spark.kg import extract, linking
     from versa_spark.kg.transcripts import synthetic_transcripts
 
-    turns = synthetic_transcripts(spark, n_convs=160_000,
+    n_turns = max(1, N_TURNS // 25) * 25
+    turns = synthetic_transcripts(spark, n_convs=n_turns // 25,
                                   turns_per_conv=25).withColumn(
         "turn_iri", F.concat(F.lit("t/"), "conv_id", F.lit("/"),
                              F.col("turn_idx")))
@@ -718,10 +725,10 @@ def lap_kgenrich(spark: SparkSession) -> dict:
     n_canon = d.select("canonical").distinct().count()
     bad = d.filter(F.col("cluster_size") != 3).count()
     d.unpersist()
-    return {"n_turns": 4_000_000,
+    return {"n_turns": n_turns,
             "relations_sec": round(rel_s, 3),
             "n_relations": n_rel,
-            "turns_per_sec_relations": round(4_000_000 / rel_s, 1),
+            "turns_per_sec_relations": round(n_turns / rel_s, 1),
             "mentions_sec_same_scan": round(ment_s, 3),
             "n_mention_rows": n_ment,
             "alias_mentions": 1_000_000,
@@ -847,7 +854,7 @@ def main() -> None:
         raise SystemExit(f"unknown lap {which!r} "
                          f"(choose from {', '.join(LAPS)}, all)")
     spark = build_spark()
-    out: dict = {"cpus": int(CPUS)}
+    out: dict = {"cpus": CPUS}
     if which in ("dedup", "all"):
         out["dedup"] = lap_dedup(spark)
     if which in ("bigdict", "all"):

@@ -49,15 +49,27 @@ def _shingle_sql(text_col: str, k: int) -> str:
     """SQL text of the shingle expression below — built as ONE string so
     F.expr crosses py4j once instead of ~30 builder round trips (the
     round-7 profile showed expression *construction* dominating the
-    small-corpus minhash laps; see minhash_signatures)."""
+    small-corpus minhash laps; see minhash_signatures).
+
+    The row's word array is bound ONCE, as the lambda variable ``_w``
+    of a one-element ``transform(array(<words>), …)``: a lambda
+    re-evaluates, per element, every non-lambda expression it
+    references (higher-order functions run interpreted and Catalyst
+    does no common-subexpression elimination inside a lambda), so
+    naming the regex/split inside the shingle lambda re-ran it once per
+    shingle — quadratic in document length.  ``flatten`` unwraps the
+    one-element result with the same type and nullability as the bare
+    CASE (``[0]`` would make it nullable and change the stored
+    ``shingles/`` schema)."""
     ws = quote_literal(r"\s+")
     w = (f"split(regexp_replace(lower(trim({quote_ident(text_col)})), "
          f"{ws}, ' '), ' ')")
     return (
-        f"array_distinct(CASE WHEN size({w}) >= {k} THEN "
-        f"transform(sequence(0, greatest(size({w}) - {k}, 0)), "
-        f"_si -> concat_ws(' ', slice({w}, _si + 1, {k}))) "
-        f"ELSE array(concat_ws(' ', {w})) END)")
+        f"flatten(transform(array({w}), _w -> array_distinct("
+        f"CASE WHEN size(_w) >= {k} THEN "
+        f"transform(sequence(0, greatest(size(_w) - {k}, 0)), "
+        f"_si -> concat_ws(' ', slice(_w, _si + 1, {k}))) "
+        f"ELSE array(concat_ws(' ', _w)) END)))")
 
 
 def shingle_array(text_col: str = "text", k: int = 3):
@@ -72,7 +84,15 @@ def shingle_array(text_col: str = "text", k: int = 3):
     py4j round trip instead of ~30; with 64-hash signatures on top this
     was the bench minhash query's dominant cost (guide §4: the
     JVM↔Python boundary includes plan-construction chatter, not just
-    row traffic)."""
+    row traffic).
+
+    Rule for every in-row kernel: a lambda re-evaluates, per element,
+    every non-lambda expression it references, so bind a per-row array
+    (words, mentions) once — as a column of a projection below the
+    lambda, or as a lambda variable as :func:`_shingle_sql` does — and
+    never name the regex/split that builds it inside the lambda.  The
+    word array here is split once per row, so shingling is linear in
+    document length (tests/test_linear_kernels.py checks the plans)."""
     return F.expr(_shingle_sql(text_col, k))
 
 
@@ -199,6 +219,10 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     groupBy shape runs 64 codegen'd min-aggregates, and the exchange it
     "saves" is already map-side-combined to ONE ~0.5 KB row per doc.
     The exchange-free "ideal" loses on CPU; the aggregate form stays.
+    That A/B predates the linear shingle kernel (:func:`_shingle_sql`
+    binds each row's word array once): both sides then re-split the
+    text once per shingle, so its figures are not a measurement of the
+    in-row form over today's kernel.
 
     Round 7 (2nd pass): the num_hashes min-aggregates are assembled as
     ONE SQL string (F.expr over array(min(…), …)) instead of num_hashes

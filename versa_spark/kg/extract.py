@@ -345,9 +345,11 @@ def turn_relations(turns: DataFrame,
     Returns (conv_id, turn_idx, turn_iri, subj_iri, verb, rel_iri,
     obj_iri)."""
     low = F.lower(F.col("text"))
-    ments = F.regexp_extract_all(low, F.lit(_MENTION_PAT_JVM), 1)
-    # Java's split drops capture groups, so the same pattern splits
-    segs = F.split(low, _MENTION_PAT_JVM)
+    # mentions and between-texts are COLUMNS of a projection below the
+    # pair lambda, which reads them per pair instead of re-running the
+    # regex (the binding rule of dedup.shingle_array).  Java's split
+    # drops capture groups, so the same pattern splits
+    ments, segs = F.col("_m"), F.col("_s")
     canon_map = F.create_map(*[F.lit(x) for s in _SURFACES
                                for x in (s, LEXICON[s])])
     # verbs are caller-supplied (CLI --relations): escape each so a
@@ -380,6 +382,10 @@ def turn_relations(turns: DataFrame,
     ).otherwise(
         F.array().cast("array<struct<a:string,b:string,verb:string>>"))
     return (turns
+            .select("conv_id", "turn_idx", "turn_iri",
+                    F.regexp_extract_all(low, F.lit(_MENTION_PAT_JVM), 1)
+                    .alias("_m"),
+                    F.split(low, _MENTION_PAT_JVM).alias("_s"))
             .select("conv_id", "turn_idx", "turn_iri",
                     F.explode(pairs).alias("p"))
             .select("conv_id", "turn_idx", "turn_iri",

@@ -183,6 +183,33 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     return full.select("doc_id", "fp").distinct()
 
 
+def _words(norm):
+    """Word array of normalized text.  trim strips spaces only — a
+    leading tab/newline normalizes to a leading space, so split would
+    emit a phantom '' word that both inflates the >= n threshold and
+    pollutes boundary grams; the filter drops it."""
+    return F.filter(F.split(norm, " "), lambda x: x != "")
+
+
+def _bind_words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id_col, _w): each row's word array as a COLUMN, so the gram
+    lambda of :func:`_word_grams` reads it instead of re-running the
+    regex and split once per gram (the binding rule of
+    dedup.shingle_array)."""
+    return df.select(id_col, _words(normalized_text(text_col)).alias("_w"))
+
+
+def _word_grams(words_col: str, n: int):
+    """Array of the word ``n``-grams of the word-array column
+    ``words_col``, in order (empty below ``n`` words)."""
+    w = F.col(words_col)
+    return F.when(
+        F.size(w) >= n,
+        F.transform(F.sequence(F.lit(0), F.size(w) - n),
+                    lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)))
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def repetition_stats(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021, public):
@@ -205,16 +232,9 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     dup_word = (F.lit(1.0) - F.size(F.array_distinct("_w"))
                 / F.size("_w"))
 
-    def grams(n):
-        return F.when(
-            F.size("_w") >= n,
-            F.transform(F.sequence(F.lit(0), F.size("_w") - n),
-                        lambda i: F.concat_ws(
-                            " ", F.slice("_w", i + 1, n)))
-        ).otherwise(F.array().cast("array<string>"))
-
     def gram_stats(n, out_top, out_dup):
-        g = base.select("doc_id", F.explode(grams(n)).alias("g"))
+        g = base.select("doc_id",
+                        F.explode(_word_grams("_w", n)).alias("g"))
         per = g.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
         return (per.groupBy("doc_id")
                 .agg((F.max("c") / F.sum("c")).alias(out_top),
@@ -433,18 +453,9 @@ def repeated_ngrams(df: DataFrame, n: int = 5, min_docs: int = 2,
     docs arrives at its reducer as one partial row per map partition —
     no hot-key blowup.  Downstream removal joins this (small, filtered)
     table back to the corpus semi-joined on gram."""
-    norm = normalized_text(text_col)
-    # trim strips spaces only — a leading tab/newline normalizes to a
-    # leading space, so split would emit a phantom '' word that both
-    # inflates the >= n threshold and pollutes boundary grams
-    words = F.filter(F.split(norm, " "), lambda x: x != "")
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(words) - n),
-                    lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)))
-    ).otherwise(F.array().cast("array<string>"))
-    g = df.select(F.col(id_col).alias("doc_id"),
-                  F.explode(grams).alias("gram"))
+    g = (_bind_words(df, id_col, text_col)
+         .select(F.col(id_col).alias("doc_id"),
+                 F.explode(_word_grams("_w", n)).alias("gram")))
     return (g.groupBy("gram")
             .agg(F.countDistinct("doc_id").alias("n_docs"),
                  F.count("*").alias("n_occurrences"))
@@ -639,15 +650,9 @@ def remove_repeated_spans(df: DataFrame, n: int = 5, min_docs: int = 2,
     if hot.count() <= _HOT_GRAM_BROADCAST_ROWS:
         hot = F.broadcast(hot)
 
-    norm = normalized_text(text_col)
-    words = F.filter(F.split(norm, " "), lambda x: x != "")
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(words) - n),
-                    lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)))
-    ).otherwise(F.array().cast("array<string>"))
-    pos = (df.select(F.col(id_col).alias("_rid"),
-                     F.posexplode(grams).alias("pos", "gram")))
+    pos = (_bind_words(df, id_col, text_col)
+           .select(F.col(id_col).alias("_rid"),
+                   F.posexplode(_word_grams("_w", n)).alias("pos", "gram")))
     starts = (pos.join(hot, "gram")
               .groupBy("_rid")
               .agg(F.sort_array(F.collect_list("pos")).alias("_starts")))
@@ -670,14 +675,19 @@ def remove_repeated_spans(df: DataFrame, n: int = 5, min_docs: int = 2,
                 .withColumn("n_spans", n_spans)
                 .drop("_starts"))
 
-    sz = F.size(words)
+    touched = F.col("_starts").isNotNull()
+    # the word array is a column (split once per touched row; null for
+    # untouched rows, which pass through), read by element inside the
+    # rebuild lambda — the binding rule of dedup.shingle_array
+    joined = joined.withColumn(
+        "_w", F.when(touched, _words(normalized_text(text_col))))
+    sz = F.size("_w")
     idx = F.when(sz > 0, F.sequence(F.lit(0), sz - 1)) \
            .otherwise(F.array().cast("array<int>"))
     kept_idx = F.filter(
         idx, lambda j: ~F.exists(st, lambda s: (s <= j) & (j < s + n)))
     cleaned = F.concat_ws(
-        " ", F.transform(kept_idx, lambda j: F.element_at(words, j + 1)))
-    touched = F.col("_starts").isNotNull()
+        " ", F.transform(kept_idx, lambda j: F.element_at("_w", j + 1)))
     return (joined
             .withColumn("n_tokens_removed",
                         F.when(touched, sz - F.size(kept_idx))
@@ -686,7 +696,7 @@ def remove_repeated_spans(df: DataFrame, n: int = 5, min_docs: int = 2,
                         F.when(touched, n_spans).otherwise(F.lit(0)))
             .withColumn(text_col,
                         F.when(touched, cleaned).otherwise(F.col(text_col)))
-            .drop("_starts"))
+            .drop("_starts", "_w"))
 
 
 def chunk_documents(df: DataFrame, chunk_tokens: int = 512,
@@ -711,9 +721,17 @@ def chunk_documents(df: DataFrame, chunk_tokens: int = 512,
             f"overlap ({overlap}) must be in [0, chunk_tokens) "
             f"(chunk_tokens={chunk_tokens})")
     stride = chunk_tokens - overlap
-    words = F.split(_ws_strip(F.col(text_col)), r"\s+")
-    n = F.when(F.length(_ws_strip(F.col(text_col))) == 0, F.lit(0)) \
-         .otherwise(F.size(words))
+    # the stripped text, its word array and the token count are columns
+    # of successive projections, so the chunk lambda reads them instead
+    # of re-running the strip regex and split per chunk (the binding
+    # rule of dedup.shingle_array)
+    bound = (df.select(F.col(id_col).alias("doc_id"),
+                       _ws_strip(F.col(text_col)).alias("_t"))
+             .select("doc_id", "_t", F.split("_t", r"\s+").alias("_w"))
+             .select("doc_id", "_w",
+                     F.when(F.length("_t") == 0, F.lit(0))
+                     .otherwise(F.size("_w")).alias("_n")))
+    n = F.col("_n")
     # number of windows: 1 + ceil(max(0, n - chunk) / stride)
     n_chunks = F.when(n <= chunk_tokens, F.lit(1)).otherwise(
         F.lit(1) + F.ceil((n - chunk_tokens) / F.lit(stride))
@@ -722,13 +740,15 @@ def chunk_documents(df: DataFrame, chunk_tokens: int = 512,
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.struct(
             i.cast("int").alias("chunk_ix"),
-            F.concat_ws(" ", F.slice(words, i * stride + 1,
+            F.concat_ws(" ", F.slice("_w", i * stride + 1,
                                      chunk_tokens)).alias("chunk_text"),
             F.least(F.lit(chunk_tokens), n - i * stride)
              .cast("int").alias("n_tokens")))
-    return (df.filter(n > 0)
-            .select(F.col(id_col).alias("doc_id"),
-                    F.explode(chunks).alias("c"))
+    # a blank doc's chunk array is null, so explode emits no row for it
+    # (a Filter on _n would be pushed below the projections, re-running
+    # the strip regex and split there)
+    return (bound
+            .select("doc_id", F.explode(F.when(n > 0, chunks)).alias("c"))
             .select("doc_id", "c.chunk_ix", "c.chunk_text",
                     "c.n_tokens"))
 
