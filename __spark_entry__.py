@@ -161,7 +161,7 @@ def _q_kg_entity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     linked = linking.link_entities(extract.turn_mentions(turns),
                                    linking.canonical_dictionary(spark),
                                    surface_universe=extract.LEXICON)
-    stats = canonicalize.entity_mention_counts(linked, salted=True)
+    stats = canonicalize.entity_mention_counts(linked)
     return stats.select("entity_iri", "canonical",
                         F.col("n_mentions").cast("long").alias("n_mentions"),
                         F.col("n_convs").cast("long").alias("n_convs"))

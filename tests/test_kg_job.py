@@ -292,8 +292,12 @@ def test_salted_equals_unsalted_canonicalization(spark):
     linked = linking.link_entities(
         extract.turn_mentions(turns),
         linking.canonical_dictionary(spark))
-    salted = canonicalize.entity_mention_counts(linked, salted=True)
-    plain = canonicalize.entity_mention_counts(linked, salted=False)
+    salted = canonicalize.entity_mention_counts(linked)
+    # the unsalted reference: one plain groupBy
+    plain = (linked.groupBy("entity_iri", "canonical")
+             .agg(F.count("*").alias("n_mentions"),
+                  F.countDistinct("conv_id").alias("n_convs")))
+    assert salted.dtypes == plain.dtypes
     a = {(r.entity_iri, r.n_mentions, r.n_convs) for r in salted.collect()}
     b = {(r.entity_iri, r.n_mentions, r.n_convs) for r in plain.collect()}
     assert a == b and len(a) > 5
@@ -500,7 +504,7 @@ def test_salted_canonicalization_plan_shape(spark):
     linked = linking.link_entities(
         extract.turn_mentions(ordered_turns(tx, with_rank=False)),
         linking.canonical_dictionary(spark))
-    plan = _fmt_plan(canonicalize.entity_mention_counts(linked, salted=True))
+    plan = _fmt_plan(canonicalize.entity_mention_counts(linked))
     import re
     key_lines = re.findall(r"Keys \[\d+\]: \[([^\]]*)\]", plan)
     salted_keys = [k for k in key_lines if "_salt" in k]
@@ -640,6 +644,104 @@ def test_append_batch_equals_full_build(spark, tmp_path):
     got = {(r.entity_iri, r.canonical): (r.n_mentions, r.n_convs)
            for r in job.table("entity_stats").collect()}
     assert got == want
+    _assert_tables_equal(job, KGJob(spark, str(tmp_path / "full")))
+
+
+def _assert_tables_equal(job, full):
+    """graph, edges, linked and entity_stats of ``job`` equal those of
+    ``full`` as multisets: exceptAll both ways."""
+    for name in ("graph", "edges", "linked", "entity_stats"):
+        a, b = job.table(name), full.table(name)
+        assert a.exceptAll(b).count() == 0, name
+        assert b.exceptAll(a).count() == 0, name
+        assert a.count() > 0, name
+
+
+@pytest.mark.parametrize("detect", ["lexicon", "dictionary"])
+def test_append_equals_full_build_with_a_dictionary(spark, tmp_path,
+                                                     detect):
+    """Base + two appends equal a full rebuild under a custom linking
+    dictionary (detect='lexicon': custom IRIs, 'spark' left to the
+    unlinked fallback) and under detect='dictionary' (the gazetteer
+    join): graph, edges, linked and entity_stats."""
+    d = linking.canonical_dictionary(spark)
+    if detect == "lexicon":
+        d = (d.withColumn("entity_iri", F.concat(F.lit("custom:"),
+                                                 F.col("canonical")))
+             .filter(F.col("surface") != "spark"))
+    tx = synthetic_transcripts(spark, n_convs=36, turns_per_conv=4)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
+    job = KGJob(spark, str(tmp_path / "incr"), dictionary=d, detect=detect)
+    job.run(tx.filter(h == 0), input_fingerprint="base")
+    job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
+    job.append_batch(tx.filter(h == 2), "b2", input_fingerprint="b2")
+    full = KGJob(spark, str(tmp_path / "full"), dictionary=d, detect=detect)
+    full.run(tx, input_fingerprint="full")
+    _assert_tables_equal(job, full)
+    unlinked = job.table("linked").filter(~F.col("linked")).count()
+    assert (unlinked > 0) == (detect == "lexicon")
+
+
+def test_view_metrics_are_shaped_like_stage_metrics(spark, tmp_path):
+    """After run, append_batch and a resumed append, in both detect
+    modes, ``metrics`` has all seven names with rows, ts and wall_s; the
+    ``linked``/``edges`` entries are views of ``mentions``/``graph``:
+    that stage's ts and resumed flag, no wall time, and the rows of the
+    returned view."""
+    tx = synthetic_transcripts(spark, n_convs=16, turns_per_conv=3)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(2))
+    names = ("turns", "turn_order", "mentions", "linked", "graph", "edges",
+             "entity_stats")
+    for detect, d in (("lexicon", None),
+                      ("dictionary", linking.canonical_dictionary(spark))):
+        wd = str(tmp_path / detect)
+        for sfx, resumed, batch in (("", False, None), ("@b1", False, "b1"),
+                                    ("@b1", True, "b1")):
+            job = KGJob(spark, wd, dictionary=d, detect=detect)
+            out = (job.run(tx.filter(h == 0), input_fingerprint="base")
+                   if batch is None else
+                   job.append_batch(tx.filter(h == 1), batch,
+                                    input_fingerprint=batch))
+            for n in names:
+                m = job.metrics[n + sfx]
+                assert {"rows", "ts", "wall_s"} <= m.keys(), (n, sfx, m)
+                assert bool(m.get("resumed")) == resumed, (n, sfx)
+            for view, of in (("linked", "mentions"), ("edges", "graph")):
+                v, st = job.metrics[view + sfx], job.metrics[of + sfx]
+                assert v["status"] == f"view-of-{of}" and v["wall_s"] == 0
+                assert v["ts"] == st["ts"]
+                assert v["rows"] == out[view].count() > 0, (view, sfx)
+
+
+def test_entity_label_is_the_smallest_canonical_name(spark, tmp_path):
+    """A dictionary that gives one IRI two canonical names yields ONE
+    type link and ONE label link for it, labelled min(canonical), in
+    build_graph's dictionary path and in KGJob, both detect modes."""
+    from versa_spark import VLABEL_REL, VTYPE_REL
+    from versa_spark.kg.graph import build_graph
+    tx = spark.createDataFrame(
+        [("conv-0", 0, "user", "join the table", None, None),
+         ("conv-1", 0, "user", "two joins and tables", None, None)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp")
+    names = {"join": "z-join", "joins": "a-join"}
+    d = linking.canonical_dictionary(spark).withColumn(
+        "canonical", F.coalesce(F.element_at(
+            F.create_map(*[F.lit(x) for kv in names.items() for x in kv]),
+            F.col("surface")), F.col("canonical")))
+    iri = extract.ENT + "join"
+    want = sorted([(str(VTYPE_REL), extract.TYPE_CONCEPT),
+                   (str(VLABEL_REL), "a-join")])
+    turns = ordered_turns(tx, with_rank=False)
+    for detect in ("lexicon", "dictionary"):
+        graphs = [
+            build_graph(spark, turns, dictionary=d, detect=detect)["graph"],
+            KGJob(spark, str(tmp_path / detect), dictionary=d,
+                  detect=detect).run(tx)["graph"]]
+        for g in graphs:
+            got = sorted((r.rel, r.target) for r in
+                         g.filter(F.col("origin") == iri).collect())
+            assert got == want, (detect, got)
 
 
 def test_append_batch_retry_is_idempotent(spark, tmp_path):
@@ -1076,14 +1178,14 @@ def test_torn_manifest_row_reruns_its_stage(spark, tmp_path):
     with open(mpath) as f:
         lines = f.readlines()
     last = _json.loads(lines[-1])["stage"]
-    assert last == "entity_stats@b1"
+    assert last == "graph@b1"
     with open(mpath, "w") as f:
         f.writelines(lines[:-1] + [lines[-1][:len(lines[-1]) // 2]])
 
     job2 = KGJob(spark, wd)
     assert last not in job2._read_manifest()
     job2.append_batch(tx.filter(h == 0), "b1", input_fingerprint="b1")
-    assert job2.metrics["graph@b1"].get("resumed")
+    assert job2.metrics["entity_stats@b1"].get("resumed")
     assert not job2.metrics[last].get("resumed")
     cj = _copy(job2, str(tmp_path / "got"))
     assert cj._read_manifest()[last]["ep"] == 1
@@ -1131,6 +1233,43 @@ def test_interrupted_append_never_reads_its_partial_epoch(spark, tmp_path,
     assert _tables(got) == _tables(ref)
 
 
+def _as_layout_v3(job, dst):
+    """A copy of the detect='lexicon' v4 ``job`` in layout v3: the
+    linked mention rows move to a written ``linked`` stage, ``mentions``
+    keeps the pre-link columns, and ``edges`` is written from ``graph``;
+    each gets its manifest rows, as the seven-stage writer left them."""
+    import json as _json
+    import os as _os
+    import shutil
+    shutil.copytree(job.workdir, dst)
+    mpath = _os.path.join(dst, "_manifest.jsonl")
+    with open(mpath) as f:
+        rows = [_json.loads(ln) for ln in f]
+    out = []
+    for r in rows:
+        stage, at, bid = r["stage"].partition("@")
+        ep = f"ep={r['ep']}"
+        if stage == "mentions":
+            shutil.move(_os.path.join(dst, "mentions", ep),
+                        _os.path.join(dst, "linked", ep))
+            out.append({**r, "stage": f"linked{at}{bid}"})
+            linked = job.spark.read.parquet(_os.path.join(dst, "linked", ep))
+            pre = linked.select("conv_id", "turn_idx", "turn_iri", "surface")
+            pre.write.parquet(_os.path.join(dst, "mentions", ep))
+            r = {**r, "schema": pre.schema.json()}
+        if stage == "graph":
+            edges = canonicalize.adjacency_edges(job.spark.read.parquet(
+                _os.path.join(dst, "graph", ep)))
+            edges.write.parquet(_os.path.join(dst, "edges", ep))
+            r = {k: v for k, v in r.items() if k != "edge_rows"}
+            out.append({**r, "stage": f"edges{at}{bid}",
+                        "rows": edges.count(), "schema": edges.schema.json()})
+        out.append(r)
+    with open(mpath, "w") as f:
+        f.writelines(_json.dumps(r) + "\n" for r in out)
+    return dst
+
+
 def _as_layout_v1(job, dst):
     """A copy of ``job`` in layout v1: base ``<stage>/``,
     ``batches/<id>/<stage>``, manifest rows without ``ep``."""
@@ -1142,7 +1281,7 @@ def _as_layout_v1(job, dst):
     with open(mpath) as f:
         rows = [_json.loads(ln) for ln in f]
     bid_of = {r["ep"]: r["stage"].partition("@")[2] for r in rows}
-    for stage in job._required_stages():
+    for stage in {r["stage"].partition("@")[0] for r in rows}:
         root = _os.path.join(dst, stage)
         for ep, bid in bid_of.items():
             if ep:
@@ -1188,25 +1327,35 @@ def _as_layout_v2(job, dst):
 
 
 def test_old_layout_is_refused_and_compact_to_migrates(spark, tmp_path):
-    """A job in either old layout — v1 per-batch directories, or v2
-    epochs split into ``pt=`` bucket directories with ``pt`` in the
-    pinned schema — is refused by run, append_batch and table before any
-    Spark job; compact_to is its one reader and writes a v3 epoch-0 job
-    with the same tables and no ``pt=`` directory, which takes appends."""
+    """A job in any old layout — v1 per-batch directories, v2 epochs
+    split into ``pt=`` bucket directories with ``pt`` in the pinned
+    schema, or v3 with ``linked`` and ``edges`` written as stages — is
+    refused by run, append_batch and table before any Spark job;
+    compact_to is its one reader and writes a v4 epoch-0 job with the
+    same tables and no ``pt=``, ``linked`` or ``edges`` directory, which
+    takes appends and then holds the tables of a v4 job given the same
+    append."""
     import glob
+    import os as _os
     tx = synthetic_transcripts(spark, n_convs=36, turns_per_conv=4)
     h = F.pmod(F.xxhash64("conv_id"), F.lit(4))
-    job = KGJob(spark, str(tmp_path / "v3"))
+    job = KGJob(spark, str(tmp_path / "v4"))
     job.run(tx.filter(h <= 1), input_fingerprint="base")
     job.append_batch(tx.filter(h == 2), "b1", input_fingerprint="b1")
     job.append_batch(tx.filter(h == 3), "b2", input_fingerprint="b2")
     want = _tables(job)
     more = synthetic_transcripts(spark, n_convs=40, turns_per_conv=4).filter(
         F.substring_index("conv_id", "-", -1).cast("int") >= 36)
+    ref = _copy(job, str(tmp_path / "v4_b3"))
+    ref.append_batch(more, "b3", input_fingerprint="b3")
+    want_b3 = _tables(ref)
+    v3 = _as_layout_v3(job, str(tmp_path / "v3"))
 
-    for layout, make in (("v1", _as_layout_v1), ("v2", _as_layout_v2)):
-        old = make(job, str(tmp_path / layout))
-        assert (layout == "v1") != bool(glob.glob(f"{old}/turns/ep=*/pt=*"))
+    for layout, make in (("v3", lambda j, d: v3), ("v1", _as_layout_v1),
+                         ("v2", _as_layout_v2)):
+        old = make(KGJob(spark, v3), str(tmp_path / layout))
+        assert (layout == "v2") == bool(glob.glob(f"{old}/turns/ep=*/pt=*"))
+        assert glob.glob(f"{old}/**/linked", recursive=True)
         oj = KGJob(spark, old)
         for name, call in (
                 ("run", lambda: oj.run(tx.filter(h <= 1),
@@ -1219,14 +1368,18 @@ def test_old_layout_is_refused_and_compact_to_migrates(spark, tmp_path):
 
         cj = oj.compact_to(str(tmp_path / f"{layout}_mig"))
         assert cj.batch_ids() == []
+        assert sorted(_os.listdir(cj.workdir)) == sorted(
+            [*cj._required_stages(), "_manifest.jsonl"])
         assert not glob.glob(f"{cj.workdir}/*/**/pt=*", recursive=True)
         assert _tables(_copy(cj, str(tmp_path / f"{layout}_copy"))) == want
+        assert cj.table("edges").count() == ref.table("edges", "b2").count()
         n_graph = cj.table("graph").count()
         cj.append_batch(more, "b3", input_fingerprint="b3")
         got = _copy(cj, str(tmp_path / f"{layout}_b3"))
         assert got._read_manifest()["graph@b3"]["ep"] == 1
         n_b3 = cj.metrics["graph@b3"]["rows"]
         assert n_b3 > 0 and got.table("graph").count() == n_graph + n_b3
+        assert _tables(got) == want_b3
 
 
 def test_turn_relations_duckdb_value_oracle(spark, tx, tmp_path):

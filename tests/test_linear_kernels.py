@@ -237,3 +237,11 @@ def test_turn_relations_plan_extracts_once(spark):
         "conv_id string, turn_idx int, turn_iri string, text string")
     _assert_bound_once(extract.turn_relations(turns),
                        "regexp_extract_all", "split")
+
+
+def test_winnow_fingerprints_plan_normalizes_once(docs):
+    """One regexp_replace pass over ``text``: the short-text guard sits
+    on the posexplode, not in a Filter that the optimizer pushes below
+    the normalizing projection."""
+    _assert_bound_once(textops.winnow_fingerprints(docs, k=5, window=4),
+                       "regexp_replace")

@@ -70,7 +70,7 @@ window sort is absent from the triple-build plan. Regenerate with
     linked = linking.link_entities(extract.turn_mentions(turns),
                                    linking.canonical_dictionary(spark),
                                    surface_universe=extract.LEXICON)
-    stats = canonicalize.entity_mention_counts(linked, salted=True)
+    stats = canonicalize.entity_mention_counts(linked)
     stats.count()
     section("salted canonicalization", stats,
             "Two HashAggregate pairs (partial/final) around the salted "

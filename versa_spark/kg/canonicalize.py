@@ -13,8 +13,7 @@ For algebraic aggregates (count, sum, min/max, collect_set-union) phase 2
 is exact.  Note Spark's own hash aggregate already does map-side partial
 aggregation for count/sum — explicit salting matters for the non-algebraic
 paths (collect_list of big payloads, exact distinct per key) and for
-pathological key distributions; both forms are provided and the bench
-compares them.
+pathological key distributions.
 """
 
 from __future__ import annotations
@@ -22,19 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def entity_mention_counts(linked_mentions: DataFrame, salt: int = 16,
-                          salted: bool = True) -> DataFrame:
+def entity_mention_counts(linked_mentions: DataFrame,
+                          salt: int = 16) -> DataFrame:
     """(entity_iri, canonical) → n_mentions n_convs, skew-safe.
 
     distinct-conversation counting is the non-algebraic part: phase 1
     collects per-salt distinct conv sets, phase 2 unions them — each
     reducer sees at most `salt` rows per entity instead of every mention.
-    """
-    if not salted:
-        return (linked_mentions
-                .groupBy("entity_iri", "canonical")
-                .agg(F.count("*").alias("n_mentions"),
-                     F.countDistinct("conv_id").alias("n_convs")))
+    Both counts are long."""
     phase1 = (linked_mentions
               .withColumn("_salt",
                           F.pmod(F.xxhash64("conv_id", "turn_idx"),
@@ -48,29 +42,37 @@ def entity_mention_counts(linked_mentions: DataFrame, salt: int = 16,
                  F.size(F.array_distinct(
                      F.flatten(F.collect_list("_convs")))).alias("n_convs"))
             .withColumn("n_mentions", F.col("n_mentions").cast("long"))
-            # F.size yields int; the unsalted path's countDistinct yields
-            # long — cast so the two documented-equivalent forms agree in
-            # schema (unions/appends across them must not type-clash)
+            # F.size yields int: long keeps appended epochs and their
+            # re-aggregation one type
             .withColumn("n_convs", F.col("n_convs").cast("long")))
 
 
-def entity_links(linked_mentions: DataFrame,
+def entity_links(ents: DataFrame,
                  exclude: DataFrame | None = None) -> DataFrame:
-    """Canonical entity resource links: type + label per distinct entity
-    (the labelize stage of the pipeline, main.py:404-433, in bulk).
+    """Canonical entity resource links: one type link and one label link
+    per distinct ``entity_iri`` of ``ents`` — (entity_iri, canonical)
+    rows such as linked mentions or ``entity_stats`` — labelled
+    ``min(canonical)``, so an IRI with two canonical names still gets
+    one label (the labelize stage of the pipeline, main.py:404-433, in
+    bulk).
 
     ``exclude``: optional (entity_iri) frame of entities whose links were
     already emitted — incremental appends (KGJob.append_batch) pass the
-    base graph's entity set so an entity seen in both base and batch
-    doesn't get its type/label links twice in the combined view.  The
-    set is bounded by the linking dictionary, not the corpus, so the
-    anti-join's small side stays small at any data scale."""
-    ents = (linked_mentions.select("entity_iri", "canonical")
-            .dropDuplicates(["entity_iri"]))
+    earlier epochs' ``entity_stats`` so an entity seen in both base and
+    batch doesn't get its type/label links twice in the combined view
+    (it keeps the label of the epoch that first linked it).  The
+    anti-join rides the label's aggregation (``max(_seen)``): one
+    exchange, bounded by the linking dictionary, not the corpus."""
+    e = ents.select("entity_iri", "canonical", F.lit(False).alias("_seen"))
     if exclude is not None:
-        ents = ents.join(exclude.select("entity_iri").distinct(),
-                         "entity_iri", "left_anti")
-    return _entity_type_label_links(ents)
+        e = e.unionByName(exclude.select(
+            "entity_iri", F.lit(None).cast("string").alias("canonical"),
+            F.lit(True).alias("_seen")))
+    return _entity_type_label_links(
+        e.groupBy("entity_iri")
+         .agg(F.min("canonical").alias("canonical"),
+              F.max("_seen").alias("_seen"))
+         .filter(~F.col("_seen")))
 
 
 def _entity_type_label_links(ents: DataFrame) -> DataFrame:

@@ -93,7 +93,11 @@ _SURFACES = sorted(LEXICON)
 # arbitrary dictionaries).
 _CANONICALS = sorted(set(LEXICON.values()))
 _CANON_IX = {c: i for i, c in enumerate(_CANONICALS)}
-_SURFACE_CANON_IX = [_CANON_IX[LEXICON[s]] for s in _SURFACES]
+# surface → canonical index as ONE SQL map literal: a single string
+# costs one py4j round trip, where a create_map of 2·|lexicon| literals
+# cost ~90 (guide §4 construction-chatter note)
+_CANON_MAP_SQL = "map(" + ",".join(
+    f"'{s}',{_CANON_IX[LEXICON[s]]}" for s in _SURFACES) + ")"
 
 
 def canonical_iri_sql(ix: str) -> str:
@@ -145,25 +149,24 @@ def turn_entity_ids(turns: DataFrame) -> DataFrame:
     (streaming.stream_graph_query does, per micro-batch; batch readers
     of the checkpointed job inherit uniqueness from the stage write).
     With duplicate keys this path emits duplicate triples where the
-    generic mention_links path would collapse the mention family.
-
-    Round 7: extraction is the pure-JVM mention_surfaces_col expression —
-    surface→canonical collapses via a literal map and array_distinct, all
-    inside one codegen stage, with NO Python evaluation node anywhere in
-    the triple-build plan (previously one ArrowEvalPython; removing it
-    cut both the median and — more importantly — the lap variance of the
-    bench e2e, the Python-worker spawn being the dominant burst source)."""
-    # whole mids→eids mapping as one SQL string (map literal + transform
-    # + array_distinct): the create_map of 2·|lexicon| literals plus the
-    # lambda used to cost ~90 py4j round trips per call (guide §4
-    # construction-chatter note)
-    canon_map_sql = "map(" + ",".join(
-        f"'{s}',{i}" for s, i in zip(_SURFACES, _SURFACE_CANON_IX)) + ")"
+    generic mention_links path would collapse the mention family."""
     keep = [c for c in turns.columns if c != "text"]
     return turns.selectExpr(
         *keep,
         f"array_distinct(transform({mention_surfaces_sql('text')}, "
-        f"m -> cast(element_at({canon_map_sql}, m) as tinyint))) AS eids")
+        f"m -> cast(element_at({_CANON_MAP_SQL}, m) as tinyint))) AS eids")
+
+
+def lexicon_linked_mentions(turns: DataFrame) -> DataFrame:
+    """:func:`turn_mentions` rows plus (linked, canonical, entity_iri)
+    as ``link_entities`` gives them against ``canonical_dictionary``:
+    every surface is a lexicon key, so the link is the literal map of
+    :func:`turn_entity_ids` — no join, no broadcast job."""
+    ix = f"element_at({_CANON_MAP_SQL}, surface)"
+    return turn_mentions(turns).selectExpr(
+        "conv_id", "turn_idx", "turn_iri", "surface", "true AS linked",
+        f"{canonical_name_sql(ix)} AS canonical",
+        f"{canonical_iri_sql(ix)} AS entity_iri")
 
 
 def turn_entity_iri_sets(turns: DataFrame) -> DataFrame:
@@ -414,9 +417,29 @@ def relation_links(turns: DataFrame,
 
 def conversation_links(turns: DataFrame) -> DataFrame:
     """Structural triples: conversation/turn typing + hasTurn edges with
-    turn metadata attrs. Pure column expressions + explode.
+    turn metadata attrs — :func:`turn_links` plus the conversation type
+    links of the distinct conv ids (the one exchange of the family)."""
+    return turn_links(turns).unionByName(
+        conversation_type_links(turns.select("conv_id").distinct()))
 
-    Round 7 shape: the four per-turn links explode as a constant index
+
+def conversation_type_links(convs: DataFrame) -> DataFrame:
+    """(transcript IRI, rdf:type, Conversation) per row of ``convs``,
+    which holds each conv_id once."""
+    return convs.selectExpr(
+        f"concat('{BASE}transcript/', conv_id) AS origin",
+        f"'{VTYPE_REL}' AS rel",
+        f"'{TYPE_CONV}' AS target",
+        "true AS t_iri")
+
+
+def turn_links(turns: DataFrame) -> DataFrame:
+    """Per-turn structural triples: hasTurn, turn typing, role and turn
+    index, plus usedTool for tool turns.  Pure column expressions +
+    explode; every link is unique by construction (one turn_iri per
+    row), so no dedup shuffle.
+
+    Shape: the four per-turn links explode as a constant index
     sequence and the (origin, rel, target, t_iri) strings are built by a
     Project ABOVE the Generate instead of inside an array-of-structs
     below it (guide §2.3 "project before/after the right boundary",
@@ -437,11 +460,8 @@ def conversation_links(turns: DataFrame) -> DataFrame:
             "turn_iri",
             F.expr(f"concat('{TURN_IRI_PREFIX}', conv_id, '/', turn_idx)"))
 
-    # Per-turn links are unique by construction (one turn_iri per row), so
-    # no global dedup shuffle; only the per-conversation type link needs a
-    # distinct — over conv ids, not the full link table.  All projections
-    # are single selectExpr strings (construction-chatter note, guide §4:
-    # the old builder form cost ~0.2 s/call in py4j round trips).
+    # single selectExpr strings: one py4j round trip per projection
+    # (construction-chatter note, guide §4)
     per_turn = (turns
                 .selectExpr("conv_id", "turn_iri", "role", "turn_idx",
                             "explode(sequence(0, 3)) AS _i")
@@ -456,16 +476,10 @@ def conversation_links(turns: DataFrame) -> DataFrame:
                     f" WHEN _i = 2 THEN role"
                     f" ELSE cast(turn_idx as string) END AS target",
                     "_i <= 1 AS t_iri"))
-    conv_type = (turns.select("conv_id").distinct()
-                 .selectExpr(
-                     f"concat('{BASE}transcript/', conv_id) AS origin",
-                     f"'{VTYPE_REL}' AS rel",
-                     f"'{TYPE_CONV}' AS target",
-                     "true AS t_iri"))
     tool_links = (turns.filter("tool IS NOT NULL")
                   .selectExpr(
                       "turn_iri AS origin",
                       f"'{REL_USEDTOOL}' AS rel",
                       f"concat('{BASE}tool/', tool) AS target",
                       "true AS t_iri"))
-    return per_turn.unionByName(conv_type).unionByName(tool_links)
+    return per_turn.unionByName(tool_links)

@@ -40,8 +40,8 @@ def build_graph(spark: SparkSession, turns: DataFrame,
     ``turns`` may or may not carry ``turn_rank``; no link family consumes
     it, so it is dropped here and Catalyst prunes the rank window out of
     the triple-build plan entirely (the ranked view stays available via
-    ordered_turns / turn_order where rank IS consumed).  Since r07 the
-    returned ``turns`` frame (the persisted slim frame) also omits
+    ordered_turns / turn_order where rank IS consumed).  The returned
+    ``turns`` frame (the persisted slim frame) also omits
     ``turn_iri`` and ``ts``: the IRI is a pure function of
     (conv_id, turn_idx) that consumers re-derive in-plan, and no link
     family reads the timestamp — both were pure cache weight.
@@ -76,9 +76,20 @@ def build_graph(spark: SparkSession, turns: DataFrame,
     if detect == "dictionary" and dictionary is None:
         raise ValueError("detect='dictionary' requires a dictionary")
     if dictionary is not None:
-        parts = _build_graph_dictionary(turns, dictionary, detect)
-        return _with_relations(parts, turns, relations)
-    # r07: the persisted slim frame also drops ``turn_iri`` (a ~50-byte
+        # the graph link families consume only these four columns — keeping
+        # the cached rows narrow is what lets the persist fit at bench scale
+        linked = (linked_mentions(turns, dictionary, detect)
+                  .select("conv_id", "turn_idx", "canonical", "entity_iri")
+                  .persist())
+        turns_slim = turns.drop("text", "turn_rank", "turn_iri",
+                                "ts").persist()
+        graph = (extract.conversation_links(turns_slim)
+                 .unionByName(canonicalize.mention_links(linked))
+                 .unionByName(canonicalize.entity_links(linked)))
+        return _with_relations(
+            {"turns": turns_slim, "linked": linked, "graph": graph,
+             "edges": canonicalize.adjacency_edges(graph)}, turns, relations)
+    # the persisted slim frame also drops ``turn_iri`` (a ~50-byte
     # string that is a pure function of (conv_id, turn_idx) —
     # conversation_links re-derives it above the cache, and
     # mention_links_from_eids always built its own) and ``ts`` (no link
@@ -121,30 +132,19 @@ def _with_relations(parts: dict[str, DataFrame], turns: DataFrame,
             "edges": canonicalize.adjacency_edges(graph)}
 
 
-def _build_graph_dictionary(turns: DataFrame, dictionary: DataFrame,
-                            detect: str) -> dict[str, DataFrame]:
-    """Assembly with an explicit ``dictionary``.  ``linked`` comes from
-    ONE fused detection+linking join (turn_mentions_bigdict) for
-    ``detect='dictionary'``, else from the lexicon regex scan plus
-    link_entities; the rest of the build is shared."""
+def linked_mentions(turns: DataFrame, dictionary: DataFrame | None,
+                    detect: str) -> DataFrame:
+    """Mention rows with (canonical, entity_iri) and, under
+    detect='lexicon', ``linked``: ONE fused detection+linking join for
+    ``detect='dictionary'``; else the lexicon scan, linked through the
+    lexicon's literal map or, given a dictionary, link_entities."""
     if detect == "dictionary":
-        linked = extract.turn_mentions_bigdict(
-            turns.drop("turn_rank", "turn_iri"), dictionary)
-    else:
-        # turn_mentions can only emit lexicon surfaces whatever the
-        # linking dictionary is, so the miss fallback precomputes
-        # driver-side and the plan carries no Python node
-        # (linking.link_entities surface_universe)
-        linked = linking.link_entities(extract.turn_mentions(turns),
-                                       dictionary,
-                                       surface_universe=extract.LEXICON)
-    # the graph link families consume only these four columns — keeping
-    # the cached rows narrow is what lets the persist fit at bench scale
-    linked = linked.select("conv_id", "turn_idx", "canonical",
-                           "entity_iri").persist()
-    turns_slim = turns.drop("text", "turn_rank", "turn_iri", "ts").persist()
-    graph = (extract.conversation_links(turns_slim)
-             .unionByName(canonicalize.mention_links(linked))
-             .unionByName(canonicalize.entity_links(linked)))
-    return {"turns": turns_slim, "linked": linked, "graph": graph,
-            "edges": canonicalize.adjacency_edges(graph)}
+        return extract.turn_mentions_bigdict(turns, dictionary)
+    if dictionary is None:
+        return extract.lexicon_linked_mentions(turns)
+    # turn_mentions can only emit lexicon surfaces whatever the linking
+    # dictionary is, so the miss fallback precomputes driver-side and
+    # the plan carries no Python node (linking.link_entities
+    # surface_universe)
+    return linking.link_entities(extract.turn_mentions(turns), dictionary,
+                                 surface_universe=extract.LEXICON)

@@ -1,19 +1,21 @@
 """The end-to-end transcript → knowledge-graph job, checkpointed & resumable.
 
-Stage graph (north rule):
+Stage graph (north rule): five written stages, in run order.
 
-    transcripts ─┬─ turn_order (slim window rank — text never rides it)
-                 └─ turns (projection) ─┬─ conversation_links ──┐
-                                        └─ turn_mentions ─ link_entities ─┬─ mention_links ──┤──▶ graph table
-                                                                          ├─ entity_links ───┘     + adjacency edges
-                                                                          └─ entity_mention_counts (metrics table)
+    transcripts ─┬─ turns (projection) ─┬─────────────────── turn links ──────────┐
+                 │                      └─ mentions ─┬──────── mention links ───────┤
+                 │             (detected + linked)   └─ entity_stats ─ entity links ┼──▶ graph
+                 └─ turn_order (slim window rank) ─ turn_rank = 0 ─ conv type links ┘
+
+``linked`` (a projection of ``mentions``) and ``edges``
+(``adjacency_edges(graph)``) are views, never written.
 
 Checkpoint/lineage: every stage writes Parquet under
 <workdir>/<stage>/ep=<n>/ (the base run is epoch 0) and appends a manifest
-row (stage, status, rows, ep, input_fingerprint, schema, wall_s, ts).  A
-re-run skips stages whose manifest row is ``ok`` AND whose input
-fingerprint is unchanged — a killed job resumes mid-extraction.  The
-manifest doubles as the counter-metrics channel.
+row (stage, status, rows, ep, input_fingerprint, schema, wall_s, ts;
+graph adds ``edge_rows``).  A re-run skips stages whose manifest row is
+``ok`` AND whose input fingerprint is unchanged — a killed job resumes
+mid-extraction.  The manifest doubles as the counter-metrics channel.
 
 Incremental growth: :meth:`KGJob.append_batch` runs the same stage graph
 over a NEW batch of conversations into the next epoch (manifest keys
@@ -22,18 +24,18 @@ over a NEW batch of conversations into the next epoch (manifest keys
 the committed epochs.  See append_batch's docstring for the disjointness
 contract and the idempotent commit protocol.
 
-Layout (v3): each stage epoch is plain ``part-*.parquet`` files under
+Layout (v4): each stage epoch is plain ``part-*.parquet`` files under
 ``<stage>/ep=<n>/``, as many as the write has tasks (input splits, or
 the shuffle partitions AQE coalesced), with no bucket directories: every
 read scans whole committed epochs, so buckets would prune nothing and
 multiply the files by tasks × buckets.  :meth:`KGJob.compact_to`
 bounds the files that many appends accumulate, and it is the one reader
-of the two older layouts (v1 per-batch directories, v2
-``ep=<n>/pt=<k>/`` buckets), which every other entry point refuses.  The
-lineage manifest stands in for Iceberg snapshot metadata: like an
-Iceberg scan over its manifest list, every read is one relation over the
-epochs the manifest commits (rows hold the epoch number, never a path,
-so a copied workdir reads as itself).
+of the older layouts (v1 per-batch directories, v2 ``ep=<n>/pt=<k>/``
+buckets, v3 written ``linked``/``edges``), which every other entry point
+refuses.  The lineage manifest stands in for Iceberg snapshot metadata:
+like an Iceberg scan over its manifest list, every read is one relation
+over the epochs the manifest commits (rows hold the epoch number, never
+a path, so a copied workdir reads as itself).
 """
 
 from __future__ import annotations
@@ -46,7 +48,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from versa_spark.kg import canonicalize, extract, linking, transcripts as T
+from versa_spark.kg import canonicalize, extract, transcripts as T
+from versa_spark.kg.graph import linked_mentions
 
 MANIFEST = "_manifest.jsonl"
 
@@ -72,12 +75,9 @@ class KGJob:
         self.spark = spark
         self.workdir = workdir
         self.salt = salt
-        # detect='dictionary' fuses detection+linking into one gazetteer
-        # join (extract.turn_mentions_bigdict); the linked view is then a
-        # projection of the mentions checkpoint.  With detect='lexicon' an
-        # explicit dictionary still drives the LINKING stage.  The
-        # dictionary's CONTENT digest is folded into the stage
-        # fingerprint, so a resume after a dictionary change recomputes.
+        # the dictionary detects (detect='dictionary') or only links
+        # (graph.linked_mentions).  Its CONTENT digest is folded into the
+        # stage fingerprint, so a resume after a change recomputes.
         self.dictionary = dictionary
         self.detect = detect
         # opt-in verb-linked relation triples (extract.relation_links):
@@ -138,20 +138,27 @@ class KGJob:
     def _layout(manifest: dict) -> int:
         """The workdir layout the base run was written in: 1 (per-batch
         directories; base rows without ``ep``), 2 (``ep=<n>/pt=<k>/``
-        buckets; the pinned schema carries ``pt``) or 3 (plain epochs).
-        An empty workdir is 3."""
-        base = manifest.get("turns")
+        buckets; the pinned schema carries ``pt``), 3 (``linked`` or
+        ``edges`` rows, or pre-link ``mentions``) or 4.  An empty
+        workdir is 4."""
+        def fields(rec):
+            return StructType.fromJson(json.loads(rec["schema"])).fieldNames()
+        base, mentions = manifest.get("turns"), manifest.get("mentions")
         if base is None:
-            return 3
+            return 4
         if "ep" not in base:
             return 1
-        return 2 if "pt" in StructType.fromJson(
-            json.loads(base["schema"])).fieldNames() else 3
+        if "pt" in fields(base):
+            return 2
+        if ({k.partition("@")[0] for k in manifest} & {"linked", "edges"}
+                or mentions and "entity_iri" not in fields(mentions)):
+            return 3
+        return 4
 
     def _check_layout(self, manifest: dict) -> None:
         """Refuse the older layouts before any Spark job runs."""
         layout = self._layout(manifest)
-        if layout != 3:
+        if layout != 4:
             raise ValueError(f"{self.workdir!r} is in the old layout "
                              f"v{layout}; migrate it with compact_to() "
                              "first")
@@ -217,11 +224,14 @@ class KGJob:
             return self._read_committed(key, until="")
         t0 = time.time()
         df = build()
-        # rows are observed on the write itself, not re-scanned after it
+        # rows (and the edges view's rows) are observed on the write
+        # itself, not re-scanned after it
         obs = Observation()
-        (df.observe(obs, F.count(F.lit(1)).alias("rows"))
-         .write.mode("overwrite").parquet(path))
-        rec = {"stage": key, "status": "ok", "rows": obs.get["rows"],
+        counts = [F.count(F.lit(1)).alias("rows")]
+        if stage == "graph":
+            counts.append(F.count_if(F.col("t_iri")).alias("edge_rows"))
+        df.observe(obs, *counts).write.mode("overwrite").parquet(path)
+        rec = {"stage": key, "status": "ok", **obs.get,
                "ep": ep, "input_fingerprint": input_fingerprint,
                # pins every read: an empty stage writes no part files
                # to infer a schema from
@@ -233,8 +243,7 @@ class KGJob:
 
     # -- the pipeline --------------------------------------------------
 
-    STAGES = ("turns", "turn_order", "mentions", "linked", "graph",
-              "edges", "entity_stats")
+    STAGES = ("turns", "turn_order", "mentions", "entity_stats", "graph")
 
     def _run_pipeline(self, transcripts_df: DataFrame, fp: str,
                       batch_id: str | None = None) -> dict[str, DataFrame]:
@@ -248,7 +257,6 @@ class KGJob:
             key = name if batch_id is None else f"{name}@{batch_id}"
             return self._run_stage(name, fp, build, key=key)
 
-        mkey = "mentions" if batch_id is None else f"mentions@{batch_id}"
         # turns: pure projection (turn IRI), NO window — the rank exchange
         # would shuffle the fat text column; the stable-ordering artifact
         # is its own slim stage instead.
@@ -257,40 +265,12 @@ class KGJob:
             lambda: T.ordered_turns(transcripts_df, with_rank=False))
         turn_order = stage(
             "turn_order", lambda: T.turn_order(transcripts_df))
-        if self.detect == "dictionary":
-            # one fused detect+link join: mentions rows already carry
-            # (canonical, entity_iri), so `linked` is a PROJECTION of the
-            # mentions checkpoint, not a second copy on disk
-            mentions = stage(
-                "mentions", lambda: extract.turn_mentions_bigdict(
-                    turns, self.dictionary))
-            linked = mentions.select(
-                "conv_id", "turn_idx", "turn_iri", "surface",
-                F.lit(True).alias("linked"), "canonical", "entity_iri")
-            self.metrics["linked" if batch_id is None
-                         else f"linked@{batch_id}"] = {
-                "stage": "linked", "status": "view-of-mentions",
-                "rows": self.metrics[mkey].get("rows"),
-                "resumed": self.metrics[mkey].get("resumed", False)}
-        else:
-            mentions = stage(
-                "mentions", lambda: extract.turn_mentions(turns))
-            link_dict = (self.dictionary if self.dictionary is not None
-                         else linking.canonical_dictionary(self.spark))
-            linked = stage(
-                "linked", lambda: linking.link_entities(
-                    mentions, link_dict,
-                    # mentions come from turn_mentions → the lexicon IS
-                    # the surface universe; zero-Python linking stage
-                    surface_universe=extract.LEXICON))
-        # the one non-conversation-local link family: a batch must not
-        # re-emit type/label links for entities already covered — anti-
-        # join against the entity_stats AGGREGATES (bounded by the
-        # dictionary) of every epoch but this batch's own (a retry must
-        # not exclude against its own partial commit)
-        exclude = (self._read_committed("entity_stats", exclude=batch_id)
-                   .select("entity_iri").distinct()
-                   if batch_id is not None else None)
+        mentions = stage("mentions", lambda: linked_mentions(
+            turns, self.dictionary, self.detect))
+        linked = self._linked(mentions)
+        entity_stats = stage(
+            "entity_stats", lambda:
+            canonicalize.entity_mention_counts(linked, salt=self.salt))
         rels = None
         if self.relations:
             def _build_rels():
@@ -303,25 +283,48 @@ class KGJob:
                         ["origin", "rel", "target"], "left_anti")
                 return r
             rels = stage("relations", _build_rels)
+
         def _build_graph():
-            g = (extract.conversation_links(turns)
+            # the one non-conversation-local link family: a batch's
+            # entity_stats rows minus the entities of every epoch but its
+            # own (a retry must not exclude against its own commit)
+            earlier = (self._read_committed("entity_stats", exclude=batch_id)
+                       if batch_id is not None else None)
+            g = (extract.turn_links(turns)
+                 .unionByName(extract.conversation_type_links(
+                     turn_order.filter("turn_rank = 0")))
                  .unionByName(canonicalize.mention_links(linked))
-                 .unionByName(canonicalize.entity_links(linked,
-                                                        exclude=exclude)))
+                 .unionByName(canonicalize.entity_links(entity_stats,
+                                                        exclude=earlier)))
             return g.unionByName(rels) if rels is not None else g
         graph = stage("graph", _build_graph)
-        edges = stage(
-            "edges", lambda: canonicalize.adjacency_edges(graph))
-        entity_stats = stage(
-            "entity_stats", lambda:
-            canonicalize.entity_mention_counts(linked, salt=self.salt))
+        self._view_metrics("" if batch_id is None else f"@{batch_id}")
         out = {"turns": turns, "turn_order": turn_order,
                "mentions": mentions, "linked": linked,
-               "graph": graph, "edges": edges,
+               "graph": graph, "edges": canonicalize.adjacency_edges(graph),
                "entity_stats": entity_stats}
         if rels is not None:
             out["relations"] = rels
         return out
+
+    def _linked(self, mentions: DataFrame) -> DataFrame:
+        """The ``linked`` view of ``mentions`` (detect='dictionary'
+        writes no ``linked`` column: every mention is a hit)."""
+        hit = (F.lit(True).alias("linked") if self.detect == "dictionary"
+               else "linked")
+        return mentions.select("conv_id", "turn_idx", "turn_iri", "surface",
+                               hit, "canonical", "entity_iri")
+
+    def _view_metrics(self, suffix: str) -> None:
+        """``metrics`` entries for the views, shaped like a stage's:
+        their rows, no wall time, the viewed stage's ts and resumed."""
+        for view, of, rows in (("linked", "mentions", "rows"),
+                               ("edges", "graph", "edge_rows")):
+            rec = self.metrics[of + suffix]
+            self.metrics[view + suffix] = {
+                "stage": view + suffix, "status": f"view-of-{of}",
+                "rows": rec[rows], "wall_s": 0, "ts": rec["ts"],
+                "resumed": rec.get("resumed", False)}
 
     def _effective_fp(self, fp: str, digest: str | None) -> str:
         """``fp`` with the config folded in (``digest``: the caller's one
@@ -364,6 +367,9 @@ class KGJob:
         its re-run reuses the recorded ``ep``, overwrites its own partial
         files and re-commits.  Re-appending an already-committed batch_id
         with the same fingerprint resumes (no duplicate rows).
+
+        Returns the batch's own rows per stage and the ``linked`` and
+        ``edges`` views over them.
 
         ``on_existing`` — what to do about conv_ids already in the base:
         ``'error'`` (default) scan the slim base turn_order for overlap
@@ -420,8 +426,7 @@ class KGJob:
         return self._run_pipeline(transcripts_df, fp, batch_id=batch_id)
 
     def _required_stages(self) -> list[str]:
-        out = [s for s in self.STAGES
-               if s != "linked" or self.detect != "dictionary"]
+        out = list(self.STAGES)
         if self.relations:
             out.insert(out.index("graph"), "relations")
         return out
@@ -486,8 +491,9 @@ class KGJob:
         its base run — the Iceberg rewrite-data-files analogue that
         bounds the small-file count after many appends (each append adds
         an epoch of files per stage).  It is also the migration of (and
-        the only reader of) the older layouts: v1 per-batch directories
-        and v2 ``pt=`` buckets both compact to a v3 job.
+        the only reader of) the older layouts: v1 per-batch directories,
+        v2 ``pt=`` buckets and v3 written ``linked``/``edges`` all
+        compact to a v4 job (``linked`` rows become ``mentions``).
 
         Crash-safe by construction: the source workdir is never touched,
         so a crashed compaction is recovered by deleting the partial
@@ -522,18 +528,20 @@ class KGJob:
         fp = target._effective_fp(input_fingerprint, digest)
         per_batch_dirs = self._layout(manifest) == 1
         for stage_name in self._required_stages():
+            src = ("linked" if stage_name == "mentions" and "linked" in
+                   manifest else stage_name)
             if per_batch_dirs:
                 # base <stage>/ plus batches/<id>/<stage>: Spark refuses
                 # several roots that each hold pt= dirs, hence a union
                 reader = self.spark.read.schema(StructType.fromJson(
-                    json.loads(manifest[stage_name]["schema"])))
-                dirs = [stage_name] + [f"batches/{b}/{stage_name}" for b
-                                       in _batch_ids(manifest, stage_name)]
+                    json.loads(manifest[src]["schema"])))
+                dirs = [src] + [f"batches/{b}/{src}" for b
+                                in _batch_ids(manifest, src)]
                 df = reduce(DataFrame.unionByName, [
                     reader.parquet(os.path.join(self.workdir, d)).drop("pt")
                     for d in dirs])
             else:
-                df = self._read_committed(stage_name)
+                df = self._read_committed(src)
             target._run_stage(stage_name, fp,
                               lambda d=self._rollup(stage_name, df): d)
         return target
@@ -548,6 +556,7 @@ class KGJob:
         epochs.  ``entity_stats`` re-aggregates the per-run aggregates
         (exact under the disjoint-conversation contract — counts AND
         distinct-conv counts are additive across disjoint batches).
+        ``linked`` and ``edges`` are views of ``mentions`` and ``graph``.
 
         ``until``: snapshot read — include batches only up to and
         including this batch_id in append (manifest) order, the
@@ -556,10 +565,12 @@ class KGJob:
         reason appends are: committed batch outputs are immutable and
         delta-complete, so a prefix of them IS the graph as it stood
         after that append."""
-        if name == "linked" and self.detect == "dictionary":
-            raise ValueError("linked is a view of mentions under "
-                             "detect='dictionary'; read table('mentions')")
         self._check_layout(self._read_manifest())
+        if name == "linked":
+            return self._linked(self._read_committed("mentions", until))
+        if name == "edges":
+            return canonicalize.adjacency_edges(
+                self._read_committed("graph", until))
         return self._rollup(name, self._read_committed(name, until=until))
 
     @staticmethod

@@ -161,13 +161,15 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     matching the oracle SQL)."""
     from pyspark.sql import Window
     norm = normalized_text(text_col)
+    # a text shorter than k has a null gram array, so posexplode emits
+    # no row for it (a Filter on _norm would be pushed below the
+    # projection, normalizing every row a second time there)
     g = (df.select(F.col(id_col).alias("doc_id"), norm.alias("_norm"))
-         .filter(F.length("_norm") >= k)
          .select("doc_id",
                  (F.length("_norm") - k + 1).alias("_n_grams"),
-                 F.posexplode(F.transform(
+                 F.posexplode(F.when(F.length("_norm") >= k, F.transform(
                      F.sequence(F.lit(0), F.length("_norm") - k),
-                     lambda i: F.col("_norm").substr(i + 1, F.lit(k))))
+                     lambda i: F.col("_norm").substr(i + 1, F.lit(k)))))
                  .alias("pos", "gram")))
     if hash_family == "xxhash64":
         h = F.xxhash64("gram")
