@@ -693,9 +693,11 @@ def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hd_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 1024-dim corpus for the high-dim ANN oracles: the
     64-dim embeddings tiled 16× (cast to double first so both engines
-    do float64 arithmetic on identical values).  1024 dims × 8 planes =
-    8192 > simsearch._LITERAL_BUDGET, so these queries exercise the
-    matmul-pandas-UDF branch the dim-64 ann_topk oracle never reaches."""
+    do float64 arithmetic on identical values).  At 1024 dims a plane or
+    centroid matrix inlined as plan literals would be thousands of
+    nodes; these queries pin that simsearch's matmul projection kernel
+    keeps the plan constant-size and matches the oracle at a real
+    embedding width."""
     return (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
             .orderBy("vec_id").limit(300)
             .select("vec_id",
@@ -706,11 +708,10 @@ def _hd_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_topk_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH top-5 at dim 1024 (simsearch.lsh_topk): bucket
-    signatures AND the candidate re-rank both run through the
-    _LITERAL_BUDGET matmul-UDF branch (random_hyperplane_signatures'
-    pandas UDF; 5 planes × 1024 dims = 5120 > the 4096 literal budget,
-    and 2^5 buckets leave ~10 candidates per query so the re-rank is
-    non-trivial).  sig_round_digits=9 / round_digits=4 make signature
+    signatures run through the matmul projection kernel
+    (random_hyperplane_signatures' pandas UDF, 5 planes × 1024 dims),
+    and 2^5 buckets leave ~10 candidates per query so the exact-cosine
+    re-rank is non-trivial.  sig_round_digits=9 / round_digits=4 make signature
     bits and rank order bit-identical to the DuckDB oracle, which embeds
     the same deterministic hyperplanes(1024, 5, 42) as literals."""
     from versa_spark import simsearch
@@ -725,8 +726,8 @@ def _q_ann_topk_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ivf_probe_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe ranking at dim 1024 (simsearch.probe_cells): 16 cells ×
-    1024 dims = 16384 literals > _LITERAL_BUDGET, so probing runs the
-    matmul-UDF branch (one argsort per Arrow batch).  Centroids are the
+    1024 dims through the matmul projection kernel (one stable argsort
+    per Arrow batch).  Centroids are the
     first 16 corpus vectors (the ivf_topk refine_iters=0 quantizer), so
     the DuckDB oracle derives them from the same parquet — no literal
     matrix in the SQL; round_digits=6 pins probe order across engines."""
@@ -1094,7 +1095,8 @@ def _q_dup_components_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_topk_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (dim 64), hyperplane-LSH top-k (dim
-    1024, matmul-UDF branch), and IVF probe ranking (dim 1024) as one
+    1024, matmul projection kernel), and IVF probe ranking (dim 1024,
+    same kernel) as one
     labeled union (registry consolidation; each arm identical to its
     round-5 standalone query)."""
     bf = _q_ann_topk(spark, sf_dir).select(
@@ -1382,9 +1384,9 @@ def _planes_values() -> str:
 def _planes_values_hd() -> str:
     """The ann_topk_hd hyperplanes (dim 1024, 5 planes, seed 42) as
     DuckDB VALUES rows — same repr() float64 round-trip as
-    _planes_values; ~5×1024 literals, the whole point being that the
-    Spark side must NOT inline them (it routes through the matmul UDF)
-    while the oracle, which has no plan-size constraint, can."""
+    _planes_values; ~5×1024 literals, which the oracle, having no
+    plan-size constraint, can inline while the Spark side ships the
+    matrix in the matmul kernel's closure."""
     from versa_spark.simsearch import hyperplanes
     rows = []
     for i, pl in enumerate(hyperplanes(1024, 5, 42)):

@@ -313,25 +313,45 @@ def test_ivf_topk_finds_self_matches(spark, emb):
         assert abs(bf[key] - r.cosine) < 1e-9
 
 
-def test_high_dim_lsh_and_ivf_use_udf_path(spark):
-    """dim × planes above the literal budget routes through the matmul
-    pandas UDF; results keep the LSH/IVF invariants (self-match found,
-    exact re-rank cosines)."""
+def _synthetic_vectors(spark, dim, n=24):
+    """n deterministic dim-wide vectors as (vec_id, embedding) rows and
+    the same values as an n × dim numpy matrix."""
     import numpy as np
-    dim, n = 600, 24   # 600*8 planes = 4800 > _LITERAL_BUDGET
-    rng = [(i, [float(((i * 31 + j * 17) % 97) - 48) / 48.0
-                for j in range(dim)]) for i in range(n)]
-    emb2 = spark.createDataFrame(rng, "vec_id long, embedding array<double>")
-    queries = emb2.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    approx = simsearch.lsh_topk(emb2, queries, k=3, n_planes=8, dim=dim)
-    arows = {(r.q_id, r.vec_id): r.cosine for r in approx.collect()}
-    for q in (0, 1, 2):
-        assert (q, q) in arows and abs(arows[(q, q)] - 1.0) < 1e-6
-    out = simsearch.ivf_topk(emb2, queries, k=3, n_cells=8, nprobe=2)
-    rows = {(r.q_id, r.vec_id): r for r in out.collect()}
-    for q in (0, 1, 2):
-        assert (q, q) in rows and rows[(q, q)].rank == 1
+    rows = [(i, [float(((i * 31 + j * 17) % 97) - 48) / 48.0
+                 for j in range(dim)]) for i in range(n)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return df, np.array([r[1] for r in rows])
+
+
+def test_high_dim_lsh_and_ivf_use_udf_path(spark):
+    """Bucket signatures and cell assignment equal a plain numpy
+    reference at a small and a large dim (sign bit ``dot >= 0`` on
+    rounded dots; first index on an argmax tie), and the LSH/IVF
+    invariants hold: self-match found at cosine 1 / rank 1."""
+    import numpy as np
+    for dim in (8, 600):
+        emb2, mat = _synthetic_vectors(spark, dim)
+        planes = simsearch.hyperplanes(dim, 8)
+        sigs = {r.vec_id: r.bucket
+                for r in simsearch.random_hyperplane_signatures(
+                    emb2, "embedding", planes, round_digits=9).collect()}
+        bits = np.round(mat @ np.array(planes).T, 9) >= 0
+        assert sigs == {i: int(b @ (1 << np.arange(8)))
+                        for i, b in enumerate(bits)}
+        cells = {r.vec_id: r.cell for r in simsearch.ivf_assign(
+            emb2, mat[:8].tolist(), "embedding").collect()}
+        assert cells == dict(enumerate(np.argmax(mat @ mat[:8].T, axis=1)))
+
+        queries = emb2.limit(3).select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+        approx = simsearch.lsh_topk(emb2, queries, k=3, n_planes=8, dim=dim)
+        arows = {(r.q_id, r.vec_id): r.cosine for r in approx.collect()}
+        for q in (0, 1, 2):
+            assert (q, q) in arows and abs(arows[(q, q)] - 1.0) < 1e-6
+        out = simsearch.ivf_topk(emb2, queries, k=3, n_cells=8, nprobe=2)
+        rows = {(r.q_id, r.vec_id): r for r in out.collect()}
+        for q in (0, 1, 2):
+            assert (q, q) in rows and rows[(q, q)].rank == 1
 
 
 def test_ivf_kmeans_refinement_keeps_invariants(spark, emb):
@@ -486,41 +506,72 @@ def test_repetition_stats(spark):
     assert out[3].top_bigram_frac == 0.0 and out[3].dup_trigram_frac == 0.0
 
 
-def test_ivf_probe_path_constant_plan(spark, monkeypatch):
-    """Round-2 verdict fix: at dim × n_cells above the literal budget the
-    query→cell probe ranking must route through the matmul pandas UDF —
-    one ArrowEvalPython, no per-cell literal arrays in the plan — and the
-    probed cells / final top-k must be identical to the literal path."""
-    dim, n = 600, 24   # 600 * 8 cells = 4800 > _LITERAL_BUDGET
-    rng = [(i, [float(((i * 31 + j * 17) % 97) - 48) / 48.0
-                for j in range(dim)]) for i in range(n)]
-    emb2 = spark.createDataFrame(rng, "vec_id long, embedding array<double>")
-    queries = emb2.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    cents = [list(r.embedding) for r in
-             emb2.orderBy("vec_id").limit(8).collect()]
+def test_ivf_probe_path_constant_plan(spark):
+    """The query→cell probe ranking runs through the matmul pandas UDF
+    at every dim — one ArrowEvalPython, the centroid matrix never in the
+    plan, so the plan is the same size at dim 8 and dim 600 — and the
+    probed cells and the final ivf_topk equal a plain numpy reference
+    (score-desc, cell-asc probes; cosine-desc, vec_id-asc ranks)."""
+    import re
 
-    q = queries.select("q_id", F.col("q_vec").alias("q"))
-    probes = simsearch.probe_cells(q, cents, nprobe=2)
-    plan = probes._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    # no per-cell literal arrays: a literal path would inline 4800 float
-    # literals (~50KB+ of plan text); the UDF plan stays constant-size
-    assert len(plan) < 10_000, f"plan blew up to {len(plan)} chars"
-    udf_cells = {r.q_id: list(r.cells) for r in probes.collect()}
-    udf_topk = {(r.q_id, r.vec_id, r.rank) for r in simsearch.ivf_topk(
-        emb2, queries, k=3, n_cells=8, nprobe=2).collect()}
+    import numpy as np
+    plan_sizes = []
+    for dim in (8, 600):
+        emb2, mat = _synthetic_vectors(spark, dim)
+        queries = emb2.limit(3).select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+        q = queries.select("q_id", F.col("q_vec").alias("q"))
+        probes = simsearch.probe_cells(q, mat[:8].tolist(), nprobe=2)
+        plan = probes._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1
+        plan_sizes.append(len(re.sub(r"\d+", "", plan)))
 
-    # force the literal path and compare
-    monkeypatch.setattr(simsearch, "_LITERAL_BUDGET", 10**9)
-    lit_probes = simsearch.probe_cells(q, cents, nprobe=2)
-    assert "ArrowEvalPython" not in \
-        lit_probes._jdf.queryExecution().executedPlan().toString()
-    lit_cells = {r.q_id: list(r.cells) for r in lit_probes.collect()}
-    assert udf_cells == lit_cells
-    lit_topk = {(r.q_id, r.vec_id, r.rank) for r in simsearch.ivf_topk(
-        emb2, queries, k=3, n_cells=8, nprobe=2).collect()}
-    assert udf_topk == lit_topk
+        scores = mat @ mat[:8].T
+        ref_cells = {i: np.argsort(-scores[i], kind="stable")[:2].tolist()
+                     for i in range(3)}
+        assert {r.q_id: list(r.cells) for r in probes.collect()} == ref_cells
+
+        cell_of = np.argmax(scores, axis=1)
+        unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        ref_topk = set()
+        for i, probed in ref_cells.items():
+            cands = [j for j in range(len(mat)) if cell_of[j] in probed]
+            ranked = sorted(cands, key=lambda j: (-round(
+                float(unit[i] @ unit[j]), 9), j))[:3]
+            ref_topk |= {(i, j, r + 1) for r, j in enumerate(ranked)}
+        topk = {(r.q_id, r.vec_id, r.rank) for r in simsearch.ivf_topk(
+            emb2, queries, k=3, n_cells=8, nprobe=2).collect()}
+        assert topk == ref_topk
+        assert {(q_, v) for q_, v, r in topk if r == 1} == \
+            {(0, 0), (1, 1), (2, 2)}
+    # a literal centroid matrix would add ~600 × 8 float literals
+    assert plan_sizes[0] == plan_sizes[1], plan_sizes
+
+
+def test_null_vector_and_empty_centroids(spark):
+    """A null vector gets a null bucket, cell and cells at every dim, so
+    the bucket and cell joins drop it."""
+    for dim in (8, 600):
+        emb2, mat = _synthetic_vectors(spark, dim, n=6)
+        with_null = emb2.unionByName(spark.createDataFrame(
+            [(99, None)], "vec_id long, embedding array<double>"))
+        cents = mat[:2].tolist()
+        for out, col in (
+                (simsearch.random_hyperplane_signatures(
+                    with_null, "embedding", simsearch.hyperplanes(dim, 8)),
+                 "bucket"),
+                (simsearch.ivf_assign(with_null, cents, "embedding"), "cell"),
+                (simsearch.probe_cells(with_null, cents, 2, "embedding"),
+                 "cells")):
+            assert [r.vec_id for r in out.filter(F.col(col).isNull())
+                    .collect()] == [99]
+
+        queries = with_null.select(F.col("vec_id").alias("q_id"),
+                                   F.col("embedding").alias("q_vec"))
+        for out in (simsearch.lsh_topk(with_null, queries, k=2, dim=dim),
+                    simsearch.ivf_topk(with_null, queries, k=2, n_cells=2)):
+            ids = {(r.q_id, r.vec_id) for r in out.collect()}
+            assert ids and all(99 not in pair for pair in ids)
 
 
 def test_lsh_n_planes_capped_at_63(spark, emb):
@@ -1133,6 +1184,8 @@ def test_ivf_assign_empty_centroids_raises(spark):
     emb = spark.createDataFrame([(1, [0.1, 0.2])], ["vec_id", "v"])
     with pytest.raises(ValueError, match="at least one centroid"):
         simsearch.ivf_assign(emb, [])
+    with pytest.raises(ValueError, match="at least one centroid"):
+        simsearch.probe_cells(emb, [], 2, "v")
 
 
 def test_quality_mean_word_len_ignores_whitespace_padding(spark):
@@ -1575,15 +1628,18 @@ def test_ann_index_roundtrip(tmp_path, spark, emb, no_ckpt):
     top1 = {r.q_id: r.vec_id for r in got.collect() if r.rank == 1}
     assert all(q == v for q, v in top1.items())
 
-    # the scan must prune to the probed partitions (route pinned:
+    # the scan must prune to the probed partitions (pruning pinned:
     # 5 queries x nprobe 2 can legitimately cover >= 80% of 8 cells,
-    # where 'auto' correctly flips to the full-scan path)
-    pr = simsearch.ann_query_index(queries, path, k=3, nprobe=2,
-                                   route="pruned")
+    # where the full-scan threshold correctly flips to one plain scan)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(simsearch, "_FULL_SCAN_FRACTION", 2.0)
+        pr = simsearch.ann_query_index(queries, path, k=3, nprobe=2)
     plan = pr._jdf.queryExecution().executedPlan().toString()
     import re as _re
     m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cell" in m.group(1), plan
+    assert sorted(map(tuple, pr.collect())) == \
+        sorted(map(tuple, got.collect()))
 
     # append more vectors under the stored quantizer; they become
     # findable without re-writing the index
@@ -1605,13 +1661,13 @@ def test_ann_index_roundtrip(tmp_path, spark, emb, no_ckpt):
 
 
 def test_ann_index_auto_route_by_probed_fraction(tmp_path, spark, emb,
-                                                 no_ckpt):
-    """'auto' routing: a small batch probes a small cell fraction and
-    takes the partition-pruned scan; a full-coverage batch (nprobe ==
-    n_cells) takes one plain full scan (pruning a scan that reads
-    every partition only adds multi-file overhead — the round-5 ABBA
-    laps measured ~2x).  Both routes return identical results: the
-    probes join restricts rows either way."""
+                                                 no_ckpt, monkeypatch):
+    """Scan routing by probed fraction: a small batch probes a small
+    cell fraction and takes the partition-pruned scan; a full-coverage
+    batch (nprobe == n_cells) takes one plain full scan (pruning a scan
+    that reads every partition only adds multi-file overhead — the
+    round-5 ABBA laps measured ~2x).  Both routes return identical
+    results: the probes join restricts rows either way."""
     import re as _re
     corpus = emb.limit(120)
     path = str(tmp_path / "ann_ix_route")
@@ -1630,27 +1686,29 @@ def test_ann_index_auto_route_by_probed_fraction(tmp_path, spark, emb,
     q1 = (corpus.limit(1)
           .select(F.col("vec_id").alias("q_id"),
                   F.col("embedding").alias("q_vec")))
-    # 1 query x nprobe 1 = 1/8 cells probed -> auto prunes with a
-    # static literal cell partition filter
+    # 1 query x nprobe 1 = 1/8 cells probed -> pruned with a static
+    # literal cell partition filter
     assert static_pruned(
         simsearch.ann_query_index(q1, path, k=3, nprobe=1))
 
     qa = (corpus.limit(5)
           .select(F.col("vec_id").alias("q_id"),
                   F.col("embedding").alias("q_vec")))
-    # nprobe == n_cells -> every cell probed -> auto drops the static
-    # literal filter (Catalyst may still attach a dynamicpruning#
+    # nprobe == n_cells -> every cell probed -> no static literal
+    # filter (Catalyst may still attach a dynamicpruning#
     # filter from the probes broadcast — harmless at full coverage)
     full_auto = simsearch.ann_query_index(qa, path, k=3, nprobe=8)
     assert not static_pruned(full_auto)
-    # forced routes agree with auto on values
-    forced_pruned = simsearch.ann_query_index(qa, path, k=3, nprobe=8,
-                                              route="pruned")
+    # a threshold above any fraction forces pruning: same values
+    monkeypatch.setattr(simsearch, "_FULL_SCAN_FRACTION", 2.0)
+    forced_pruned = simsearch.ann_query_index(qa, path, k=3, nprobe=8)
     assert static_pruned(forced_pruned)
     assert sorted(map(tuple, full_auto.collect())) == \
         sorted(map(tuple, forced_pruned.collect()))
-    with pytest.raises(ValueError, match="route must be"):
-        simsearch.ann_query_index(q1, path, route="bogus")
+    # and a zero threshold forces the full scan even for one cell
+    monkeypatch.setattr(simsearch, "_FULL_SCAN_FRACTION", 0.0)
+    assert not static_pruned(
+        simsearch.ann_query_index(q1, path, k=3, nprobe=1))
 
 
 def test_sample_to_token_budget_monotone(spark):

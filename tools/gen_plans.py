@@ -186,10 +186,16 @@ window sort is absent from the triple-build plan. Regenerate with
     dd = dedup.dedup_embeddings(emb.limit(200), threshold=0.99, dim=64)
     dd.count()
     section("embedding near-dup removal (LSH-bucketed)", dd,
-            "Discovery joins only within hyperplane buckets (equi-join "
-            "on the 64-bit bucket id — never a crossJoin); in-bucket "
-            "cosine verify, pointer-doubling components (LogicalRDD "
-            "after checkpoint), anti-join keeps representatives.")
+            "Discovery groups only within hyperplane buckets (one "
+            "groupBy over the 64-bit bucket ids of all tables — never a "
+            "crossJoin); in-bucket cosine verify, pointer-doubling "
+            "components (LogicalRDD after checkpoint), anti-join keeps "
+            "representatives.  Each table's bucket signatures are one "
+            "ArrowEvalPython (simsearch's matmul projection kernel: the "
+            "plane matrix rides the UDF closure, not the plan); they "
+            "sit upstream of "
+            "the components checkpoint, so they show in the "
+            "checkpointed plans, not in this final one.")
 
     from versa_spark import events as ev
     es = ev.session_stats(spark.read.parquet(f"{sf}/events.parquet"))

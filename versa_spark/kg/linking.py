@@ -295,10 +295,10 @@ def resolve_aliases(mentions: DataFrame, surface_col: str = "surface",
                     "n_mentions", "cluster_size"))
 
 
-# surface_universe literal-map bound: same discipline as
-# simsearch._LITERAL_BUDGET — past this the plan-time map stops being
-# "a handful of literals" and a caller should fall back to the UDF path
-# (or broadcast-join a precomputed fallback table themselves)
+# surface_universe literal-map bound: past this the plan-time map stops
+# being "a handful of literals" (a Catalyst tree that grows with the
+# universe) and a caller should fall back to the UDF path (or
+# broadcast-join a precomputed fallback table themselves)
 _UNIVERSE_BUDGET = 4096
 
 

@@ -99,7 +99,14 @@ _LANG_PROFILES = {
 
 def lang_id_udf():
     """pandas UDF: text → best-scoring language code ('und' when nothing
-    matches). Trigram containment scoring, vectorized per batch."""
+    matches). Trigram containment scoring, vectorized per batch.
+
+    Kept as a Python kernel on measurement, not by default: the JVM
+    form (one ``instr`` per profile trigram over the lowercased
+    1000-character prefix, summed per language) gave identical labels
+    but read 3.9–4.3 s against this UDF's 0.9–1.3 s at 50k documents on
+    a 4-core host, and an argmax over the per-language sums written as
+    nested ``when`` hit the 64 KB generated-method limit."""
     from pyspark.sql.types import StringType
 
     @F.pandas_udf(StringType())
