@@ -1,7 +1,8 @@
 """Benchmark harness — one JSON line for the driver.
 
 Runs the headline queries on $SPARK_GRAFT_SF_DIR (default sf0.1) with
-local[$SPARK_GRAFT_CPUS], plus a bench-scale synthetic KG-construction run
+one task slot per usable core ($SPARK_GRAFT_CPUS overrides; see
+tools/hostsize.py), plus a bench-scale synthetic KG-construction run
 (1M turns) measuring triples extracted/sec (the BASELINE.json metric).
 
 Scaling evidence (N vs 4N executors, sandbox stand-in): run
@@ -18,8 +19,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # Round 3 raised the default from 1M: the zero-exchange triple build
 # finishes 1M turns in ~2-4 s on local[32], where per-job fixed costs
 # (plan analysis, stage scheduling) and the documented 3x host-noise
@@ -34,9 +36,9 @@ def build_spark():
     return (SparkSession.builder
             .master(f"local[{CPUS}]")
             .appName("versa_spark-bench")
-            .config("spark.sql.shuffle.partitions", str(int(CPUS) * 2))
+            .config("spark.sql.shuffle.partitions", str(CPUS * 2))
             .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", f"{HEAP_GB}g")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.ui.enabled", "false")
             .getOrCreate())
@@ -116,7 +118,7 @@ def main() -> None:
         "synthetic_turns": n_convs * 25,
         "triples_per_sec": round(n_triples / kg_wall, 1),
         "triples_per_sec_best": round(n_triples / kg_best, 1),
-        "cpus": int(CPUS),
+        "cpus": CPUS,
     }, separators=(",", ":")))
     spark.stop()
 

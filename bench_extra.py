@@ -28,8 +28,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SYNTH_TURNS = int(os.environ.get("SPARK_GRAFT_SYNTH_TURNS", "4000000"))
 
 
@@ -38,9 +39,9 @@ def build_spark():
     return (SparkSession.builder
             .master(f"local[{CPUS}]")
             .appName("versa_spark-bench-extra")
-            .config("spark.sql.shuffle.partitions", str(int(CPUS) * 2))
+            .config("spark.sql.shuffle.partitions", str(CPUS * 2))
             .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", f"{HEAP_GB}g")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.ui.enabled", "false")
             .getOrCreate())
@@ -100,7 +101,7 @@ def main() -> None:
         "queries_laps": laps,
         "e2e_laps": e2e,
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
-        "cpus": int(CPUS),
+        "cpus": CPUS,
     }, separators=(",", ":")))
     spark.stop()
 

@@ -120,24 +120,20 @@ def test_bigdict_synthetic_dictionary_scale(spark, tx):
     m.unpersist()
 
 
-def test_build_graph_detect_dictionary_parity(spark, tx):
-    """build_graph(detect='dictionary') over the canonical dictionary
-    emits the exact triple set of the default lexicon path (same
-    surfaces, alias collapse via the dictionary's canonical column); a
-    larger gazetteer strictly adds the phrase-entity triples."""
+def test_kgjob_big_dictionary_adds_phrase_triples(spark, tx, tmp_path):
+    """KGJob(detect='dictionary') over a larger gazetteer strictly adds
+    the phrase-entity triples to the lexicon graph (the canonical-
+    dictionary parity is test_kgjob_detect_dictionary's); construction
+    rejects detect='dictionary' without a dictionary and an unknown
+    detect mode."""
     from versa_spark.kg.graph import build_graph
-    turns = ordered_turns(tx)
-    base = {(r.origin, r.rel, r.target)
-            for r in build_graph(spark, turns)["graph"].collect()}
-    via_dict = {(r.origin, r.rel, r.target)
-                for r in build_graph(
-                    spark, turns, dictionary=linking.canonical_dictionary(
-                        spark), detect="dictionary")["graph"].collect()}
-    assert via_dict == base
-    big = {(r.origin, r.rel, r.target)
-           for r in build_graph(
-               spark, turns, dictionary=extract.synthetic_big_dictionary(
-                   spark), detect="dictionary")["graph"].collect()}
+    parts = build_graph(spark, ordered_turns(tx))
+    base = _triples(parts["graph"])
+    parts["turns"].unpersist()
+    big = _triples(KGJob(
+        spark, str(tmp_path / "big"),
+        dictionary=extract.synthetic_big_dictionary(spark),
+        detect="dictionary").run(tx)["graph"])
     assert base < big
     extra = {t for t in big - base}
     assert extra and all(
@@ -146,9 +142,9 @@ def test_build_graph_detect_dictionary_parity(spark, tx):
         or " " in t[2]
         for t in extra), sorted(extra)[:5]
     with pytest.raises(ValueError):
-        build_graph(spark, turns, detect="dictionary")
+        KGJob(spark, str(tmp_path / "nodict"), detect="dictionary")
     with pytest.raises(ValueError):
-        build_graph(spark, turns, detect="nope")
+        KGJob(spark, str(tmp_path / "nope"), detect="nope")
 
 
 def test_mentions_against_plain_sql(spark, tx):
@@ -269,7 +265,7 @@ def test_kgjob_empty_mentions_stage_and_resume(spark, tx, tmp_path):
 
 def test_kgjob_lexicon_with_custom_linking_dictionary(spark, tx, tmp_path):
     """detect='lexicon' + an explicit dictionary drives the LINKING
-    stage (build_graph semantics): custom entity IRIs appear, and
+    stage (graph.linked_mentions): custom entity IRIs appear, and
     surfaces absent from the custom dictionary fall back to
     deterministic unlinked fingerprints."""
     d = (linking.canonical_dictionary(spark)
@@ -429,19 +425,21 @@ def _exchange_inputs(df):
     return out
 
 
-def test_static_and_generic_graph_paths_agree(spark):
-    """The zero-exchange literal-map linking (default) and the generic
-    broadcast-dictionary linking produce the identical triple table."""
+def test_static_and_generic_graph_paths_agree(spark, tmp_path):
+    """The zero-exchange literal-map linking (build_graph) and the
+    broadcast-dictionary linking (KGJob with an explicit dictionary)
+    produce the identical triple table."""
     from versa_spark.kg.graph import build_graph
     tx = synthetic_transcripts(spark, n_convs=40, turns_per_conv=10)
-    turns = ordered_turns(tx)
+    parts = build_graph(spark, ordered_turns(tx))
     static = {(r.origin, r.rel, r.target, r.t_iri)
-              for r in build_graph(spark, turns)["graph"].collect()}
+              for r in parts["graph"].collect()}
+    parts["turns"].unpersist()
     generic = {(r.origin, r.rel, r.target, r.t_iri)
-               for r in build_graph(
-                   spark, turns,
+               for r in KGJob(
+                   spark, str(tmp_path / "generic"),
                    dictionary=linking.canonical_dictionary(spark))
-               ["graph"].collect()}
+               .run(tx)["graph"].collect()}
     assert static == generic and len(static) > 1000
 
 
@@ -716,9 +714,8 @@ def test_view_metrics_are_shaped_like_stage_metrics(spark, tmp_path):
 def test_entity_label_is_the_smallest_canonical_name(spark, tmp_path):
     """A dictionary that gives one IRI two canonical names yields ONE
     type link and ONE label link for it, labelled min(canonical), in
-    build_graph's dictionary path and in KGJob, both detect modes."""
+    KGJob, both detect modes."""
     from versa_spark import VLABEL_REL, VTYPE_REL
-    from versa_spark.kg.graph import build_graph
     tx = spark.createDataFrame(
         [("conv-0", 0, "user", "join the table", None, None),
          ("conv-1", 0, "user", "two joins and tables", None, None)],
@@ -732,16 +729,12 @@ def test_entity_label_is_the_smallest_canonical_name(spark, tmp_path):
     iri = extract.ENT + "join"
     want = sorted([(str(VTYPE_REL), extract.TYPE_CONCEPT),
                    (str(VLABEL_REL), "a-join")])
-    turns = ordered_turns(tx, with_rank=False)
     for detect in ("lexicon", "dictionary"):
-        graphs = [
-            build_graph(spark, turns, dictionary=d, detect=detect)["graph"],
-            KGJob(spark, str(tmp_path / detect), dictionary=d,
-                  detect=detect).run(tx)["graph"]]
-        for g in graphs:
-            got = sorted((r.rel, r.target) for r in
-                         g.filter(F.col("origin") == iri).collect())
-            assert got == want, (detect, got)
+        g = KGJob(spark, str(tmp_path / detect), dictionary=d,
+                  detect=detect).run(tx)["graph"]
+        got = sorted((r.rel, r.target) for r in
+                     g.filter(F.col("origin") == iri).collect())
+        assert got == want, (detect, got)
 
 
 def test_append_batch_retry_is_idempotent(spark, tmp_path):
@@ -946,11 +939,10 @@ def test_turn_relations_extracts_verb_linked_pairs(spark):
 
 
 def test_relations_in_graph_and_job_append(spark, tmp_path):
-    """relations=(…): verb triples land in build_graph's graph/edges;
-    in KGJob they are a delta-ed stage, so a relation asserted in both
-    base and batch conversations appears ONCE in the combined view and
-    the whole graph equals a full rebuild."""
-    from versa_spark.kg.graph import build_graph
+    """relations=(…): verb triples land in KGJob's graph/edges as a
+    delta-ed stage, so a relation asserted in both base and batch
+    conversations appears ONCE in the combined view and the whole graph
+    equals a full rebuild."""
     rows = []
     for c in range(12):
         rows.append((f"conv-{c}", 0, "user",
@@ -960,16 +952,6 @@ def test_relations_in_graph_and_job_append(spark, tmp_path):
     tx = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string,"
               " tool string, ts timestamp")
-    turns = ordered_turns(tx, with_rank=False)
-
-    g = build_graph(spark, turns, relations=("reads", "uses"))
-    rel = {(r.origin.rsplit("/", 1)[-1], r.rel.rsplit("/", 1)[-1],
-            r.target.rsplit("/", 1)[-1])
-           for r in g["graph"].filter(
-               F.col("rel").contains("v/rel/")).collect()}
-    assert rel == {("spark", "reads", "table"), ("query", "uses", "hash")}
-    assert g["edges"].filter(F.col("rel").contains("v/rel/")).count() == 2
-
     h = F.pmod(F.xxhash64("conv_id"), F.lit(2))
     job = KGJob(spark, str(tmp_path / "incr"),
                 relations=("reads", "uses"))
@@ -977,6 +959,13 @@ def test_relations_in_graph_and_job_append(spark, tmp_path):
     job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")
     full = KGJob(spark, str(tmp_path / "full"),
                  relations=("reads", "uses")).run(tx, input_fingerprint="f")
+    rel = {(r.origin.rsplit("/", 1)[-1], r.rel.rsplit("/", 1)[-1],
+            r.target.rsplit("/", 1)[-1])
+           for r in full["graph"].filter(
+               F.col("rel").contains("v/rel/")).collect()}
+    assert rel == {("spark", "reads", "table"), ("query", "uses", "hash")}
+    assert full["edges"].filter(
+        F.col("rel").contains("v/rel/")).count() == 2
     assert _triples(job.table("graph")) == _triples(full["graph"])
     assert job.table("graph").count() == full["graph"].count()
     # every relation was already asserted by base conversations → the

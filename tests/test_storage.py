@@ -132,24 +132,3 @@ def test_match_stored_reads_writer_bucket_count(tmp_path, spark):
         f.write("not json")
     with pytest.raises(Exception):
         storage.stored_n_buckets(path, spark)
-
-
-def test_stream_graph_epoch_replay_is_idempotent(tmp_path, spark):
-    """Re-writing the same epoch partition (the foreachBatch replay case)
-    must not duplicate triples — dynamic partition overwrite semantics."""
-    from versa_spark import streaming as st
-    from versa_spark.kg.transcripts import synthetic_transcripts
-
-    in_dir = str(tmp_path / "in"); out_dir = str(tmp_path / "out")
-    ck1 = str(tmp_path / "ck1"); ck2 = str(tmp_path / "ck2")
-    tx = synthetic_transcripts(spark, n_convs=4, turns_per_conv=5)
-    tx.write.parquet(in_dir)
-    q = st.stream_graph_query(spark, in_dir, out_dir, ck1)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(out_dir).count()
-    # fresh checkpoint over the same input replays epoch 0: the write
-    # must overwrite the epoch partition, not append a second copy
-    q = st.stream_graph_query(spark, in_dir, out_dir, ck2)
-    q.awaitTermination(120)
-    n2 = spark.read.parquet(out_dir).count()
-    assert n1 > 0 and n2 == n1

@@ -17,73 +17,6 @@ def input_dir(spark, tmp_path):
     return d
 
 
-def test_stream_graph_foreachbatch(spark, tmp_path, input_dir):
-    out = str(tmp_path / "graph")
-    ckpt = str(tmp_path / "ckpt")
-    q = streaming.stream_graph_query(spark, input_dir, out, ckpt)
-    q.awaitTermination(300)
-    got = spark.read.parquet(out)
-    # streamed result must equal the batch run on the same data
-    from versa_spark.kg.graph import build_graph
-    from versa_spark.kg.transcripts import ordered_turns
-    batch = build_graph(
-        spark, ordered_turns(spark.read.parquet(input_dir)))["graph"]
-    s = {(r.origin, r.rel, r.target)
-         for r in got.select("origin", "rel", "target").collect()}
-    b = {(r.origin, r.rel, r.target)
-         for r in batch.select("origin", "rel", "target").collect()}
-    assert s == b and len(s) > 1000
-
-    # restart on the same checkpoint: no new epochs, no duplicate output
-    n = got.count()
-    q2 = streaming.stream_graph_query(spark, input_dir, out, ckpt)
-    q2.awaitTermination(300)
-    assert spark.read.parquet(out).count() == n
-
-
-def test_stream_restart_replays_epoch_without_duplicates(
-        spark, tmp_path, input_dir):
-    """Crash-replay idempotence of the epoch-partition-overwrite sink:
-    foreachBatch is at-least-once, so a crash AFTER the parquet write
-    but BEFORE the streaming commit re-runs the SAME epoch_id on
-    restart.  Simulated exactly: clone the checkpoint minus its last
-    commit marker (offsets present, commit absent — the crash window;
-    the clone sidesteps Spark 4's same-JVM concurrent-checkpoint guard,
-    which reads in-place commit-log deletion as a second live query)
-    and restart against the SAME output dir; the replayed epoch must
-    overwrite its own partition, not append the triples twice."""
-    import os
-    import shutil
-    out = str(tmp_path / "graph")
-    ckpt = str(tmp_path / "ckpt")
-    q = streaming.stream_graph_query(spark, input_dir, out, ckpt)
-    q.awaitTermination(300)
-    first = spark.read.parquet(out)
-    n = first.count()
-    triples = {(r.origin, r.rel, r.target)
-               for r in first.select("origin", "rel", "target").collect()}
-    assert n > 1000
-
-    ckpt2 = str(tmp_path / "ckpt-crashed")
-    shutil.copytree(ckpt, ckpt2)
-    commits = sorted(f for f in os.listdir(os.path.join(ckpt2, "commits"))
-                     if not f.startswith("."))
-    os.remove(os.path.join(ckpt2, "commits", commits[-1]))
-    crc = os.path.join(ckpt2, "commits", f".{commits[-1]}.crc")
-    if os.path.exists(crc):  # stale checksum blocks the commit rewrite
-        os.remove(crc)
-
-    q2 = streaming.stream_graph_query(spark, input_dir, out, ckpt2)
-    q2.awaitTermination(300)
-    # the replay really ran: the restarted query processed input rows
-    assert any(p["numInputRows"] > 0 for p in q2.recentProgress)
-    replayed = spark.read.parquet(out)
-    assert replayed.count() == n
-    assert {(r.origin, r.rel, r.target)
-            for r in replayed.select("origin", "rel", "target").collect()
-            } == triples
-
-
 def test_streaming_windowed_mention_counts(spark, input_dir):
     agg = streaming.streaming_mention_counts(spark, input_dir,
                                              window="10 minutes")
@@ -237,31 +170,6 @@ def test_streaming_event_rollup_matches_batch(spark, tmp_path):
     assert got == want and len(got) > 10
 
 
-def test_stream_graph_detect_dictionary(spark, tmp_path, input_dir):
-    """Streaming ingest supports the large-gazetteer detection path:
-    detect='dictionary' threads through to build_graph per micro-batch
-    (stream-static token-n-gram join) and the streamed triples equal
-    the batch run with the identical dictionary."""
-    from versa_spark.kg import extract
-    from versa_spark.kg.graph import build_graph
-    from versa_spark.kg.transcripts import ordered_turns
-    bd = extract.synthetic_big_dictionary(spark, n_pad=500)
-    out = str(tmp_path / "graph_bd")
-    ckpt = str(tmp_path / "ckpt_bd")
-    q = streaming.stream_graph_query(spark, input_dir, out, ckpt,
-                                     dictionary=bd, detect="dictionary")
-    q.awaitTermination(300)
-    got = {(r.origin, r.rel, r.target) for r in
-           spark.read.parquet(out)
-           .select("origin", "rel", "target").collect()}
-    batch = build_graph(
-        spark, ordered_turns(spark.read.parquet(input_dir)),
-        dictionary=bd, detect="dictionary")["graph"]
-    b = {(r.origin, r.rel, r.target)
-         for r in batch.select("origin", "rel", "target").collect()}
-    assert got == b and len(got) > 1000
-
-
 def test_stream_dedup_ingest(spark, tmp_path):
     """Streaming ingestion dedups each micro-batch within itself AND
     against the persistent LSH index; survivors equal the batch
@@ -303,6 +211,15 @@ def test_stream_dedup_ingest(spark, tmp_path):
     q2 = streaming.stream_dedup_ingest(spark, src, ix, out, ckpt)
     q2.awaitTermination(300)
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == kept
+
+    # a fresh checkpoint over the same input replays epoch 0 (the
+    # foreachBatch replay case): the write overwrites the epoch
+    # partition instead of appending a second copy
+    q3 = streaming.stream_dedup_ingest(spark, src, ix, out,
+                                       str(tmp_path / "ckpt2"))
+    q3.awaitTermination(300)
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()
+                  ) == sorted(kept)
 
 
 # -- streaming incremental KG growth (stream_kg_job) ---------------------
@@ -395,6 +312,30 @@ def test_stream_kg_job_restart_replays_without_duplicates(
     job2 = KGJob(spark, wd)
     assert job2.table("graph").count() == n
     assert _graph_triples(job2.table("graph")) == triples
+
+
+def test_stream_graph_detect_dictionary(spark, tmp_path, conv_bundle_dir):
+    """Streaming ingest runs the large-gazetteer detection path:
+    stream_kg_job(detect='dictionary') grows the workdir one epoch per
+    file, and the combined graph equals one KGJob run over all of the
+    input, with no duplicate rows (each entity's type/label links and
+    each conversation's type link are written once across epochs)."""
+    from versa_spark.kg import extract
+    from versa_spark.kg.job import KGJob
+    bd = extract.synthetic_big_dictionary(spark, n_pad=500)
+    wd = str(tmp_path / "wd_bd")
+    q = streaming.stream_kg_job(spark, conv_bundle_dir, wd,
+                                str(tmp_path / "ckpt_bd"), dictionary=bd,
+                                detect="dictionary", max_files_per_trigger=1)
+    q.awaitTermination(300)
+    job = KGJob(spark, wd)
+    assert sorted(job.batch_ids()) == ["epoch-1", "epoch-2"]
+    want = _graph_triples(KGJob(
+        spark, str(tmp_path / "full_bd"), dictionary=bd,
+        detect="dictionary").run(spark.read.parquet(conv_bundle_dir))["graph"])
+    got = job.table("graph")
+    assert _graph_triples(got) == want and len(want) > 500
+    assert got.count() == len(want)
 
 
 def test_stream_kg_job_relations_dedupe_across_epochs(spark, tmp_path):

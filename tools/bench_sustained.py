@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
 
 
 def main() -> None:
@@ -31,9 +31,9 @@ def main() -> None:
     spark = (SparkSession.builder
              .master(f"local[{CPUS}]")
              .appName("versa_spark-bench-sustained")
-             .config("spark.sql.shuffle.partitions", str(int(CPUS) * 2))
+             .config("spark.sql.shuffle.partitions", str(CPUS * 2))
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", f"{HEAP_GB}g")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.enabled", "false")
              .getOrCreate())
@@ -58,7 +58,7 @@ def main() -> None:
         "triples": n_triples,
         "triples_per_sec_best": round(n_triples / best, 1),
         "triples_per_sec_laps": [round(n_triples / w, 1) for w in laps],
-        "cpus": int(CPUS),
+        "cpus": CPUS,
     }, separators=(",", ":")))
     spark.stop()
 

@@ -74,12 +74,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
-# one task slot per usable core and half the host's memory for the heap
-# (the sizing tools/check_oracles.py uses)
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
-           or len(os.sched_getaffinity(0)))
-HEAP_GB = max(1, os.sysconf("SC_PAGE_SIZE")
-              * os.sysconf("SC_PHYS_PAGES") // 2**31)
+from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
+
 N_DOCS = int(os.environ.get("SPARK_GRAFT_VOLUME_DOCS", "1000000"))
 N_TURNS = int(os.environ.get("SPARK_GRAFT_VOLUME_TURNS", "4000000"))
 

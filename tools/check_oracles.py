@@ -20,6 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
+
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
@@ -65,17 +67,12 @@ def main() -> None:
 
     import duckdb
     from pyspark.sql import SparkSession
-    # one task slot and one shuffle partition per usable core (as the
-    # tests size theirs), and half the host's memory for the heap
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
-               or len(os.sched_getaffinity(0)))
-    heap_gb = max(1, os.sysconf("SC_PAGE_SIZE")
-                  * os.sysconf("SC_PHYS_PAGES") // 2**31)
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
+    # one shuffle partition per task slot, as the tests size theirs
+    spark = (SparkSession.builder.master(f"local[{CPUS}]")
              .appName("check-oracles")
-             .config("spark.sql.shuffle.partitions", str(cpus))
+             .config("spark.sql.shuffle.partitions", str(CPUS))
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", f"{heap_gb}g")
+             .config("spark.driver.memory", f"{HEAP_GB}g")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

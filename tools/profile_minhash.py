@@ -14,17 +14,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
     spark = (SparkSession.builder.master(f"local[{CPUS}]")
              .appName("profile-minhash")
-             .config("spark.sql.shuffle.partitions", str(int(CPUS) * 2))
+             .config("spark.sql.shuffle.partitions", str(CPUS * 2))
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", f"{HEAP_GB}g")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

@@ -5,7 +5,7 @@ Production shape (north rule):
     spark-submit --py-files versa_spark.zip -m versa_spark.jobs kg \\
         --input  /path/to/transcripts_parquet_or_iceberg \\
         --workdir /path/to/checkpointed_workdir \\
-        [--synthetic-turns N]  [--salt 32]
+        [--synthetic-turns N]
 
 Reads the transcript table (or synthesizes one deterministically for
 capacity tests), runs the checkpointed KG job (versa_spark.kg.job), and
@@ -30,7 +30,6 @@ def kg_main(argv) -> int:
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--fingerprint", default="v1",
                     help="input lineage fingerprint; unchanged = resume")
-    ap.add_argument("--salt", type=int, default=16)
     ap.add_argument("--dictionary", default=None,
                     help="parquet gazetteer (surface, canonical, "
                          "entity_iri); with --detect dictionary, mention "
@@ -38,7 +37,8 @@ def kg_main(argv) -> int:
                          "instead of the built-in lexicon regex")
     ap.add_argument("--detect", default="lexicon",
                     choices=("lexicon", "dictionary"),
-                    help="detection surface set (see kg.graph.build_graph)")
+                    help="detection surface set (see kg.job.KGJob and "
+                         "kg.graph.linked_mentions)")
     ap.add_argument("--append-batch", default=None, metavar="BATCH_ID",
                     help="grow a completed workdir by this input as an "
                          "O(batch) incremental append (KGJob.append_batch) "
@@ -67,9 +67,8 @@ def kg_main(argv) -> int:
     if args.compact_to:
         dictionary = (spark.read.parquet(args.dictionary)
                       if args.dictionary else None)
-        job = KGJob(spark, args.workdir, salt=args.salt,
-                    dictionary=dictionary, detect=args.detect,
-                    relations=rels)
+        job = KGJob(spark, args.workdir, dictionary=dictionary,
+                    detect=args.detect, relations=rels)
         cj = job.compact_to(args.compact_to,
                             input_fingerprint=args.fingerprint)
         print(json.dumps({"metrics": cj.metrics,
@@ -90,8 +89,8 @@ def kg_main(argv) -> int:
 
     dictionary = (spark.read.parquet(args.dictionary)
                   if args.dictionary else None)
-    job = KGJob(spark, args.workdir, salt=args.salt,
-                dictionary=dictionary, detect=args.detect, relations=rels)
+    job = KGJob(spark, args.workdir, dictionary=dictionary,
+                detect=args.detect, relations=rels)
     if args.append_batch:
         out = job.append_batch(tx, args.append_batch,
                                input_fingerprint=args.fingerprint,

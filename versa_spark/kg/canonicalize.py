@@ -21,18 +21,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def entity_mention_counts(linked_mentions: DataFrame,
-                          salt: int = 16) -> DataFrame:
+# S above: the phase-1 groups per entity
+_SALT = 16
+
+
+def entity_mention_counts(linked_mentions: DataFrame) -> DataFrame:
     """(entity_iri, canonical) → n_mentions n_convs, skew-safe.
 
     distinct-conversation counting is the non-algebraic part: phase 1
     collects per-salt distinct conv sets, phase 2 unions them — each
-    reducer sees at most `salt` rows per entity instead of every mention.
-    Both counts are long."""
+    reducer sees at most ``_SALT`` rows per entity instead of every
+    mention.  Both counts are long."""
     phase1 = (linked_mentions
               .withColumn("_salt",
                           F.pmod(F.xxhash64("conv_id", "turn_idx"),
-                                 F.lit(salt)))
+                                 F.lit(_SALT)))
               .groupBy("entity_iri", "canonical", "_salt")
               .agg(F.count("*").alias("_n"),
                    F.collect_set("conv_id").alias("_convs")))

@@ -146,8 +146,8 @@ def turn_entity_ids(turns: DataFrame) -> DataFrame:
     PRECONDITION: (conv_id, turn_idx) must be unique in ``turns`` — it
     is the transcript table's primary key (north-rule input contract).
     An at-least-once ingest that may replay rows must dedup first
-    (streaming.stream_graph_query does, per micro-batch; batch readers
-    of the checkpointed job inherit uniqueness from the stage write).
+    (streaming.stream_kg_job does, per micro-batch; batch readers of
+    the checkpointed job inherit uniqueness from the stage write).
     With duplicate keys this path emits duplicate triples where the
     generic mention_links path would collapse the mention family."""
     keep = [c for c in turns.columns if c != "text"]
@@ -403,7 +403,7 @@ def relation_links(turns: DataFrame,
                    verbs: tuple[str, ...] = DEFAULT_RELATION_VERBS,
                    ) -> DataFrame:
     """:func:`turn_relations` as graph rows (origin, rel, target,
-    t_iri) ready to union into a ``build_graph`` output — per-pair
+    t_iri) ready to union into a graph stage (``KGJob``) — per-pair
     rows are deduped on the NARROW (subj, verb, obj) key (a relation
     asserted in many turns is one triple, Versa set semantics)."""
     rel = (turn_relations(turns, verbs=verbs)

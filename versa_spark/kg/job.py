@@ -63,7 +63,7 @@ class KGJob:
     """The checkpointed, resumable, appendable transcript → KG job under
     ``workdir`` (see the module docstring)."""
 
-    def __init__(self, spark: SparkSession, workdir: str, salt: int = 16,
+    def __init__(self, spark: SparkSession, workdir: str,
                  dictionary: DataFrame | None = None,
                  detect: str = "lexicon",
                  relations: tuple[str, ...] | None = None):
@@ -74,7 +74,6 @@ class KGJob:
             raise ValueError("detect='dictionary' requires a dictionary")
         self.spark = spark
         self.workdir = workdir
-        self.salt = salt
         # the dictionary detects (detect='dictionary') or only links
         # (graph.linked_mentions).  Its CONTENT digest is folded into the
         # stage fingerprint, so a resume after a change recomputes.
@@ -270,7 +269,7 @@ class KGJob:
         linked = self._linked(mentions)
         entity_stats = stage(
             "entity_stats", lambda:
-            canonicalize.entity_mention_counts(linked, salt=self.salt))
+            canonicalize.entity_mention_counts(linked))
         rels = None
         if self.relations:
             def _build_rels():
@@ -520,9 +519,8 @@ class KGJob:
         # INCONSISTENT base (its turns present, its graph absent) with
         # the retry path gone — refuse until it completes
         self._check_batches_complete(manifest)
-        target = KGJob(self.spark, new_workdir, salt=self.salt,
-                       dictionary=self.dictionary, detect=self.detect,
-                       relations=self.relations)
+        target = KGJob(self.spark, new_workdir, dictionary=self.dictionary,
+                       detect=self.detect, relations=self.relations)
         # fold dict/relations into the target's fingerprints (exactly as
         # run() would) so post-compaction appends pass the config check
         fp = target._effective_fp(input_fingerprint, digest)

@@ -232,8 +232,8 @@ def resolve_aliases(mentions: DataFrame, surface_col: str = "surface",
     surface↔key graph (vocabulary-sized, O(log n) rounds via the
     hooking + pointer-doubling kernel shared with dedup); the result is
     a (surface, canonical, entity_iri) frame that drops into
-    :func:`link_entities` / ``build_graph(dictionary=…)`` as a
-    broadcastable dictionary.
+    :func:`link_entities` / ``KGJob(dictionary=…)`` as a broadcastable
+    dictionary.
 
     Canonical per cluster = the most frequent surface (ties: shortest
     raw surface, then lexicographically smallest raw surface —

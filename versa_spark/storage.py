@@ -178,13 +178,15 @@ def iceberg_ddl(table: str = "kg.graph", n_buckets: int = 64,
     """The production Iceberg spelling of this module's layout, as
     executable SQL statements (no Iceberg runtime ships in this
     container, so these are emitted for the cluster that has one;
-    identical physical properties to the tested Parquet layout):
+    the same partitioning and sort order as the tested Parquet layout):
 
     * bucket-transform partitioning = the obucket/sbucket column here;
     * WRITE ORDERED BY = the sortWithinPartitions(origin/src, rel) here
       (row-group min/max skipping on the second key);
-    * write.distribution-mode=hash = the KGJob write repartition here
-      (one file per bucket per commit, not mappers × buckets).
+    * write.distribution-mode=hash has no counterpart here: Iceberg
+      shuffles rows by bucket before the write, so a commit writes about
+      one file per bucket, where ``write_model`` / ``write_graph_tables``
+      write one file per (write task, bucket) pair.
     """
     cols = {"graph": ("origin STRING, rel STRING, target STRING, "
                       "t_iri BOOLEAN", "origin"),

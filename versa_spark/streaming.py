@@ -1,15 +1,15 @@
-"""Structured Streaming ingestion: transcripts stream → KG graph stream.
+"""Structured Streaming ingestion: transcripts stream → KG job growth.
 
 The reference is batch-only (SURVEY.md §2.11); its closest analogue is the
 generator-based incremental parse (serial/csv.py:44-106).  Here the same
 per-batch design runs on Structured Streaming:
 
-* ``stream_graph_query`` — file-source stream of transcript parquet →
-  ``foreachBatch``: each micro-batch runs the identical batch extraction +
-  linking (one code path for batch and streaming — the foreachBatch
-  pattern), appending to a graph parquet sink.  Turn ordering inside a
-  batch uses the same window rank; cross-batch ordering is by delivery
-  (streaming can't sort the unbounded future).
+* ``stream_kg_job`` — file-source stream of transcript parquet →
+  ``foreachBatch``: each micro-batch grows a checkpointed ``KGJob``
+  workdir (one code path for batch and streaming — the foreachBatch
+  pattern), with the job's per-stage lineage manifest and resume.
+  Turn ordering inside a batch uses the same window rank; cross-batch
+  ordering is by delivery (streaming can't sort the unbounded future).
 * ``streaming_mention_counts`` — native streaming aggregation: watermarked
   event-time windows over mention events (late data bounded by the
   watermark), demonstrating watermark + windowed aggs per the engine
@@ -44,67 +44,6 @@ def read_transcript_stream(spark: SparkSession, input_dir: str,
             .parquet(input_dir))
 
 
-def stream_graph_query(spark: SparkSession, input_dir: str,
-                       output_dir: str, checkpoint_dir: str,
-                       available_now: bool = True,
-                       dictionary: DataFrame | None = None,
-                       detect: str = "lexicon"):
-    """Start the stream: per micro-batch, run the batch KG construction
-    and append triples to ``output_dir``.  Returns the StreamingQuery.
-
-    ``dictionary`` / ``detect`` pass through to ``build_graph``
-    unchanged, so streaming ingest supports the same large-gazetteer
-    path as batch: ``detect='dictionary'`` routes each micro-batch's
-    mention detection through the token-n-gram join against
-    ``dictionary`` (a stream-static join — the static side is built
-    once on the driver and broadcast per batch under the same size
-    guard as batch)."""
-    from versa_spark.kg.graph import build_graph
-    from versa_spark.kg.transcripts import ordered_turns
-
-    os.makedirs(output_dir, exist_ok=True)
-
-    def _process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # at-least-once upstream delivery can replay turns inside one
-        # micro-batch; the zero-exchange triple build relies on
-        # (conv_id, turn_idx) uniquely keying its input (the transcript
-        # table's primary key), so enforce it per batch — a batch-local
-        # dedup, tiny next to the build itself
-        batch_df = batch_df.dropDuplicates(["conv_id", "turn_idx"])
-        turns = ordered_turns(batch_df)
-        spark_b = batch_df.sparkSession
-        parts = build_graph(spark_b, turns, dictionary=dictionary,
-                            detect=detect)
-        # IDEMPOTENT sink: foreachBatch gives at-least-once epochs — a
-        # crash between the parquet commit and the streaming checkpoint
-        # re-runs the SAME epoch_id on restart.  Writing each epoch as
-        # its own partition with dynamic-partition overwrite makes the
-        # replay overwrite epoch=E in place instead of appending the
-        # triples twice (the documented foreachBatch exactly-once
-        # recipe: epoch_id as the dedup key).  The overwrite mode is a
-        # per-WRITER option, not a session-conf toggle: mutating
-        # spark.sql.sources.partitionOverwriteMode around the write
-        # would leak dynamic mode to concurrent queries sharing the
-        # session (the shared-context safety invariant).
-        (parts["graph"]
-         .withColumn("epoch", F.lit(epoch_id))
-         .write.mode("overwrite").partitionBy("epoch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(output_dir))
-        parts["linked"].unpersist()
-        parts["turns"].unpersist()
-
-    stream = read_transcript_stream(spark, input_dir)
-    writer = (stream.writeStream
-              .foreachBatch(_process_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
                   checkpoint_dir: str, available_now: bool = True,
                   on_existing: str = "error",
@@ -116,8 +55,10 @@ def stream_kg_job(spark: SparkSession, input_dir: str, workdir: str,
     transcript parquet GROWS a checkpointed KGJob workdir via
     ``append_batch`` (batch_id = ``epoch-<id>``), so the streamed graph
     is the same lineage-manifested, resumable, combined-``table()``
-    artifact a batch job produces — not a separate epoch-partitioned
-    sink (``stream_graph_query`` remains the stateless-sink variant).
+    artifact a batch job produces.  ``dictionary`` / ``detect`` /
+    ``relations`` pass through to ``KGJob`` unchanged, so streaming
+    ingest runs the same custom-dictionary linking, gazetteer detection
+    and relation triples as a batch job.
 
     Exactly-once: foreachBatch replays an epoch after a crash with the
     SAME epoch_id and (file-source + checkpoint) the same rows;
@@ -355,9 +296,11 @@ def stream_dedup_ingest(spark: SparkSession, input_dir: str,
     micro-batch of (doc_id, text) parquet is deduped WITHIN the batch
     (``dedup_corpus``) and AGAINST the persistent LSH index
     (``dedup_against_index``), and the survivors land in
-    ``output_dir`` as epoch-partitioned parquet — the same idempotent
-    epoch-overwrite sink as ``stream_graph_query``, so an at-least-once
-    replayed epoch overwrites itself instead of duplicating docs.
+    ``output_dir`` as epoch-partitioned parquet.  The sink is written
+    with dynamic partition overwrite, so an at-least-once replayed
+    epoch (a crash between the parquet commit and the streaming
+    checkpoint re-runs the SAME epoch_id) overwrites its own
+    ``epoch=E`` partition instead of duplicating docs.
 
     The index is READ-ONLY during streaming, deliberately: appending to
     it inside ``foreachBatch`` would not be replay-idempotent (a
@@ -385,6 +328,8 @@ def stream_dedup_ingest(spark: SparkSession, input_dir: str,
         (survivors
          .withColumn("epoch", F.lit(epoch_id))
          .write.mode("overwrite").partitionBy("epoch")
+         # a per-writer option: the session conf would leak dynamic
+         # overwrite to concurrent queries sharing the session
          .option("partitionOverwriteMode", "dynamic")
          .parquet(output_dir))
 
