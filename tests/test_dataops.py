@@ -823,8 +823,10 @@ def test_decontaminate(spark):
 def test_bad_mode_raises_before_any_spark_job(spark, tmp_path, emb):
     """decontaminate, decontaminate_fuzzy, dedup_against_index,
     remove_repeated_spans and the two index writers check ``mode``
-    before their first Spark job: a bad value runs no job, pins no block
-    and leaves an existing index's sidecar as it was."""
+    before their first Spark job, and every entry point taking
+    ``hash_family`` checks it (the index writer its ``bands`` too) the
+    same way: a bad value runs no job, pins no block and leaves an
+    existing index's sidecar as it was."""
     base = " ".join(f"w{i}" for i in range(30))
     corpus = spark.createDataFrame([(1, base), (2, base + " x")],
                                    ["doc_id", "text"])
@@ -837,27 +839,53 @@ def test_bad_mode_raises_before_any_spark_job(spark, tmp_path, emb):
     metas = {"dedup": dedup.read_dedup_index_meta(spark, path),
              "ann": simsearch.read_ann_index_meta(spark, ann_path)}
     sc = spark.sparkContext
+    mode, fam = "unknown mode", "unknown hash_family"
     calls = {
-        "decontaminate": lambda: dedup.decontaminate(
-            corpus, bench, mode="nope"),
-        "decontaminate_fuzzy": lambda: dedup.decontaminate_fuzzy(
-            corpus, bench, mode="nope"),
-        "dedup_against_index": lambda: dedup.dedup_against_index(
-            corpus, path, mode="bogus"),
-        "remove_repeated_spans": lambda: textops.remove_repeated_spans(
-            corpus, mode="bogus"),
-        "write_dedup_index": lambda: dedup.write_dedup_index(
-            corpus, path, bands=8, mode="ignore"),
-        "write_ann_index": lambda: simsearch.write_ann_index(
-            vecs, ann_path, n_cells=2, refine_iters=0, mode="ignore")}
-    for name, call in calls.items():
-        group = f"bad-mode-{name}"
+        "decontaminate": (mode, lambda: dedup.decontaminate(
+            corpus, bench, mode="nope")),
+        "decontaminate_fuzzy": (mode, lambda: dedup.decontaminate_fuzzy(
+            corpus, bench, mode="nope")),
+        "dedup_against_index": (mode, lambda: dedup.dedup_against_index(
+            corpus, path, mode="bogus")),
+        "remove_repeated_spans": ("trim/drop/flag", lambda:
+                                  textops.remove_repeated_spans(
+                                      corpus, mode="bogus")),
+        "write_dedup_index": (mode, lambda: dedup.write_dedup_index(
+            corpus, path, bands=8, mode="ignore")),
+        "write_ann_index": (mode, lambda: simsearch.write_ann_index(
+            vecs, ann_path, n_cells=2, refine_iters=0, mode="ignore")),
+        "write_dedup_index bands": ("must evenly divide", lambda:
+                                    dedup.write_dedup_index(
+                                        corpus, path, bands=7)),
+        "write_dedup_index family": (fam, lambda: dedup.write_dedup_index(
+            corpus, path, hash_family="nope")),
+        "minhash_signatures": (fam, lambda: dedup.minhash_signatures(
+            corpus, hash_family="nope")),
+        "minhash_lsh_candidates": (fam, lambda:
+                                   dedup.minhash_lsh_candidates(
+                                       corpus, hash_family="nope")),
+        "simhash_near_dups": (fam, lambda: dedup.simhash_near_dups(
+            corpus, hash_family="nope")),
+        "dedup_corpus": (fam, lambda: dedup.dedup_corpus(
+            corpus, hash_family="nope")),
+        "decontaminate_fuzzy family": (fam, lambda:
+                                       dedup.decontaminate_fuzzy(
+                                           corpus, bench,
+                                           hash_family="nope")),
+        "winnow_fingerprints": (fam, lambda: textops.winnow_fingerprints(
+            corpus, hash_family="nope")),
+        "stratified_sample": (fam, lambda: textops.stratified_sample(
+            corpus, {"a": 1.0}, key_col="text", hash_family="nope")),
+        "sample_to_token_budget": (fam, lambda:
+                                   textops.sample_to_token_budget(
+                                       corpus, {"a": 1.0}, key_col="text",
+                                       hash_family="nope"))}
+    for name, (pattern, call) in calls.items():
+        group = f"bad-arg-{name.replace(' ', '-')}"
         cached = _n_cached_rdds(spark)
         sc.setJobGroup(group, group)
         try:
-            with pytest.raises(ValueError, match=(
-                    "trim/drop/flag" if name == "remove_repeated_spans"
-                    else "unknown mode")):
+            with pytest.raises(ValueError, match=pattern):
                 call()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)

@@ -13,6 +13,19 @@ Plan shapes (the part that must survive 100×):
   pairs by band equality;
 * embedding cosine: exact pairwise above threshold for verification;
   scale path is LSH over random hyperplanes (simsearch module).
+
+Every banded similarity join is one operator, candidate generation then
+verification, and each step has one kernel here:
+* :func:`_pair_expand` — the in-row (a < b) pair expansion of a sorted
+  array (also kg/analytics' co-occurrence pairs);
+* :func:`_bucket_pairs` — within-table discovery: bucket membership
+  groupBy → distinct member pairs (MinHash, SimHash, embedding LSH);
+* :func:`_banded_match` — cross-table discovery and verify: the small
+  side's banded rows broadcast into the big side's scan, candidates
+  verified by :func:`_verify_candidates` (fuzzy decontamination, the
+  stored index);
+* :func:`family_hash_sql` — the one place a ``hash_family`` name is
+  checked and the md5 48-bit integer is written.
 """
 
 from __future__ import annotations
@@ -156,6 +169,38 @@ def _verify_candidates(cands: DataFrame, a_sh: DataFrame, b_sh: DataFrame,
             .selectExpr("a", "b", "round(jaccard, 6) AS jaccard"))
 
 
+def _pair_expand(ids_col: str):
+    """The in-row pair expansion over a sorted array column: struct
+    pairs (a, b) with a < b, every element against every later element
+    — no self-join, no shuffle.  The outer transform lambda is BINARY on
+    purpose — pyspark dispatches (element, index)."""
+    return F.flatten(F.transform(
+        F.col(ids_col),
+        lambda x, i: F.transform(
+            F.slice(F.col(ids_col), i + 2,
+                    F.greatest(F.size(F.col(ids_col)) - i - 1, F.lit(0))),
+            lambda y: F.struct(x.alias("a"), y.alias("b")))))
+
+
+def _bucket_pairs(banded: DataFrame, keys: list[str], member) -> DataFrame:
+    """Within-table LSH discovery: distinct (a, b) pairs of ``member``
+    values (a column name or expression) that share a ``keys`` bucket,
+    a < b.
+
+    One groupBy over the bucket keys + in-row pair expansion of the
+    sorted membership list, not a banded self-join: the join form
+    referenced the banded table twice, so the whole signature DAG ran
+    once per side and both sides were exchanged; here the signatures
+    compute once and the bucket groupBy is the only discovery exchange.
+    Membership lists are near-dup-group-sized by LSH construction, the
+    same K members the self-join would have squared into K² rows."""
+    return (banded.groupBy(*keys)
+            .agg(F.array_sort(F.collect_list(member)).alias("_ids"))
+            .filter(F.size("_ids") >= 2)
+            .select(F.explode(_pair_expand("_ids")).alias("p"))
+            .select("p.a", "p.b").distinct())
+
+
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = 3,
                         threshold: float = 0.8,
@@ -192,6 +237,22 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 # for a + i*b (i < num_hashes), so the arithmetic is overflow-free and
 # bit-identical across engines.
 _MD5_MASK = (1 << 48) - 1
+
+
+def family_hash_sql(hash_family: str, expr: str) -> str:
+    """SQL text of the 64-bit hash of SQL expression ``expr``:
+    ``xxhash64(expr)`` for the fast JVM family, the 48-bit integer of
+    md5(expr)'s first 12 hex digits for the SQL-reproducible family
+    (DuckDB computes the same value, so md5-family oracles check
+    values).  The one place a family name is checked: every operator
+    taking ``hash_family`` calls this while it builds its plan, so an
+    unknown name raises before any Spark job."""
+    if hash_family == "xxhash64":
+        return f"xxhash64({expr})"
+    if hash_family == "md5":
+        return f"cast(conv(substring(md5({expr}), 1, 12), 16, 10) as bigint)"
+    raise ValueError(f"unknown hash_family {hash_family!r} "
+                     "(use 'xxhash64', 'md5')")
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
@@ -236,17 +297,12 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     if hash_family == "xxhash64":
         mins = ",".join(f"min(xxhash64(shingle, {i}))"
                         for i in range(num_hashes))
-    elif hash_family == "md5":
-        sh = sh.selectExpr(
-            "doc_id",
-            "cast(conv(substring(md5(shingle), 1, 12), 16, 10) as bigint)"
-            " AS _ha",
-            "cast(conv(substring(md5(concat('b:', shingle)), 1, 12), 16, 10)"
-            " as bigint) AS _hb")
+    else:
+        ha = family_hash_sql(hash_family, "shingle")
+        hb = family_hash_sql(hash_family, "concat('b:', shingle)")
+        sh = sh.selectExpr("doc_id", f"{ha} AS _ha", f"{hb} AS _hb")
         mins = ",".join(f"min((_ha + {i} * _hb) & {_MD5_MASK})"
                         for i in range(num_hashes))
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
     return (sh.groupBy("doc_id")
             .agg(F.expr(f"array({mins})").alias("sig")))
 
@@ -301,24 +357,11 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     full-corpus all-pairs join it exists to avoid.  The verified pairs
     come back eagerly checkpointed.
 
-    Round 7 discovery shape: one groupBy(band, bucket) + in-row pair
-    generation replaces the banded self-join.  The join form referenced
-    the banded table twice, so the whole shingle→signature→banding DAG
-    executed TWICE (once per join side) and the join added a second
-    exchange; now the signatures are computed once, the only discovery
-    exchange is the bucket groupBy (same bytes the join would have
-    shuffled per side), and pairs (a < b within a bucket) are emitted by
-    array expressions over the collected bucket membership — identical
-    pair set.  Bucket membership lists are near-dup-group-sized by LSH
-    construction, the same K docs the self-join would have squared into
-    K² rows anyway."""
+    Discovery is :func:`_bucket_pairs` over (band, bucket): one
+    groupBy, no banded self-join."""
     banded = _banded_signatures(df, id_col, text_col, k, num_hashes,
                                 bands, hash_family)
-    cands = (banded.groupBy("band", "bucket")
-             .agg(F.array_sort(F.collect_list("doc_id")).alias("_ids"))
-             .filter(F.size("_ids") >= 2)
-             .select(F.explode(_pair_expand("_ids")).alias("p"))
-             .select("p.a", "p.b").distinct())
+    cands = _bucket_pairs(banded, ["band", "bucket"], "doc_id")
     if verify_threshold is None:
         return cands
     # Verify (round-7 2nd-pass shape, ABBA'd at sf0.1: 2.10/1.40 s →
@@ -364,11 +407,12 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     # Single-SQL-string construction (one F.expr round trip instead of
     # 64 vote + 64 reconstruction builder columns — the same py4j
     # construction-chatter fix as minhash_signatures; parity-tested).
+    h = family_hash_sql(hash_family, "w")
     tok = df.select(F.col(id_col).alias("doc_id"),
                     F.explode(F.split(normalized_text(text_col), " "))
                     .alias("w"))
     if hash_family == "xxhash64":
-        tok = tok.selectExpr("doc_id", "xxhash64(w) AS h")
+        tok = tok.selectExpr("doc_id", f"{h} AS h")
 
         def vote(i):
             return (f"sum(CASE WHEN (shiftright(h, {i}) & 1) = 1"
@@ -381,8 +425,6 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
                      f" ELSE cast(0 as bigint) END")
         return (tok.groupBy("doc_id")
                 .agg(F.expr(" + ".join(terms)).alias("simhash")))
-    if hash_family != "md5":
-        raise ValueError(f"unknown hash_family {hash_family!r}")
     tok = tok.selectExpr("doc_id", "substring(md5(w), 1, 16) AS h16")
 
     def vote_md5(i):
@@ -440,27 +482,13 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     banded = sig.select("doc_id", "simhash",
                         F.explode(F.array(*band_cols)).alias("bb")) \
                 .select("doc_id", "simhash", "bb.band", "bb.bucket")
-    # Round 7: bucket-membership grouping instead of the banded
-    # self-join (same rewrite as minhash_lsh_candidates): the join form
-    # computed the whole signature DAG twice — once per side — and
-    # exchanged both; one groupBy computes it once, and pairs expand
-    # in-row from the sorted membership list (a < b by construction,
-    # identical pair set — parity-tested).
-    members = F.array_sort(F.collect_list(F.struct("doc_id", "simhash")))
-    pair_structs = F.flatten(F.transform(
-        F.col("_m"),
-        lambda x, i: F.transform(
-            F.slice(F.col("_m"), i + 2,
-                    F.greatest(F.size(F.col("_m")) - i - 1, F.lit(0))),
-            lambda y: F.struct(x["doc_id"].alias("a"),
-                               y["doc_id"].alias("b"),
-                               x["simhash"].alias("sig_a"),
-                               y["simhash"].alias("sig_b")))))
-    pairs = (banded.groupBy("band", "bucket")
-             .agg(members.alias("_m"))
-             .filter(F.size("_m") >= 2)
-             .select(F.explode(pair_structs).alias("p"))
-             .select("p.a", "p.b", "p.sig_a", "p.sig_b").distinct())
+    # members carry their signature, so the Hamming filter reads both
+    # sides without a join back to the signature table; sorting the
+    # (doc_id, simhash) structs orders them by doc_id, so a < b
+    pairs = (_bucket_pairs(banded, ["band", "bucket"],
+                           F.struct("doc_id", "simhash"))
+             .selectExpr("a.doc_id AS a", "b.doc_id AS b",
+                         "a.simhash AS sig_a", "b.simhash AS sig_b"))
     if hash_family == "xxhash64":
         hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     else:
@@ -563,19 +591,6 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
     return (out, rounds) if with_rounds else out
 
 
-def _pair_expand(ids_col: str):
-    """Shared in-row pair expansion over a sorted membership array:
-    struct pairs (a, b) with a < b, every element against every later
-    element.  The outer transform lambda is BINARY on purpose — pyspark
-    dispatches (element, index)."""
-    return F.flatten(F.transform(
-        F.col(ids_col),
-        lambda x, i: F.transform(
-            F.slice(F.col(ids_col), i + 2,
-                    F.greatest(F.size(F.col(ids_col)) - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("a"), y.alias("b")))))
-
-
 def merge_duplicates(links: DataFrame, pairs: DataFrame,
                      a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Resource merge: rewrite origins/targets of *links* so every member
@@ -613,18 +628,14 @@ def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",
                         threshold: float = 0.95) -> DataFrame:
     """Exact pairwise cosine ≥ threshold (verification kernel; discovery
     at scale = simsearch LSH buckets).  Dot products via zip_with +
-    aggregate — JVM higher-order functions, no UDF."""
-    norm = F.sqrt(F.aggregate(F.col(vec_col),
-                              F.lit(0.0),
-                              lambda acc, x: acc + x * x))
-    a = emb.select(F.col(id_col).alias("a"),
-                   F.col(vec_col).alias("va"),
-                   norm.alias("na"))
-    b = emb.select(F.col(id_col).alias("b"),
-                   F.col(vec_col).alias("vb"),
-                   norm.alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
+    aggregate — JVM higher-order functions, no UDF (simsearch's
+    ``_norm``/``_dot``, the kernels every cosine here uses)."""
+    from versa_spark.simsearch import _dot, _norm
+    a = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
+                   _norm(F.col(vec_col)).alias("na"))
+    b = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"),
+                   _norm(F.col(vec_col)).alias("nb"))
+    dot = _dot(F.col("va"), F.col("vb"))
     return (a.crossJoin(b).filter(F.col("a") < F.col("b"))
             .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
             .filter(F.col("cosine") >= threshold)
@@ -671,16 +682,14 @@ def dedup_embeddings(emb: DataFrame, id_col: str = "vec_id",
     base = emb.select(F.col(id_col).alias("vec_id"),
                       vec64.alias("v"),
                       _norm(vec64).alias("nv"))
-    # Round 7: candidate discovery via ONE groupBy over the tagged union
-    # of all tables' bucket assignments, instead of a per-table
-    # self-join.  The join form evaluated each table's signature DAG
-    # twice (once per side) and verified a pair once PER TABLE it
-    # co-bucketed in; now each signature computes once, bucket
-    # memberships collect only vec_ids (vectors never ride the candidate
-    # exchange — guide §2.3, shuffle keys not payloads), and each
-    # distinct candidate pair pays exactly one cosine, attached by two
-    # id-joins against the vector table.  Same surviving pair set:
-    # cosine is a pure pair function, so verify-then-distinct ==
+    # Candidate discovery: ONE _bucket_pairs groupBy over the tagged
+    # union of all tables' bucket assignments, instead of a per-table
+    # self-join (which verified a pair once PER TABLE it co-bucketed
+    # in).  Bucket memberships collect only vec_ids (vectors never ride
+    # the candidate exchange — guide §2.3, shuffle keys not payloads),
+    # and each distinct candidate pair pays exactly one cosine, attached
+    # by two id-joins against the vector table.  Same surviving pair
+    # set: cosine is a pure pair function, so verify-then-distinct ==
     # distinct-then-verify.
     banded_parts = []
     for t in range(n_tables):
@@ -693,11 +702,7 @@ def dedup_embeddings(emb: DataFrame, id_col: str = "vec_id",
     banded = banded_parts[0]
     for p in banded_parts[1:]:
         banded = banded.unionByName(p)
-    cands = (banded.groupBy("bucket")
-             .agg(F.array_sort(F.collect_list("vec_id")).alias("_ids"))
-             .filter(F.size("_ids") >= 2)
-             .select(F.explode(_pair_expand("_ids")).alias("p"))
-             .select("p.a", "p.b").distinct())
+    cands = _bucket_pairs(banded, ["bucket"], "vec_id")
     va = base.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
                      F.col("nv").alias("na"))
     vb = base.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),
@@ -826,6 +831,48 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                 "doc_id")
 
 
+def _banded_match(big_banded: DataFrame, small_banded: DataFrame,
+                  big_sh, small_sh, threshold: float) -> DataFrame:
+    """Cross-table banded-LSH match: the one discovery + verify of
+    :func:`decontaminate_fuzzy` and :func:`dedup_against_index`.
+    ``*_banded`` are (doc_id, band, bucket) frames; ``*_sh`` map a
+    ``doc_id`` frame to that side's (doc_id, sh) shingle arrays of those
+    docs.  Returns the eagerly checkpointed verified pairs (a, b,
+    jaccard), ``a`` from the small side, ``b`` from the big one.
+
+    * The small banded table is materialized ONCE (it feeds the count
+      AND the join), counted, and hinted ``F.broadcast`` at or below
+      ``_BANDED_BROADCAST_ROWS``, so the big side's banded scan never
+      shuffles for discovery; above the cap AQE plans a shuffle join on
+      (band, bucket).
+    * The distinct candidate pairs feed verify three times (two id
+      semi-joins + the pair join), so they are persisted: discovery runs
+      once.  Persisted, not checkpointed: kgbench's ``dedup.candidates``
+      counts the rows its scans of this cached distinct return.  Each
+      side's shingle arrays are built for candidate docs only, so
+      verify costs O(candidate pairs × shingles/doc), never
+      |big| × |small|.
+    * The verified pairs are checkpointed eagerly, so both blocks are
+      released before returning — repeated calls in a long-lived
+      session do not accumulate them."""
+    ckpt = small = small_banded.localCheckpoint(eager=True)
+    if ckpt.count() <= _BANDED_BROADCAST_ROWS:
+        small = F.broadcast(ckpt)
+    cands = (big_banded.select(F.col("doc_id").alias("b"), "band", "bucket")
+             .join(small.select(F.col("doc_id").alias("a"),
+                                "band", "bucket"), ["band", "bucket"])
+             .select("a", "b").distinct()
+             .persist())
+    try:
+        a_sh = small_sh(cands.select(F.col("a").alias("doc_id")).distinct())
+        b_sh = big_sh(cands.select(F.col("b").alias("doc_id")).distinct())
+        return (_verify_candidates(cands, a_sh, b_sh, threshold)
+                .localCheckpoint(eager=True))
+    finally:
+        cands.unpersist()
+        release_checkpoint(ckpt)
+
+
 def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
                         id_col: str = "doc_id", text_col: str = "text",
                         bench_id_col: str = "doc_id",
@@ -843,28 +890,15 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
     *between two tables* (train vs held-out eval), so no corpus↔corpus
     pair is ever generated.
 
-    Plan shape at 100 TB (corpus ~10^9 docs, benchmark ~10^4–10^6):
-
-    * both sides band their MinHash signatures with the SHARED kernel
-      (``_banded_signatures`` — identical bucket ids by construction);
-    * the benchmark banded table (|bench| × bands rows) is tiny next to
-      the corpus; it is eagerly materialized ONCE (localCheckpoint — it
-      feeds the count AND the join), counted, and hinted
-      ``F.broadcast`` at or below ``_BANDED_BROADCAST_ROWS`` — the
-      corpus banded stream then never shuffles for discovery (map-side
-      broadcast-hash join).  Above the cap the join is an AQE-planned
-      shuffle on (band, bucket);
-    * candidate (corpus, bench) pairs are distinct-ed, persisted (tiny:
-      near-dup pairs only), and verified with exact cross-table Jaccard
-      scoped to candidates: each side's shingle table is semi-joined down
-      to its candidate ids before the intersection count, so verify costs
-      O(candidate pairs × shingles/doc), never |corpus| × |bench|;
-    * the verified pair set is eagerly localCheckpoint-ed so BOTH the
-      candidate cache and the benchmark checkpoint are released before
-      returning (the minhash_lsh_candidates lifecycle; unlike
-      :func:`decontaminate`, whose lazy result keeps its checkpoint
-      pinned) — repeated calls in a long-lived session do not
-      accumulate blocks.
+    Plan shape at 100 TB (corpus ~10^9 docs, benchmark ~10^4–10^6): both
+    sides band their MinHash signatures with the SHARED kernel
+    (``_banded_signatures`` — identical bucket ids by construction) and
+    :func:`_banded_match` broadcasts the benchmark's (|bench| × bands
+    rows, tiny next to the corpus) into the corpus banded stream, then
+    verifies the candidates with exact cross-table Jaccard.  Unlike
+    :func:`decontaminate`, whose lazy result keeps its checkpoint
+    pinned, the verified pair set is eager and every other block is
+    released before returning.
 
     Modes: ``'remove'`` anti-joins contaminated corpus docs out;
     ``'flag'`` adds boolean ``contaminated``; ``'pairs'`` returns the
@@ -885,38 +919,11 @@ def decontaminate_fuzzy(corpus: DataFrame, benchmark: DataFrame,
                                   bands, hash_family)
     b_banded = _banded_signatures(b, "doc_id", "text", k, num_hashes,
                                   bands, hash_family)
-    # materialize the (small) benchmark banded table ONCE: the size
-    # count and the discovery join both read the checkpoint instead of
-    # re-running the benchmark signature DAG.  The verified pair set
-    # below is EAGER, so nothing reads this checkpoint after the verify
-    # job — it is released before returning.
-    b_ckpt = b_banded = b_banded.localCheckpoint(eager=True)
-    if b_ckpt.count() <= _BANDED_BROADCAST_ROWS:
-        b_banded = F.broadcast(b_ckpt)
-    cands = (c_banded.select(F.col("doc_id").alias("a"), "band", "bucket")
-             .join(b_banded.select(F.col("doc_id").alias("b"),
-                                   "band", "bucket"),
-                   ["band", "bucket"])
-             .select("a", "b").distinct())
-    # the candidate list feeds the verify stage three times (two id
-    # semi-joins + the pair join); persist so discovery runs once
-    cands = cands.persist()
-    try:
-        # verify touches only candidate docs — at a 2% contamination
-        # rate that is 50× less shingle work than scoping after the fact
-        c_sh = _candidate_shingles(
-            c, cands.select(F.col("a").alias("doc_id")).distinct(),
-            "doc_id", "text", k)
-        b_sh = _candidate_shingles(
-            b, cands.select(F.col("b").alias("doc_id")).distinct(),
-            "doc_id", "text", k)
-        matched = (_verify_candidates(cands, c_sh, b_sh, threshold)
-                   .select(F.col("a").alias("corpus_id"),
-                           F.col("b").alias("bench_id"), "jaccard")
-                   .localCheckpoint(eager=True))
-    finally:
-        cands.unpersist()
-        release_checkpoint(b_ckpt)
+    matched = _banded_match(
+        c_banded, b_banded,
+        lambda ids: _candidate_shingles(c, ids, "doc_id", "text", k),
+        lambda ids: _candidate_shingles(b, ids, "doc_id", "text", k),
+        threshold).selectExpr("b AS corpus_id", "a AS bench_id", "jaccard")
     return tail(corpus, id_col, matched, "corpus_id")
 
 
@@ -933,13 +940,7 @@ def _index_hash_sql(arr: str, hash_family: str) -> str:
     integer for the SQL-reproducible family (the same value the minhash
     signature arithmetic starts from).  The index writer and the batch
     side of :func:`dedup_against_index` both hash through it."""
-    if hash_family == "xxhash64":
-        h = "xxhash64(_s)"
-    elif hash_family == "md5":
-        h = "cast(conv(substring(md5(_s), 1, 12), 16, 10) AS bigint)"
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-    return f"transform({arr}, _s -> {h})"
+    return f"transform({arr}, _s -> {family_hash_sql(hash_family, '_s')})"
 
 
 def _require_index_v2(meta: dict, path: str) -> None:
@@ -984,12 +985,20 @@ def write_dedup_index(df: DataFrame, path: str, id_col: str = "doc_id",
     table write and re-writes it after all three tables land, so an
     interrupted build, append or overwrite leaves a sidecar-less index
     that readers refuse rather than mixed tables under a valid-looking
-    sidecar."""
+    sidecar.  Every argument is checked before the sidecar is deleted,
+    so a bad call leaves an existing index readable."""
     from versa_spark.storage import delete_sidecar, write_json_sidecar
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown mode {mode!r} (use 'overwrite', "
                          "'append')")
     spark = df.sparkSession
+    # both frames validate bands and hash_family as they are built, so a
+    # bad argument raises here, before the sidecar below is deleted
+    banded = _banded_signatures(df, id_col, text_col, k, num_hashes,
+                                bands, hash_family)
+    sh = df.select(F.col(id_col).alias("doc_id"),
+                   F.expr(_index_hash_sql(_shingle_sql(text_col, k),
+                                          hash_family)).alias("sh"))
     meta = {"k": k, "num_hashes": num_hashes, "bands": bands,
             "hash_family": hash_family, "format": _INDEX_FORMAT}
     if mode == "append":
@@ -1014,12 +1023,7 @@ def write_dedup_index(df: DataFrame, path: str, id_col: str = "doc_id",
                     f"index at {path} was written with {existing}; "
                     f"appending with {meta} would corrupt it")
     delete_sidecar(spark, f"{path}/{_INDEX_META}")
-    banded = _banded_signatures(df, id_col, text_col, k, num_hashes,
-                                bands, hash_family)
     banded.write.mode(mode).parquet(f"{path}/banded")
-    sh = df.select(F.col(id_col).alias("doc_id"),
-                   F.expr(_index_hash_sql(_shingle_sql(text_col, k),
-                                          hash_family)).alias("sh"))
     sh.write.mode(mode).parquet(f"{path}/shingles")
     if mode == "overwrite":
         # sizes from the parquet JUST WRITTEN, not the lineage:
@@ -1057,8 +1061,8 @@ def compact_dedup_index(spark: SparkSession, src: str, dst: str,
     Compaction: every :func:`write_dedup_index` append adds its own part
     files to banded/shingles/sizes, and after thousands of ingestion
     batches the per-query scan cost is dominated by file-open overhead
-    (the same small-file pathology the KG job's hash write distribution
-    prevents).
+    (the small-file pathology: per-file open and footer costs grow with
+    the number of appends, not with the rows indexed).
 
     Migration: a format-1 index (sidecar without ``format``) stored one
     ``(doc_id, sh_h)`` row per shingle hash.  Those rows are regrouped
@@ -1114,18 +1118,13 @@ def dedup_against_index(batch: DataFrame, path: str,
     caller — a mismatched banding finds nothing, silently.  A format-1
     index is refused; :func:`compact_dedup_index` migrates it.
 
-    Plan shape: the BATCH is the small side here, so its banded rows are
-    checkpointed, counted and broadcast (an AQE shuffle join above
-    ``_BANDED_BROADCAST_ROWS``) into a map-side scan of the stored
-    ``banded/`` table, giving the distinct candidate (batch, index)
-    pairs.  Verify is the shared candidate
-    kernel (:func:`_verify_candidates`): the batch re-shingles only its
-    candidate docs (semi-join before shingling) and hashes them in-row,
-    the stored ``shingles/`` arrays are read once, semi-joined to
-    candidate index ids, and each pair's Jaccard is one in-row array
-    intersection — no explode, no per-hash join, no ``sizes/`` read.
-    Per-batch cost is O(batch + index-scan + candidates); the corpus
-    text is never read.
+    Plan shape: the BATCH is the small side of :func:`_banded_match`,
+    so its banded rows are broadcast into a map-side scan of the stored
+    ``banded/`` table.  The batch re-shingles only its candidate docs
+    and hashes them in-row; the stored ``shingles/`` arrays are read
+    once, semi-joined to candidate index ids — no explode, no per-hash
+    join, no ``sizes/`` read.  Per-batch cost is O(batch + index-scan +
+    candidates); the corpus text is never read.
 
     Modes: ``'remove'`` drops batch docs that match an indexed doc,
     ``'flag'`` adds boolean ``is_dup``, ``'pairs'`` returns
@@ -1146,31 +1145,12 @@ def dedup_against_index(batch: DataFrame, path: str,
                      F.col(text_col).alias("text"))
     b_banded = _banded_signatures(b, "doc_id", "text", k, num_hashes,
                                   bands, hash_family)
-    b_ckpt = b_banded = b_banded.localCheckpoint(eager=True)
-    if b_ckpt.count() <= _BANDED_BROADCAST_ROWS:
-        b_banded = F.broadcast(b_ckpt)
-    ix_banded = spark.read.parquet(f"{path}/banded")
-    cands = (ix_banded.select(F.col("doc_id").alias("ix"),
-                              "band", "bucket")
-             .join(b_banded.select(F.col("doc_id").alias("bt"),
-                                   "band", "bucket"),
-                   ["band", "bucket"])
-             .select("bt", "ix").distinct())
-    cands = cands.persist()
-    try:
-        b_sh = _candidate_shingles(
-            b, cands.select(F.col("bt").alias("doc_id")).distinct(),
-            "doc_id", "text", k).selectExpr(
-            "doc_id", f"{_index_hash_sql('sh', hash_family)} AS sh")
-        ix_sh = (spark.read.parquet(f"{path}/shingles")
-                 .join(cands.select(F.col("ix").alias("doc_id"))
-                       .distinct(), "doc_id", "left_semi"))
-        matched = (_verify_candidates(
-                       cands.selectExpr("bt AS a", "ix AS b"),
-                       b_sh, ix_sh, threshold)
-                   .selectExpr("a AS batch_id", "b AS index_id", "jaccard")
-                   .localCheckpoint(eager=True))
-    finally:
-        cands.unpersist()
-        release_checkpoint(b_ckpt)
+    matched = _banded_match(
+        spark.read.parquet(f"{path}/banded"), b_banded,
+        lambda ids: (spark.read.parquet(f"{path}/shingles")
+                     .join(ids, "doc_id", "left_semi")),
+        lambda ids: _candidate_shingles(b, ids, "doc_id", "text", k)
+        .selectExpr("doc_id",
+                    f"{_index_hash_sql('sh', hash_family)} AS sh"),
+        threshold).selectExpr("a AS batch_id", "b AS index_id", "jaccard")
     return tail(batch, id_col, matched, "batch_id")

@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from versa_spark.dedup import _pair_expand, family_hash_sql
+from versa_spark.sqlquote import quote_literal
+
 
 def _scalar_col(df: DataFrame, expr, name: str) -> DataFrame:
     """Attach a 1-row aggregate of *df* as a constant column via a
@@ -49,19 +52,12 @@ def turn_entity_sets(linked: DataFrame) -> DataFrame:
 
 def _pairs_from_sets(sets: DataFrame) -> DataFrame:
     """Unordered pairs (a < b) from each row's sorted ``ents`` array,
-    generated INSIDE the row via nested array transforms — JVM
+    generated INSIDE the row by dedup's pair expansion — JVM
     expressions, no self-join, no shuffle.  Output is one row per
     (turn, pair) occurrence."""
-    ents = F.col("ents")
-    pair_structs = F.flatten(F.transform(
-        ents,
-        lambda x, i: F.transform(
-            # slice is 1-based; i is 0-based → elements strictly after x
-            F.slice(ents, i + F.lit(2), F.size(ents)),
-            lambda y: F.struct(x.alias("a"), y.alias("b")))))
     return (sets
             .select("conv_id", "turn_idx",
-                    F.explode(pair_structs).alias("p"))
+                    F.explode(_pair_expand("ents")).alias("p"))
             .select("conv_id", "turn_idx", "p.a", "p.b"))
 
 
@@ -87,12 +83,13 @@ def cooccurrence_pmi(linked: DataFrame, min_pairs: int = 1) -> DataFrame:
     minhash_lsh_candidates lifecycle: without this, one action executes
     the upstream extraction three times).
 
-    When the producer ALREADY has per-turn entity arrays — the KG
-    job's zero-exchange extraction emits exactly that (`eids`,
-    kg/extract.turn_entity_ids) — call ``cooccurrence_pmi_from_sets``
-    instead: it skips this function's collect_set exchange entirely
-    (measured 37.5 s → 5.1 s best-lap at 4M turns, local[32]), leaving
-    only the narrow pair/marginal aggregations."""
+    When the producer ALREADY has per-turn entity arrays — the
+    ``turns`` frame ``kg.graph.build_graph`` persists carries them
+    (`eids`, kg/extract.turn_entity_ids; ``KGJob`` writes mention rows
+    instead) — call ``cooccurrence_pmi_from_sets`` instead: it skips
+    this function's collect_set exchange entirely (measured 37.5 s →
+    5.1 s best-lap at 4M turns, local[32]), leaving only the narrow
+    pair/marginal aggregations."""
     sets = turn_entity_sets(linked)
     return cooccurrence_pmi_from_sets(sets, min_pairs=min_pairs)
 
@@ -244,10 +241,6 @@ def triangle_stats(edges: DataFrame, src: str = "src",
            .filter(F.col("a") != F.col("b"))
            .distinct()
            .persist())
-    return _triangle_stats_body(und)
-
-
-def _triangle_stats_body(und: DataFrame) -> DataFrame:
     try:
         return _triangle_stats_assemble(und).localCheckpoint(eager=True)
     finally:
@@ -353,10 +346,9 @@ def negative_samples(triples: DataFrame, entities: DataFrame,
                          F.row_number().over(
                              Window.orderBy("_ent")) - 1))
     n_vocab = _scalar_col(vocab, F.count("*"), "_nv")
-    h = F.conv(F.substring(
-        F.md5(F.concat_ws(":", "origin", "rel", "target",
-                          F.col("neg_ix").cast("string"),
-                          F.lit(str(seed)))), 1, 12), 16, 10).cast("long")
+    h = F.expr(family_hash_sql("md5", (
+        "concat_ws(':', origin, rel, target, cast(neg_ix as string), "
+        f"{quote_literal(str(seed))})")))
     return (triples
             .select("origin", "rel", "target",
                     F.explode(F.array(*[F.lit(i) for i in range(k)]))

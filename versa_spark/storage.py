@@ -44,45 +44,22 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 
 def _write_meta(spark: SparkSession, path: str, n_buckets: int) -> None:
-    fs, hpath = _hadoop_fs(spark, os.path.join(path, _META_FILE))
-    out = fs.create(hpath, True)
-    try:
-        out.write(json.dumps({"n_buckets": n_buckets,
-                              "bucket_hash": "xxhash64"}).encode("ascii"))
-    finally:
-        out.close()
+    write_json_sidecar(spark, os.path.join(path, _META_FILE),
+                       {"n_buckets": n_buckets, "bucket_hash": "xxhash64"})
 
 
 def stored_n_buckets(path: str,
                      spark: SparkSession | None = None) -> int | None:
     """The bucket count a model at *path* was written with (None for
     tables predating the sidecar).  Reads through the Hadoop FileSystem
-    API of the active session, so non-local model paths (hdfs://,
-    s3a://) resolve; with no session it falls back to the local
-    filesystem."""
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    if spark is None:
-        try:
-            with open(os.path.join(path, _META_FILE)) as f:
-                return int(json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            return None
-    fs, hpath = _hadoop_fs(spark, os.path.join(path, _META_FILE))
-    # ONLY a genuinely-absent sidecar degrades to None (pre-sidecar
-    # table).  Read/parse/transport failures PROPAGATE: swallowing e.g.
-    # a transient S3 error here would silently disable the
-    # wrong-bucket-count guard and turn a retryable fault into an
-    # empty (wrongly pruned) query result.
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
-    finally:
-        stream.close()
-    return int(json.loads(raw)["n_buckets"])
+    API of *spark* (default: the active session), so non-local model
+    paths (hdfs://, s3a://) resolve.  ONLY a genuinely-absent sidecar
+    degrades to None; read/parse/transport failures propagate —
+    swallowing e.g. a transient S3 error here would silently disable
+    the wrong-bucket-count guard and turn a retryable fault into an
+    empty (wrongly pruned) query result."""
+    meta = read_json_sidecar(spark, os.path.join(path, _META_FILE))
+    return None if meta is None else int(meta["n_buckets"])
 
 
 def write_model(df: DataFrame, path: str, n_buckets: int = 64,

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from versa_spark.dedup import normalized_text
+from versa_spark.dedup import family_hash_sql, normalized_text
+from versa_spark.sqlquote import quote_ident, quote_literal
 
 # A BPE-ish token regex: word pieces, numbers, or single non-space symbols
 # (the GPT-2 pre-tokenizer shape, simplified to ASCII classes).
@@ -178,13 +179,8 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                      F.sequence(F.lit(0), F.length("_norm") - k),
                      lambda i: F.col("_norm").substr(i + 1, F.lit(k)))))
                  .alias("pos", "gram")))
-    if hash_family == "xxhash64":
-        h = F.xxhash64("gram")
-    elif hash_family == "md5":
-        h = F.conv(F.substring(F.md5("gram"), 1, 12), 16, 10).cast("long")
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-    g = g.select("doc_id", "_n_grams", "pos", h.alias("h"))
+    g = g.select("doc_id", "_n_grams", "pos",
+                 F.expr(family_hash_sql(hash_family, "gram")).alias("h"))
     w = (Window.partitionBy("doc_id").orderBy("pos")
          .rowsBetween(Window.currentRow, window - 1))
     full = (g.withColumn("fp", F.min("h").over(w))
@@ -342,11 +338,9 @@ def _id_hash48(id_col: str, seed: int, hash_family: str):
     if hash_family == "xxhash64":
         return F.pmod(F.xxhash64(F.col(id_col).cast("string"),
                                  F.lit(seed)), F.lit(1 << 48))
-    if hash_family == "md5":
-        return F.conv(F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"),
-                           F.lit(f":{seed}"))), 1, 12), 16, 10).cast("long")
-    raise ValueError(f"unknown hash_family {hash_family!r}")
+    return F.expr(family_hash_sql(hash_family, (
+        f"concat(cast({quote_ident(id_col)} as string), "
+        f"{quote_literal(f':{seed}')})")))
 
 
 def sample_to_token_budget(df: DataFrame, budgets: dict,
