@@ -1854,10 +1854,11 @@ def test_dedup_index_compaction(tmp_path, spark):
             src, mode="append")
 
     dst = str(tmp_path / "dst_ix")
-    dedup.compact_dedup_index(spark, src, dst, n_files=1)
+    dedup.compact_dedup_index(spark, src, dst)
     assert (dedup.read_dedup_index_meta(spark, dst)
             == dedup.read_dedup_index_meta(spark, src))
-    # bounded layout: one part file per table after three writes
+    # bounded layout: one part file per table after three writes (the
+    # scan split rule's count at this size)
     for t in ("banded", "shingles", "sizes"):
         parts = [f for f in os.listdir(os.path.join(dst, t))
                  if f.endswith(".parquet")]

@@ -511,62 +511,80 @@ def test_salted_canonicalization_plan_shape(spark):
     assert salted_keys and final_keys, key_lines
 
 
-def test_stage_epochs_hold_one_file_per_write_task(spark, tmp_path,
-                                                    monkeypatch):
-    """Layout v3: a stage epoch is plain part files, no ``pt=`` bucket
-    directories, and each stage epoch of a 45-conversation append holds
-    at most one part file per task of its write (the last job in the
-    write's job group, read from the status tracker).  So the append
-    writes at most stages × max(cores, shuffle partitions) files; the
-    bucketed layout wrote up to tasks × buckets per stage."""
+def test_small_stage_epochs_hold_one_file(spark, tmp_path):
+    """A stage epoch is plain part files, no ``pt=`` bucket directories,
+    and each written stage epoch of a 45-conversation base and of a
+    45-conversation append holds exactly one part file: its estimated
+    size is far below one scan split (``storage._split_count``), so the
+    write is coalesced to one task, not one per input split, union
+    branch or shuffle partition.  The same holds under
+    ``detect='dictionary'``, whose ``mentions`` plan estimate is a join
+    product: the stage is sized by the rows it reads."""
     import os as _os
-    from pyspark.sql import DataFrameWriter
     tx = synthetic_transcripts(spark, n_convs=90, turns_per_conv=10)
     conv_no = F.substring_index("conv_id", "-", -1).cast("int")
-    wd = str(tmp_path / "kgd")
-    job = KGJob(spark, wd)
-    job.run(tx.filter(conv_no < 45), input_fingerprint="base")
-
-    sc = spark.sparkContext
-    parquet = DataFrameWriter.parquet
-    groups = {}
-
-    def grouped(self, path, *a, **kw):
-        groups[path] = f"v3-write-{len(groups)}"
-        sc.setJobGroup(groups[path], groups[path])
-        try:
-            parquet(self, path, *a, **kw)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
-    with monkeypatch.context() as m:
-        m.setattr(DataFrameWriter, "parquet", grouped)
+    for detect in ("lexicon", "dictionary"):
+        wd = str(tmp_path / detect)
+        job = KGJob(spark, wd, detect=detect,
+                    dictionary=linking.canonical_dictionary(spark))
+        job.run(tx.filter(conv_no < 45), input_fingerprint="base")
         job.append_batch(tx.filter(conv_no >= 45), "b1",
                          input_fingerprint="b1")
 
-    tracker = sc.statusTracker()
-    stages = job._required_stages()
-    assert sorted(_os.path.dirname(p) for p in groups) == sorted(
-        _os.path.join(wd, st) for st in stages)
-    total = 0
-    for path, group in groups.items():
-        assert _os.path.basename(path) == "ep=1", path
-        names = _os.listdir(path)
-        assert not [n for n in names
-                    if _os.path.isdir(_os.path.join(path, n))], (path, names)
-        n_files = sum(n.endswith(".parquet") for n in names)
-        write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
-        n_tasks = tracker.getStageInfo(max(write_job.stageIds)).numTasks
-        assert n_files <= n_tasks, (path, n_files, n_tasks)
-        total += n_files
-    for st in stages:
-        assert not [d for d, _, _ in _os.walk(_os.path.join(wd, st))
-                    if _os.path.basename(d).startswith("pt=")], st
-    cap = max(sc.defaultParallelism,
-              int(spark.conf.get("spark.sql.shuffle.partitions")))
-    assert 0 < total <= len(stages) * cap, (total, cap)
-    assert job.metrics["graph@b1"]["rows"] > 1000
+        for st in job._required_stages():
+            for ep in ("ep=0", "ep=1"):
+                path = _os.path.join(wd, st, ep)
+                names = _os.listdir(path)
+                assert not [n for n in names if _os.path.isdir(
+                    _os.path.join(path, n))], (path, names)
+                assert sum(n.endswith(".parquet") for n in names) == 1, (
+                    path, names)
+        assert job.metrics["graph@b1"]["rows"] > 1000
+        assert job.metrics["mentions@b1"]["rows"] > 0
+
+
+def test_split_count_rule():
+    """The write-sizing arithmetic: Spark's scan split rule over the
+    size estimate, no coalesce when the size is unknown."""
+    from versa_spark.storage import _split_count
+    mb, cores = 1 << 20, 4
+    max_b, open_b, unknown = 128 * mb, 4 * mb, (1 << 63) - 1
+
+    def n(size):
+        return _split_count(size, cores, max_b, open_b, unknown)
+    assert n(0) == n(7_000) == n(2 * mb) == 1
+    assert n(cores * 40 * mb) == cores
+    assert n(100 * max_b) == 100
+    assert n(unknown) is None
+    assert n(unknown // 2) is None      # no JVM int holds the count
+
+
+def test_split_sized_keeps_unsized_frames(spark):
+    """A frame without size statistics (an RDD scan reports
+    ``spark.sql.defaultSizeInBytes``) keeps its partitions; a small
+    sized one is coalesced to one."""
+    from versa_spark.storage import _split_sized
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(40)], 8)
+    unsized = spark.createDataFrame(rdd, "x int")
+    assert _split_sized(unsized).rdd.getNumPartitions() == 8
+    sized = spark.range(0, 40, 1, 8)
+    assert _split_sized(sized).rdd.getNumPartitions() == 1
+
+
+def test_split_sized_weighs_rows_read(spark):
+    """Given the rows a write reads, the size is at least rows × Spark's
+    default row width, whatever the plan estimate says: a frame whose
+    byte estimate is tiny keeps one task per core when the count says
+    it is large, and an unsized frame with a small count goes to one."""
+    from versa_spark.storage import _split_sized
+    cores = spark.sparkContext.defaultParallelism
+    tiny = spark.range(0, 40, 1, 2 * cores)
+    # 16 bytes a row (8 overhead + one long): cores × 16 MB in all
+    assert (_split_sized(tiny, rows=cores << 20).rdd.getNumPartitions()
+            == cores)
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(40)], 8)
+    unsized = spark.createDataFrame(rdd, "x int")
+    assert _split_sized(unsized, rows=40).rdd.getNumPartitions() == 1
 
 
 def test_link_entities_scored_partitioning_invariant(spark):

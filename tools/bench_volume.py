@@ -519,7 +519,9 @@ def lap_kgappend(spark: SparkSession) -> dict:
     (10%) batch appended via KGJob.append_batch vs a full 4.4M-turn
     rebuild.  The append is timed FIRST, the rebuild second, so any
     warm-JVM advantage biases AGAINST the append claim.  Exactness is
-    asserted (combined graph row count == rebuild row count)."""
+    asserted (combined graph row count == rebuild row count).  Also
+    reports the part files of each base stage epoch and the part files
+    the append added."""
     import shutil
     import tempfile
 
@@ -557,6 +559,9 @@ def lap_kgappend(spark: SparkSession) -> dict:
         t0 = time.time()
         job.run(base_tx, input_fingerprint="base")
         base_s = time.time() - t0
+        base_files = {st: part_usage(os.path.join(wd_incr, st, "ep=0"))[0]
+                      for st in job.STAGES}
+        files0, _ = part_usage(wd_incr)
 
         t0 = time.time()
         # 'trust' mirrors production exactly-once upstream delivery; the
@@ -565,6 +570,7 @@ def lap_kgappend(spark: SparkSession) -> dict:
         job.append_batch(batch_tx, "b001", input_fingerprint="b1",
                          on_existing="trust")
         append_s = time.time() - t0
+        append_files = part_usage(wd_incr)[0] - files0
         combined_rows = job.table("graph").count()
 
         t0 = time.time()
@@ -590,7 +596,9 @@ def lap_kgappend(spark: SparkSession) -> dict:
         return {"n_base_turns": n_base_convs * tpc,
                 "n_batch_turns": n_batch,
                 "base_build_sec": round(base_s, 3),
+                "base_stage_part_files": base_files,
                 "append_sec": round(append_s, 3),
+                "append_part_files": append_files,
                 "append_turns_per_sec": round(n_batch / append_s, 1),
                 "full_rebuild_sec": round(full_s, 3),
                 "rebuild_turns_per_sec": round(

@@ -1053,8 +1053,7 @@ def read_dedup_index_meta(spark: SparkSession | None,
     return read_json_sidecar(spark, f"{path}/{_INDEX_META}")
 
 
-def compact_dedup_index(spark: SparkSession, src: str, dst: str,
-                        n_files: int | None = None) -> None:
+def compact_dedup_index(spark: SparkSession, src: str, dst: str) -> None:
     """Rewrite an LSH index into a fresh path with bounded file counts,
     migrating it to format 2 on the way.
 
@@ -1062,7 +1061,11 @@ def compact_dedup_index(spark: SparkSession, src: str, dst: str,
     files to banded/shingles/sizes, and after thousands of ingestion
     batches the per-query scan cost is dominated by file-open overhead
     (the small-file pathology: per-file open and footer costs grow with
-    the number of appends, not with the rows indexed).
+    the number of appends, not with the rows indexed).  Each table is
+    rewritten with the KG job's write-sizing rule
+    (``storage._split_sized``) over its on-disk size, which a plain
+    rewrite's cost tracks: as many files as Spark's scan split rule
+    gives that size, one for a small index.
 
     Migration: a format-1 index (sidecar without ``format``) stored one
     ``(doc_id, sh_h)`` row per shingle hash.  Those rows are regrouped
@@ -1085,8 +1088,7 @@ def compact_dedup_index(spark: SparkSession, src: str, dst: str,
                          "(delete it first)")
     from pyspark.errors import AnalysisException
 
-    from versa_spark.storage import write_json_sidecar
-    n = n_files or spark.sparkContext.defaultParallelism
+    from versa_spark.storage import _split_sized, write_json_sidecar
     for table in ("banded", "shingles", "sizes"):
         try:
             t = spark.read.parquet(f"{src}/{table}")
@@ -1099,8 +1101,7 @@ def compact_dedup_index(spark: SparkSession, src: str, dst: str,
             continue
         if table == "shingles" and meta.get("format") != _INDEX_FORMAT:
             t = t.groupBy("doc_id").agg(F.collect_list("sh_h").alias("sh"))
-        (t.repartition(n)
-         .write.mode("overwrite").parquet(f"{dst}/{table}"))
+        _split_sized(t).write.mode("overwrite").parquet(f"{dst}/{table}")
     write_json_sidecar(spark, f"{dst}/{_INDEX_META}",
                        {**meta, "format": _INDEX_FORMAT})
 

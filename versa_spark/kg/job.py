@@ -25,17 +25,27 @@ the committed epochs.  See append_batch's docstring for the disjointness
 contract and the idempotent commit protocol.
 
 Layout (v4): each stage epoch is plain ``part-*.parquet`` files under
-``<stage>/ep=<n>/``, as many as the write has tasks (input splits, or
-the shuffle partitions AQE coalesced), with no bucket directories: every
-read scans whole committed epochs, so buckets would prune nothing and
-multiply the files by tasks × buckets.  :meth:`KGJob.compact_to`
-bounds the files that many appends accumulate, and it is the one reader
-of the older layouts (v1 per-batch directories, v2 ``ep=<n>/pt=<k>/``
-buckets, v3 written ``linked``/``edges``), which every other entry point
-refuses.  The lineage manifest stands in for Iceberg snapshot metadata:
-like an Iceberg scan over its manifest list, every read is one relation
-over the epochs the manifest commits (rows hold the epoch number, never
-a path, so a copied workdir reads as itself).
+``<stage>/ep=<n>/``, with no bucket directories: every read scans whole
+committed epochs, so buckets would prune nothing.  The write is
+coalesced to the file count Spark's scan split rule gives the stage's
+estimated size (``storage._split_sized``), not one file per upstream
+partition (input split, union branch or shuffle partition).  The size
+is the larger of the plan's byte estimate and the rows the stage reads
+(the manifest rows of the stages before it) times Spark's default row
+width, so compressible input, explodes and join estimates do not shrink
+a CPU-heavy stage: one file for a small append in every detect mode,
+one per core or more once a stage outgrows ``cores ×
+spark.sql.files.openCostInBytes`` (4 MB each by default).
+``turn_order``, the first stage, reads uncounted transcripts and is
+written as built: AQE sizes its window's shuffle output.
+:meth:`KGJob.compact_to` bounds the files that many appends accumulate
+(an epoch per stage per append), and it is the one reader of the older
+layouts (v1 per-batch directories, v2 ``ep=<n>/pt=<k>/`` buckets, v3
+written ``linked``/``edges``), which every other entry point refuses.
+The lineage manifest stands in for Iceberg snapshot metadata: like an
+Iceberg scan over its manifest list, every read is one relation over
+the epochs the manifest commits (rows hold the epoch number, never a
+path, so a copied workdir reads as itself).
 """
 
 from __future__ import annotations
@@ -50,6 +60,7 @@ from pyspark.sql.types import StructType
 
 from versa_spark.kg import canonicalize, extract, transcripts as T
 from versa_spark.kg.graph import linked_mentions
+from versa_spark.storage import _split_sized
 
 MANIFEST = "_manifest.jsonl"
 
@@ -201,12 +212,20 @@ class KGJob:
                 .drop("ep", "pt"))
 
     def _run_stage(self, stage: str, input_fingerprint: str,
-                   build, key: str | None = None) -> DataFrame:
+                   build, key: str | None = None,
+                   in_rows: int | None = None) -> DataFrame:
         """Run or resume one stage: skip when the manifest has an ``ok``
         row with the same input fingerprint; else (re)compute and commit.
         ``key`` overrides the manifest key (batch appends use
         ``stage@batch_id``).  The base run writes epoch 0; a batch keeps
-        the epoch of its committed rows, and a new batch takes the next."""
+        the epoch of its committed rows, and a new batch takes the next.
+
+        ``in_rows``, the rows the stage reads as committed stages
+        counted them, sizes the write with the plan's byte estimate
+        (``storage._split_sized``).  None writes the frame as built:
+        ``turn_order``, the first stage, reads uncounted transcripts,
+        and AQE already sizes its window's shuffle output from runtime
+        statistics."""
         key = key or stage
         manifest = self._read_manifest()
         bid = key.partition("@")[2]
@@ -223,6 +242,8 @@ class KGJob:
             return self._read_committed(key, until="")
         t0 = time.time()
         df = build()
+        if in_rows is not None:
+            df = _split_sized(df, in_rows)
         # rows (and the edges view's rows) are observed on the write
         # itself, not re-scanned after it
         obs = Observation()
@@ -242,7 +263,7 @@ class KGJob:
 
     # -- the pipeline --------------------------------------------------
 
-    STAGES = ("turns", "turn_order", "mentions", "entity_stats", "graph")
+    STAGES = ("turn_order", "turns", "mentions", "entity_stats", "graph")
 
     def _run_pipeline(self, transcripts_df: DataFrame, fp: str,
                       batch_id: str | None = None) -> dict[str, DataFrame]:
@@ -252,24 +273,32 @@ class KGJob:
         conv_id — so on a batch whose conv_ids are disjoint from the base,
         the per-batch outputs are EXACTLY the rows a full rebuild would
         add."""
-        def stage(name, build):
-            key = name if batch_id is None else f"{name}@{batch_id}"
-            return self._run_stage(name, fp, build, key=key)
+        def key(name):
+            return name if batch_id is None else f"{name}@{batch_id}"
 
+        def stage(name, build, reads=()):
+            # the rows read, as the stages committed before it counted
+            in_rows = (sum(self.metrics[key(r)]["rows"] for r in reads)
+                       if reads else None)
+            return self._run_stage(name, fp, build, key=key(name),
+                                   in_rows=in_rows)
+
+        # turn_order first: it counts the transcripts that turns reads
+        turn_order = stage(
+            "turn_order", lambda: T.turn_order(transcripts_df))
         # turns: pure projection (turn IRI), NO window — the rank exchange
         # would shuffle the fat text column; the stable-ordering artifact
         # is its own slim stage instead.
         turns = stage(
             "turns",
-            lambda: T.ordered_turns(transcripts_df, with_rank=False))
-        turn_order = stage(
-            "turn_order", lambda: T.turn_order(transcripts_df))
+            lambda: T.ordered_turns(transcripts_df, with_rank=False),
+            reads=("turn_order",))
         mentions = stage("mentions", lambda: linked_mentions(
-            turns, self.dictionary, self.detect))
+            turns, self.dictionary, self.detect), reads=("turns",))
         linked = self._linked(mentions)
         entity_stats = stage(
             "entity_stats", lambda:
-            canonicalize.entity_mention_counts(linked))
+            canonicalize.entity_mention_counts(linked), reads=("mentions",))
         rels = None
         if self.relations:
             def _build_rels():
@@ -281,7 +310,7 @@ class KGJob:
                         "origin", "rel", "target"),
                         ["origin", "rel", "target"], "left_anti")
                 return r
-            rels = stage("relations", _build_rels)
+            rels = stage("relations", _build_rels, reads=("turns",))
 
         def _build_graph():
             # the one non-conversation-local link family: a batch's
@@ -296,7 +325,9 @@ class KGJob:
                  .unionByName(canonicalize.entity_links(entity_stats,
                                                         exclude=earlier)))
             return g.unionByName(rels) if rels is not None else g
-        graph = stage("graph", _build_graph)
+        graph = stage("graph", _build_graph, reads=(
+            "turns", "turn_order", "mentions", "entity_stats")
+            + (("relations",) if rels is not None else ()))
         self._view_metrics("" if batch_id is None else f"@{batch_id}")
         out = {"turns": turns, "turn_order": turn_order,
                "mentions": mentions, "linked": linked,
@@ -489,10 +520,12 @@ class KGJob:
         """Rewrite base + all committed batches into a FRESH workdir as
         its base run — the Iceberg rewrite-data-files analogue that
         bounds the small-file count after many appends (each append adds
-        an epoch of files per stage).  It is also the migration of (and
-        the only reader of) the older layouts: v1 per-batch directories,
-        v2 ``pt=`` buckets and v3 written ``linked``/``edges`` all
-        compact to a v4 job (``linked`` rows become ``mentions``).
+        an epoch of files per stage): every stage is rewritten as one
+        epoch, sized to the combined data by the same split rule.  It
+        is also the migration of (and the only reader of) the older
+        layouts: v1 per-batch directories, v2 ``pt=`` buckets and v3
+        written ``linked``/``edges`` all compact to a v4 job (``linked``
+        rows become ``mentions``).
 
         Crash-safe by construction: the source workdir is never touched,
         so a crashed compaction is recovered by deleting the partial
@@ -528,6 +561,8 @@ class KGJob:
         for stage_name in self._required_stages():
             src = ("linked" if stage_name == "mentions" and "linked" in
                    manifest else stage_name)
+            rows = [manifest[k].get("rows") for k in [src] + [
+                f"{src}@{b}" for b in _batch_ids(manifest, src)]]
             if per_batch_dirs:
                 # base <stage>/ plus batches/<id>/<stage>: Spark refuses
                 # several roots that each hold pt= dirs, hence a union
@@ -541,7 +576,8 @@ class KGJob:
             else:
                 df = self._read_committed(src)
             target._run_stage(stage_name, fp,
-                              lambda d=self._rollup(stage_name, df): d)
+                              lambda d=self._rollup(stage_name, df): d,
+                              in_rows=None if None in rows else sum(rows))
         return target
 
     def batch_ids(self, stage: str = "graph") -> list[str]:

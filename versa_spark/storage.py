@@ -18,6 +18,7 @@ encoding for free.  At Iceberg scale the same layout is
 from __future__ import annotations
 
 import json
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -82,6 +83,53 @@ def write_model(df: DataFrame, path: str, n_buckets: int = 64,
 
 def read_model(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def _split_count(size: int, cores: int, max_bytes: int, open_cost: int,
+                 unknown: int) -> int | None:
+    """Files to write ``size`` estimated bytes as: Spark's file-scan
+    split rule (``FilePartition.maxSplitBytes``) without its per-file
+    open-cost padding — ``split = min(max_bytes, max(open_cost,
+    size / cores))``, ``ceil(size / split)`` files.  So a write of at
+    least ``cores × open_cost`` bytes keeps ``cores`` tasks, and no file
+    holds more than one scan split.  None when the size is ``unknown``
+    (``spark.sql.defaultSizeInBytes``: no statistics) or the count
+    overflows a JVM int (a join's product estimate, not a size)."""
+    if size >= unknown:
+        return None
+    split = min(max_bytes, max(open_cost, size / cores))
+    n = max(1, math.ceil(size / split))
+    return n if n < 2**31 else None
+
+
+def _split_sized(df: DataFrame, rows: int | None = None) -> DataFrame:
+    """``df`` coalesced (no shuffle) to the file count
+    :func:`_split_count` gives its estimated size, so a small write
+    lands in one file, not one per upstream partition (input split,
+    union branch or shuffle partition).
+
+    The size is the optimized plan's byte estimate (a driver-side call
+    that runs no Spark job).  That estimate starts from a file scan's
+    on-disk bytes, so compressible input reads as far smaller than the
+    rows it decodes to, and a join reports its sides' product.  Given
+    ``rows`` (a count the caller already holds, such as the rows the
+    write reads), the size is at least ``rows`` times Spark's default
+    row width (``EstimationUtils.getSizePerRow`` without column
+    statistics), and an unusable plan estimate is ignored.  Without
+    ``rows``, a frame whose estimate is unknown is returned as it is.
+    ``coalesce`` never adds partitions, so a large write keeps its
+    parallelism."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    unknown = conf.defaultSizeInBytes()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    if rows is not None:
+        width = 8 + df._jdf.schema().defaultSize()
+        size = max(rows * width, size if size < unknown else 0)
+    n = _split_count(size, df.sparkSession.sparkContext.defaultParallelism,
+                     conf.filesMaxPartitionBytes(),
+                     conf.filesOpenCostInBytes(), unknown)
+    return df if n is None else df.coalesce(n)
 
 
 def write_graph_tables(graph: DataFrame, edges: DataFrame, base_path: str,
