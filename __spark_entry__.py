@@ -27,8 +27,9 @@ TYPE_REL = "http://bibfra.me/purl/versa/type"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the transcript → knowledge-graph construction pipeline
-    (north rule) on sf0.001 — stable turn ordering, pandas-UDF mention
-    extraction, broadcast entity linking, graph triple materialization."""
+    (north rule) on sf0.001 — stable turn ordering, JVM regex mention
+    extraction, literal-map entity linking, graph triple
+    materialization."""
     return _q_kg_graph_triples(spark, "/root/testdata/sf0.001")
 
 
@@ -118,19 +119,14 @@ def _q_kg_turn_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized mention detection + broadcast entity linking
-    (kg.extract + kg.linking)."""
-    from versa_spark.kg import extract, linking
+    """Vectorized mention detection + entity linking through the
+    lexicon's literal map (kg.extract.lexicon_linked_mentions: no join,
+    no Python node)."""
+    from versa_spark.kg import extract
     from versa_spark.kg.transcripts import (ordered_turns,
                                             transcripts_from_documents)
     turns = ordered_turns(transcripts_from_documents(spark, sf_dir))
-    # surface_universe: turn_mentions can only emit lexicon surfaces, so
-    # the miss-fallback IDs fold into the plan driver-side and the linker
-    # is one broadcast join with no ArrowEvalPython node (guide §4; r07
-    # 2nd pass — results identical, value-oracled)
-    linked = linking.link_entities(extract.turn_mentions(turns),
-                                   linking.canonical_dictionary(spark),
-                                   surface_universe=extract.LEXICON)
+    linked = extract.lexicon_linked_mentions(turns)
     return linked.select("conv_id", "turn_idx", "surface", "entity_iri")
 
 
@@ -152,15 +148,13 @@ def _q_kg_mentions_bigdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_kg_entity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted-key canonicalization rollup (kg.canonicalize)."""
-    from versa_spark.kg import canonicalize, extract, linking
+    from versa_spark.kg import canonicalize, extract
     from versa_spark.kg.transcripts import (ordered_turns,
                                             transcripts_from_documents)
     turns = ordered_turns(transcripts_from_documents(spark, sf_dir))
-    # surface_universe: same zero-Python linking as _q_kg_mentions — the
-    # salted rollup then aggregates a pure-JVM plan end to end
-    linked = linking.link_entities(extract.turn_mentions(turns),
-                                   linking.canonical_dictionary(spark),
-                                   surface_universe=extract.LEXICON)
+    # the same literal-map linking as _q_kg_mentions: the salted rollup
+    # aggregates a pure-JVM plan with no join
+    linked = extract.lexicon_linked_mentions(turns)
     stats = canonicalize.entity_mention_counts(linked)
     return stats.select("entity_iri", "canonical",
                         F.col("n_mentions").cast("long").alias("n_mentions"),
@@ -753,16 +747,13 @@ def _q_ivf_probe_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_linked(spark: SparkSession, sf_dir: str):
     """(turns, linked) for the analytics queries — the kg_mentions
     derivation (transcripts from documents → vectorized extraction →
-    broadcast linking), shared so every analytics oracle reuses the
+    literal-map linking), shared so every analytics oracle reuses the
     proven mentions CTE."""
-    from versa_spark.kg import extract, linking
+    from versa_spark.kg import extract
     from versa_spark.kg.transcripts import (ordered_turns,
                                             transcripts_from_documents)
     turns = ordered_turns(transcripts_from_documents(spark, sf_dir))
-    linked = linking.link_entities(extract.turn_mentions(turns),
-                                   linking.canonical_dictionary(spark),
-                                   surface_universe=extract.LEXICON)
-    return turns, linked
+    return turns, extract.lexicon_linked_mentions(turns)
 
 
 def _kg_entity_sets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -282,12 +282,87 @@ def test_kgjob_lexicon_with_custom_linking_dictionary(spark, tx, tmp_path):
         for r in spark_rows)
 
 
+def test_lexicon_misses_get_resource_id_fallback_iri(spark):
+    """Each of the lexicon's surfaces that a caller dictionary lacks
+    links to the ``ids.resource_id`` fallback IRI, unlinked, with its
+    own surface as canonical; a null canonical or IRI in a dictionary
+    row falls back the same way.  The linker's plan holds no join, no
+    exchange and no Python node."""
+    from versa_spark.ids import resource_id
+    surfaces = sorted(extract.LEXICON)
+    turns = spark.createDataFrame(
+        [("c0", 0, "t0", " ".join(surfaces))],
+        "conv_id string, turn_idx int, turn_iri string, text string")
+    schema = "surface string, canonical string, entity_iri string"
+
+    def fallback(s):
+        return extract.ENT + "unlinked/" + resource_id(
+            extract.TYPE_CONCEPT, [(extract.ENT + "name", s)])
+
+    linked = extract.lexicon_linked_mentions(
+        turns, spark.createDataFrame([("elsewhere", "x", "u:x")], schema))
+    got = {r.surface: r for r in linked.collect()}
+    assert sorted(got) == surfaces and len(surfaces) == 21
+    for s in surfaces:
+        assert (got[s].linked, got[s].canonical, got[s].entity_iri) == (
+            False, s, fallback(s)), s
+    plan = _fmt_plan(linked)
+    for node in ("Join", "Exchange", "EvalPython"):
+        assert node not in plan, plan
+
+    nulls = spark.createDataFrame(
+        [("spark", None, "u:spark"), ("join", "J", None)], schema)
+    got = {r.surface: tuple(r)[4:] for r in
+           extract.lexicon_linked_mentions(turns, nulls).collect()}
+    assert got["spark"] == (True, "spark", "u:spark")
+    assert got["join"] == (False, "J", fallback("join"))
+
+
+def test_duplicate_dictionary_surface_raises_before_any_stage(spark,
+                                                               tmp_path):
+    """A caller dictionary listing a lexicon surface twice would link
+    each of its mentions twice (doubling entity_stats.n_mentions), so
+    the job refuses it before any stage commits."""
+    import os as _os
+    d = linking.canonical_dictionary(spark)
+    dup = d.unionByName(d.filter("surface = 'spark'")
+                        .withColumn("entity_iri", F.lit("custom:spark")))
+    tx = synthetic_transcripts(spark, n_convs=5, turns_per_conv=4)
+    wd = str(tmp_path / "dup")
+    with pytest.raises(ValueError, match="spark"):
+        KGJob(spark, wd, dictionary=dup).run(tx)
+    assert not _os.path.exists(_os.path.join(wd, "_manifest.jsonl"))
+    with pytest.raises(ValueError, match="spark"):
+        extract.lexicon_linked_mentions(ordered_turns(tx), dup)
+
+
+def test_dictionary_strings_round_trip_through_kgjob(spark, tmp_path):
+    """Caller strings with a quote, a backslash and a non-ASCII
+    character in ``canonical`` and ``entity_iri`` reach the linked
+    mentions, the entity rollup and the graph exactly as given."""
+    want = {s: (f"{c} it's \"q\" \\ é", f"urn:x:{c}'\"\\é")
+            for s, c in extract.LEXICON.items()}
+    d = spark.createDataFrame(
+        [(s, c, i) for s, (c, i) in want.items()],
+        "surface string, canonical string, entity_iri string")
+    tx = synthetic_transcripts(spark, n_convs=10, turns_per_conv=10)
+    out = KGJob(spark, str(tmp_path / "q"), dictionary=d).run(tx)
+    linked = out["linked"].collect()
+    assert linked and all(
+        r.linked and (r.canonical, r.entity_iri) == want[r.surface]
+        for r in linked)
+    seen = {want[r.surface] for r in linked}
+    assert {(r.canonical, r.entity_iri)
+            for r in out["entity_stats"].collect()} == seen
+    targets = {r.target for r in out["graph"]
+               .filter(F.col("rel") == extract.REL_MENTIONS).collect()}
+    assert targets == {i for _c, i in seen}
+
+
 def test_salted_equals_unsalted_canonicalization(spark):
     tx = synthetic_transcripts(spark, n_convs=50, turns_per_conv=10)
     turns = ordered_turns(tx)
-    linked = linking.link_entities(
-        extract.turn_mentions(turns),
-        linking.canonical_dictionary(spark))
+    linked = extract.lexicon_linked_mentions(turns)
     salted = canonicalize.entity_mention_counts(linked)
     # the unsalted reference: one plain groupBy
     plain = (linked.groupBy("entity_iri", "canonical")
@@ -311,7 +386,7 @@ def test_unlinked_mentions_get_deterministic_ids(spark):
         [("c0", 0, "http://example.org/transcript/c0/0", "zzz-novel")],
         "conv_id string, turn_idx int, turn_iri string, surface string")
     # dictionary without the surface → miss path
-    linked = linking.link_entities(
+    linked = linking.link_entities_scored(
         df, linking.canonical_dictionary(spark)).collect()[0]
     expected = ENT + "unlinked/" + resource_id(
         TYPE_CONCEPT, [(ENT + "name", "zzz-novel")])
@@ -330,7 +405,7 @@ def test_unlinked_non_ascii_ids_match_python_path(spark):
     df = spark.createDataFrame(
         [("c0", i, f"t{i}", s) for i, s in enumerate(surfaces)],
         "conv_id string, turn_idx int, turn_iri string, surface string")
-    got = {r.surface: r.entity_iri for r in linking.link_entities(
+    got = {r.surface: r.entity_iri for r in linking.link_entities_scored(
         df, linking.canonical_dictionary(spark)).collect()}
     for s in surfaces:
         expected = ENT + "unlinked/" + resource_id(
@@ -359,10 +434,8 @@ def test_scored_entity_linking(spark):
     assert out["columns"].entity_iri.endswith("/entity/column")
     assert not out["zzz-none"].linked and out["zzz-none"].link_score == 0.0
     assert "/entity/unlinked/" in out["zzz-none"].entity_iri
-    # scored linking agrees with plain linking on exact hits
-    plain = {r.surface: r.entity_iri for r in linking.link_entities(
-        df, linking.canonical_dictionary(spark)).collect()}
-    assert plain["join"] == out["join"].entity_iri
+    # an exact hit carries the dictionary's own IRI
+    assert out["join"].entity_iri == extract.ENT + "join"
 
 
 def test_triple_parity_at_sf01(spark):
@@ -476,8 +549,8 @@ def test_job_exchanges_never_carry_text(spark):
     assert "text" not in turn_order(tx).columns
     for cols in _exchange_inputs(turn_order(tx)):
         assert "text" not in cols
-    linked = linking.link_entities(
-        extract.turn_mentions(turns), linking.canonical_dictionary(spark))
+    linked = extract.lexicon_linked_mentions(
+        turns, linking.canonical_dictionary(spark))
     graph_stage = (extract.conversation_links(turns)
                    .unionByName(canonicalize.mention_links(linked))
                    .unionByName(canonicalize.entity_links(linked)))
@@ -499,9 +572,8 @@ def test_salted_canonicalization_plan_shape(spark):
     two-phase aggregate to a naive hot-key groupBy: phase 1 groups WITH
     the salt key, phase 2 without it."""
     tx = synthetic_transcripts(spark, n_convs=20, turns_per_conv=10)
-    linked = linking.link_entities(
-        extract.turn_mentions(ordered_turns(tx, with_rank=False)),
-        linking.canonical_dictionary(spark))
+    linked = extract.lexicon_linked_mentions(
+        ordered_turns(tx, with_rank=False))
     plan = _fmt_plan(canonicalize.entity_mention_counts(linked))
     import re
     key_lines = re.findall(r"Keys \[\d+\]: \[([^\]]*)\]", plan)
@@ -615,8 +687,8 @@ def test_turn_entity_iri_sets_parity_and_plan(spark):
     assert _exchange_inputs(sets) == []          # fully map-side
     via_sets = {(r.conv_id, r.turn_idx): frozenset(r.ents)
                 for r in sets.filter(F.size("ents") > 0).collect()}
-    linked = linking.link_entities(
-        extract.turn_mentions(turns), linking.canonical_dictionary(spark))
+    linked = extract.lexicon_linked_mentions(
+        turns, linking.canonical_dictionary(spark))
     via_linked = {(r.conv_id, r.turn_idx): frozenset(r.ents) for r in
                   linked.groupBy("conv_id", "turn_idx")
                   .agg(F.collect_set("entity_iri").alias("ents"))
@@ -898,17 +970,17 @@ def test_resolve_aliases_clusters_variants(spark):
     assert a == b
 
 
-def test_resolve_aliases_feeds_link_entities(spark):
-    """The induced dictionary drops into link_entities: every variant
-    mention links to the same entity_iri; an unclustered surface links
-    to its own."""
+def test_resolve_aliases_feeds_link_entities_scored(spark):
+    """The induced dictionary drops into link_entities_scored: every
+    variant mention links to the same entity_iri; an unclustered surface
+    links to its own."""
     m = spark.createDataFrame(
         [("c1", 0, "Spark"), ("c1", 1, "spark"), ("c2", 0, "sparks"),
          ("c2", 1, "Kafka")],
         ["conv_id", "turn_idx", "surface"])
     induced = linking.resolve_aliases(m).select(
         "surface", "canonical", "entity_iri")
-    linked = linking.link_entities(m, induced)
+    linked = linking.link_entities_scored(m, induced)
     ents = {(r.conv_id, r.turn_idx): r.entity_iri
             for r in linked.collect()}
     assert (ents[("c1", 0)] == ents[("c1", 1)] == ents[("c2", 0)]

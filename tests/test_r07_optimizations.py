@@ -266,36 +266,6 @@ def test_verify_candidates_duplicate_pairs_scored_once(spark):
         docs, threshold=0.5, candidates=dup).collect())) == base
 
 
-def test_link_entities_surface_universe_matches_udf_path(spark):
-    """surface_universe precomputes the dictionary-miss fallback IRIs
-    driver-side and must emit exactly what the pandas-UDF path emits —
-    hits, ASCII misses, and non-ASCII misses (whose plaintext takes the
-    json.dumps \\uXXXX branch) all covered."""
-    import pytest
-    from versa_spark.kg import linking
-    mentions = spark.createDataFrame(
-        [("c0", 0, "spark"), ("c0", 1, "join"),
-         ("c1", 0, "ghost"), ("c1", 1, 'we"ird\\surf'),
-         ("c2", 0, "café"), ("c2", 1, "日本語")],
-        "conv_id string, turn_idx int, surface string")
-    dictionary = linking.canonical_dictionary(spark)
-    universe = ["spark", "join", "ghost", 'we"ird\\surf',
-                "café", "日本語"]
-    udf_path = sorted(map(tuple, linking.link_entities(
-        mentions, dictionary).collect()))
-    uni_path = sorted(map(tuple, linking.link_entities(
-        mentions, dictionary, surface_universe=universe).collect()))
-    assert uni_path == udf_path
-    # schema (incl. column order) identical too
-    assert (linking.link_entities(mentions, dictionary).schema
-            == linking.link_entities(mentions, dictionary,
-                                     surface_universe=universe).schema)
-    # the budget guard refuses unbounded universes
-    with pytest.raises(ValueError, match="budget"):
-        linking.link_entities(mentions, dictionary,
-                              surface_universe=[f"s{i}" for i in range(5000)])
-
-
 def test_sql_string_simhash_matches_builder_form(spark):
     """simhash_signatures' single-SQL-string aggregates must equal the
     original 64-vote builder construction for both hash families."""

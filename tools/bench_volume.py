@@ -820,7 +820,7 @@ def lap_kgstream(spark: SparkSession) -> dict:
 
 
 def lap_cooccur(spark: SparkSession) -> dict:
-    from versa_spark.kg import analytics, extract, linking
+    from versa_spark.kg import analytics, extract
     from versa_spark.kg.transcripts import ordered_turns, \
         synthetic_transcripts
     n_turns = max(1, N_TURNS // 25) * 25
@@ -836,8 +836,7 @@ def lap_cooccur(spark: SparkSession) -> dict:
     sets_wall = round(time.time() - t0, 3)
 
     t0 = time.time()
-    linked = linking.link_entities(extract.turn_mentions(turns),
-                                   linking.canonical_dictionary(spark))
+    linked = extract.lexicon_linked_mentions(turns)
     pmi_rows = analytics.cooccurrence_pmi(
         linked.select("conv_id", "turn_idx", "entity_iri"))
     n_rows = pmi_rows.count()

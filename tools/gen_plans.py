@@ -63,22 +63,20 @@ window sort is absent from the triple-build plan. Regenerate with
             "or exchange beyond the initial scan, and the former trailing "
             "distinct over already-unique triples is gone.")
 
-    from versa_spark.kg import canonicalize, extract, linking
+    from versa_spark.kg import canonicalize, extract
     from versa_spark.kg.transcripts import (ordered_turns,
                                             transcripts_from_documents)
     turns = ordered_turns(transcripts_from_documents(spark, sf))
-    linked = linking.link_entities(extract.turn_mentions(turns),
-                                   linking.canonical_dictionary(spark),
-                                   surface_universe=extract.LEXICON)
+    linked = extract.lexicon_linked_mentions(turns)
     stats = canonicalize.entity_mention_counts(linked)
     stats.count()
     section("salted canonicalization", stats,
             "Two HashAggregate pairs (partial/final) around the salted "
             "key — the hot 'spark' entity spreads over `salt` reducers in "
             "phase 1; phase 2 sees at most `salt` rows per entity.  "
-            "Round 7 (2nd pass): linking passes surface_universe, so the "
-            "miss-fallback IRIs are plan literals and there is no "
-            "ArrowEvalPython node anywhere in this plan.")
+            "Linking is the lexicon's literal map in the scan's own "
+            "projection (extract.lexicon_linked_mentions), so there is no "
+            "join and no ArrowEvalPython node anywhere in this plan.")
 
     from versa_spark import dedup
     docs = spark.read.parquet(f"{sf}/documents.parquet")

@@ -38,7 +38,7 @@ def kg_main(argv) -> int:
     ap.add_argument("--detect", default="lexicon",
                     choices=("lexicon", "dictionary"),
                     help="detection surface set (see kg.job.KGJob and "
-                         "kg.graph.linked_mentions)")
+                         "kg.graph.mention_linker)")
     ap.add_argument("--append-batch", default=None, metavar="BATCH_ID",
                     help="grow a completed workdir by this input as an "
                          "O(batch) incremental append (KGJob.append_batch) "

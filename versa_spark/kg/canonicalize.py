@@ -126,8 +126,8 @@ def mention_links_from_eids(turn_eids: DataFrame) -> DataFrame:
     exploded (turn_iri, v:mentions, entity_iri) rows are globally unique
     by construction — NO shuffle, the dominant exchange of the triple
     build eliminated outright.  Output-identical to
-    ``mention_links(link_entities(turn_mentions(...)))`` for the default
-    dictionary (asserted in tests + the reference-parity suite)."""
+    ``mention_links(lexicon_linked_mentions(...))`` (asserted in tests +
+    the reference-parity suite)."""
     from versa_spark.kg.extract import REL_MENTIONS, canonical_iri_sql
     from versa_spark.kg.transcripts import TURN_IRI_PREFIX
     return (turn_eids

@@ -89,8 +89,8 @@ _SURFACES = sorted(LEXICON)
 # mention regex only ever matches lexicon surfaces, surface→canonical is
 # a PURE FUNCTION of the surface index, known at plan time — linking
 # against the default dictionary fuses into the plan as a literal map
-# (the degenerate broadcast join; the generic kg.linking path handles
-# arbitrary dictionaries).
+# (the degenerate broadcast join; a caller's dictionary folds into one
+# too, see lexicon_linker).
 _CANONICALS = sorted(set(LEXICON.values()))
 _CANON_IX = {c: i for i, c in enumerate(_CANONICALS)}
 # surface → canonical index as ONE SQL map literal: a single string
@@ -98,6 +98,12 @@ _CANON_IX = {c: i for i, c in enumerate(_CANONICALS)}
 # cost ~90 (guide §4 construction-chatter note)
 _CANON_MAP_SQL = "map(" + ",".join(
     f"'{s}',{_CANON_IX[LEXICON[s]]}" for s in _SURFACES) + ")"
+
+
+def canonical_ix_sql(surface: str) -> str:
+    """SQL text: lexicon surface expression ``surface`` → its canonical
+    index, one ``element_at`` over :data:`_CANON_MAP_SQL`."""
+    return f"element_at({_CANON_MAP_SQL}, {surface})"
 
 
 def canonical_iri_sql(ix: str) -> str:
@@ -154,19 +160,79 @@ def turn_entity_ids(turns: DataFrame) -> DataFrame:
     return turns.selectExpr(
         *keep,
         f"array_distinct(transform({mention_surfaces_sql('text')}, "
-        f"m -> cast(element_at({_CANON_MAP_SQL}, m) as tinyint))) AS eids")
+        f"m -> cast({canonical_ix_sql('m')} as tinyint))) AS eids")
 
 
-def lexicon_linked_mentions(turns: DataFrame) -> DataFrame:
-    """:func:`turn_mentions` rows plus (linked, canonical, entity_iri)
-    as ``link_entities`` gives them against ``canonical_dictionary``:
-    every surface is a lexicon key, so the link is the literal map of
-    :func:`turn_entity_ids` — no join, no broadcast job."""
-    ix = f"element_at({_CANON_MAP_SQL}, surface)"
-    return turn_mentions(turns).selectExpr(
-        "conv_id", "turn_idx", "turn_iri", "surface", "true AS linked",
-        f"{canonical_name_sql(ix)} AS canonical",
-        f"{canonical_iri_sql(ix)} AS entity_iri")
+def lexicon_linker(dictionary: DataFrame | None = None):
+    """turns → :func:`turn_mentions` rows plus (linked, canonical,
+    entity_iri), as a function; the one linker for lexicon mentions.
+
+    Every surface is a lexicon key, so the link is a literal map lookup
+    in the scan's own projection: no join, no broadcast job, no Python
+    node.  Without a ``dictionary`` the map is :func:`turn_entity_ids`'
+    canonical index and every mention is linked.  A caller's
+    (surface, canonical, entity_iri) dictionary is resolved here, once,
+    before the function is returned (one small job over its lexicon
+    rows, :func:`_dictionary_map_sql`), so a bad one raises before any
+    plan runs.  Its semantics are a left join on ``surface``: a hit is
+    linked when its ``entity_iri`` is set, its ``canonical`` defaults to
+    the surface, and a surface without an IRI gets the deterministic
+    ``entity/unlinked/<resource_id>`` fallback."""
+    if dictionary is None:
+        ix = canonical_ix_sql("surface")
+        cols = ("true AS linked", f"{canonical_name_sql(ix)} AS canonical",
+                f"{canonical_iri_sql(ix)} AS entity_iri")
+    else:
+        link = f"element_at({_dictionary_map_sql(dictionary)}, surface)"
+        # coalesce: the map holds every surface, but only a non-null
+        # literal keeps ``linked`` a non-nullable column
+        cols = (f"coalesce({link}.linked, false) AS linked",
+                f"{link}.canonical AS canonical",
+                f"{link}.entity_iri AS entity_iri")
+    return lambda turns: turn_mentions(turns).selectExpr(
+        "conv_id", "turn_idx", "turn_iri", "surface", *cols)
+
+
+def lexicon_linked_mentions(turns: DataFrame,
+                            dictionary: DataFrame | None = None
+                            ) -> DataFrame:
+    """:func:`turn_mentions` rows of ``turns`` linked by
+    :func:`lexicon_linker` (``dictionary``: see there)."""
+    return lexicon_linker(dictionary)(turns)
+
+
+def _dictionary_map_sql(dictionary: DataFrame) -> str:
+    """SQL map literal: every lexicon surface → named_struct(linked,
+    canonical, entity_iri) as a left join of the surface against
+    ``dictionary`` gives it.  Collects only the dictionary's lexicon
+    rows (at most one per surface: a surface listed twice would link
+    each of its mentions twice, so it raises ``ValueError``).  Every
+    caller string is spliced through ``quote_literal``."""
+    from collections import Counter
+
+    from versa_spark.ids import resource_id
+    surfaces = ",".join(quote_literal(s) for s in _SURFACES)
+    rows = (dictionary.where(f"surface IN ({surfaces})")
+            .select("surface", "canonical", "entity_iri").collect())
+    hits = {r.surface: r for r in rows}
+    if len(hits) < len(rows):
+        dup = sorted(s for s, n in Counter(r.surface for r in rows).items()
+                     if n > 1)
+        raise ValueError(f"dictionary lists the surface(s) {dup} more "
+                         "than once; each must map to one entity")
+    entries = []
+    for s in _SURFACES:
+        _, canonical, iri = hits.get(s, (s, None, None))
+        linked = iri is not None
+        if not linked:
+            iri = ENT + "unlinked/" + resource_id(
+                TYPE_CONCEPT, [(ENT + "name", s)])
+        entries.append(
+            f"{quote_literal(s)}, named_struct('linked', "
+            f"{str(linked).lower()}, 'canonical', "
+            f"{quote_literal(s if canonical is None else canonical)}, "
+            f"'entity_iri', {quote_literal(iri)})")
+    return "map(" + ", ".join(entries) + ")"
 
 
 def turn_entity_iri_sets(turns: DataFrame) -> DataFrame:
@@ -348,13 +414,14 @@ def turn_relations(turns: DataFrame,
     Returns (conv_id, turn_idx, turn_iri, subj_iri, verb, rel_iri,
     obj_iri)."""
     low = F.lower(F.col("text"))
-    # mentions and between-texts are COLUMNS of a projection below the
-    # pair lambda, which reads them per pair instead of re-running the
-    # regex (the binding rule of dedup.shingle_array).  Java's split
-    # drops capture groups, so the same pattern splits
-    ments, segs = F.col("_m"), F.col("_s")
-    canon_map = F.create_map(*[F.lit(x) for s in _SURFACES
-                               for x in (s, LEXICON[s])])
+    # canonical names and between-texts are COLUMNS of a projection
+    # below the pair lambda, which reads them per pair instead of
+    # re-running the regex (the binding rule of dedup.shingle_array).
+    # Java's split drops capture groups, so the same pattern splits
+    canons, segs = F.col("_c"), F.col("_s")
+    canon = F.expr(f"transform(regexp_extract_all(lower(text), "
+                   f"{_MENTION_PAT_SQL}, 1), "
+                   f"m -> {canonical_name_sql(canonical_ix_sql('m'))})")
     # verbs are caller-supplied (CLI --relations): escape each so a
     # metacharacter ('c++', 'a.b') can't blow up — or silently loosen —
     # the compiled alternation deep inside the stage.  r07 (advice fix):
@@ -371,14 +438,12 @@ def turn_relations(turns: DataFrame,
     verb_pat = r"\b(" + "|".join(
         _re.escape(v) for v in sorted(verbs, key=len, reverse=True)) \
         + r")\b"
-    pairs = F.when(F.size(ments) >= 2, F.filter(
+    pairs = F.when(F.size(canons) >= 2, F.filter(
         F.transform(
-            F.sequence(F.lit(0), F.size(ments) - 2),
+            F.sequence(F.lit(0), F.size(canons) - 2),
             lambda i: F.struct(
-                F.element_at(canon_map,
-                             F.element_at(ments, i + 1)).alias("a"),
-                F.element_at(canon_map,
-                             F.element_at(ments, i + 2)).alias("b"),
+                F.element_at(canons, i + 1).alias("a"),
+                F.element_at(canons, i + 2).alias("b"),
                 F.regexp_extract(F.element_at(segs, i + 2),
                                  verb_pat, 1).alias("verb"))),
         lambda p: (p["verb"] != "") & (p["a"] != p["b"]))
@@ -386,8 +451,7 @@ def turn_relations(turns: DataFrame,
         F.array().cast("array<struct<a:string,b:string,verb:string>>"))
     return (turns
             .select("conv_id", "turn_idx", "turn_iri",
-                    F.regexp_extract_all(low, F.lit(_MENTION_PAT_JVM), 1)
-                    .alias("_m"),
+                    canon.alias("_c"),
                     F.split(low, _MENTION_PAT_JVM).alias("_s"))
             .select("conv_id", "turn_idx", "turn_iri",
                     F.explode(pairs).alias("p"))

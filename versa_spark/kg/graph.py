@@ -9,7 +9,7 @@ at all** (round 2 shrank the dedup shuffle to a narrow key; round 3
 eliminates it: per-turn alias dedup happens in-plan before the explode,
 and (conv_id, turn_idx) uniquely keys turns).  Custom-dictionary linking,
 gazetteer detection (``detect='dictionary'``) and relation triples are
-``KGJob``'s (kg.job), whose mentions stage is :func:`linked_mentions`.
+``KGJob``'s (kg.job), whose mentions stage is :func:`mention_linker`'s.
 
 The union of link families consumes the extracted frame three times;
 without materialization Spark re-executes the regex mention scan once
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from versa_spark.kg import canonicalize, extract, linking
+from versa_spark.kg import canonicalize, extract
 
 
 def build_graph(spark: SparkSession,
@@ -58,19 +58,13 @@ def build_graph(spark: SparkSession,
             "edges": canonicalize.adjacency_edges(graph)}
 
 
-def linked_mentions(turns: DataFrame, dictionary: DataFrame | None,
-                    detect: str) -> DataFrame:
-    """Mention rows with (canonical, entity_iri) and, under
-    detect='lexicon', ``linked``: ONE fused detection+linking join for
-    ``detect='dictionary'``; else the lexicon scan, linked through the
-    lexicon's literal map or, given a dictionary, link_entities."""
+def mention_linker(dictionary: DataFrame | None, detect: str):
+    """turns → mention rows with (canonical, entity_iri) and, under
+    detect='lexicon', ``linked``, as a function: ONE fused
+    detection+linking join for ``detect='dictionary'``; else the
+    lexicon scan linked through one literal map
+    (extract.lexicon_linker, which resolves a caller's dictionary now,
+    so a bad one raises before the function is returned)."""
     if detect == "dictionary":
-        return extract.turn_mentions_bigdict(turns, dictionary)
-    if dictionary is None:
-        return extract.lexicon_linked_mentions(turns)
-    # turn_mentions can only emit lexicon surfaces whatever the linking
-    # dictionary is, so the miss fallback precomputes driver-side and
-    # the plan carries no Python node (linking.link_entities
-    # surface_universe)
-    return linking.link_entities(extract.turn_mentions(turns), dictionary,
-                                 surface_universe=extract.LEXICON)
+        return lambda turns: extract.turn_mentions_bigdict(turns, dictionary)
+    return extract.lexicon_linker(dictionary)

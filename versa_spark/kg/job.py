@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from versa_spark.kg import canonicalize, extract, transcripts as T
-from versa_spark.kg.graph import linked_mentions
+from versa_spark.kg.graph import mention_linker
 from versa_spark.storage import _split_sized
 
 MANIFEST = "_manifest.jsonl"
@@ -86,7 +86,7 @@ class KGJob:
         self.spark = spark
         self.workdir = workdir
         # the dictionary detects (detect='dictionary') or only links
-        # (graph.linked_mentions).  Its CONTENT digest is folded into the
+        # (graph.mention_linker).  Its CONTENT digest is folded into the
         # stage fingerprint, so a resume after a change recomputes.
         self.dictionary = dictionary
         self.detect = detect
@@ -283,6 +283,9 @@ class KGJob:
             return self._run_stage(name, fp, build, key=key(name),
                                    in_rows=in_rows)
 
+        # resolved before any stage commits, so a dictionary that cannot
+        # link raises here
+        link_mentions = mention_linker(self.dictionary, self.detect)
         # turn_order first: it counts the transcripts that turns reads
         turn_order = stage(
             "turn_order", lambda: T.turn_order(transcripts_df))
@@ -293,8 +296,8 @@ class KGJob:
             "turns",
             lambda: T.ordered_turns(transcripts_df, with_rank=False),
             reads=("turn_order",))
-        mentions = stage("mentions", lambda: linked_mentions(
-            turns, self.dictionary, self.detect), reads=("turns",))
+        mentions = stage("mentions", lambda: link_mentions(turns),
+                         reads=("turns",))
         linked = self._linked(mentions)
         entity_stats = stage(
             "entity_stats", lambda:

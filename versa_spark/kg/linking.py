@@ -1,11 +1,14 @@
-"""Entity linking + canonical IDs.
+"""Entity linking for arbitrary mention frames + canonical IDs.
 
 The Spark-scale restatement of the reference's ``lookup`` action — its own
-entity-linking primitive (other_actions.py:366-404): mention surfaces are
-joined against a **broadcast** canonical dictionary (alias → canonical
-entity), misses fall back to a deterministic fingerprint ID computed by
-the vectorized mmh3 kernel (kg.ids_vec), exactly the Versa resource-ID
-convention (pipeline/main.py:93-132).
+entity-linking primitive (other_actions.py:366-404).  Lexicon mentions
+(kg.extract.turn_mentions) link through one literal map in the scan's own
+projection (extract.lexicon_linker); this module links every other
+mention frame: :func:`link_entities_scored` scores candidates from a
+**broadcast** canonical dictionary (alias → canonical entity), and misses
+fall back to a deterministic fingerprint ID computed by the vectorized
+mmh3 kernel (kg.ids_vec), exactly the Versa resource-ID convention
+(pipeline/main.py:93-132).
 
 Join strategy: the dictionary is small (thousands–millions of aliases),
 so it is always hinted ``F.broadcast``; a gazetteer too large to
@@ -38,7 +41,7 @@ def fingerprint_plaintext_col(etype, name_rel, name_col):
     sorted [[k, v]…] pairs incl. the type pair, compact separators.
 
     JVM-side string ops; JSON escaping covers backslash + quote.  This
-    column is only used for printable-ASCII surfaces — link_entities
+    column is only used for printable-ASCII surfaces — the linker
     detects non-ASCII/control characters (where Python's json.dumps would
     \\uXXXX-escape) and routes those rows through the pandas UDF, which
     builds the plaintext with json.dumps itself, so IDs converge with the
@@ -91,12 +94,13 @@ def resource_id_fallback_udf(etype: str, name_rel: str):
 
 
 def _unlinked_fallback_cols(ent_col: str, canon_col: str):
-    """The three output columns every linker shares: ``linked``,
-    ``canonical`` (surface fallback), ``entity_iri`` (dictionary hit, or
-    the deterministic fingerprint ID under entity/unlinked/).  Only
-    misses pay the hash UDF's *compute* (null inputs short-circuit inside
-    the kernel); every row still crosses the Arrow boundary because
-    Catalyst lifts the UDF into an unconditional ArrowEvalPython node.
+    """The three output columns of :func:`link_entities_scored`:
+    ``linked``, ``canonical`` (surface fallback), ``entity_iri``
+    (dictionary hit, or the deterministic fingerprint ID under
+    entity/unlinked/).  Only misses pay the hash UDF's *compute* (null
+    inputs short-circuit inside the kernel); every row still crosses the
+    Arrow boundary because Catalyst lifts the UDF into an unconditional
+    ArrowEvalPython node.
 
     Round-7 note (measured, kept as-is): a hit/miss split-union variant
     (UDF only on the miss branch — zero Arrow rows for an all-hits
@@ -232,8 +236,8 @@ def resolve_aliases(mentions: DataFrame, surface_col: str = "surface",
     surface↔key graph (vocabulary-sized, O(log n) rounds via the
     hooking + pointer-doubling kernel shared with dedup); the result is
     a (surface, canonical, entity_iri) frame that drops into
-    :func:`link_entities` / ``KGJob(dictionary=…)`` as a broadcastable
-    dictionary.
+    :func:`link_entities_scored` / ``KGJob(dictionary=…)`` as a
+    broadcastable dictionary.
 
     Canonical per cluster = the most frequent surface (ties: shortest
     raw surface, then lexicographically smallest raw surface —
@@ -293,76 +297,3 @@ def resolve_aliases(mentions: DataFrame, surface_col: str = "surface",
                     F.concat(F.lit(ENT), F.col("canonical"))
                     .alias("entity_iri"),
                     "n_mentions", "cluster_size"))
-
-
-# surface_universe literal-map bound: past this the plan-time map stops
-# being "a handful of literals" (a Catalyst tree that grows with the
-# universe) and a caller should fall back to the UDF path (or
-# broadcast-join a precomputed fallback table themselves)
-_UNIVERSE_BUDGET = 4096
-
-
-def fallback_iri_map(surfaces) -> dict[str, str]:
-    """surface → the exact entity/unlinked/<id> IRI the fallback UDF
-    would emit for a dictionary miss, computed driver-side.  Shares the
-    UDF's own plaintext construction (json.dumps, ensure_ascii — covers
-    non-ASCII surfaces with the same \\uXXXX escaping) and the same
-    vectorized mmh3 kernel, so IDs are byte-identical by construction."""
-    import json
-
-    import pandas as pd
-
-    from versa_spark.kg.ids_vec import resource_id_series
-    surfaces = list(surfaces)
-    if not surfaces:
-        return {}
-    type_rel, etype, name_rel = str(VTYPE_REL), TYPE_CONCEPT, ENT + "name"
-    plaintexts = pd.Series([
-        json.dumps(sorted([[name_rel, s], [type_rel, etype]]),
-                   separators=(",", ":"))
-        for s in surfaces])
-    ids = resource_id_series(plaintexts)
-    return {s: ENT + "unlinked/" + i for s, i in zip(surfaces, ids)}
-
-
-def link_entities(mentions: DataFrame, dictionary: DataFrame,
-                  surface_universe=None) -> DataFrame:
-    """mentions (…, surface) ⋈ dictionary → adds ``entity_iri``,
-    ``canonical``, ``linked`` (False = dictionary miss → deterministic
-    fingerprint ID under entity/unlinked/).
-
-    ``surface_universe`` (optional, round-7): an iterable of every
-    surface the mention producer can possibly emit — available whenever
-    detection is pattern-bound (``turn_mentions``'s universe IS the
-    lexicon's key set).  With it, the dictionary-miss fallback IDs are
-    precomputed driver-side (``fallback_iri_map``, the identical mmh3
-    kernel) and fused into the plan as a literal map, so the linker is
-    ONE broadcast join with zero Python anywhere — the ArrowEvalPython
-    node that otherwise ships every (plaintext, surface) batch to a
-    worker disappears (guide §4), without the rejected hit/miss-split's
-    double corpus scan (see _unlinked_fallback_cols).  Caller contract:
-    surfaces outside both the universe and the dictionary yield NULL
-    entity_iri instead of a fingerprint ID — only pass a universe that
-    is actually exhaustive.  Bounded by _UNIVERSE_BUDGET literals."""
-    out = mentions.join(F.broadcast(dictionary), "surface", "left")
-    if surface_universe is not None:
-        fmap = fallback_iri_map(sorted(set(surface_universe)))
-        if len(fmap) > _UNIVERSE_BUDGET:
-            raise ValueError(
-                f"surface_universe has {len(fmap)} surfaces — past the "
-                f"{_UNIVERSE_BUDGET}-literal budget; use the UDF path")
-        cols = [F.col("entity_iri").isNotNull().alias("linked"),
-                F.coalesce(F.col("canonical"), F.col("surface"))
-                 .alias("canonical")]
-        if fmap:
-            lit_map = F.create_map(*[F.lit(x)
-                                     for s, iri in sorted(fmap.items())
-                                     for x in (s, iri)])
-            cols.append(F.coalesce(F.col("entity_iri"),
-                                   F.element_at(lit_map, F.col("surface")))
-                        .alias("entity_iri"))
-        else:
-            cols.append(F.col("entity_iri"))
-        return out.select(*mentions.columns, *cols)
-    return out.select(*mentions.columns,
-                      *_unlinked_fallback_cols("entity_iri", "canonical"))

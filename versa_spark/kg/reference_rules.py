@@ -56,7 +56,7 @@ def transcript_input_model(rows) -> LocalModel:
 def _mention_entities(text: str) -> list[tuple[str, str]]:
     """Distinct (entity_iri, canonical) per lexicon mention, first-occurrence
     order — the oracle for extract.mention_surfaces_col +
-    linking.link_entities."""
+    extract.lexicon_linked_mentions."""
     seen, out = set(), []
     for surface in _PAT.findall(text or ""):
         if surface in seen:

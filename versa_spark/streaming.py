@@ -202,16 +202,17 @@ def streaming_mention_counts(spark: SparkSession, input_dir: str,
                              window: str = "10 minutes",
                              watermark: str = "30 minutes") -> DataFrame:
     """Native streaming plan: watermarked event-time windowed mention
-    counts per entity.  Returns the unbounded DataFrame — caller attaches
-    a sink (memory sink in tests)."""
-    from versa_spark.kg import extract, linking
+    counts per entity.  Each mention links through the lexicon's literal
+    map, in-row.  Returns the unbounded DataFrame — caller attaches a
+    sink (memory sink in tests)."""
+    from versa_spark.kg import extract
     stream = read_transcript_stream(spark, input_dir)
+    iri = extract.canonical_iri_sql(extract.canonical_ix_sql("surface"))
     mentions = (stream
                 .withWatermark("ts", watermark)
                 .withColumn("surface",
                             F.explode(extract.mention_surfaces_col("text")))
-                .join(F.broadcast(linking.canonical_dictionary(spark)),
-                      "surface"))
+                .withColumn("entity_iri", F.expr(iri)))
     return (mentions
             .groupBy(F.window("ts", window), F.col("entity_iri"))
             .agg(F.count("*").alias("n_mentions"))
