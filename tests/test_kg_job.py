@@ -322,18 +322,22 @@ def test_duplicate_dictionary_surface_raises_before_any_stage(spark,
                                                                tmp_path):
     """A caller dictionary listing a lexicon surface twice would link
     each of its mentions twice (doubling entity_stats.n_mentions), so
-    the job refuses it before any stage commits."""
+    the job refuses it before any stage commits, in both detect
+    modes."""
     import os as _os
     d = linking.canonical_dictionary(spark)
     dup = d.unionByName(d.filter("surface = 'spark'")
                         .withColumn("entity_iri", F.lit("custom:spark")))
     tx = synthetic_transcripts(spark, n_convs=5, turns_per_conv=4)
-    wd = str(tmp_path / "dup")
-    with pytest.raises(ValueError, match="spark"):
-        KGJob(spark, wd, dictionary=dup).run(tx)
-    assert not _os.path.exists(_os.path.join(wd, "_manifest.jsonl"))
+    for detect in ("lexicon", "dictionary"):
+        wd = str(tmp_path / f"dup_{detect}")
+        with pytest.raises(ValueError, match="spark"):
+            KGJob(spark, wd, dictionary=dup, detect=detect).run(tx)
+        assert not _os.path.exists(_os.path.join(wd, "_manifest.jsonl"))
     with pytest.raises(ValueError, match="spark"):
         extract.lexicon_linked_mentions(ordered_turns(tx), dup)
+    with pytest.raises(ValueError, match="spark"):
+        extract.turn_mentions_bigdict(ordered_turns(tx), dup)
 
 
 def test_dictionary_strings_round_trip_through_kgjob(spark, tmp_path):

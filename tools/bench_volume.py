@@ -74,22 +74,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
-from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
+from tools.hostsize import CPUS, spark_session  # noqa: E402
 
 N_DOCS = int(os.environ.get("SPARK_GRAFT_VOLUME_DOCS", "1000000"))
 N_TURNS = int(os.environ.get("SPARK_GRAFT_VOLUME_TURNS", "4000000"))
-
-
-def build_spark() -> SparkSession:
-    return (SparkSession.builder
-            .master(f"local[{CPUS}]")
-            .appName("versa_spark-bench-volume")
-            .config("spark.sql.shuffle.partitions", str(CPUS * 2))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.driver.memory", f"{HEAP_GB}g")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
 
 
 def part_usage(path: str) -> tuple[int, int]:
@@ -865,7 +853,7 @@ def main() -> None:
     if which != "all" and which not in LAPS:
         raise SystemExit(f"unknown lap {which!r} "
                          f"(choose from {', '.join(LAPS)}, all)")
-    spark = build_spark()
+    spark = spark_session("versa_spark-bench-volume")
     out: dict = {"cpus": CPUS}
     if which in ("dedup", "all"):
         out["dedup"] = lap_dedup(spark)

@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.hostsize import CPUS, HEAP_GB  # noqa: E402
+from tools.hostsize import CPUS, spark_session  # noqa: E402
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -66,16 +66,9 @@ def main() -> None:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
+    spark = spark_session("check-oracles")
     # one shuffle partition per task slot, as the tests size theirs
-    spark = (SparkSession.builder.master(f"local[{CPUS}]")
-             .appName("check-oracles")
-             .config("spark.sql.shuffle.partitions", str(CPUS))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", f"{HEAP_GB}g")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark.conf.set("spark.sql.shuffle.partitions", str(CPUS))
 
     import __spark_entry__ as entrymod
     queries = entrymod.queries()

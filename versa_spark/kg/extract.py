@@ -318,9 +318,9 @@ def turn_mentions_bigdict(turns: DataFrame, dictionary: DataFrame,
     per-row array expressions (array_distinct BEFORE the explode, so
     output rows are unique per (turn, dictionary row) with no post-join
     dedup shuffle), then one hash join on the normalized key.  One
-    aggregation over the dictionary (a narrow scan) counts it and
-    harvests min/max normalized-surface length, so obviously-unmatchable
-    candidates are pruned JVM-side.  At or below
+    aggregation over the dictionary counts its rows and distinct
+    surfaces and harvests min/max normalized-surface length, so
+    obviously-unmatchable candidates are pruned JVM-side.  At or below
     ``_BIGDICT_BROADCAST_ROWS`` the dictionary is hinted
     ``F.broadcast`` — the join is then map-side with ZERO exchange of
     the turn stream, and hot surfaces are harmless (no shuffle by
@@ -328,7 +328,20 @@ def turn_mentions_bigdict(turns: DataFrame, dictionary: DataFrame,
     normalized surface, where a dictionary surface that is also a
     stopword-frequency token lands its whole candidate stream on one
     reducer; AQE's skew-join split (on by default) re-chunks such
-    partitions at runtime."""
+    partitions at runtime.
+
+    A surface listed twice would emit each of its mentions twice, so
+    the same aggregation counts distinct surfaces and a repeat raises
+    ``ValueError`` (:func:`bigdict_linker`)."""
+    return bigdict_linker(dictionary, max_ngram)(turns)
+
+
+def bigdict_linker(dictionary: DataFrame, max_ngram: int | None = None):
+    """turns → :func:`turn_mentions_bigdict` rows, as a function.  The
+    dictionary aggregation runs here, once, before the function is
+    returned (as :func:`lexicon_linker` resolves its dictionary), so a
+    dictionary that lists a surface twice raises ``ValueError`` naming
+    the repeated surfaces before any plan over ``turns`` runs."""
     def _norm(col):
         return F.array_join(
             F.filter(F.split(col, r"[^A-Za-z0-9_]+"), lambda t: t != ""),
@@ -337,11 +350,18 @@ def turn_mentions_bigdict(turns: DataFrame, dictionary: DataFrame,
     norm = _norm(F.col("surface"))
     stats = dictionary.agg(
         F.count("*").alias("n"),
+        F.count("surface").alias("surfaces"),
+        F.count_distinct("surface").alias("distinct"),
         F.min(F.length(norm)).alias("lo"),
         F.max(F.length(norm)).alias("hi"),
         F.max(F.size(F.filter(
             F.split(F.col("surface"), r"[^A-Za-z0-9_]+"),
             lambda t: t != ""))).alias("toks")).first()
+    if stats["distinct"] < stats["surfaces"]:
+        dup = [r.surface for r in dictionary.groupBy("surface").count()
+               .where("count > 1").orderBy("surface").limit(20).collect()]
+        raise ValueError(f"dictionary lists the surface(s) {dup} more "
+                         "than once; each must map to one entity")
     if max_ngram is None:
         max_ngram = max(1, int(stats["toks"] or 1))
     d = dictionary.withColumn("_k", norm)
@@ -366,15 +386,19 @@ def turn_mentions_bigdict(turns: DataFrame, dictionary: DataFrame,
                      .otherwise(F.array().cast("array<string>")))
     cand = F.array_distinct(F.flatten(F.array(*grams)))
 
-    keep = [c for c in ("conv_id", "turn_idx", "turn_iri")
-            if c in turns.columns]
-    out = (turns.withColumn("_toks", toks)
-           .select(*keep, F.explode(cand).alias("_cand")))
-    if stats["lo"] is not None:
-        out = out.filter(F.length("_cand").between(stats["lo"], stats["hi"]))
     payload = [c for c in dictionary.columns if c != "surface"]
-    return (out.join(d, out["_cand"] == d["_k"], "inner")
-            .select(*keep, "surface", *payload))
+
+    def link(turns):
+        keep = [c for c in ("conv_id", "turn_idx", "turn_iri")
+                if c in turns.columns]
+        out = (turns.withColumn("_toks", toks)
+               .select(*keep, F.explode(cand).alias("_cand")))
+        if stats["lo"] is not None:
+            out = out.filter(
+                F.length("_cand").between(stats["lo"], stats["hi"]))
+        return (out.join(d, out["_cand"] == d["_k"], "inner")
+                .select(*keep, "surface", *payload))
+    return link
 
 
 REL_VERB_PREFIX = BASE + "v/rel/"

@@ -61,10 +61,10 @@ def build_graph(spark: SparkSession,
 def mention_linker(dictionary: DataFrame | None, detect: str):
     """turns → mention rows with (canonical, entity_iri) and, under
     detect='lexicon', ``linked``, as a function: ONE fused
-    detection+linking join for ``detect='dictionary'``; else the
-    lexicon scan linked through one literal map
-    (extract.lexicon_linker, which resolves a caller's dictionary now,
-    so a bad one raises before the function is returned)."""
+    detection+linking join for ``detect='dictionary'``
+    (extract.bigdict_linker); else the lexicon scan linked through one
+    literal map (extract.lexicon_linker).  Both resolve the dictionary
+    now, so a bad one raises before the function is returned."""
     if detect == "dictionary":
-        return lambda turns: extract.turn_mentions_bigdict(turns, dictionary)
+        return extract.bigdict_linker(dictionary)
     return extract.lexicon_linker(dictionary)
